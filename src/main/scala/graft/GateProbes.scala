@@ -92,9 +92,7 @@ object GateProbes {
     }
     def drainOf(gate: Any): Unit = gate match {
       case g: graft.streaming.StreamDedupGate => g.drainCommits()
-      case g: graft.streaming.SimHashNearDupGate => g.drainCommits()
-      case g: graft.streaming.JaccardNearDupGate => g.drainCommits()
-      case g: graft.streaming.CosineNearDupGate => g.drainCommits()
+      case g: graft.streaming.IndexedNearDupGate[_] => g.drainCommits()
     }
     def detach(gate: Any): Unit = { drainOf(gate); eng.dropContTransform("gs_gate") }
     def seed(gate: Any, fromId: Long, n: Long): Unit = {
@@ -108,17 +106,13 @@ object GateProbes {
           .withColumn("cid", col("id")))
         gate match {
           case g: graft.streaming.StreamDedupGate => g.seedStore(rows)
-          case g: graft.streaming.SimHashNearDupGate => g.seedStore(rows)
-          case g: graft.streaming.CosineNearDupGate => g.seedStore(rows)
-          case g: graft.streaming.JaccardNearDupGate => g.seedStore(rows)
+          case g: graft.streaming.IndexedNearDupGate[_] => g.seedStore(rows)
         }
         off += m
       }
       gate match {
         case g: graft.streaming.StreamDedupGate => g.compact()
-        case g: graft.streaming.SimHashNearDupGate => g.compact()
-        case g: graft.streaming.CosineNearDupGate => g.compact()
-        case g: graft.streaming.JaccardNearDupGate => g.compact()
+        case g: graft.streaming.IndexedNearDupGate[_] => g.compact()
       }
     }
     var nextId = 1L << 40
@@ -336,9 +330,7 @@ object GateProbes {
           .withColumn("cid", col("id")))
         gate match {
           case g: graft.streaming.StreamDedupGate => g.seedStore(rows)
-          case g: graft.streaming.SimHashNearDupGate => g.seedStore(rows)
-          case g: graft.streaming.CosineNearDupGate => g.seedStore(rows)
-          case g: graft.streaming.JaccardNearDupGate => g.seedStore(rows)
+          case g: graft.streaming.IndexedNearDupGate[_] => g.seedStore(rows)
           case g: graft.streaming.ShardedDedupGate => g.seedStore(rows)
           case g: graft.streaming.ShardedNearDupGate => g.seedStore(rows)
         }
@@ -348,9 +340,7 @@ object GateProbes {
       // the per-batch numbers should measure
       gate match {
         case g: graft.streaming.StreamDedupGate => g.compact()
-        case g: graft.streaming.SimHashNearDupGate => g.compact()
-        case g: graft.streaming.CosineNearDupGate => g.compact()
-        case g: graft.streaming.JaccardNearDupGate => g.compact()
+        case g: graft.streaming.IndexedNearDupGate[_] => g.compact()
         case g: graft.streaming.ShardedDedupGate => g.compact()
         case g: graft.streaming.ShardedNearDupGate => g.compact()
       }

@@ -1817,9 +1817,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     import graft.streaming._
     def kindOf(core: AnyRef): String = core match {
       case _: StreamDedupGate => "dedup"
-      case _: SimHashNearDupGate => "simhash"
-      case _: CosineNearDupGate => "cosine"
-      case _: JaccardNearDupGate => "jaccard"
+      case n: IndexedNearDupGate[_] => n.kind
       case _: ContaminationGate => "contamination"
       case other => other.getClass.getSimpleName
     }
@@ -1843,15 +1841,9 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
           case d: StreamDedupGate =>
             row("dedup", 1, d.stats, d.commitPipeline.lostCommits,
               d.backendInfo)
-          case h: SimHashNearDupGate =>
-            row("simhash", 1, h.stats, h.commitPipeline.lostCommits,
-              h.backendInfo)
-          case c: CosineNearDupGate =>
-            row("cosine", 1, c.stats, c.commitPipeline.lostCommits,
-              c.backendInfo)
-          case j: JaccardNearDupGate =>
-            row("jaccard", 1, j.stats, j.commitPipeline.lostCommits,
-              j.backendInfo)
+          case n: IndexedNearDupGate[_] =>
+            row(n.kind, 1, n.stats, n.commitPipeline.lostCommits,
+              n.backendInfo)
           // the contamination gate never appends (static reference store)
           case ct: ContaminationGate =>
             row("contamination", 1, ct.stats, 0L, ct.backendInfo)

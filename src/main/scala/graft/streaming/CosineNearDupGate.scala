@@ -34,12 +34,13 @@ import graft.ops.AnnSearch
   * wall-clock, never correctness.
   *
   * State, filters, delivery, compaction, restart, and the zero-shuffle
-  * per-batch flow are [[IndexedNearDupGate]]'s: a `seen_keys` (bucket, id)
-  * LSH index in range shards, and a `seen_embs` (id, vector) store at
-  * FLOAT precision (4·dim bytes a row — the exact-cosine verification
-  * casts back to double; a pair at cosine within float epsilon of the
-  * threshold is not a semantics the LSH candidate stage resolves either
-  * way) read only for surfaced candidate ids. The hot-bucket occupancy
+  * per-batch flow are [[IndexedNearDupGate]]'s — the batch loop it shares
+  * with [[SimHashNearDupGate]] and [[JaccardNearDupGate]]: a `seen_keys`
+  * (bucket, id, sk) LSH index in range shards, and a `seen_embs` (id,
+  * vector) store at FLOAT precision (4·dim bytes a row — the exact-cosine
+  * verification casts back to double; a pair at cosine within float
+  * epsilon of the threshold is not a semantics the LSH candidate stage
+  * resolves either way) read only for surfaced candidate ids. The hot-bucket occupancy
   * cap (`maxBucketSize`) guards the degenerate-flood hazard — millions of
   * boilerplate embeddings sharing buckets — at the documented recall
   * trade: pairs colliding ONLY in flooded buckets are missed.
@@ -70,11 +71,12 @@ final class CosineNearDupGate private (
     stateParts: Int = 0,
     residentMb: Long = -1L)
   extends IndexedNearDupGate[Array[Double]](eng, name, orderCol, sink,
-    embDir, idxDir, "embs", "v", bloomP, bloomN0, maxBucketSize, compactEvery,
+    embDir, idxDir, "embs", "v", "keys", "sk",
+    bloomP, bloomN0, maxBucketSize, compactEvery,
     shardId, shardCount, delivery, ttlMillis, ttlColumn, backend, stateParts,
     residentMb) {
 
-  override protected def obsPrefix: String = "cosgate"
+  override private[graft] def kind: String = "cosine"
 
   // 64-bit SRP digest stored INLINE in the (bucket, id) index and compared
   // by Hamming distance before any payload fetch: random bucket-mates (the

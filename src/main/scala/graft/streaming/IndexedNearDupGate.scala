@@ -9,16 +9,22 @@ import graft.cv.ContViewEngine
 import graft.functions.GraftFunctions
 import graft.sketch.BloomFilter
 
-/** Shared machinery of the split-store streaming near-dup gates
-  * ([[CosineNearDupGate]], [[JaccardNearDupGate]]): a banded (bucket, id
-  * [, sketch]) index in range shards joined first, an (id, payload) store
-  * read only for surfaced candidate ids, driver-resident bloom/CMS filters
-  * fed by one bounded per-batch collect, bloom regrow at compaction, and
-  * at-least-once delivery (sink before store append). A subclass supplies
-  * only the payload geometry: how to compute it, bucket it, decode it,
-  * and compare it — on executors for the stored layout and on the driver
-  * for the per-batch decision, with ONE implementation of each piece of
-  * math shared between the two sides.
+/** The one batch lifecycle of the streaming near-dup gates
+  * ([[SimHashNearDupGate]], [[CosineNearDupGate]], [[JaccardNearDupGate]]):
+  * a banded (bucket, id [, sketch]) index in range shards joined first,
+  * driver-resident bloom/CMS filters fed by one bounded per-batch collect,
+  * bloom regrow at compaction, and at-least-once delivery (sink before
+  * store append). A subclass supplies only the payload geometry: how to
+  * compute it, bucket it, decode it, and compare it — on executors for the
+  * stored layout and on the driver for the per-batch decision, with ONE
+  * implementation of each piece of math shared between the two sides.
+  *
+  * Two store shapes share the lifecycle. SPLIT-STORE gates (cosine,
+  * jaccard) keep an (id, payload) store beside the index, read only for
+  * surfaced candidate ids; the inline sketch is a conservative prefilter.
+  * INDEX-ONLY gates (SimHash — [[exactSketch]]) store the whole payload
+  * as the inline sketch, so a sketch-admissible index match IS the
+  * decision: no payload store, no phase-2 fetch, no id pool.
   *
   * Per-batch flow (zero shuffles — see PERF_NOTES §9): collect the
   * batch's (orderCol, payload) pairs; derive bucket keys, the occupancy
@@ -27,10 +33,10 @@ import graft.sketch.BloomFilter
   * in-set-filtered index for candidate (batch row, store id) pairs; fetch
   * ONLY the candidate payloads (id in-set + file-range prune) and verify
   * with the exact similarity; forward survivors through a narrow in-set
-  * filter; append both stores from what the driver already holds.
+  * filter; append the stores from what the driver already holds.
   *
   * A RESIDENT hot tier ([[ResidentIndex]] + [[ResidentPayloads]],
-  * PERF_NOTES §16) sits above both store reads: the per-core index slice
+  * PERF_NOTES §16) sits above the store reads: the per-core index slice
   * and (on the payload-writing core) the id→payload pool, kept in exact
   * sync by the commit hooks, rebuilt from the stores at bootstrap, and
   * byte-budget-bounded. Within budget, phase 1 is in-memory lookups and
@@ -50,8 +56,13 @@ import graft.sketch.BloomFilter
   * SHARED payload store); the batch lifecycle is driven by
   * [[ShardedNearDupGate]] through the [[ShardableGateCore]] hooks — the
   * unsharded gate is the same composition at G=1.
+  *
+  * `payloadDir`/`payloadPrefix`/`payloadColName` name the payload store
+  * (unused — null — for an index-only gate); `idxPrefix`/`skColName` name
+  * the index files and its inline sketch column, so each gate keeps the
+  * on-disk layout it has always written.
   */
-private[streaming] abstract class IndexedNearDupGate[P](
+private[graft] abstract class IndexedNearDupGate[P](
     eng: ContViewEngine,
     val name: String,
     orderCol: String,
@@ -60,6 +71,8 @@ private[streaming] abstract class IndexedNearDupGate[P](
     idxDir: String,
     payloadPrefix: String,
     payloadColName: String,
+    idxPrefix: String,
+    skColName: String,
     bloomP: Double,
     bloomN0: Int,
     maxBucketSize: Int,
@@ -142,9 +155,10 @@ private[streaming] abstract class IndexedNearDupGate[P](
 
   private val exactlyOnce = delivery == StreamDedupGate.ExactlyOnce
   /** The epoch-spool protocol (exactly-once mode; see [[GateEpochs]]) —
-    * the unsharded composition; sharded gates run the wrapper's. */
+    * the unsharded composition; sharded gates run the wrapper's. An
+    * index-only gate's payload column is sink payload (`fp`) and stays. */
   private[graft] lazy val epochs = new GateEpochs(eng, name, sink,
-    GateStore.child(GateStore.parentOf(payloadDir), "spool"), Seq(this),
+    GateStore.child(GateStore.parentOf(idxDir), "spool"), Seq(this),
     dropCols = Seq("__p"))
 
   private[streaming] override def storeRoots: Seq[String] =
@@ -186,16 +200,19 @@ private[streaming] abstract class IndexedNearDupGate[P](
     * Either way the stored keys are identical — the seeding path writes
     * the index through [[keysCol]] already. */
   protected def keysInCollect: Boolean = false
-  /** Rows of the previous collected batch (−1 before the first), the
+  /** Whether the inline sketch IS the payload and [[sketchAdmissible]] IS
+    * [[similar]] (SimHash: the fingerprint at Hamming radius maxDist). An
+    * exact-sketch gate decides every store match in phase 1: it writes no
+    * payload store, runs no phase-2 fetch, and its resident tier and
+    * executor shards keep no id pool (16-byte entries). Its batch frame
+    * carries the payload under [[skColName]], which reaches the sink. */
+  protected def exactSketch: Boolean = false
+  /** The batch frame's payload column: internal `__p`, or the sink-visible
+    * sketch column of an exact-sketch gate. */
+  private val pCol = if (exactSketch) skColName else "__p"
+  /** Rows of the previous live collected batch (−1 before the first), the
     * input-derived signal [[prepareBatch]]'s task sizing adapts to. */
   @volatile private var lastCollectedRows: Long = -1L
-  /** Target collected rows per task of the per-batch jobs — env-tunable
-    * (`GRAFT_GATE_ROWS_PER_TASK`), defaulting to 2000: small enough that
-    * the payload/key expressions still spread across a cluster for real
-    * batch sizes, large enough that a bounded driver-collected batch is
-    * not split into hundreds of sub-millisecond tasks. */
-  private val collectRowsPerTask: Long =
-    math.max(1L, sys.env.getOrElse("GRAFT_GATE_ROWS_PER_TASK", "2000").toLong)
   /** The exact similarity predicate (driver-side). */
   protected def similar(a: P, b: P): Boolean
   /** Executor-side form of [[similar]] for the distributed verify fallback
@@ -209,7 +226,7 @@ private[streaming] abstract class IndexedNearDupGate[P](
   /** The external Spark type [[externalPayloadOf]] produces. */
   protected def externalPayloadType: org.apache.spark.sql.types.DataType
   /** The payload-store value column (may change precision for storage). */
-  protected def storedPayloadCol: Column = col("__p")
+  protected def storedPayloadCol: Column = col(pCol)
   /** The payload-store read column, decoded back for [[payloadOf]]. */
   protected def readPayloadCol(c: Column): Column = c
   /** Driver-side form of [[storedPayloadCol]] for one payload (the
@@ -218,8 +235,9 @@ private[streaming] abstract class IndexedNearDupGate[P](
   protected def storedPayloadOf(p: P): Any
   /** The external Spark type [[storedPayloadOf]] produces. */
   protected def storedPayloadType: org.apache.spark.sql.types.DataType
-  /** Observation-name prefix (metric labels). */
-  protected def obsPrefix: String
+  /** The gate family's `graft_gate_stats` kind (also the per-batch
+    * observation-name prefix). */
+  private[graft] def kind: String
 
   // ---- resident hot tier (see ResidentIndex scaladoc) --------------------
 
@@ -271,7 +289,15 @@ private[streaming] abstract class IndexedNearDupGate[P](
   /** Spec seam: the driver bucket bloom (must be null on the executor
     * backend — the round-12 overclaim this nulling closes). */
   private[graft] def driverBloomForSpec: BloomFilter = bloom
-  // occupancy as of batch START, overestimate-only — see SimHashNearDupGate
+  // Hot-bucket guard (opt-in, the SimHash.nearDuplicates cap's streaming
+  // form): a boilerplate-heavy crawl floods banded buckets and candidate
+  // generation goes quadratic in the flood. With a cap, buckets whose SEEN
+  // occupancy exceeds it stop generating candidates. Occupancy is a driver
+  // CountMinSketch (overestimates only ⇒ may exclude a near-cap bucket
+  // early, never lets a flooded one through) read as of batch START, so a
+  // batch's own rows don't cap each other and the admitted set stays
+  // deterministic. Recall contract: a pair agreeing ONLY in flooded
+  // buckets is missed — chosen explicitly by setting the cap.
   private val bucketCounts: graft.sketch.CountMinSketch =
     if (maxBucketSize == Int.MaxValue) null
     else graft.sketch.CountMinSketch.empty()
@@ -284,12 +310,16 @@ private[streaming] abstract class IndexedNearDupGate[P](
   // stores stay the durable truth; these are budget-bounded caches kept in
   // exact sync by the commit hooks (and rebuilt from disk after the bulk
   // seeding path marks them stale). resident.active=false ⇒ the original
-  // disk paths run unchanged.
-  private val resident = new ResidentIndex(hasOrd = true,
+  // disk paths run unchanged. An exact-sketch gate's decision needs no
+  // store ids: its entries carry an ord only when windowed (ts pool).
+  private val resident = new ResidentIndex(hasOrd = !exactSketch || ttlEnabled,
     residentBudgetBytes) // 0 (disabled) on the executor backend
   private val residentIds = new scala.collection.mutable.ArrayBuffer[Any]()
-  // per-ord event time (micros) — windowed mode only; aligned with residentIds
+  // per-ord event time (micros) — windowed mode only; aligned with
+  // residentIds when the gate keeps ids
   private val residentTs = new scala.collection.mutable.ArrayBuffer[Long]()
+  // budget bytes charged per pool slot (id object + boxes, or one ts)
+  private val poolSlotBytes = if (exactSketch) 8 else 48
   private val payloadPool: ResidentPayloads =
     if (writesPayload && !executorBackend)
       new ResidentPayloads(payloadBudgetBytes) else null
@@ -302,8 +332,8 @@ private[streaming] abstract class IndexedNearDupGate[P](
     if (!executorBackend) null
     else new ExecutorGateIndex(eng.spark, idxDir,
       if (stateParts > 0) stateParts else ExecutorGateIndex.defaultParts(eng.spark),
-      ttlEnabled, withIds = true,
-      auxCol = if (sketchColOf.isEmpty) None else Some("sk"))
+      ttlEnabled, withIds = !exactSketch,
+      auxCol = sketchColOf.map(_ => skColName))
   /** Probe/spec seam: the distributed index (null on the driver backend). */
   private[graft] def executorIndex: ExecutorGateIndex = execIdx
   /** (backend, resolved executor shard count — 0 on the driver tier):
@@ -343,12 +373,26 @@ private[streaming] abstract class IndexedNearDupGate[P](
     * calibrated cutoff. */
   protected def executorSketchCutoff: Int = 64
 
-  /** Test/probe seam: (tier active, index entries, ~budget bytes, id-pool
-    * slots, payload-pool active) — the TTL pool-compaction specs assert
-    * the budget SHRINKS with the window instead of accreting dead slots. */
+  /** Test/probe seam: (tier active, index entries, ~budget bytes, pool
+    * slots — ids, or timestamps for an exact-sketch gate — payload-pool
+    * active) — the TTL pool-compaction specs assert the budget SHRINKS
+    * with the window instead of accreting dead slots. */
   private[graft] def residentStats: (Boolean, Int, Long, Int, Boolean) =
     synchronized((resident.active, resident.size, resident.approxBytes,
-      residentIds.length, payloadPool == null || payloadPool.active))
+      if (exactSketch) residentTs.length else residentIds.length,
+      payloadPool == null || payloadPool.active))
+
+  /** A new resident pool slot for one stored document: its id (phase 2
+    * fetches by id) unless the sketch is exact, its event time when
+    * windowed; -1 when the entry needs neither. */
+  private def newOrd(id: Any, tsMicros: Long): Int =
+    if (exactSketch && !ttlEnabled) -1
+    else {
+      if (!exactSketch) residentIds += id
+      if (ttlEnabled) residentTs += tsMicros
+      resident.addExtraBytes(poolSlotBytes)
+      math.max(residentIds.length, residentTs.length) - 1
+    }
 
   /** Bulk (non-driver) store writes invalidate the resident tier; the next
     * decide (or bootstrap) rebuilds it from disk inside the gate's lock. */
@@ -366,32 +410,31 @@ private[streaming] abstract class IndexedNearDupGate[P](
       if (files.nonEmpty) {
         val df = coreSession.read.parquet(files: _*)
         val n = df.count()
-        if (n * 24 > residentBudgetBytes) {
+        if (n * (if (exactSketch) 16 else 24) > residentBudgetBytes) {
           System.err.println(s"[graft] ${getClass.getSimpleName}($name): " +
             s"index slice at $n entries exceeds the resident budget — " +
             "running on the O(store)/batch disk path. " +
             IndexedNearDupGate.overflowAdvice)
           resident.deactivate()
         } else {
+          // an exact-sketch gate reads no ids, so each windowed ENTRY gets
+          // its own ts slot; the others share one slot per document id
           val ordOf = new java.util.HashMap[Any, Integer]()
-          val cols = Seq(col("bucket"), col("id")) ++
-            (if (sketchColOf.isEmpty) Nil else Seq(col("sk"))) ++
+          val cols = Seq(col("bucket")) ++ (if (exactSketch) Nil else Seq(col("id"))) ++
+            sketchColOf.map(_ => col(skColName)) ++
             (if (ttlEnabled) Seq(unix_micros(col("ts"))) else Nil)
+          val skPos = cols.length - (if (ttlEnabled) 2 else 1)
           val tsPos = cols.length - 1
           val it = df.select(cols: _*).toLocalIterator()
           while (it.hasNext && resident.active) {
             val r = it.next()
-            val id = r.get(1)
-            var ord = ordOf.get(id)
-            if (ord == null) {
-              ord = Integer.valueOf(residentIds.length)
-              residentIds += id
-              if (ttlEnabled) residentTs += r.getLong(tsPos)
-              ordOf.put(id, ord)
-              resident.addExtraBytes(48)
-            }
+            val ts = if (ttlEnabled) r.getLong(tsPos) else 0L
+            val ord =
+              if (exactSketch) newOrd(null, ts)
+              else ordOf.computeIfAbsent(r.get(1),
+                id => Integer.valueOf(newOrd(id, ts))).intValue
             resident.add(r.getLong(0),
-              if (sketchColOf.isEmpty) 0L else r.getLong(2), ord.intValue)
+              if (sketchColOf.isEmpty) 0L else r.getLong(skPos), ord)
             ()
           }
           resident.mergeDelta()
@@ -424,7 +467,7 @@ private[streaming] abstract class IndexedNearDupGate[P](
 
   // ---- key-position ownership --------------------------------------------
 
-  @inline private def writesPayload: Boolean = shardId == 0
+  @inline private def writesPayload: Boolean = shardId == 0 && !exactSketch
 
   /** The core's slice of a payload's banded keys (all of them at G=1). */
   private def sliceOwned(ks: Array[Long]): Array[Long] =
@@ -454,12 +497,18 @@ private[streaming] abstract class IndexedNearDupGate[P](
 
   private def bootstrapLocked(): Unit = synchronized {
     val files = GateStore.files(idxDir)
-    if (shardCount == 1 && files.isEmpty && GateStore.files(payloadDir).nonEmpty)
+    if (shardCount == 1 && writesPayload && files.isEmpty &&
+        GateStore.files(payloadDir).nonEmpty)
       throw new IllegalStateException(
         s"$name: payload store at $payloadDir exists without its " +
           s"(bucket, id) index at $idxDir — a pre-split-layout store; " +
           "rebuild the index (one pass re-keying the payloads) before " +
           "restarting this gate")
+    if (files.nonEmpty)
+      require(eng.spark.read.parquet(files: _*).columns.contains("bucket"),
+        s"$name: index store at $idxDir predates the exploded (bucket, id, " +
+          "...) layout — re-band it (one pass re-exploding the stored " +
+          "payloads) before restarting this gate")
     if (files.nonEmpty && !executorBackend) {
       // right-size FIRST (metadata-only count): a corpus-sized index under
       // the construction-time design n would run the filter saturated
@@ -487,8 +536,7 @@ private[streaming] abstract class IndexedNearDupGate[P](
       bucketCounts.merge(
         graft.sketch.CountMinSketch.deserialize(row.getAs[Array[Byte]]("c")))
     }
-    batches = math.max(GateStore.maxBatch(idxDir, "keys"),
-      if (writesPayload) GateStore.maxBatch(payloadDir, payloadPrefix) else 0L)
+    batches = storeMaxBatch
     if (ttlEnabled) {
       val fs = GateStore.files(idxDir)
       if (fs.nonEmpty) {
@@ -515,8 +563,8 @@ private[streaming] abstract class IndexedNearDupGate[P](
 
   private def seedStoreLocked(rows: DataFrame): Unit = synchronized {
     batches += 1
-    val keyed = rows.withColumn("__p", payloadCol)
-      .where(col("__p").isNotNull && col(orderCol).isNotNull)
+    val keyed = rows.withColumn(pCol, payloadCol)
+      .where(col(pCol).isNotNull && col(orderCol).isNotNull)
       .persist()
     try {
       appendStores(keyed)
@@ -575,7 +623,7 @@ private[streaming] abstract class IndexedNearDupGate[P](
           sc.setJobGroup(overlapGroup,
             if (desc == null) "" else desc,
             interruptOnCancel = callerGroup == null || interrupt == "true")
-          try keyed.select(explode(ownedKeysCol(col("__p"))).as("bucket"))
+          try keyed.select(explode(ownedKeysCol(col(pCol))).as("bucket"))
             .collect().map(_.getLong(0))
           finally sc.clearJobGroup()
         }))
@@ -587,12 +635,12 @@ private[streaming] abstract class IndexedNearDupGate[P](
     // measures next — cancel-or-await on every exit path
     var seedOk = false
     try {
-      val idxCols = Seq(explode(ownedKeysCol(col("__p"))).as("bucket"),
+      val idxCols = Seq(explode(ownedKeysCol(col(pCol))).as("bucket"),
         col(orderCol).as("id")) ++
-        sketchColOf.map(f => f(col("__p")).as("sk")) ++ tsCols
+        sketchColOf.map(f => f(col(pCol)).as(skColName)) ++ tsCols
       GateStore.append(
         keyed.select(idxCols: _*),
-        idxDir, "keys", batches, sortCol = Some("bucket"))
+        idxDir, idxPrefix, batches, sortCol = Some("bucket"))
       if (ttlEnabled) {
         val r = keyed.agg(max(unix_micros(col(ttlColumn).cast("timestamp"))))
           .collect()(0)
@@ -621,7 +669,7 @@ private[streaming] abstract class IndexedNearDupGate[P](
       // payload-less path: sequential bucket collect over the frame the
       // index append just materialized
       updateFilters(keyed
-        .select(explode(ownedKeysCol(col("__p"))).as("bucket"))
+        .select(explode(ownedKeysCol(col(pCol))).as("bucket"))
         .collect().map(_.getLong(0)))
     collectFut.foreach { f =>
       // surface the ORIGINAL failure, not the ExecutionException wrapper
@@ -643,8 +691,11 @@ private[streaming] abstract class IndexedNearDupGate[P](
       val t = new Thread(r, s"graft-gate-seed-$name"); t.setDaemon(true); t
     })
 
-  /** Driver-side filter update — see SimHashNearDupGate.updateFilters
-    * (executor backend: no bloom; only the opt-in CMS cap updates). */
+  /** Driver-side filter update from the batch's bucket keys (with
+    * multiplicity, for the CMS): every stored row's buckets are exactly
+    * this multiset, so the bloom ⊇ store invariant stays exact. Executor
+    * backend: no bloom (the shards ARE the membership state); only the
+    * opt-in CMS occupancy cap updates. */
   private def updateFilters(buckets: Array[Long]): Unit = {
     if (executorBackend && bucketCounts == null) return
     var i = 0
@@ -690,7 +741,7 @@ private[streaming] abstract class IndexedNearDupGate[P](
       obs: Option[org.apache.spark.sql.Observation]): DataFrame = {
     val base = batch.drop("arrival_timestamp")
     val observed = obs.fold(base)(o => base.observe(o, count(lit(1)).as("rows")))
-    val projected = observed.withColumn("__p", payloadCol)
+    val projected = observed.withColumn(pCol, payloadCol)
     // Scale-adaptive task sizing for the per-batch jobs (round 19, guide
     // §2.2/§6): every row of this frame lands on the driver via the batch
     // collect anyway, so tasks beyond ~rowsPerTask rows each add scheduler
@@ -698,14 +749,17 @@ private[streaming] abstract class IndexedNearDupGate[P](
     // scale: 64 sub-200-row tasks) without any parallelism benefit. Target
     // = ceil(previous batch's collected rows / rowsPerTask) — derived from
     // observed input, not a local-mode constant; coalesce() never raises a
-    // frame's partition count, so a mis-sized target can only no-op. The
-    // first batch (no history) keeps the caller's partitioning.
+    // frame's partition count, so an oversized target only no-ops. With no
+    // usable history — the first batch, or an empty/fully-filtered one,
+    // which says nothing about the next burst's size — the caller's
+    // partitioning stays: coalesce(1) after an empty batch would run a
+    // whole burst through one task.
     val prev = lastCollectedRows
+    val perTask = IndexedNearDupGate.CollectRowsPerTask
     val shaped =
-      if (prev < 0) projected
+      if (prev <= 0) projected
       else projected.coalesce(
-        math.max(1L, (prev + collectRowsPerTask - 1) / collectRowsPerTask)
-          .min(Int.MaxValue.toLong).toInt)
+        ((prev + perTask - 1) / perTask).min(Int.MaxValue.toLong).toInt)
     shaped.persist()
   }
 
@@ -718,7 +772,16 @@ private[streaming] abstract class IndexedNearDupGate[P](
       private[streaming] val sks: Array[Long],
       private[streaming] val tss: Array[Long]) // micros; null when unwindowed
 
-  private[streaming] def collectBatchRows(keyed: DataFrame): AnyRef =
+  /** The live batch collect (this gate's and the sharded wrapper's
+    * onBatch): [[collectRows]], recording the row count that sizes the
+    * next batch's tasks. */
+  private[streaming] def collectBatchRows(keyed: DataFrame): AnyRef = {
+    val c = collectRows(keyed)
+    lastCollectedRows = c.rows.length.toLong
+    c
+  }
+
+  private def collectRows(keyed: DataFrame): CollectedRows =
     traced("collect") {
       // rows with a null order id pass through, are never stored and
       // never suppress: the suppression filter could not target them, and
@@ -727,7 +790,7 @@ private[streaming] abstract class IndexedNearDupGate[P](
       // (orderCol is contractually unique and non-null anyway)
       // windowed mode also drops null-event-time rows (they pass through
       // un-stored — an incomparable time can't window) and collects micros
-      val base = keyed.where(col("__p").isNotNull && col(orderCol).isNotNull)
+      val base = keyed.where(col(pCol).isNotNull && col(orderCol).isNotNull)
       val filtered = if (!ttlEnabled) base
         else base.where(col(ttlColumn).isNotNull)
       // keysInCollect (round 19): gates whose key/sketch math is real
@@ -743,13 +806,12 @@ private[streaming] abstract class IndexedNearDupGate[P](
       val distKeys = keysInCollect
       val keyCols =
         if (!distKeys) Nil
-        else Seq(keysCol(col("__p")).as("__ks")) ++
-          sketchColOf.map(f => f(col("__p")).as("__sk")).toSeq
-      val cols = Seq(col(orderCol), col("__p")) ++ keyCols ++
+        else Seq(keysCol(col(pCol)).as("__ks")) ++
+          sketchColOf.map(f => f(col(pCol)).as("__sk")).toSeq
+      val cols = Seq(col(orderCol), col(pCol)) ++ keyCols ++
         (if (ttlEnabled)
           Seq(unix_micros(col(ttlColumn).cast("timestamp"))) else Nil)
       val collected = filtered.select(cols: _*).collect()
-      lastCollectedRows = collected.length.toLong
       val rows = collected.map(r => (r.get(0), payloadOf(r)))
       val tsPos = cols.length - 1
       if (distKeys) {
@@ -775,28 +837,32 @@ private[streaming] abstract class IndexedNearDupGate[P](
 
   private[streaming] def survivorsOf(keyed: DataFrame,
       sup: java.util.HashSet[Any]): DataFrame =
+    // the internal payload column goes; an exact-sketch gate's (`fp`) is
+    // the sink payload its DDL declares and stays
     GateStore.exceptIds(keyed, orderCol, sup.toArray).drop("__p")
 
   private[streaming] def orderColName: String = orderCol
 
   private[streaming] override def storeMaxBatch: Long =
-    math.max(GateStore.maxBatch(idxDir, "keys"),
+    math.max(GateStore.maxBatch(idxDir, idxPrefix),
       if (writesPayload) GateStore.maxBatch(payloadDir, payloadPrefix) else 0L)
 
   private[streaming] override def commitRecovered(spooled: DataFrame,
       epoch: Long): Unit = synchronized {
     val needPay = writesPayload &&
       GateStore.maxBatch(payloadDir, payloadPrefix) < epoch
-    val needIdx = GateStore.maxBatch(idxDir, "keys") < epoch
+    val needIdx = GateStore.maxBatch(idxDir, idxPrefix) < epoch
     if (batches < epoch) batches = epoch
     if (needPay || needIdx) {
-      // the spool carries __p — re-derive keys/sketches with the same
-      // driver math as a live batch and replay the commit hooks
-      val collected = collectBatchRows(spooled).asInstanceOf[CollectedRows]
+      // the spool carries the payload column — re-derive keys/sketches
+      // with the same driver math as a live batch and replay the commit
+      // hooks (a replay's size says nothing about the live stream's)
+      val collected = collectRows(spooled)
       val ctx = new BatchCtx(spooled, collected.rows,
         collected.fullKeys.map(sliceOwned), collected.sks,
         new java.util.HashSet[Any](),
-        new java.util.HashMap[Any, java.util.HashSet[Integer]]())
+        new java.util.HashMap[Any, java.util.HashSet[Integer]](),
+        rowTs = collected.tss)
       if (needPay) commitPayloadBatch(ctx)
       if (needIdx) commitIndexBatch(ctx)
     }
@@ -865,6 +931,24 @@ private[streaming] abstract class IndexedNearDupGate[P](
       val pairs = new java.util.HashMap[Any, java.util.HashSet[Integer]]()
       val storeTs: java.util.HashMap[Any, java.lang.Long] =
         if (ttlEnabled) new java.util.HashMap[Any, java.lang.Long]() else null
+      // one sketch-admissible store match (batch row ri vs stored entry id
+      // at event time ts): an exact sketch decides it here — in window ⇒ ri
+      // is suppressed; otherwise the pair queues for phase-2 verification
+      // against the stored payload (the window checked there)
+      def matched(ri: Int, id: Any, ts: Long): Unit =
+        if (exactSketch) {
+          if (!ttlEnabled || ts > collected.tss(ri) - ttlMicros)
+            suppressedSet.add(rows(ri)._1)
+          ()
+        } else {
+          if (ttlEnabled) {
+            val prev = storeTs.get(id)
+            if (prev == null || ts > prev.longValue) storeTs.put(id, ts)
+          }
+          pairs.computeIfAbsent(id, _ => new java.util.HashSet[Integer]())
+            .add(ri)
+          ()
+        }
       if (resident.active) {
         // hot tier: the whole phase-1 candidate generation is in-memory
         // lookups — O(batch keys · log store), zero store reads; the
@@ -879,13 +963,9 @@ private[streaming] abstract class IndexedNearDupGate[P](
                 resident.foreachMatch(b) { (sk, ord) =>
                   if ((rowSks == null || sketchAdmissible(rowSks(ri), sk)) &&
                       (!ttlEnabled ||
-                        residentTs(ord) > collected.tss(ri) - ttlMicros)) {
-                    val id = residentIds(ord)
-                    if (ttlEnabled) storeTs.put(id, residentTs(ord))
-                    pairs.computeIfAbsent(id,
-                      _ => new java.util.HashSet[Integer]()).add(ri)
-                    ()
-                  }
+                        residentTs(ord) > collected.tss(ri) - ttlMicros))
+                    matched(ri, if (exactSketch) null else residentIds(ord),
+                      if (ttlEnabled) residentTs(ord) else 0L)
                 }
             }
             i += 1
@@ -897,8 +977,9 @@ private[streaming] abstract class IndexedNearDupGate[P](
         // misses from memory at the same O(batch) job cost, and a
         // corpus-sized driver filter is exactly what this backend exists
         // to remove); the shards return the sketch-admissible in-window
-        // candidate (row, store id) pairs — O(batch) out, O(candidates)
-        // back, state stays on the executors
+        // candidate (row, store id) pairs — or, for an exact sketch, the
+        // suppressed rows themselves — O(batch) out, O(candidates) back,
+        // state stays on the executors
         val probes =
           new scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Long)]()
         var i = 0
@@ -912,17 +993,11 @@ private[streaming] abstract class IndexedNearDupGate[P](
         }
         execIdx.probe(probes.toArray, batches, executorSketchCutoff,
           if (ttlEnabled) ttlMicros else 0L).foreach { case (ri, id, ts) =>
-          if (ttlEnabled) {
-            val prev = storeTs.get(id)
-            if (prev == null || ts > prev.longValue) storeTs.put(id, ts)
-            ()
-          }
-          pairs.computeIfAbsent(id, _ => new java.util.HashSet[Integer]())
-            .add(ri)
-          ()
+          // id-less (exact-sketch) shards answer in-window hits directly
+          if (exactSketch) { suppressedSet.add(rows(ri)._1); () }
+          else matched(ri, id, ts)
         }
-      } else diskPhase1(s, keyed, rows, rowKeys, rowSks, overCapSet, pairs,
-        storeTs)
+      } else diskPhase1(s, rowKeys, rowSks, overCapSet, matched)
       new BatchCtx(keyed, rows, rowKeys, rowSks, suppressedSet, pairs,
         collected.tss, storeTs)
     } }
@@ -931,18 +1006,16 @@ private[streaming] abstract class IndexedNearDupGate[P](
     * bloom gate → file-range prune → in-set-filtered read, driver or
     * distributed by slice bytes. */
   private def diskPhase1(s: org.apache.spark.sql.SparkSession,
-      keyed: DataFrame, rows: Array[(Any, P)],
       rowKeys: Array[Array[Long]], rowSks: Array[Long],
       overCapSet: java.util.HashSet[java.lang.Long],
-      pairs: java.util.HashMap[Any, java.util.HashSet[Integer]],
-      storeTs: java.util.HashMap[Any, java.lang.Long]): Unit = {
+      matched: (Int, Any, Long) => Unit): Unit = {
       val idxF = GateStore.storeFiles(idxDir)
       // candidate map: bloom-positive under-cap bucket -> batch row indices
       val candByBucket =
         new java.util.HashMap[java.lang.Long, java.util.ArrayList[Integer]]()
       if (idxF.nonEmpty) {
         var i = 0
-        while (i < rows.length) {
+        while (i < rowKeys.length) {
           rowKeys(i).foreach { b =>
             if (!overCapSet.contains(b) && bloom.contains(b))
               candByBucket.computeIfAbsent(b, _ => new java.util.ArrayList[Integer]()).add(i)
@@ -975,7 +1048,7 @@ private[streaming] abstract class IndexedNearDupGate[P](
         val idxBytes = GateStore.bytesOf(idxPaths)
         val idxReadCols =
           Seq(col("bucket"), col("id")) ++
-            (if (rowSks == null) Nil else Seq(col("sk"))) ++
+            (if (rowSks == null) Nil else Seq(col(skColName))) ++
             (if (ttlEnabled) Seq(unix_micros(col("ts"))) else Nil)
         val tsPos = idxReadCols.length - 1
         if (keyPush && idxBytes <= GateStore.maxDriverVerifyBytes) traced("phase1") {
@@ -991,18 +1064,11 @@ private[streaming] abstract class IndexedNearDupGate[P](
               if (cands != null) {
                 // sketch prefilter: a bucket-mate whose inline digest rules
                 // out the pair never reaches the payload fetch
-                var set: java.util.HashSet[Integer] = null
                 var k = 0
                 while (k < cands.size) {
                   val i = cands.get(k)
-                  if (rowSks == null || sketchAdmissible(rowSks(i), r.getLong(2))) {
-                    if (set == null) {
-                      set = pairs.computeIfAbsent(r.get(1),
-                        _ => new java.util.HashSet[Integer]())
-                      if (ttlEnabled) storeTs.put(r.get(1), r.getLong(tsPos))
-                    }
-                    set.add(i); ()
-                  }
+                  if (rowSks == null || sketchAdmissible(rowSks(i), r.getLong(2)))
+                    matched(i, r.get(1), if (ttlEnabled) r.getLong(tsPos) else 0L)
                   k += 1
                 }
               }
@@ -1035,16 +1101,13 @@ private[streaming] abstract class IndexedNearDupGate[P](
             idx0.where(GateStore.inSetCol(col("bucket"), hitKeys.toSeq)) else idx0
           val joined0 = broadcast(hitDf).join(idx, Seq("bucket"))
           val joined = if (rowSks == null) joined0
-            else joined0.where(sketchAdmissibleCol(col("__rsk"), col("sk")))
+            else joined0.where(sketchAdmissibleCol(col("__rsk"), col(skColName)))
           val selCols = Seq(col("__ri"), col("id")) ++
             (if (ttlEnabled) Seq(unix_micros(col("ts")).as("__ts")) else Nil)
           GateStore.withInPushdown(s, hitKeys.length)(
             joined.select(selCols: _*)
               .distinct().collect()).foreach { r =>
-              pairs.computeIfAbsent(r.get(1),
-                _ => new java.util.HashSet[Integer]()).add(r.getInt(0))
-              if (ttlEnabled) storeTs.put(r.get(1), r.getLong(2))
-              ()
+              matched(r.getInt(0), r.get(1), if (ttlEnabled) r.getLong(2) else 0L)
             }
         }
       }
@@ -1302,7 +1365,7 @@ private[streaming] abstract class IndexedNearDupGate[P](
             org.apache.spark.sql.types.LongType, nullable = false),
           org.apache.spark.sql.types.StructField("id", idType)) ++
           (if (ctx.rowSks == null) Nil
-           else Seq(org.apache.spark.sql.types.StructField("sk",
+           else Seq(org.apache.spark.sql.types.StructField(skColName,
              org.apache.spark.sql.types.LongType, nullable = false))) ++
           (if (!ttlEnabled) Nil
            else Seq(org.apache.spark.sql.types.StructField("ts",
@@ -1312,10 +1375,10 @@ private[streaming] abstract class IndexedNearDupGate[P](
           // driver-direct parquet write — no Spark job (see appendLocal);
           // exotic id types fall back to the LocalRelation write
           traced("append-idx-write") {
-            if (!GateStore.appendLocal(idx, schema, idxDir, "keys", batches,
+            if (!GateStore.appendLocal(idx, schema, idxDir, idxPrefix, batches,
                 sortCol = Some("bucket")))
               GateStore.append(coreSession.createDataFrame(idx, schema),
-                idxDir, "keys", batches, sortCol = Some("bucket"))
+                idxDir, idxPrefix, batches, sortCol = Some("bucket"))
           }
         }
         // hot-tier mirror from the keys already in hand (skip when stale —
@@ -1324,10 +1387,8 @@ private[streaming] abstract class IndexedNearDupGate[P](
           var i = 0
           while (i < ctx.rows.length && resident.active) {
             if (ctx.rowKeys(i).nonEmpty) {
-              val ord = residentIds.length
-              residentIds += ctx.rows(i)._1
-              if (ttlEnabled) residentTs += ctx.rowTs(i)
-              resident.addExtraBytes(48)
+              val ord = newOrd(ctx.rows(i)._1,
+                if (ttlEnabled) ctx.rowTs(i) else 0L)
               val sk = if (ctx.rowSks == null) 0L else ctx.rowSks(i)
               ctx.rowKeys(i).foreach(b => { resident.add(b, sk, ord); () })
             }
@@ -1351,15 +1412,16 @@ private[streaming] abstract class IndexedNearDupGate[P](
         // buffer this batch's delta for the distributed shards; it rides
         // the NEXT probe job (after this durable append — the required
         // order). Buffer EVERY batch, even empty, to keep the shards'
-        // applied-batch range contiguous.
+        // applied-batch range contiguous. Id-less shards get no ids.
         val delta = new scala.collection.mutable.ArrayBuffer[
           ExecutorGateIndex.DeltaRow]()
         var i = 0
         while (i < ctx.rows.length) {
           val sk = if (ctx.rowSks == null) 0L else ctx.rowSks(i)
           val ts = if (ttlEnabled) ctx.rowTs(i) else 0L
+          val id = if (exactSketch) null else ctx.rows(i)._1
           ctx.rowKeys(i).foreach(b =>
-            delta += ExecutorGateIndex.DeltaRow(b, sk, ts, ctx.rows(i)._1))
+            delta += ExecutorGateIndex.DeltaRow(b, sk, ts, id))
           i += 1
         }
         execIdx.bufferDelta(batches, delta.toArray)
@@ -1375,7 +1437,7 @@ private[streaming] abstract class IndexedNearDupGate[P](
   private[streaming] def onBatch(batch: DataFrame): Unit = ingestLock.synchronized { traced("onbatch-total") {
     if (exactlyOnce) { pipeline.drain(); synchronized(epochs.recoverPending()) }
     val obs = new org.apache.spark.sql.Observation(
-      s"${obsPrefix}_${name}_${System.nanoTime()}")
+      s"${kind}_${name}_${System.nanoTime()}")
     val keyed = prepareBatch(batch, Some(obs))
     var deferred = false
     try {
@@ -1418,7 +1480,7 @@ private[streaming] abstract class IndexedNearDupGate[P](
     if (!deferred) maybeCompact()
   } }
 
-  /** Fold both stores into range shards — the index by bucket, the
+  /** Fold the stores into range shards — the index by bucket, the
     * payloads by id — and regrow the driver bloom when the index outgrew
     * its design size, so the fast path survives unbounded streams.
     * Crash-safe without a manifest (duplicated rows change nothing). */
@@ -1441,23 +1503,24 @@ private[streaming] abstract class IndexedNearDupGate[P](
       Seq("id", payloadColName) ++ tsCols, batches, sortCol = Some("id"),
       rowFilter = reap)
     val idxCols = Seq("bucket", "id") ++
-      (if (sketchColOf.isEmpty) Nil else Seq("sk")) ++ tsCols
-    val n = GateStore.compact(eng.spark, idxDir, "keys", idxCols,
+      sketchColOf.map(_ => skColName) ++ tsCols
+    val n = GateStore.compact(eng.spark, idxDir, idxPrefix, idxCols,
       batches, sortCol = Some("bucket"), rowFilter = reap)
     if (ttlEnabled && maxSeenTsMicros != Long.MinValue && resident.active) {
       // resident mirror of the disk reap, WITH pool compaction: reaped
       // ords are remapped away so ids/timestamps/payloads and the byte
       // accounting shrink with the window — a monotonic budget would
-      // deactivate the tier on dead slots alone over a long stream
+      // deactivate the tier on dead slots alone over a long stream (the ts
+      // pool spans every ord; the id pool, when kept, is aligned with it)
       val cutoff = maxSeenTsMicros - ttlMicros
-      val remap = new Array[Int](residentIds.length)
+      val remap = new Array[Int](residentTs.length)
       val nIds = new scala.collection.mutable.ArrayBuffer[Any]()
       val nTs = new scala.collection.mutable.ArrayBuffer[Long]()
       var i = 0
-      while (i < residentIds.length) {
+      while (i < residentTs.length) {
         if (residentTs(i) > cutoff) {
-          remap(i) = nIds.length
-          nIds += residentIds(i)
+          remap(i) = nTs.length
+          if (!exactSketch) nIds += residentIds(i)
           nTs += residentTs(i)
         } else {
           remap(i) = -1
@@ -1471,7 +1534,7 @@ private[streaming] abstract class IndexedNearDupGate[P](
       }
       residentIds.clear(); residentIds ++= nIds
       residentTs.clear(); residentTs ++= nTs
-      resident.retainRemap(remap, nIds.length.toLong * 48)
+      resident.retainRemap(remap, nTs.length.toLong * poolSlotBytes)
     }
     // the fold rewrote the store files (and reaped, when windowed): the
     // executor shards rebuild from the new snapshot at the next probe —
@@ -1491,6 +1554,12 @@ private[streaming] abstract class IndexedNearDupGate[P](
 }
 
 private[streaming] object IndexedNearDupGate {
+  /** Target collected rows per task of the per-batch jobs: small enough
+    * that the payload/key expressions still spread across a cluster for
+    * real batch sizes, large enough that a bounded driver-collected batch
+    * is not split into hundreds of sub-millisecond tasks. */
+  val CollectRowsPerTask: Long = 2000L
+
   /** What an operator should DO about a resident-budget overflow, in
     * preference order — the distributed tier is the designed scale path
     * (its probes stay flat past any driver budget: BENCH `gate_exec_*`

@@ -29,9 +29,11 @@ import graft.ops.{MinHashLsh, TextOps}
   * loudly below 0.95.
   *
   * State, filters, delivery, compaction, restart, and the zero-shuffle
-  * per-batch flow are [[IndexedNearDupGate]]'s: a `seen_keys` (bucket,
-  * id) band-key index in range shards, and a `seen_sigs` (id, signature)
-  * store read only for surfaced candidate ids.
+  * per-batch flow are [[IndexedNearDupGate]]'s — the batch loop it shares
+  * with [[SimHashNearDupGate]] and [[CosineNearDupGate]]: a `seen_keys`
+  * (bucket, id, sk) band-key index in range shards, and a `seen_sigs`
+  * (id, signature) store read only for surfaced candidate ids (the
+  * split-store shape; SimHash is the index-only one).
   */
 final class JaccardNearDupGate private (
     eng: ContViewEngine,
@@ -58,11 +60,12 @@ final class JaccardNearDupGate private (
     stateParts: Int = 0,
     residentMb: Long = -1L)
   extends IndexedNearDupGate[Array[Long]](eng, name, orderCol, sink,
-    sigDir, idxDir, "sigs", "sig", bloomP, bloomN0, maxBucketSize, compactEvery,
+    sigDir, idxDir, "sigs", "sig", "keys", "sk",
+    bloomP, bloomN0, maxBucketSize, compactEvery,
     shardId, shardCount, delivery, ttlMillis, ttlColumn, backend, stateParts,
     residentMb) {
 
-  override protected def obsPrefix: String = "jacgate"
+  override private[graft] def kind: String = "jaccard"
   override protected def payloadCol: Column =
     MinHashLsh.minhashSignature(
       TextOps.shingles(expr(textSql), shingleN), numBands * rowsPerBand)

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType}
 
 import graft.cv.ContViewEngine
-import graft.functions.GraftFunctions
 import graft.ops.{SimHash, TextOps}
-import graft.sketch.BloomFilter
 
 /** Streaming NEAR-duplicate gate: the approximate sibling of
   * [[StreamDedupGate]]. A document is forwarded iff no earlier document on
@@ -23,44 +22,26 @@ import graft.sketch.BloomFilter
   * [[StreamDedupGate]]'s delivery contract).
   *
   * State is the fingerprint store EXPLODED by banded bucket key —
-  * (bucket, id, fp) rows in append-only parquet, never the text — under
-  * the block-permutation scheme (Manku WWW'07; `blocks`=6 → C(6,3)=20
-  * keys of ~33 bits), so candidate generation is an equi-join with recall
-  * 1.0 at distance ≤ maxDist and the explode cost is paid ONCE at append
-  * time, not per batch. Per-batch store cost tracks the BATCH, not the
-  * corpus:
-  *  - a driver-resident Bloom filter over every bucket key ever seen
-  *    gates the join — a batch row whose 20 buckets ALL miss the filter
-  *    provably has no store candidate, and a fully-fresh batch reads
-  *    nothing;
-  *  - the surviving (bloom-positive) bucket keys are collected (bounded
-  *    by [[GateStore.maxPushdownKeys]]) and pushed into the store scan as
-  *    a file-range prune ([[GateStore.pruned]] against compaction's
-  *    range-sharded shards) plus an in-set row filter, so the join reads
-  *    only the key slices the batch actually touches;
-  *  - compaction folds the per-batch appends into bucket-range-sharded
-  *    sorted files (parallel rewrite) and regrows the Bloom filter when
-  *    the store outgrows its design size, so the fast path never silently
-  *    saturates away.
-  * Above the store paths sits a RESIDENT hot tier ([[ResidentIndex]],
-  * PERF_NOTES §16): the per-core (bucket → fp) slice held as sorted
-  * in-memory runs, kept in exact sync by the commit hooks and rebuilt
-  * from the store at bootstrap. While within its byte budget (512 MB
-  * default, `GRAFT_GATE_RESIDENT_MB`) the whole candidate check is
-  * in-memory popcounts — zero store reads per batch, per-batch cost flat
-  * in corpus size (probe: 6.1k→6.8k ev/s across the 10×→100× decade).
-  * On overflow the tier deactivates loudly and the disk paths above run
-  * unchanged — O(store) per batch worst case once candidate keys span
-  * every range shard, which is the documented fallback regime, divided
-  * by G under core sharding and bounded absolutely by a TTL window.
-  * The banding geometry (blocks, maxDist) is baked into the stored
-  * bucket keys; the raw `fp` column rides along so a re-band is a
-  * one-pass rewrite, and restarts must use the geometry the store was
-  * written with.
+  * (bucket, id, fp) rows in append-only parquet under `seen_fps/`, never
+  * the text — under the block-permutation scheme (Manku WWW'07;
+  * `blocks`=6 → C(6,3)=20 keys of ~33 bits), so candidate generation has
+  * recall 1.0 at distance ≤ maxDist and the explode cost is paid ONCE at
+  * append time, not per batch.
+  *
+  * The batch lifecycle — bloom-gated, file-range-pruned store reads, the
+  * resident hot tier, compaction, restart, exactly-once, core sharding and
+  * the executor backend — is [[IndexedNearDupGate]]'s. This class supplies
+  * only the geometry: the payload is the 64-bit fingerprint, stored INLINE
+  * as the index sketch and compared by popcount, so the sketch is exact
+  * and the gate is index-only (no payload store, 16-byte resident
+  * entries). The fingerprint rides to the sink as `fp`. The banding
+  * geometry (blocks, maxDist) is baked into the stored bucket keys; the
+  * raw `fp` column rides along so a re-band is a one-pass rewrite, and
+  * restarts must use the geometry the store was written with.
   */
 final class SimHashNearDupGate private (
     eng: ContViewEngine,
-    val name: String,
+    name: String,
     textSql: String,
     orderCol: String,
     sink: String,
@@ -78,858 +59,48 @@ final class SimHashNearDupGate private (
     ttlColumn: String = "",
     backend: String = StreamDedupGate.DriverBackend,
     stateParts: Int = 0,
-    residentMb: Long = -1L) extends ShardableGateCore {
+    residentMb: Long = -1L)
+  extends IndexedNearDupGate[Long](eng, name, orderCol, sink,
+    null, storeDir, null, null, "fps", "fp",
+    bloomP, bloomN0, maxBucketSize, compactEvery,
+    shardId, shardCount, delivery, ttlMillis, ttlColumn, backend, stateParts,
+    residentMb) {
 
-  require(shardCount >= 1 && shardId >= 0 && shardId < shardCount,
-    s"bad shard assignment $shardId/$shardCount")
-  require(delivery == StreamDedupGate.AtLeastOnce ||
-    delivery == StreamDedupGate.ExactlyOnce,
-    s"unknown delivery mode '$delivery'")
-  require(ttlMillis >= 0, s"negative ttl $ttlMillis")
-  require(ttlMillis == 0 || ttlColumn.nonEmpty,
-    "a windowed gate needs the event-time column: pass ttlColumn")
-  require(backend == StreamDedupGate.DriverBackend ||
-    backend == StreamDedupGate.ExecutorBackend,
-    s"unknown state backend '$backend'")
-  require(backend == StreamDedupGate.DriverBackend || shardCount == 1,
-    "the executor backend IS the scale-out — it does not compose with " +
-      "driver-thread core sharding")
+  override private[graft] def kind: String = "simhash"
+  override protected def exactSketch: Boolean = true
 
-  /** EXECUTOR STATE BACKEND — `backend = "executor"`
-    * ([[ExecutorGateIndex]]): the probe state lives partitioned across
-    * executor-local shards instead of the driver hot tier, so gate memory
-    * scales with the cluster, not one JVM. Decision semantics are
-    * bit-identical to the driver paths (same bucket math, same Hamming
-    * check, same window rule); the trade is one Spark job per batch, so
-    * at small state the driver tier is faster — this is the path past the
-    * resident budget, not a default. */
-  private val executorBackend = backend == StreamDedupGate.ExecutorBackend
+  override protected def payloadCol: Column =
+    SimHash.simhash64(TextOps.tokens(expr(textSql)))
+  override protected def payloadOf(r: Row): Long = r.getLong(1)
+  override protected def keysCol(payload: Column): Column =
+    SimHash.blockKeys(payload, blocks, maxDist)
+  override protected def keysOf(p: Long): Array[Long] =
+    SimHash.blockKeysOf(p, blocks, maxDist)
 
-  /** Per-core resident budget: the gate-level `resident_mb` DDL option
-    * (catalog-replayed) beats the process-wide env default — a pipeline
-    * gives its big gate the memory and its small gates the floor. */
-  private val residentBudgetBytes: Long =
-    if (executorBackend) 0L
-    else (if (residentMb >= 0) residentMb << 20
-          else ResidentIndex.budgetBytes) / shardCount
+  // the fingerprint is its own inline sketch, and popcount ≤ maxDist is
+  // the whole similarity — sketch admission IS the decision
+  override protected def sketchColOf: Option[Column => Column] = Some(c => c)
+  override protected def sketchOf(p: Long): Long = p
+  override protected def sketchAdmissible(a: Long, b: Long): Boolean =
+    java.lang.Long.bitCount(a ^ b) <= maxDist
+  override protected def sketchAdmissibleCol(a: Column, b: Column): Column =
+    bit_count(a.bitwiseXOR(b)) <= lit(maxDist)
+  override protected def executorSketchCutoff: Int = maxDist
+  override protected def similar(a: Long, b: Long): Boolean =
+    sketchAdmissible(a, b)
+  override protected def similarCol(batchPayload: Column, storePayload: Column): Column =
+    sketchAdmissibleCol(batchPayload, storePayload)
 
-  // WINDOWED (TTL) MODE — see IndexedNearDupGate's windowed contract
-  // (identical semantics; the fp store gains a ts column, compaction
-  // reaps by window, the resident tier mirrors the reap)
-  private val ttlEnabled = ttlMillis > 0
-  private val ttlMicros = ttlMillis * 1000L
-  private var maxSeenTsMicros = Long.MinValue
-
-  @inline private def microsToTs(m: Long): java.sql.Timestamp = {
-    val sec = Math.floorDiv(m, 1000000L)
-    val t = new java.sql.Timestamp(sec * 1000L)
-    t.setNanos((m - sec * 1000000L).toInt * 1000)
-    t
-  }
-
-  private val exactlyOnce = delivery == StreamDedupGate.ExactlyOnce
-  /** The epoch-spool protocol (exactly-once mode; see [[GateEpochs]]) —
-    * the unsharded composition; sharded gates run the wrapper's. The
-    * spooled `fp` column is part of the gate's documented sink payload,
-    * so nothing beyond the flag is dropped at delivery. */
-  private[graft] lazy val epochs = new GateEpochs(eng, name, sink,
-    GateStore.child(GateStore.parentOf(storeDir), "spool"), Seq(this),
-    dropCols = Nil)
-
-  private[streaming] override def storeRoots: Seq[String] = Seq(storeDir)
-  /** Deferred-commit pipeline (at-least-once unsharded batches): the
-    * store append + compaction of batch N overlap batch N+1's
-    * prepare/collect; [[CommitPipeline]] documents the ordering. */
-  private val pipeline = new CommitPipeline(s"$name-$shardId", storeRoots)
-  /** Test/stats seam: see [[CommitPipeline]]. */
-  private[graft] def commitPipeline: CommitPipeline = pipeline
-  private val ingestLock = new Object
-
-  /** Barrier for callers about to read or delete the durable stores
-    * (engine drop path, probes): joins any deferred commit. */
-  private[graft] def drainCommits(): Unit = pipeline.drain()
-
-  /** Deliver any epoch the last crash interrupted RIGHT NOW (instead of
-    * at the next batch head — a quiet stream would otherwise withhold a
-    * spool-committed epoch's rows indefinitely). Must not be called while
-    * holding engine locks. No-op in at-least-once mode. */
-  def recover(): Unit =
-    if (exactlyOnce) { pipeline.drain(); synchronized(epochs.recoverPending()) }
-
-  /** Key-position ownership (see [[ShardedNearDupGate]]): the block
-    * permutation emits C(blocks, blocks-maxDist/…) keys in a fixed order,
-    * and core k owns positions ≡ k (mod shardCount) — every colliding
-    * pair is decided by exactly one core, union = unsharded set. */
-  private def ownedKeysOfFp(fp: Long): Array[Long] = {
-    val ks = SimHash.blockKeysOf(fp, blocks, maxDist)
-    if (shardCount == 1) ks
-    else {
-      val out = new Array[Long]((ks.length - shardId + shardCount - 1) / shardCount)
-      var i = shardId
-      var k = 0
-      while (i < ks.length) { out(k) = ks(i); k += 1; i += shardCount }
-      out
-    }
-  }
-
-  private def ownedKeysCol(fp: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val ks = SimHash.blockKeys(fp, blocks, maxDist)
-    if (shardCount == 1) ks
-    else filter(ks, (_, i) => i % lit(shardCount) === lit(shardId))
-  }
-
-  // see IndexedNearDupGate.coreSession: isolated SQLConf per sharded core
-  private lazy val coreSession =
-    if (shardCount == 1) eng.spark else eng.spark.newSession()
-
-  // null on the executor backend — NO corpus-sized driver structure exists
-  // there at all, and an accidental probe/add fails loudly instead of
-  // silently regrowing to store size
-  private var bloom: BloomFilter =
-    if (executorBackend) null else BloomFilter.empty(bloomP, bloomN0)
-  private var bloomN = bloomN0
-  /** Spec seam: the driver bucket bloom (must be null on the executor
-    * backend — the round-12 overclaim this nulling closes). */
-  private[graft] def driverBloomForSpec: BloomFilter = bloom
-  // Hot-bucket guard (opt-in, the SimHash.nearDuplicates cap's streaming
-  // form): a boilerplate-heavy crawl floods banded buckets — thousands of
-  // near-identical fingerprints sharing every key — and the candidate join
-  // goes quadratic in the flood. With a cap, buckets whose SEEN-so-far
-  // occupancy exceeds it stop generating candidates on both sides of the
-  // join. Occupancy is tracked by a driver-resident CountMinSketch over
-  // bucket keys (overestimates only ⇒ may exclude a near-cap bucket early,
-  // never lets a flooded one through); the batch reads the sketch as of
-  // batch START, so a batch's own rows don't cap each other mid-flight and
-  // the admitted set stays deterministic. Recall contract: a pair agreeing
-  // ONLY in flooded buckets is missed — same trade as the batch pipeline,
-  // chosen explicitly by setting the cap.
-  private val bucketCounts: graft.sketch.CountMinSketch =
-    if (maxBucketSize == Int.MaxValue) null
-    else graft.sketch.CountMinSketch.empty()
-  private var batches = 0L
-  private var admitted = 0L
-  private var suppressed = 0L
-
-  /** (batches, admitted survivors, suppressed near-duplicates) so far. */
-  def stats: (Long, Long, Long) = synchronized((batches, admitted, suppressed))
-
-  // Resident hot tier (see ResidentIndex): the per-core (bucket → fp)
-  // slice — the simhash decision needs no store ids at all, so entries are
-  // 16 bytes and the whole candidate check is in-memory popcounts while
-  // within budget. The exploded parquet store stays the durable truth (and
-  // the beyond-budget fallback path).
-  private val resident = new ResidentIndex(
-    hasOrd = ttlEnabled, // windowed entries reference the ts pool by ord
-    residentBudgetBytes) // 0 (disabled) on the executor backend
-
-  /** Executor-partitioned probe state (executor backend only). */
-  private val execIdx: ExecutorGateIndex =
-    if (!executorBackend) null
-    else new ExecutorGateIndex(eng.spark, storeDir,
-      if (stateParts > 0) stateParts else ExecutorGateIndex.defaultParts(eng.spark),
-      ttlEnabled)
-  /** Probe/spec seam: the distributed index (null on the driver backend). */
-  private[graft] def executorIndex: ExecutorGateIndex = execIdx
-  /** (backend, resolved executor shard count — 0 on the driver tier). */
-  private[graft] def backendInfo: (String, Int) =
-    (backend, if (execIdx == null) 0 else execIdx.parts)
-  private val residentTs = new scala.collection.mutable.ArrayBuffer[Long]()
-  private var residentStale = false
-
-  /** Test/probe seam: (tier active, index entries, ~budget bytes, ts-pool
-    * slots, payload-pool active [always true — simhash stores none]) —
-    * see [[IndexedNearDupGate.residentStats]]. */
-  private[graft] def residentStats: (Boolean, Int, Long, Int, Boolean) =
-    synchronized((resident.active, resident.size, resident.approxBytes,
-      residentTs.length, true))
-
-  private def rebuildResident(): Unit = {
-    residentStale = false
-    if (!resident.active) return
-    resident.reset()
-    // ts pool clears with the index, before any early return: a rebuild
-    // over an empty (or budget-overflowing) store must not leave stale
-    // timestamps for later appends' ords to collide with
-    residentTs.clear()
-    val files = GateStore.files(storeDir)
-    if (files.isEmpty) return
-    val df = coreSession.read.parquet(files: _*)
-    if (df.count() * 16 > residentBudgetBytes) {
-      System.err.println(s"[graft] SimHashNearDupGate($name): store slice " +
-        "exceeds the resident budget — running on the O(store)/batch disk " +
-        "path. " + IndexedNearDupGate.overflowAdvice)
-      resident.deactivate()
-      return
-    }
-    val cols = Seq(col("bucket"), col("fp")) ++
-      (if (ttlEnabled) Seq(unix_micros(col("ts"))) else Nil)
-    val it = df.select(cols: _*).toLocalIterator()
-    while (it.hasNext && resident.active) {
-      val r = it.next()
-      if (!ttlEnabled) resident.add(r.getLong(0), r.getLong(1), -1)
-      else {
-        val ord = residentTs.length
-        residentTs += r.getLong(2)
-        resident.addExtraBytes(8)
-        resident.add(r.getLong(0), r.getLong(1), ord)
-      }
-      ()
-    }
-    resident.mergeDelta()
-  }
-
-  @inline private def ensureResident(): Unit =
-    if (residentStale) traced("resident-rebuild")(rebuildResident())
-
-  /** Restart bootstrap: the exploded fingerprint store IS the dedup state;
-    * one distributed pass over its bucket column rebuilds the
-    * memory-resident bucket bloom (and the CMS occupancy when the
-    * hot-bucket cap is active). */
-  private[streaming] def bootstrap(): Unit = {
-    // same-JVM restart fixtures: wait out any deferred commit an abandoned
-    // instance of this store still has in flight (see CommitPipeline)
-    CommitPipeline.drainRoots(storeRoots)
-    bootstrapLocked()
-  }
-
-  private def bootstrapLocked(): Unit = synchronized {
-    val files = GateStore.files(storeDir)
-    if (files.nonEmpty) {
-      val store = eng.spark.read.parquet(files: _*)
-      require(store.columns.contains("bucket"),
-        s"$name: fingerprint store at $storeDir predates the exploded " +
-          "(bucket, id, fp) layout — re-band it (one pass re-exploding fp) " +
-          "before restarting this gate")
-      // executor backend: NO driver bloom at all — probe state lives on
-      // the shards, which answer every under-cap key from memory; only
-      // the CMS occupancy cap (opt-in) stays driver-resident
-      if (!executorBackend) {
-        // right-size FIRST (metadata-only count): a corpus-sized store
-        // under the construction-time design n would run the filter
-        // saturated until the next compaction regrew it
-        bloomN = GateStore.bloomSizeFor(store.count(), bloomN)
-        val keys = store.select(col("bucket"))
-        val row =
-          if (bucketCounts == null)
-            keys.agg(GraftFunctions.bloom_agg(col("bucket"), bloomP, bloomN).as("b"))
-              .collect()(0)
-          else
-            keys.agg(GraftFunctions.bloom_agg(col("bucket"), bloomP, bloomN).as("b"),
-              GraftFunctions.freq_agg(col("bucket")).as("c")).collect()(0)
-        bloom = BloomFilter.empty(bloomP, bloomN)
-        bloom.union(BloomFilter.deserialize(row.getAs[Array[Byte]]("b")))
-        if (bucketCounts != null)
-          bucketCounts.merge(
-            graft.sketch.CountMinSketch.deserialize(row.getAs[Array[Byte]]("c")))
-      } else if (bucketCounts != null) {
-        val row = store.select(col("bucket"))
-          .agg(GraftFunctions.freq_agg(col("bucket")).as("c")).collect()(0)
-        bucketCounts.merge(
-          graft.sketch.CountMinSketch.deserialize(row.getAs[Array[Byte]]("c")))
-      }
-      batches = GateStore.maxBatch(storeDir, "fps")
-      if (ttlEnabled) {
-        val r = store.agg(max(unix_micros(col("ts")))).collect()(0)
-        if (!r.isNullAt(0)) maxSeenTsMicros = r.getLong(0)
-      }
-    }
-    rebuildResident() // restart resumes the hot tier from the store
-    if (exactlyOnce && shardCount == 1) {
-      // store half only — sink delivery at the next batch head (the DDL
-      // replay path holds the engine's registration lock here)
-      epochs.recoverStores()
-      batches = math.max(batches, epochs.maxEpoch())
-    }
-  }
-
-  /** Fold per-batch fingerprint files into bucket-range shards — crash-safe
-    * without a manifest (duplicated (bucket, id, fp) rows change nothing:
-    * the candidate join deduplicates suppressor hits), so the shards land
-    * before the olds are unlinked. Regrows the driver bloom when the store
-    * has outgrown its design size, so the bloom's false-positive rate (and
-    * with it the fast path) survives an unbounded stream. */
-  def compact(): Unit = {
-    pipeline.drain() // no fold under a still-in-flight append (no-op on
-    // the pipeline's own thread — the cadence fold runs inside the task)
-    compactLocked()
-  }
-
-  private def compactLocked(): Unit = synchronized {
-    // windowed mode: fold-time reap (see IndexedNearDupGate.compact)
-    val reap: Option[org.apache.spark.sql.Column] =
-      if (ttlEnabled && maxSeenTsMicros != Long.MinValue)
-        Some(col("ts") > lit(microsToTs(maxSeenTsMicros - ttlMicros)))
-      else None
-    val n = GateStore.compact(eng.spark, storeDir, "fps",
-      Seq("bucket", "id", "fp") ++ (if (ttlEnabled) Seq("ts") else Nil),
-      batches, sortCol = Some("bucket"), rowFilter = reap)
-    if (ttlEnabled && maxSeenTsMicros != Long.MinValue && resident.active) {
-      // resident mirror of the disk reap, WITH ts-pool compaction (see
-      // IndexedNearDupGate.compactLocked): reaped ords remap away so the
-      // pool and the byte accounting shrink with the window
-      val cutoff = maxSeenTsMicros - ttlMicros
-      val remap = new Array[Int](residentTs.length)
-      val nTs = new scala.collection.mutable.ArrayBuffer[Long]()
-      var i = 0
-      while (i < residentTs.length) {
-        if (residentTs(i) > cutoff) { remap(i) = nTs.length; nTs += residentTs(i) }
-        else remap(i) = -1
-        i += 1
-      }
-      residentTs.clear(); residentTs ++= nTs
-      resident.retainRemap(remap, nTs.length.toLong * 8)
-    }
-    // the fold rewrote the store files (and reaped, when windowed): the
-    // executor shards rebuild from the new snapshot at the next probe —
-    // and there is no driver bloom to regrow on that backend
-    if (executorBackend) { execIdx.invalidate(); return }
-    if (n > bloomN) {
-      bloomN = GateStore.bloomSizeFor(n, bloomN)
-      System.err.println(s"[graft] SimHashNearDupGate($name): store at $n keys " +
-        s"outgrew the bloom design size; regrowing filter to n=$bloomN")
-      bloom = GateStore.buildBloom(eng.spark, storeDir, "bucket", bloomP, bloomN)
-    }
-  }
-
-  /** Append pre-fingerprinted rows straight into the seen-store (bloom/CMS
-    * updated, nothing forwarded): the scale-probe's way of standing up a
-    * 10×/100× store without replaying history through the join path. */
-  private[graft] def seedStore(rows: DataFrame): Unit = {
-    pipeline.drain() // no interleaving with a deferred batch commit
-    seedStoreLocked(rows)
-  }
-
-  private def seedStoreLocked(rows: DataFrame): Unit = synchronized {
-    batches += 1
-    val keyed = rows
-      .withColumn("fp", SimHash.simhash64(TextOps.tokens(expr(textSql))))
-      .where(col("fp").isNotNull && col(orderCol).isNotNull)
-      .persist()
-    try {
-      GateStore.append(
-        keyed.select(Seq(explode(ownedKeysCol(col("fp"))).as("bucket"),
-          col(orderCol).as("id"), col("fp")) ++
-          (if (ttlEnabled)
-            Seq(col(ttlColumn).cast("timestamp").as("ts")) else Nil): _*),
-        storeDir, "fps", batches, sortCol = Some("bucket"))
-      if (ttlEnabled) {
-        val r = keyed.agg(max(unix_micros(col(ttlColumn).cast("timestamp"))))
-          .collect()(0)
-        if (!r.isNullAt(0) && r.getLong(0) > maxSeenTsMicros)
-          maxSeenTsMicros = r.getLong(0)
-      }
-      // executor backend with no occupancy cap: no driver filter exists,
-      // so the O(seed) bucket collect is skipped entirely
-      if (!executorBackend || bucketCounts != null)
-        updateFilters(collectBuckets(keyed))
-      residentStale = true // bulk write bypassed the hot tier
-      if (executorBackend) execIdx.invalidate() // ... and the exec shards
-    } finally { keyed.unpersist(); () }
-  }
-
-  /** Driver-side filter update from the batch's collected bucket keys
-    * (with multiplicity, for the CMS): every stored row's buckets are
-    * exactly this multiset, so the bloom ⊇ store invariant stays exact.
-    * Executor backend: no bloom (the shards ARE the membership state —
-    * O(corpus) driver bits would defeat the backend's purpose); only the
-    * opt-in CMS occupancy cap updates. */
-  private def updateFilters(buckets: Array[Long]): Unit = {
-    if (executorBackend && bucketCounts == null) return
-    var i = 0
-    val seen =
-      if (executorBackend) null else new java.util.HashSet[java.lang.Long]()
-    while (i < buckets.length) {
-      val b = buckets(i)
-      if (seen != null && seen.add(b)) bloom.add(b)
-      if (bucketCounts != null) bucketCounts.add(b)
-      i += 1
-    }
-  }
-
-  private def collectBuckets(keyed: DataFrame): Array[Long] =
-    keyed.where(col("fp").isNotNull)
-      .select(explode(ownedKeysCol(col("fp"))).as("bucket"))
-      .collect().map(_.getLong(0))
-
-  // opt-in phase timing on stderr (GRAFT_GATE_TRACE=1) — dev diagnosis only
-  private val trace = sys.env.get("GRAFT_GATE_TRACE").contains("1")
-  @inline private def traced[T](label: String)(f: => T): T =
-    if (!trace) f
-    else {
-      val t0 = System.nanoTime()
-      val out = f
-      System.err.println(f"[gate-trace] $name%s $label%s ${(System.nanoTime() - t0) / 1e3}%.0f us")
-      out
-    }
-
-  /** Per-batch decision state handed from [[decideBatch]] to
-    * [[commitIndexBatch]] (the wrapper forwards survivors in between). */
-  private[streaming] final class BatchCtx(
-      private[streaming] val keyed: DataFrame,
-      private[streaming] val rows: Array[(Any, Long)],
-      private[streaming] val rowKeys: Array[Array[Long]],
-      private[streaming] val sup: java.util.HashSet[Any],
-      private[streaming] val rowTs: Array[Long] = null)
-
-  /** Collected batch rows (+ event times in windowed mode). */
-  private[streaming] final class Collected(
-      private[streaming] val rows: Array[(Any, Long)],
-      private[streaming] val tss: Array[Long])
-
-  private[streaming] def prepareBatch(batch: DataFrame,
-      obs: Option[org.apache.spark.sql.Observation]): DataFrame = {
-    val base = batch.drop("arrival_timestamp")
-    val observed = obs.fold(base)(o => base.observe(o, count(lit(1)).as("rows")))
-    // fingerprints feed the suppression filter, the store append and the sink
-    observed.withColumn("fp", SimHash.simhash64(TextOps.tokens(expr(textSql))))
-      .persist()
-  }
-
-  private[streaming] def collectBatchRows(keyed: DataFrame): AnyRef =
-    traced("collect") {
-      // ONE bounded collect — (orderCol, fp), 16 B/doc. rows with a null
-      // order id pass through, are never stored and never suppress (the
-      // filter could not target them) — consistent with the split-store
-      // gates; orderCol is contractually unique. Excluding them at the
-      // collect also excludes them from the driver-built store append and
-      // the filter update. Windowed mode also drops null-event-time rows
-      // (pass through un-stored) and collects micros.
-      val base = keyed.where(col("fp").isNotNull && col(orderCol).isNotNull)
-      val filtered = if (!ttlEnabled) base
-        else base.where(col(ttlColumn).isNotNull)
-      val cols = Seq(col(orderCol), col("fp")) ++
-        (if (ttlEnabled)
-          Seq(unix_micros(col(ttlColumn).cast("timestamp"))) else Nil)
-      val collected = filtered.select(cols: _*).collect()
-      new Collected(collected.map(r => (r.get(0), r.getLong(1))),
-        if (!ttlEnabled) null else collected.map(_.getLong(2)))
-    }
-
-  private[streaming] def suppressedOf(ctx: AnyRef): java.util.HashSet[Any] =
-    ctx.asInstanceOf[BatchCtx].sup
-
-  private[streaming] def survivorsOf(keyed: DataFrame,
-      sup: java.util.HashSet[Any]): DataFrame =
-    // fp rides to the sink (the gate's documented payload); null order
-    // ids can never be suppressed and pass through on either path
-    // (InSet filter under the task-binary bound, broadcast anti-join
-    // above it — GateStore.exceptIds)
-    GateStore.exceptIds(keyed, orderCol, sup.toArray)
-
-  private[streaming] def orderColName: String = orderCol
-
-  private[streaming] override def storeMaxBatch: Long =
-    GateStore.maxBatch(storeDir, "fps")
-
-  private[streaming] override def commitRecovered(spooled: DataFrame,
-      epoch: Long): Unit = synchronized {
-    val need = GateStore.maxBatch(storeDir, "fps") < epoch
-    if (batches < epoch) batches = epoch
-    if (need) {
-      // the spool carries fp (and ts in windowed mode) — rebuild the
-      // exploded append with the same driver math as a live batch
-      val collected = collectBatchRows(spooled).asInstanceOf[Collected]
-      val ctx = new BatchCtx(spooled, collected.rows,
-        collected.rows.map(r => ownedKeysOfFp(r._2)),
-        new java.util.HashSet[Any](), collected.tss)
-      commitIndexBatch(ctx)
-    }
-  }
-
-  private[streaming] def commitPayloadBatch(ctx: AnyRef): Unit = ()
-
-  /** The suppression decision over this core's key slice: bucket keys are
-    * derived with the same math as the stored explode
-    * (SimHash.blockKeysOf), the occupancy cap reads the CMS as of batch
-    * START, the bloom is probed in place (never shipped to executors),
-    * and within-batch pairing is a hash-group + pairwise popcount over
-    * the batch — micro-seconds at microbatch sizes, where the equivalent
-    * self-join paid two shuffles and a full Catalyst analyze/optimize
-    * pass per batch. Only the store-candidate verification touches
-    * executors, against a file-range-pruned, in-set-filtered read. */
-  private[streaming] def decideBatch(keyed: DataFrame, rows0: AnyRef): AnyRef =
-    synchronized { traced("decide") {
-      batches += 1
-      ensureResident()
-      val s = coreSession
-      val collected = rows0.asInstanceOf[Collected]
-      val rows = collected.rows
-      val tss = collected.tss
-      val rowKeys: Array[Array[Long]] = rows.map(r => ownedKeysOfFp(r._2))
-      val overCapSet: java.util.HashSet[java.lang.Long] = {
-        val set = new java.util.HashSet[java.lang.Long]()
-        if (bucketCounts != null) {
-          val seen = new java.util.HashSet[java.lang.Long]()
-          rowKeys.foreach(_.foreach { b =>
-            if (seen.add(b) && bucketCounts.estimate(b) > maxBucketSize) set.add(b)
-          })
-        }
-        set
-      }
-      // within-batch: an earlier row suppresses a later one at distance
-      // <= maxDist; banding guarantees every such pair shares an under-cap
-      // bucket key, so group rows by bucket and compare within groups
-      val suppressedIdx = traced("inbatch") {
-        val byBucket = new java.util.HashMap[java.lang.Long, java.util.ArrayList[Integer]]()
-        var i = 0
-        while (i < rows.length) {
-          rowKeys(i).foreach { b =>
-            if (!overCapSet.contains(b))
-              byBucket.computeIfAbsent(b, _ => new java.util.ArrayList[Integer]()).add(i)
-          }
-          i += 1
-        }
-        val out = new java.util.HashSet[Integer]()
-        byBucket.forEach { (_, list) =>
-          if (list.size >= 2) {
-            var a = 0
-            while (a < list.size) {
-              var b = a + 1
-              while (b < list.size) {
-                val (ia, ib) = (list.get(a), list.get(b))
-                // windowed mode: the earlier arrival suppresses only when
-                // its event time lies inside the target's trailing window
-                @inline def inWindow(sup: Int, tgt: Int): Boolean =
-                  !ttlEnabled || tss(sup) > tss(tgt) - ttlMicros
-                if (java.lang.Long.bitCount(rows(ia)._2 ^ rows(ib)._2) <= maxDist) {
-                  if (GateStore.lt(rows(ia)._1, rows(ib)._1)) {
-                    if (inWindow(ia, ib)) { out.add(ib); () }
-                  } else if (GateStore.lt(rows(ib)._1, rows(ia)._1)) {
-                    if (inWindow(ib, ia)) { out.add(ia); () }
-                  }
-                }
-                b += 1
-              }
-              a += 1
-            }
-          }
-        }
-        out
-      }
-      if (resident.active) {
-        // hot tier: the store-candidate check is in-memory popcounts over
-        // the per-bucket fp lists — zero store reads, early exit per row
-        val storeSuppressed = traced("store-resident") {
-          val out = new java.util.HashSet[Any]()
-          var i = 0
-          while (i < rows.length) {
-            if (rows(i)._1 != null) {
-              val ri = i
-              var hit = false
-              rowKeys(ri).foreach { b =>
-                if (!hit && !overCapSet.contains(b))
-                  resident.foreachMatch(b) { (fp, ord) =>
-                    if (!hit &&
-                        java.lang.Long.bitCount(fp ^ rows(ri)._2) <= maxDist &&
-                        (!ttlEnabled ||
-                          residentTs(ord) > tss(ri) - ttlMicros))
-                      hit = true
-                  }
-              }
-              if (hit) out.add(rows(ri)._1)
-            }
-            i += 1
-          }
-          out
-        }
-        val suppressedSet = new java.util.HashSet[Any]()
-        suppressedIdx.forEach(i => { suppressedSet.add(rows(i)._1); () })
-        suppressedSet.addAll(storeSuppressed)
-        return new BatchCtx(keyed, rows, rowKeys, suppressedSet, tss)
-      }
-      if (executorBackend) {
-        // distributed probe: ship (rowIdx, bucket, fp[, ts]) for ALL
-        // under-cap keys — O(batch) out, O(suppressed) back; no driver
-        // bloom prefilter (the shards answer misses from memory at the
-        // same O(batch) job cost, and a corpus-sized driver filter is
-        // exactly what this backend exists to remove)
-        val probes =
-          new scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Long)]()
-        var i = 0
-        while (i < rows.length) {
-          if (rows(i)._1 != null) {
-            rowKeys(i).foreach { b =>
-              if (!overCapSet.contains(b))
-                probes += ((i, b, rows(i)._2, if (ttlEnabled) tss(i) else 0L))
-            }
-          }
-          i += 1
-        }
-        val hitIdx = traced("store-exec")(execIdx.probe(probes.toArray,
-          batches, maxDist, if (ttlEnabled) ttlMicros else 0L))
-        val suppressedSet = new java.util.HashSet[Any]()
-        suppressedIdx.forEach(i => { suppressedSet.add(rows(i)._1); () })
-        hitIdx.foreach { case (i, _, _) => suppressedSet.add(rows(i)._1); () }
-        return new BatchCtx(keyed, rows, rowKeys, suppressedSet, tss)
-      }
-      val storeF = GateStore.storeFiles(storeDir)
-      // bucket-bloom gate: an under-cap key that misses the driver bloom
-      // has no store candidate (no false negatives); the hit rows become a
-      // LocalRelation joined against the file-range-pruned, in-set-
-      // filtered store read — the one distributed step, bounded by the
-      // batch's candidate keys, not the corpus
-      val hitRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      val hitKeySet = new java.util.HashSet[java.lang.Long]()
-      if (storeF.nonEmpty) {
-        var i = 0
-        while (i < rows.length) {
-          rowKeys(i).foreach { b =>
-            if (!overCapSet.contains(b) && bloom.contains(b)) {
-              hitRows.add(
-                if (!ttlEnabled)
-                  org.apache.spark.sql.Row(b, rows(i)._1, rows(i)._2)
-                else org.apache.spark.sql.Row(b, rows(i)._1, rows(i)._2, tss(i)))
-              hitKeySet.add(b)
-            }
-          }
-          i += 1
-        }
-      }
-      val hitKeys: Array[Long] = {
-        val arr = new Array[Long](hitKeySet.size)
-        val it = hitKeySet.iterator(); var k = 0
-        while (it.hasNext) { arr(k) = it.next(); k += 1 }
-        arr
-      }
-      val pushdown = hitKeys.length <= GateStore.maxPushdownKeys
-      val storePaths =
-        if (hitKeys.isEmpty) Array.empty[String]
-        else if (pushdown) GateStore.pruned(storeF, hitKeys)
-        else storeF.map(_.path)
-      val storeSuppressed: Array[Any] =
-        if (storePaths.isEmpty) Array.empty[Any]
-        else traced("storejoin") {
-          // candidate verification: when the PRUNED store slice is small
-          // (file bytes below the driver-verify bound — self-limiting, a
-          // bounded read cannot return unbounded rows), fetch the in-set-
-          // filtered rows in one parallel scan and verify on the driver —
-          // no join, no distinct, no second stage. Larger slices take the
-          // distributed verify join instead.
-          val sliceBytes =
-            GateStore.bytesOf(storePaths)
-          val driverVerify = pushdown &&
-            sliceBytes <= GateStore.maxDriverVerifyBytes
-          if (driverVerify) {
-            val storeCols = Seq(col("bucket"), col("fp")) ++
-              (if (ttlEnabled) Seq(unix_micros(col("ts"))) else Nil)
-            val fetched = GateStore.withInPushdown(s, hitKeys.length)(
-              s.read.parquet(storePaths: _*)
-                .where(GateStore.inSetCol(col("bucket"), hitKeys.toSeq))
-                .select(storeCols: _*).collect())
-            // driver probe: store row -> candidate rows sharing its bucket
-            val candByBucket =
-              new java.util.HashMap[java.lang.Long, java.util.ArrayList[org.apache.spark.sql.Row]]()
-            val it0 = hitRows.iterator()
-            while (it0.hasNext) {
-              val r = it0.next()
-              candByBucket.computeIfAbsent(r.getLong(0),
-                _ => new java.util.ArrayList[org.apache.spark.sql.Row]()).add(r)
-            }
-            val out = new java.util.HashSet[Any]()
-            fetched.foreach { m =>
-              val cands = candByBucket.get(m.getLong(0))
-              if (cands != null) {
-                var k = 0
-                while (k < cands.size) {
-                  // null order ids can never be suppressed (nothing can
-                  // target them downstream) — they pass through
-                  if (cands.get(k).get(1) != null &&
-                      java.lang.Long.bitCount(cands.get(k).getLong(2) ^ m.getLong(1)) <= maxDist &&
-                      (!ttlEnabled ||
-                        m.getLong(2) > cands.get(k).getLong(3) - ttlMicros))
-                    out.add(cands.get(k).get(1))
-                  k += 1
-                }
-              }
-            }
-            out.toArray
-          } else {
-            val idType = keyed.schema(keyed.schema.fieldIndex(orderCol)).dataType
-            val hitFields = Seq(
-              org.apache.spark.sql.types.StructField("bucket",
-                org.apache.spark.sql.types.LongType, nullable = false),
-              org.apache.spark.sql.types.StructField("__id", idType),
-              org.apache.spark.sql.types.StructField("fp",
-                org.apache.spark.sql.types.LongType, nullable = false)) ++
-              (if (!ttlEnabled) Nil
-               else Seq(org.apache.spark.sql.types.StructField("__bts",
-                 org.apache.spark.sql.types.LongType, nullable = false)))
-            val hitDf = s.createDataFrame(hitRows,
-              org.apache.spark.sql.types.StructType(hitFields))
-            val store0 =
-              if (pushdown)
-                s.read.parquet(storePaths: _*)
-                  .where(GateStore.inSetCol(col("bucket"), hitKeys.toSeq))
-              else {
-                val all = s.read.parquet(storePaths: _*)
-                if (overCapSet.isEmpty) all
-                else {
-                  val oc = overCapSet.toArray.toSeq.asInstanceOf[Seq[Any]]
-                  all.where(!GateStore.inSetCol(col("bucket"), oc))
-                }
-              }
-            val store = store0.select(Seq(col("bucket"),
-              col("id").as("id_s"), col("fp").as("fp_s")) ++
-              (if (ttlEnabled)
-                Seq(unix_micros(col("ts")).as("__sts")) else Nil): _*)
-            val joined0 = hitDf.join(store, Seq("bucket"))
-              .where(bit_count(col("fp").bitwiseXOR(col("fp_s"))) <= maxDist)
-            val joined = if (!ttlEnabled) joined0
-              else joined0.where(col("__sts") > col("__bts") - lit(ttlMicros))
-            GateStore.withInPushdown(s, hitKeys.length)(
-              joined.select(col("__id")).distinct().collect()).map(_.get(0))
-              .filter(_ != null)
-          }
-        }
-      val suppressedSet = new java.util.HashSet[Any]()
-      suppressedIdx.forEach(i => { suppressedSet.add(rows(i)._1); () })
-      storeSuppressed.foreach(suppressedSet.add)
-      new BatchCtx(keyed, rows, rowKeys, suppressedSet, tss)
-    } }
-
-  private[streaming] def commitIndexBatch(ctx0: AnyRef): Unit =
-    synchronized { traced("append") {
-      val ctx = ctx0.asInstanceOf[BatchCtx]
-      val (keyed, rows, rowKeys) = (ctx.keyed, ctx.rows, ctx.rowKeys)
-      // append EVERY row's fingerprint exploded by (owned) bucket key
-      // (seen-semantics: suppressed docs still suppress later arrivals;
-      // null fingerprints can't pair and are not stored) — the exploded
-      // rows are BUILT AND SORTED on the driver from the keys already in
-      // hand, so the append job is a plain LocalRelation write
-      val exploded = new java.util.ArrayList[org.apache.spark.sql.Row](
-        rowKeys.iterator.map(_.length).sum)
-      val order = new scala.collection.mutable.ArrayBuffer[(Long, Int)]()
-      var i = 0
-      while (i < rows.length) {
-        rowKeys(i).foreach(b => order += ((b, i)))
-        i += 1
-      }
-      val sortedPairs = order.sortBy(_._1)
-      sortedPairs.foreach { case (b, idx) =>
-        exploded.add(
-          if (!ttlEnabled)
-            org.apache.spark.sql.Row(b, rows(idx)._1, rows(idx)._2)
-          else org.apache.spark.sql.Row(b, rows(idx)._1, rows(idx)._2,
-            microsToTs(ctx.rowTs(idx))))
-        ()
-      }
-      if (!exploded.isEmpty) {
-        val idType = keyed.schema(keyed.schema.fieldIndex(orderCol)).dataType
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("bucket",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("id", idType),
-          org.apache.spark.sql.types.StructField("fp",
-            org.apache.spark.sql.types.LongType, nullable = false)) ++
-          (if (!ttlEnabled) Nil
-           else Seq(org.apache.spark.sql.types.StructField("ts",
-             org.apache.spark.sql.types.TimestampType))))
-        // rows already bucket-sorted — the driver-direct write skips the
-        // whole Spark job (GateStore.appendLocal); exotic id types fall
-        // back to the LocalRelation write
-        if (!GateStore.appendLocal(exploded, schema, storeDir, "fps", batches))
-          GateStore.append(coreSession.createDataFrame(exploded, schema),
-            storeDir, "fps", batches)
-      }
-      // hot-tier mirror from the keys already in hand (skip when stale —
-      // the pending rebuild covers this append from disk)
-      if (resident.active && !residentStale) {
-        var i = 0
-        while (i < rows.length && resident.active) {
-          val fp = rows(i)._2
-          val ord =
-            if (!ttlEnabled) -1
-            else {
-              val o = residentTs.length
-              residentTs += ctx.rowTs(i)
-              resident.addExtraBytes(8)
-              o
-            }
-          rowKeys(i).foreach(b => { resident.add(b, fp, ord); () })
-          i += 1
-        }
-        if (!resident.active)
-          System.err.println(s"[graft] SimHashNearDupGate($name): resident " +
-            "hot tier overflowed its byte budget mid-stream — now on the " +
-            "O(store)/batch disk path. " + IndexedNearDupGate.overflowAdvice)
-      }
-      if (ttlEnabled) {
-        var i = 0
-        while (i < rows.length) {
-          if (ctx.rowTs(i) > maxSeenTsMicros) maxSeenTsMicros = ctx.rowTs(i)
-          i += 1
-        }
-      }
-      if (executorBackend) {
-        // buffer this batch's delta for the distributed shards; it rides
-        // the NEXT probe job (after this durable append — the required
-        // order). Buffer EVERY batch, even empty, to keep the shards'
-        // applied-batch range contiguous.
-        val delta = new scala.collection.mutable.ArrayBuffer[
-          ExecutorGateIndex.DeltaRow]()
-        var i = 0
-        while (i < rows.length) {
-          val ts = if (ttlEnabled) ctx.rowTs(i) else 0L
-          rowKeys(i).foreach(b =>
-            delta += ExecutorGateIndex.DeltaRow(b, rows(i)._2, ts, null))
-          i += 1
-        }
-        execIdx.bufferDelta(batches, delta.toArray)
-      }
-      traced("filters")(updateFilters(rowKeys.flatten))
-    } }
-
-  private[streaming] def maybeCompact(): Unit =
-    if (compactEvery > 0 && synchronized(batches) % compactEvery == 0) compact()
-
-  private[streaming] def compactNow(): Unit = compact()
-
-  private[streaming] def onBatch(batch: DataFrame): Unit = ingestLock.synchronized { traced("onbatch-total") {
-    if (exactlyOnce) { pipeline.drain(); synchronized(epochs.recoverPending()) }
-    val obs = new org.apache.spark.sql.Observation(
-      s"ndgate_${name}_${System.nanoTime()}")
-    val keyed = prepareBatch(batch, Some(obs))
-    var deferred = false
-    try {
-      // prepare + collect run OUTSIDE the gate monitor — this is where
-      // they overlap the previous batch's deferred store commit
-      val rows = collectBatchRows(keyed)
-      pipeline.drain() // decisions serialize on the committed store state
-      val ctx = decideBatch(keyed, rows).asInstanceOf[BatchCtx]
-      // survivors = batch minus suppressed ids: a narrow in-set filter, no
-      // anti-join shuffle. The survivor COUNT is arithmetic — the observed
-      // batch total minus the suppressed id count — so no count job runs.
-      val total = obs.get("rows").asInstanceOf[Long]
-      val n = total - ctx.sup.size
-      synchronized { admitted += n; suppressed += total - n }
-      if (exactlyOnce) synchronized {
-        // epoch protocol (GateEpochs): spool is THE commit point — the
-        // batch's durability, so exactly-once never defers
-        val epoch = batches // decideBatch advanced it to this batch
-        epochs.failpoint("before-spool")
-        epochs.spool(epoch, keyed, orderCol, ctx.sup)
-        epochs.failpoint("after-spool")
-        commitIndexBatch(ctx)
-        epochs.failpoint("after-store")
-        epochs.deliverAndMark(epoch, knownNonEmpty = Some(n > 0))
-      } else {
-        // sink BEFORE store append (at-least-once under failure-retry, see
-        // StreamDedupGate's delivery contract): a batch that fails mid-gate
-        // can be retried without its own fingerprints suppressing it
-        if (n > 0) traced("sink") {
-          eng.insertInto(sink, survivorsOf(keyed, ctx.sup))
-        }
-        if (CommitPipeline.enabled) {
-          deferred = true
-          pipeline.submit({ () =>
-            try { commitIndexBatch(ctx); maybeCompact() }
-            finally { keyed.unpersist(); () }
-          }, label = s"batch ${synchronized(batches)}")
-        } else commitIndexBatch(ctx)
-      }
-    } finally { if (!deferred) { keyed.unpersist(); () } }
-    if (!deferred) maybeCompact()
-  } }
+  // payload-store forms: an index-only gate never writes or reads one, but
+  // the fingerprint's stored, external and resident forms are all itself
+  override protected def storedPayloadOf(p: Long): Any = p
+  override protected def storedPayloadType: DataType = LongType
+  override protected def externalPayloadOf(p: Long): Any = p
+  override protected def externalPayloadType: DataType = LongType
+  override protected def residentPayloadOf(p: Long): AnyRef = Long.box(p)
+  override protected def residentPayloadOfRow(r: Row): AnyRef = Long.box(r.getLong(1))
+  override protected def payloadOfResident(a: AnyRef): Long = Long.unbox(a)
+  override protected def residentPayloadBytes(a: AnyRef): Int = 8
 }
 
 object SimHashNearDupGate {

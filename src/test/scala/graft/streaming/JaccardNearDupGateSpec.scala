@@ -137,4 +137,38 @@ class JaccardNearDupGateSpec extends AnyFunSuite {
     // and the knobs the warning names restore it
     assert(JaccardNearDupGate.recallEstimate(0.5, 64, 2) > 0.95)
   }
+
+  test("an empty batch does not funnel the next burst through one task") {
+    val root = java.nio.file.Files.createTempDirectory("graft_jg_burst").toString
+    val eng = new ContViewEngine(spark, root)
+    val schema = corpus.schema
+    eng.createStream("e_in", schema)
+    eng.createStream("e_out", schema)
+    JaccardNearDupGate.create(eng, "e_gate", "SELECT id, body FROM e_in",
+      textSql = "body", orderCol = "id", sink = "e_out", storeRoot = root,
+      threshold = threshold)
+    // (stage id, task count) of every batch-collect stage: exactly one per
+    // batch here (resident tier, no store reads, no compaction)
+    val collects = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.name.startsWith("collect at IndexedNearDupGate"))
+          collects.add((e.stageInfo.stageId, e.stageInfo.numTasks))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      def rdf(rows: Seq[org.apache.spark.sql.Row], parts: Int) =
+        spark.createDataFrame(sc.parallelize(rows, parts), schema)
+      eng.insertInto("e_in", rdf(Nil, 1))
+      eng.insertInto("e_in", rdf(corpus.collect().toSeq, 4))
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (collects.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(collects.size === 2, s"one collect stage per batch, got $collects")
+      val burstTasks = collects.toArray(Array.empty[(Int, Int)]).maxBy(_._1)._2
+      assert(burstTasks > 1,
+        "the burst after an empty batch must keep its 4 partitions, not coalesce(1)")
+    } finally sc.removeSparkListener(listener)
+  }
 }
