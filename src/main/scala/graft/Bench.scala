@@ -436,7 +436,6 @@ object Bench {
     str("sf", sfDir)
     dstr("sf", sfDir) // both lines self-identify their scale factor
     dlng("runs_per_query", repeats.toLong)
-    draw("gate_pipeline", graft.streaming.CommitPipeline.enabled.toString)
     emitSummary() // sweep done — the artifact now survives any later kill
 
     // Large-state probe: the CV ingest pipeline with the small-state fast

@@ -75,7 +75,7 @@ object GateProbes {
     def payload(rows: DataFrame) =
       if (textual) rows.select(col("id"), body(col("cid")).as("body"))
       else rows.select(col("id"), vec(col("cid")).as("embedding"))
-    def mkGate(backend: String): Any = kind match {
+    def mkGate(backend: String): graft.streaming.GateHandle = kind match {
       case "exact" => graft.streaming.StreamDedupGate.create(eng, "gs_gate",
         "SELECT id, body FROM gs_in", keySql = "md5(body)", orderCol = "id",
         sink = "gs_out", storeRoot = storeRoot, backend = backend)
@@ -90,12 +90,12 @@ object GateProbes {
         orderCol = "id", sink = "gs_out", storeRoot = storeRoot,
         threshold = 0.98, dim = dim, backend = backend)
     }
-    def drainOf(gate: Any): Unit = gate match {
-      case g: graft.streaming.StreamDedupGate => g.drainCommits()
-      case g: graft.streaming.IndexedNearDupGate[_] => g.drainCommits()
+    def detach(gate: graft.streaming.GateHandle): Unit = {
+      gate.loop.drainCommits()
+      eng.dropContTransform("gs_gate")
     }
-    def detach(gate: Any): Unit = { drainOf(gate); eng.dropContTransform("gs_gate") }
-    def seed(gate: Any, fromId: Long, n: Long): Unit = {
+    def seed(gate: graft.streaming.GateHandle, fromId: Long, n: Long): Unit = {
+      val loop = gate.loop
       val chunk = 100000L
       var off = 0L
       while (off < n) {
@@ -104,16 +104,10 @@ object GateProbes {
         val rows = payload(spark.range(m)
           .select((col("id") + fromId + off).as("id"))
           .withColumn("cid", col("id")))
-        gate match {
-          case g: graft.streaming.StreamDedupGate => g.seedStore(rows)
-          case g: graft.streaming.IndexedNearDupGate[_] => g.seedStore(rows)
-        }
+        loop.seedStore(rows)
         off += m
       }
-      gate match {
-        case g: graft.streaming.StreamDedupGate => g.compact()
-        case g: graft.streaming.IndexedNearDupGate[_] => g.compact()
-      }
+      loop.compact()
     }
     var nextId = 1L << 40
     val warmedBackends = scala.collection.mutable.Set[String]()
@@ -290,7 +284,7 @@ object GateProbes {
     def payload(rows: DataFrame) =
       if (textual) rows.select(col("id"), body(col("cid")).as("body"))
       else rows.select(col("id"), vec(col("cid")).as("embedding"))
-    val gate: Any = (kind, shards) match {
+    val gate: graft.streaming.GateHandle = (kind, shards) match {
       case ("exact", 1) => graft.streaming.StreamDedupGate.create(eng, "gs_gate",
         "SELECT id, body FROM gs_in", keySql = "md5(body)", orderCol = "id",
         sink = "gs_out", storeRoot = root, backend = backend)
@@ -328,22 +322,12 @@ object GateProbes {
         val rows = payload(spark.range(m)
           .select((col("id") + fromId + off).as("id"))
           .withColumn("cid", col("id")))
-        gate match {
-          case g: graft.streaming.StreamDedupGate => g.seedStore(rows)
-          case g: graft.streaming.IndexedNearDupGate[_] => g.seedStore(rows)
-          case g: graft.streaming.ShardedDedupGate => g.seedStore(rows)
-          case g: graft.streaming.ShardedNearDupGate => g.seedStore(rows)
-        }
+        gate.loop.seedStore(rows)
         off += m
       }
       // compacted range shards + a right-sized bloom are the steady state
       // the per-batch numbers should measure
-      gate match {
-        case g: graft.streaming.StreamDedupGate => g.compact()
-        case g: graft.streaming.IndexedNearDupGate[_] => g.compact()
-        case g: graft.streaming.ShardedDedupGate => g.compact()
-        case g: graft.streaming.ShardedNearDupGate => g.compact()
-      }
+      gate.loop.compact()
     }
     var nextId = 1L << 40 // batch ids above any seed id
     var warmed = false

@@ -1016,13 +1016,11 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * `delivery` ∈ {at_least_once (default), exactly_once} on EVERY gate
     * kind (microbatch.h:33-56 parity — `sync_commit` applies to every CQ):
     * the exactly-once form commits each batch via an atomic spool rename
-    * and recovers interrupted epochs at restart — the exact gate spools
-    * its survivor set (StreamDedupGate), the near-dup/contamination gates
-    * the full flagged batch (GateEpochs; seen-based stores need every
-    * arrival back).
+    * of the full flagged batch and recovers interrupted epochs at restart
+    * (GateEpochs — one protocol for every gate kind).
     * A `shards` of G ≥ 2 key-space-partitions the gate into G concurrent
-    * cores (ShardedDedupGate / ShardedNearDupGate) — identical admitted
-    * set, horizontally-scaled decision loop.
+    * cores under one batch loop (ShardedGate) — identical admitted set,
+    * horizontally-scaled decision loop.
     * String arguments follow SQL literal quoting — a literal single quote
     * inside one is escaped by doubling it ('').
     */
@@ -1031,7 +1029,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       ttlColumn: Option[String] = None,
       residentMb: Option[Long] = None,
       backendOpt: Option[String] = None,
-      statePartsOpt: Option[Int] = None): AnyRef = synchronized {
+      statePartsOpt: Option[Int] = None): graft.streaming.GateHandle = synchronized {
     val name = normalizeName(name0, "continuous transform")
     val sink = normalizeName(sink0, "stream")
     require(streams.contains(sink), s"gate sink: unknown stream $sink")
@@ -1102,7 +1100,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     val prevSuppress = suppressCatalog
     suppressCatalog = true
     def shardsOf(s: String): Int = Option(s).map(_.toInt).getOrElse(1)
-    val gate: AnyRef =
+    val gate: graft.streaming.GateHandle =
       try gateSpec match {
         case dedupRe(keySql, orderCol, shards, dv) if shardsOf(shards) <= 1 =>
           graft.streaming.StreamDedupGate.create(this, name, selectSql,
@@ -1246,13 +1244,13 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
 
   // lazy: the constructor's catalog replay reaches createGateTransform
   // before later-declared fields would otherwise initialize
-  private lazy val gates = mutable.Map.empty[String, AnyRef]
+  private lazy val gates = mutable.Map.empty[String, graft.streaming.GateHandle]
   private lazy val gateSignatures =
     mutable.Map.empty[String,
       (String, String, String, Option[String], Option[String], String)]
 
   /** The declared gate registered under `name`, if any. */
-  def gateOf(name: String): Option[AnyRef] = synchronized(gates.get(name))
+  def gateOf(name: String): Option[graft.streaming.GateHandle] = synchronized(gates.get(name))
 
   /** activate/deactivate persist across restarts (the reference stores the
     * active flag in its cont_query catalog row).
@@ -1814,43 +1812,19 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * `graft_gate_stats`. */
   def gateStats(): DataFrame = {
     import spark.implicits._
-    import graft.streaming._
-    def kindOf(core: AnyRef): String = core match {
-      case _: StreamDedupGate => "dedup"
-      case n: IndexedNearDupGate[_] => n.kind
-      case _: ContaminationGate => "contamination"
-      case other => other.getClass.getSimpleName
-    }
-    val pendingDrops = ExecutorGateState.pendingRemoteDrops
+    val pendingDrops = graft.streaming.ExecutorGateState.pendingRemoteDrops
     synchronized {
       gates.toSeq.sortBy(_._1).map { case (nm, g) =>
-        def row(kind: String, shards: Int, t: (Long, Long, Long),
-            lost: Long,
-            be: (String, Int) = (StreamDedupGate.DriverBackend, 0)): GateStats =
-          GateStats(nm, kind, shards, t._1, t._2, t._3,
-            rowsIn = t._2 + t._3, rowsOut = t._2, lostCommits = lost,
-            backend = be._1, stateParts = be._2,
-            pendingRemoteDrops = pendingDrops)
-        g match {
-          // sharded wrappers are always driver-tier (exec×shards refused)
-          case sd: ShardedDedupGate =>
-            row("dedup", sd.shardCount, sd.stats, sd.lostCommits)
-          case sn: ShardedNearDupGate =>
-            row(kindOf(sn.firstCore), sn.shardCount, sn.stats,
-              sn.commitPipeline.lostCommits)
-          case d: StreamDedupGate =>
-            row("dedup", 1, d.stats, d.commitPipeline.lostCommits,
-              d.backendInfo)
-          case n: IndexedNearDupGate[_] =>
-            row(n.kind, 1, n.stats, n.commitPipeline.lostCommits,
-              n.backendInfo)
-          // the contamination gate never appends (static reference store)
-          case ct: ContaminationGate =>
-            row("contamination", 1, ct.stats, 0L, ct.backendInfo)
-          case other =>
-            GateStats(nm, other.getClass.getSimpleName, 1, 0L, 0L, 0L, 0L, 0L,
-              0L, StreamDedupGate.DriverBackend, 0, pendingDrops)
-        }
+        // every gate handle is a core (unsharded) or a sharded loop; the
+        // sharded loops are always driver-tier (exec×shards refused)
+        val loop = g.loop
+        val (batches, admitted, suppressed) = loop.stats
+        val (backend, parts) = loop.backendInfo
+        GateStats(nm, loop.kind, loop.shardCount, batches, admitted,
+          suppressed, rowsIn = admitted + suppressed, rowsOut = admitted,
+          lostCommits = loop.commitPipeline.lostCommits,
+          backend = backend, stateParts = parts,
+          pendingRemoteDrops = pendingDrops)
       }
     }.toDF()
   }

@@ -475,7 +475,7 @@ object CvQueries {
       feed(eng1, Long.MinValue, 150L)
       // forced crash: epoch 2's spool + store land, its delivery doesn't
       eng1.gateOf("eo_gate").get
-        .asInstanceOf[graft.streaming.StreamDedupGate].failAt = "after-store"
+        .asInstanceOf[graft.streaming.StreamDedupGate].epochs.failAt = "after-store"
       try feed(eng1, 150L, 300L)
       catch { case e: IllegalStateException
         if e.getMessage.startsWith("failpoint") => () }

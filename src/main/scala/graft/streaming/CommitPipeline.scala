@@ -141,10 +141,6 @@ private[graft] final class CommitPipeline(name: String,
 }
 
 private[graft] object CommitPipeline {
-  /** Kill switch for A/B probes: GRAFT_GATE_PIPELINE=0 restores the fully
-    * synchronous batch loop. */
-  val enabled: Boolean = !sys.env.get("GRAFT_GATE_PIPELINE").contains("0")
-
   /** Consecutive lost commits before the pipeline stops deferring and
     * surfaces store failures synchronously (see [[CommitPipeline.submit]]). */
   val escalateAfter: Int =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cv.ContViewEngine
@@ -55,22 +55,17 @@ final class ContaminationGate private (
     val name: String,
     textSql: String,
     orderCol: String,
-    sink: String,
     storeDir: String,
     n: Int,
     bloomP: Double,
     bloomN0: Int,
     shardId: Int = 0,
-    shardCount: Int = 1,
-    delivery: String = StreamDedupGate.AtLeastOnce,
+    private[streaming] val shardCount: Int = 1,
     backend: String = StreamDedupGate.DriverBackend,
     stateParts: Int = 0) extends ShardableGateCore {
 
   require(shardCount >= 1 && shardId >= 0 && shardId < shardCount,
     s"bad shard assignment $shardId/$shardCount")
-  require(delivery == StreamDedupGate.AtLeastOnce ||
-    delivery == StreamDedupGate.ExactlyOnce,
-    s"unknown delivery mode '$delivery'")
   require(backend == StreamDedupGate.DriverBackend ||
     backend == StreamDedupGate.ExecutorBackend,
     s"unknown state backend '$backend'")
@@ -93,25 +88,19 @@ final class ContaminationGate private (
   require(!executorBackend || shardCount == 1,
     "backend = 'executor' does not compose with shards >= 2")
 
-  private val exactlyOnce = delivery == StreamDedupGate.ExactlyOnce
-  /** The epoch-spool protocol (exactly-once mode; see [[GateEpochs]]).
-    * The reference store is static — recovery rebuilds no store — but the
-    * spool+marker still dedups the DELIVERY of an interrupted epoch, and
-    * because the gate's decisions are stateless, an upstream crash-retry
-    * needs one more piece the stateful gates get from their seen-stores:
-    * a RETRY-DEDUP WINDOW. The gate retains the last
-    * [[ContaminationGate.RetryWindowEpochs]] epochs' row-id sets (orderCol
-    * is contractually unique per stream, so ids ARE identities; driver
-    * memory, bounded) and suppresses re-fed ids — [[commitRecovered]]
-    * re-remembers a pending epoch's ids from its spool at recovery, so
-    * the window survives a crash. Re-feeds older than the window (or of
-    * epochs fully delivered before a restart, whose spools are gone) are
-    * at-least-once — the static gate's analogue of the exact gate's
-    * null-key caveat, documented not hidden. */
-  private[graft] lazy val epochs = new GateEpochs(eng, name, sink,
-    GateStore.child(GateStore.parentOf(storeDir), "spool"), Seq(this),
-    dropCols = Seq("__gh"))
-
+  /** Exactly-once delivery ([[GateEpochs]]): the reference store is
+    * static — recovery rebuilds no store — but the spool+marker still
+    * dedups the DELIVERY of an interrupted epoch, and because the gate's
+    * decisions are stateless, an upstream crash-retry needs one more piece
+    * the stateful gates get from their seen-stores: a RETRY-DEDUP WINDOW.
+    * The gate retains the last [[ContaminationGate.RetryWindowEpochs]]
+    * epochs' row-id sets (orderCol is contractually unique per stream, so
+    * ids ARE identities; driver memory, bounded) and suppresses re-fed ids
+    * — [[commitRecovered]] re-remembers a pending epoch's ids from its
+    * spool at recovery, so the window survives a crash. Re-feeds older
+    * than the window (or of epochs fully delivered before a restart, whose
+    * spools are gone) are at-least-once — the static gate's analogue of
+    * the exact gate's null-key caveat, documented not hidden. */
   private val recentEpochIds = new java.util.ArrayDeque[java.util.HashSet[Any]]()
   // highest epoch whose ids the window already holds: [[commitRecovered]]
   // runs at EVERY recovery attempt of a pending epoch (restart bootstrap
@@ -134,7 +123,6 @@ final class ContaminationGate private (
 
   private[streaming] override def commitRecovered(spooled: DataFrame,
       epoch: Long): Unit = synchronized {
-    if (batches < epoch) batches = epoch
     if (epoch <= lastRememberedEpoch) return // idempotent re-recovery
     val ids = new java.util.HashSet[Any]()
     spooled.select(orderCol).collect()
@@ -147,12 +135,11 @@ final class ContaminationGate private (
     lastRememberedEpoch = epoch
   }
 
-  /** Exactly-once retry-dedup window, shared-path form (the sharded
-    * wrapper calls these around ITS spool commit point; the unsharded
-    * [[onBatch]] calls the same pair — one implementation of the window).
-    * Pre-spool: suppress ids seen in recent epochs (a stateless decision
-    * would re-admit an upstream's crash-retry of a delivered epoch) and
-    * return this batch's full id set; post-spool: remember it. */
+  /** Exactly-once retry-dedup window (the gate loop calls these around
+    * its spool commit point). Pre-spool: suppress ids seen in recent
+    * epochs (a stateless decision would re-admit an upstream's crash-retry
+    * of a delivered epoch) and return this batch's full id set;
+    * post-spool: remember it. */
   private[streaming] override def retrySuppress(keyed: DataFrame,
       sup: java.util.HashSet[Any]): java.util.HashSet[Any] = synchronized {
     val ids = new java.util.HashSet[Any]()
@@ -167,11 +154,9 @@ final class ContaminationGate private (
   }
 
   private[streaming] override def rememberRetryIds(
-      ids: java.util.HashSet[Any]): Unit = synchronized {
-    // the batch path remembers under the current epoch (batches was
-    // advanced by decideBatch); a later recovery of the SAME epoch must
-    // not re-remember it
-    lastRememberedEpoch = math.max(lastRememberedEpoch, batches)
+      ids: java.util.HashSet[Any], epoch: Long): Unit = synchronized {
+    // a later recovery of the SAME epoch must not re-remember it
+    lastRememberedEpoch = math.max(lastRememberedEpoch, epoch)
     rememberEpoch(ids)
   }
 
@@ -187,9 +172,6 @@ final class ContaminationGate private (
   private var bloom =
     if (executorBackend) null else graft.sketch.BloomFilter.empty(bloomP, bloomN0)
   private var bloomN = bloomN0
-  private var batches = 0L
-  private var admitted = 0L
-  private var suppressed = 0L
 
   /** Executor-partitioned reference-gram store (executor backend only);
     * static — constructed lazily-rebuilding, never fed deltas. */
@@ -201,13 +183,11 @@ final class ContaminationGate private (
       ttlEnabled = false, keyCol = "gh")
   /** Probe/spec seams (null on the driver backend / executor backend). */
   private[graft] def executorSeen: ExecutorSeenStore = execSeen
-  /** (backend, resolved executor shard count — 0 on the driver tier). */
   private[graft] def backendInfo: (String, Int) =
     (backend, if (execSeen == null) 0 else execSeen.parts)
   private[graft] def driverBloomForSpec: AnyRef = bloom
-
-  /** (batches, admitted clean docs, suppressed contaminated docs) so far. */
-  def stats: (Long, Long, Long) = synchronized((batches, admitted, suppressed))
+  private[graft] def kind: String = "contamination"
+  protected def engineSession: SparkSession = eng.spark
 
   /** Distinct word n-gram hashes of a text column — the same gram shape
     * as the batch decontamination operator (whitespace tokens, empties
@@ -248,26 +228,16 @@ final class ContaminationGate private (
         eng.spark.read.parquet(files: _*).count(), bloomN)
       bloom = GateStore.buildBloom(eng.spark, storeDir, "gh", bloomP, bloomN)
     }
-    // epoch-counter floor (exactly-once): pending spools deliver at the
-    // next batch head; new epochs must not reuse their numbers
-    if (exactlyOnce && shardCount == 1)
-      batches = math.max(batches, epochs.maxEpoch())
   }
 
-  // ---- the batch lifecycle (ShardableGateCore; the unsharded gate is
-  // the same composition at G=1, and the static store means the commit
-  // hooks are no-ops — nothing is ever appended) ---------------------------
-
-  private[streaming] final class BatchCtx(
-      private[streaming] val keyed: DataFrame,
-      private[streaming] val sup: java.util.HashSet[Any])
+  // ---- the batch lifecycle (ShardableGateCore; the static store means
+  // the commit hooks are the trait's no-ops — nothing is ever appended) ----
 
   private[streaming] def prepareBatch(batch: DataFrame,
-      obs: Option[org.apache.spark.sql.Observation]): DataFrame = {
-    val base = batch.drop("arrival_timestamp")
+      obs: org.apache.spark.sql.Observation): DataFrame =
+    batch.drop("arrival_timestamp")
       .withColumn("__gh", gramHashesCol(expr(textSql)))
-    obs.fold(base)(o => base.observe(o, count(lit(1)).as("rows"))).persist()
-  }
+      .observe(obs, count(lit(1)).as("rows")).persist()
 
   private[streaming] def collectBatchRows(keyed: DataFrame): AnyRef =
     // one bounded collect: (orderCol, distinct gram hashes) per doc —
@@ -277,25 +247,15 @@ final class ContaminationGate private (
       .select(col(orderCol), col("__gh"))
       .collect().map(r => (r.get(0), r.getSeq[Long](1).toArray))
 
+  // the decision ctx IS the suppressed-id set
   private[streaming] def suppressedOf(ctx: AnyRef): java.util.HashSet[Any] =
-    ctx.asInstanceOf[BatchCtx].sup
-
-  private[streaming] def survivorsOf(keyed: DataFrame,
-      sup: java.util.HashSet[Any]): DataFrame =
-    GateStore.exceptIds(keyed, orderCol, sup.toArray).drop("__gh")
+    ctx.asInstanceOf[java.util.HashSet[Any]]
 
   private[streaming] def orderColName: String = orderCol
 
-  private[streaming] def commitPayloadBatch(ctx: AnyRef): Unit = ()
-  private[streaming] def commitIndexBatch(ctx: AnyRef): Unit = ()
-  private[streaming] def maybeCompact(): Unit = ()
-  private[streaming] def compactNow(): Unit = ()
-  // the reference store is fixed at creation — nothing to seed per batch
-  private[graft] def seedStore(rows: DataFrame): Unit = ()
-
-  private[streaming] def decideBatch(keyed: DataFrame, rows0: AnyRef): AnyRef =
+  private[streaming] def decideBatch(keyed: DataFrame, rows0: AnyRef,
+      batch: Long): AnyRef =
     synchronized {
-      batches += 1
       val s = keyed.sparkSession
       val rows = rows0.asInstanceOf[Array[(Any, Array[Long])]]
       val storeF: Array[GateStore.StoreFile] =
@@ -378,45 +338,8 @@ final class ContaminationGate private (
           }
         }
       }
-      new BatchCtx(keyed, suppressedSet)
+      suppressedSet
     }
-
-  private[streaming] def onBatch(batch: DataFrame): Unit = synchronized {
-    if (exactlyOnce) epochs.recoverPending()
-    val obs = new org.apache.spark.sql.Observation(
-      s"ctgate_${name}_${batches + 1}")
-    val keyed = prepareBatch(batch, Some(obs))
-    try {
-      val rows = collectBatchRows(keyed)
-      val ctx = decideBatch(keyed, rows).asInstanceOf[BatchCtx]
-      // retry-dedup window, pre-spool half (exactly-once only; the same
-      // hook pair the sharded wrapper calls — ONE window implementation):
-      // re-fed ids from recent epochs join the suppressed set BEFORE the
-      // counters and the spool's admitted flag read it
-      val retryIds = if (exactlyOnce) retrySuppress(keyed, ctx.sup) else null
-      val total = obs.get("rows").asInstanceOf[Long]
-      val nOut = total - ctx.sup.size
-      admitted += nOut
-      suppressed += total - nOut
-      if (exactlyOnce) {
-        val epoch = batches // decideBatch advanced it to this batch
-        epochs.failpoint("before-spool")
-        epochs.spool(epoch, keyed, orderCol, ctx.sup)
-        // remember only AFTER the spool commit point: remembering earlier
-        // would suppress the legitimate retry of a pre-spool crash
-        rememberRetryIds(retryIds)
-        epochs.failpoint("after-spool")
-        epochs.deliverAndMark(epoch, knownNonEmpty = Some(nOut > 0))
-      } else if (nOut > 0) eng.insertInto(sink, survivorsOf(keyed, ctx.sup))
-    } finally keyed.unpersist()
-  }
-
-  /** Deliver any epoch the last crash interrupted RIGHT NOW (instead of
-    * at the next batch head). Must not be called while holding engine
-    * locks. No-op in at-least-once mode. */
-  def recover(): Unit = synchronized {
-    if (exactlyOnce) epochs.recoverPending()
-  }
 }
 
 object ContaminationGate {
@@ -449,20 +372,16 @@ object ContaminationGate {
     GateStore.stampGeometry(root, "shards_1")
     val dir = GateStore.child(root, "ref_grams")
     sfs.mkdirs(dir)
-    val gate = new ContaminationGate(eng, name, textSql, orderCol, sink,
-      dir, n, bloomP, bloomN, delivery = delivery, backend = backend,
-      stateParts = stateParts)
+    val gate = new ContaminationGate(eng, name, textSql, orderCol,
+      dir, n, bloomP, bloomN, backend = backend, stateParts = stateParts)
     gate.seedReference(reference, refTextCol)
     gate.bootstrap()
-    eng.createContTransform(name, selectSql,
-      outputFunc = Some(gate.onBatch _), emitChanges = false)
-    // a catalog-replayed transform is bare (no callback) — re-attach
-    eng.rebindTransformOutput(name, gate.onBatch _)
+    ShardedGate.register(eng, name, selectSql, sink, Seq(gate), root, delivery)
     gate
   }
 
   /** The G-core horizontally-sharded form of [[create]] (see
-    * [[ShardedNearDupGate]]): core k owns gram hashes ≡ k (mod `shards`)
+    * [[ShardedGate]]): core k owns gram hashes ≡ k (mod `shards`)
     * — its reference slice, bloom, and candidate work shrink by G, and a
     * contaminated doc is flagged by whichever core owns a shared gram.
     * Admitted set identical to the unsharded gate's; reopening under a
@@ -472,7 +391,7 @@ object ContaminationGate {
       reference: DataFrame, shards: Int, refTextCol: String = "text",
       n: Int = 3,
       bloomP: Double = 0.01, bloomN: Int = 1 << 20,
-      delivery: String = StreamDedupGate.AtLeastOnce): ShardedNearDupGate = {
+      delivery: String = StreamDedupGate.AtLeastOnce): ShardedGate = {
     require(shards >= 2, s"use create() for an unsharded gate (shards=$shards)")
     require(n >= 1, s"gram size must be >= 1, got $n")
     val root = GateStore.gateRoot(storeRoot, name)
@@ -482,17 +401,12 @@ object ContaminationGate {
     val cores = (0 until shards).map { k =>
       val dir = GateStore.child(GateStore.child(root, s"s${k}of$shards"), "ref_grams")
       sfs.mkdirs(dir)
-      val core = new ContaminationGate(eng, name, textSql, orderCol, sink,
+      val core = new ContaminationGate(eng, name, textSql, orderCol,
         dir, n, bloomP, bloomN, k, shards)
       core.seedReference(reference, refTextCol)
       core.bootstrap()
       core
     }
-    val gate = new ShardedNearDupGate(eng, name, sink, cores,
-      spoolRoot = Some(root), delivery = delivery)
-    eng.createContTransform(name, selectSql,
-      outputFunc = Some(gate.onBatch _), emitChanges = false)
-    eng.rebindTransformOutput(name, gate.onBatch _)
-    gate
+    ShardedGate.register(eng, name, selectSql, sink, cores, root, delivery)
   }
 }

@@ -50,7 +50,6 @@ final class CosineNearDupGate private (
     name: String,
     embSql: String,
     orderCol: String,
-    sink: String,
     embDir: String,
     idxDir: String,
     threshold: Double,
@@ -64,16 +63,15 @@ final class CosineNearDupGate private (
     compactEvery: Int,
     shardId: Int,
     shardCount: Int,
-    delivery: String,
     ttlMillis: Long,
     ttlColumn: String,
     backend: String = StreamDedupGate.DriverBackend,
     stateParts: Int = 0,
     residentMb: Long = -1L)
-  extends IndexedNearDupGate[Array[Double]](eng, name, orderCol, sink,
+  extends IndexedNearDupGate[Array[Double]](eng, name, orderCol,
     embDir, idxDir, "embs", "v", "keys", "sk",
     bloomP, bloomN0, maxBucketSize, compactEvery,
-    shardId, shardCount, delivery, ttlMillis, ttlColumn, backend, stateParts,
+    shardId, shardCount, ttlMillis, ttlColumn, backend, stateParts,
     residentMb) {
 
   override private[graft] def kind: String = "cosine"
@@ -269,20 +267,17 @@ object CosineNearDupGate {
     GateStore.stampGeometry(idxDir,
       s"cosine_d${dim}_t${autoT}_b${autoB}_s${seed}_sk64" +
         (if (ttlMillis > 0) "_ttl" else ""))
-    val gate = new CosineNearDupGate(eng, name, embSql, orderCol, sink,
+    val gate = new CosineNearDupGate(eng, name, embSql, orderCol,
       embDir, idxDir, threshold, dim, autoT, autoB, seed,
-      bloomP, bloomN, maxBucketSize, compactEvery, 0, 1, delivery,
+      bloomP, bloomN, maxBucketSize, compactEvery, 0, 1,
       ttlMillis, ttlColumn, backend, stateParts, residentMb)
     gate.bootstrap()
-    eng.createContTransform(name, selectSql,
-      outputFunc = Some(gate.onBatch _), emitChanges = false)
-    // a catalog-replayed transform is bare (no callback) — re-attach
-    eng.rebindTransformOutput(name, gate.onBatch _)
+    ShardedGate.register(eng, name, selectSql, sink, Seq(gate), root, delivery)
     gate
   }
 
   /** The G-core horizontally-sharded form of [[create]] (see
-    * [[ShardedNearDupGate]]): core k owns SRP table positions ≡ k (mod
+    * [[ShardedGate]]): core k owns SRP table positions ≡ k (mod
     * `shards`), with its own index slice + bloom; the embedding store is
     * shared (written once per batch by core 0). Admitted set is identical
     * to the unsharded gate's; per-batch decisions run on `shards`
@@ -298,7 +293,7 @@ object CosineNearDupGate {
       compactEvery: Int = 256,
       delivery: String = StreamDedupGate.AtLeastOnce,
       ttlMillis: Long = 0L, ttlColumn: String = "",
-      residentMb: Long = -1L): ShardedNearDupGate = {
+      residentMb: Long = -1L): ShardedGate = {
     require(shards >= 2, s"use create() for an unsharded gate (shards=$shards)")
     require(threshold > 0.0 && threshold <= 1.0,
       s"cosine gate threshold must be in (0, 1], got $threshold")
@@ -321,19 +316,14 @@ object CosineNearDupGate {
       GateStore.stampGeometry(idxDir,
         s"cosine_d${dim}_t${autoT}_b${autoB}_s${seed}_sk64" +
           (if (ttlMillis > 0) "_ttl" else ""))
-      val core = new CosineNearDupGate(eng, name, embSql, orderCol, sink,
+      val core = new CosineNearDupGate(eng, name, embSql, orderCol,
         embDir, idxDir, threshold, dim, autoT, autoB, seed,
         bloomP, bloomN, maxBucketSize, compactEvery, k, shards,
-        graft.streaming.StreamDedupGate.AtLeastOnce, ttlMillis, ttlColumn,
+        ttlMillis, ttlColumn,
         residentMb = residentMb)
       core.bootstrap()
       core
     }
-    val gate = new ShardedNearDupGate(eng, name, sink, cores,
-      spoolRoot = Some(root), delivery = delivery)
-    eng.createContTransform(name, selectSql,
-      outputFunc = Some(gate.onBatch _), emitChanges = false)
-    eng.rebindTransformOutput(name, gate.onBatch _)
-    gate
+    ShardedGate.register(eng, name, selectSql, sink, cores, root, delivery)
   }
 }

@@ -6,15 +6,13 @@ import org.apache.spark.sql.functions._
 import graft.cv.ContViewEngine
 import graft.io.StoreFs
 
-/** The exactly-once epoch protocol for the near-dup / contamination gate
-  * family — the [[StreamDedupGate]] spool generalized to gates whose store
-  * records EVERY arrival (seen-based suppression), not just admitted
-  * winners. The exact gate can rebuild its store from a survivors-only
-  * spool (admitted keys ARE the store rows); a near-dup gate cannot — a
-  * suppressed row still becomes a suppressor — so the spool here carries
-  * the FULL prepared batch plus an `__admitted` flag, and recovery
-  * re-derives every store append from it (bucket keys / sketches are pure
-  * functions of the spooled payload, [[ShardableGateCore.commitRecovered]]).
+/** The exactly-once epoch protocol of every gate — the one spool the
+  * gate batch loop ([[ShardedGate]]) runs, whatever the gate kind. The
+  * spool carries the FULL prepared batch plus an [[GateEpochs.AdmittedCol]]
+  * flag (a seen-based gate's suppressed row still becomes a suppressor, so
+  * recovery needs every arrival back, not just the survivors), and
+  * recovery re-derives every store append from it (store rows are pure
+  * functions of the spooled batch, [[ShardableGateCore.commitRecovered]]).
   *
   * Per batch: decide as usual, then (1) spool `fwd_<E>.parquet` via
   * temp-write + atomic rename — THE commit point; (2) run the store
@@ -24,11 +22,16 @@ import graft.io.StoreFs
   * (idempotent — duplicated store rows change nothing), deliver, mark.
   * A crash before the spool rename loses nothing (the upstream retry
   * re-decides identically); after it, the retry's re-fed content is fully
-  * suppressed by the recovered store. Residual windows are the exact
-  * gate's, documented not hidden: a crash between delivery and marker
-  * re-delivers that epoch (the irreducible ack window of a
-  * non-transactional sink), and null-order-id rows carry no identity and
-  * stay at-least-once under upstream re-feed.
+  * suppressed by the recovered store. Residual windows, documented not
+  * hidden: a crash between delivery and marker re-delivers that epoch (the
+  * irreducible ack window of a non-transactional sink — the reference's
+  * sync_commit has the same client-retry hole), and null-order-id (and
+  * the exact gate's null-key) rows carry no identity and stay
+  * at-least-once under upstream re-feed.
+  *
+  * A spool without the flag column is the exact gate's earlier
+  * survivors-only format: read as all-admitted, so an epoch it left
+  * pending still recovers and delivers.
   *
   * Reference anchor: microbatch.h:33-56 — `sync_commit` applies to every
   * CQ kind, which is why the whole gate family carries the option.
@@ -38,23 +41,21 @@ private[streaming] final class GateEpochs(
     name: String,
     sink: String,
     spoolDir: String,
-    commitRecoveredHook: (DataFrame, Long) => Unit,
+    cores: Seq[ShardableGateCore],
     dropCols: Seq[String]) {
-
-  def this(eng: ContViewEngine, name: String, sink: String, spoolDir: String,
-      cores: Seq[ShardableGateCore], dropCols: Seq[String]) =
-    this(eng, name, sink, spoolDir,
-      (df: DataFrame, e: Long) => cores.foreach(_.commitRecovered(df, e)),
-      dropCols)
 
   StoreFs.forRoot(spoolDir).mkdirs(spoolDir)
 
   // test failpoint: throws once when execution reaches the named point
   // (failWith overrides the thrown exception — how the specs simulate a
-  // corrupt-data-page read surfacing mid-recovery)
+  // corrupt-data-page read surfacing mid-recovery); onPoint, if set, sees
+  // every point first (how a spec parks a batch between two steps)
   private[graft] var failAt: String = null
   private[graft] var failWith: Throwable = null
-  @inline private[streaming] def failpoint(p: String): Unit =
+  @volatile private[graft] var onPoint: String => Unit = null
+  @inline private[streaming] def failpoint(p: String): Unit = {
+    val hook = onPoint
+    if (hook != null) hook(p)
     if (p == failAt) {
       failAt = null
       val t = failWith
@@ -62,38 +63,30 @@ private[streaming] final class GateEpochs(
       if (t != null) throw t
       throw new IllegalStateException(s"failpoint:$p")
     }
+  }
 
   /** Highest epoch this spool has seen (bootstrap counter floor). */
   def maxEpoch(): Long = math.max(
     GateSpool.spoolEpochs(spoolDir).lastOption.map(_._1).getOrElse(0L),
     GateSpool.deliveredEpoch(spoolDir))
 
-  /** THE commit point: the full prepared batch + `__admitted` lands as one
+  /** THE commit point: the flagged batch ([[ShardableGateCore.withAdmitted]]
+    * — a batch-sized suppressed set rides the spool job as a broadcast
+    * join side instead of every task binary) lands as one
     * atomically-renamed parquet file, fsynced (data before the rename,
     * dirent after) so the commit survives power loss, not just process
-    * crash. The flag (true unless `orderCol` is in `suppressed`; NULL
-    * order ids always admitted) is built through
-    * [[GateStore.withAdmittedFlag]], so a batch-sized suppressed set rides
-    * the spool job as a broadcast join side instead of every task binary —
-    * the same bound the survivor filters carry. */
-  def spool(epoch: Long, keyed: DataFrame, orderCol: String,
-      suppressed: java.util.HashSet[Any]): Unit =
-    GateStore.append(
-      GateStore.withAdmittedFlag(keyed, orderCol, suppressed.toArray,
-        "__admitted"),
-      spoolDir, "fwd", epoch, force = true)
+    * crash. */
+  def spool(epoch: Long, flagged: DataFrame): Unit =
+    GateStore.append(flagged, spoolDir, "fwd", epoch, force = true)
 
   /** Deliver epoch `epoch`'s admitted subset to the sink and mark it.
     * `knownNonEmpty`: the batch path already knows whether any row was
-    * admitted (n = total − suppressed) — passing it skips a whole
-    * emptiness-probe job per batch; recovery, which doesn't know, omits
-    * it and pays the probe. */
+    * admitted — passing it skips a whole emptiness-probe job per batch;
+    * recovery, which doesn't know, omits it and pays the probe. */
   def deliverAndMark(epoch: Long,
       knownNonEmpty: Option[Boolean] = None): Unit = {
-    val spooled = eng.spark.read.parquet(
-      GateStore.child(spoolDir, f"fwd_$epoch%05d.parquet"))
-    val admitted = spooled.where(col("__admitted"))
-      .drop("__admitted").drop(dropCols: _*)
+    val admitted = GateEpochs.admittedOf(eng.spark.read.parquet(
+      GateStore.child(spoolDir, f"fwd_$epoch%05d.parquet")), dropCols)
     if (knownNonEmpty.getOrElse(admitted.take(1).nonEmpty))
       eng.insertInto(sink, admitted)
     failpoint("after-deliver")
@@ -140,7 +133,8 @@ private[streaming] final class GateEpochs(
               try {
                 spooled.count() // full-column validation, no state yet
                 validated = true
-                commitRecoveredHook(spooled, e)
+                cores.foreach(_.commitRecovered(spooled, e))
+                failpoint("recovery-after-store")
               } finally { spooled.unpersist(); () }
               if (deliver) deliverAndMark(e)
             } catch {
@@ -156,10 +150,38 @@ private[streaming] final class GateEpochs(
   }
 }
 
-/** The spool/marker FILE PROTOCOL, shared by [[GateEpochs]] (the
-  * seen-based gate family) and [[StreamDedupGate]]'s survivors-only spool
-  * — one implementation so a fix to filename parsing, delete ordering, or
-  * the marker convention cannot drift between them. */
+private[streaming] object GateEpochs {
+  /** The spool's survivor flag ([[ShardableGateCore.withAdmitted]]). */
+  val AdmittedCol = "__admitted"
+
+  /** The admitted rows of a flagged batch, flag and `dropCols` dropped. A
+    * frame without the flag (the exact gate's earlier survivors-only
+    * spool) is all-admitted. */
+  def admittedOf(flagged: DataFrame, dropCols: Seq[String] = Nil): DataFrame =
+    (if (flagged.columns.contains(AdmittedCol))
+      flagged.where(col(AdmittedCol)).drop(AdmittedCol)
+    else flagged).drop(dropCols: _*)
+
+  /** Refuse to open a gate over a spool directory its layout no longer
+    * reads while that directory still holds undelivered epochs (the
+    * sharded exact gate's earlier per-core spools): their rows would
+    * silently never reach the sink. */
+  def refuseOrphanedSpool(spoolDir: String, gate: String): Unit =
+    if (StoreFs.forRoot(spoolDir).exists(spoolDir)) {
+      val delivered = GateSpool.deliveredEpoch(spoolDir)
+      val pending = GateSpool.spoolEpochs(spoolDir).map(_._1).filter(_ > delivered)
+      if (pending.nonEmpty) throw new IllegalStateException(
+        s"gate $gate: $spoolDir holds undelivered exactly-once epochs " +
+          s"(${pending.mkString(", ")}) in the per-core spool layout, which " +
+          "this version no longer reads — deliver them with the version " +
+          "that wrote them, or delete the directory to accept at-least-once " +
+          "delivery of those epochs, before reopening the gate")
+    }
+}
+
+/** The spool/marker FILE PROTOCOL behind [[GateEpochs]]: epoch file
+  * naming, the delivered-marker watermark, and the quarantine of corrupt
+  * spool files. */
 private[streaming] object GateSpool {
 
   val spoolRe: scala.util.matching.Regex = """fwd_(\d+)\.parquet""".r

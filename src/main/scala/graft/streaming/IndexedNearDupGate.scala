@@ -2,7 +2,7 @@ package graft.streaming
 
 
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cv.ContViewEngine
@@ -13,8 +13,8 @@ import graft.sketch.BloomFilter
   * ([[SimHashNearDupGate]], [[CosineNearDupGate]], [[JaccardNearDupGate]]):
   * a banded (bucket, id [, sketch]) index in range shards joined first,
   * driver-resident bloom/CMS filters fed by one bounded per-batch collect,
-  * bloom regrow at compaction, and at-least-once delivery (sink before
-  * store append). A subclass supplies only the payload geometry: how to
+  * and bloom regrow at compaction — run through the gate batch loop,
+  * [[ShardedGate]]. A subclass supplies only the payload geometry: how to
   * compute it, bucket it, decode it, and compare it — on executors for the
   * stored layout and on the driver for the per-batch decision, with ONE
   * implementation of each piece of math shared between the two sides.
@@ -54,7 +54,7 @@ import graft.sketch.BloomFilter
   * so G cores' suppressed-set union equals the unsharded set exactly.
   * A sharded core stores only its index-slice (and, for core 0, the
   * SHARED payload store); the batch lifecycle is driven by
-  * [[ShardedNearDupGate]] through the [[ShardableGateCore]] hooks — the
+  * [[ShardedGate]] through the [[ShardableGateCore]] hooks — the
   * unsharded gate is the same composition at G=1.
   *
   * `payloadDir`/`payloadPrefix`/`payloadColName` name the payload store
@@ -66,7 +66,6 @@ private[graft] abstract class IndexedNearDupGate[P](
     eng: ContViewEngine,
     val name: String,
     orderCol: String,
-    sink: String,
     payloadDir: String,
     idxDir: String,
     payloadPrefix: String,
@@ -78,8 +77,7 @@ private[graft] abstract class IndexedNearDupGate[P](
     maxBucketSize: Int,
     compactEvery: Int,
     shardId: Int = 0,
-    shardCount: Int = 1,
-    delivery: String = StreamDedupGate.AtLeastOnce,
+    private[streaming] val shardCount: Int = 1,
     ttlMillis: Long = 0L,
     ttlColumn: String = "",
     backend: String = StreamDedupGate.DriverBackend,
@@ -88,9 +86,6 @@ private[graft] abstract class IndexedNearDupGate[P](
 
   require(shardCount >= 1 && shardId >= 0 && shardId < shardCount,
     s"bad shard assignment $shardId/$shardCount")
-  require(delivery == StreamDedupGate.AtLeastOnce ||
-    delivery == StreamDedupGate.ExactlyOnce,
-    s"unknown delivery mode '$delivery'")
   require(ttlMillis >= 0, s"negative ttl $ttlMillis")
   require(ttlMillis == 0 || ttlColumn.nonEmpty,
     "a windowed gate needs the event-time column: pass ttlColumn")
@@ -153,35 +148,8 @@ private[graft] abstract class IndexedNearDupGate[P](
     t
   }
 
-  private val exactlyOnce = delivery == StreamDedupGate.ExactlyOnce
-  /** The epoch-spool protocol (exactly-once mode; see [[GateEpochs]]) —
-    * the unsharded composition; sharded gates run the wrapper's. An
-    * index-only gate's payload column is sink payload (`fp`) and stays. */
-  private[graft] lazy val epochs = new GateEpochs(eng, name, sink,
-    GateStore.child(GateStore.parentOf(idxDir), "spool"), Seq(this),
-    dropCols = Seq("__p"))
-
   private[streaming] override def storeRoots: Seq[String] =
     Seq(idxDir) ++ (if (writesPayload) Seq(payloadDir) else Nil)
-  /** Deferred-commit pipeline (at-least-once unsharded batches): store
-    * appends + compaction of batch N overlap batch N+1's prepare/collect;
-    * [[CommitPipeline]] documents the ordering contract. */
-  private val pipeline = new CommitPipeline(s"$name-$shardId", storeRoots)
-  /** Test/stats seam: the gate's deferred-commit pipeline (failpoint +
-    * lost-commit counter — see [[CommitPipeline]]). */
-  private[graft] def commitPipeline: CommitPipeline = pipeline
-  private val ingestLock = new Object
-
-  /** Barrier for callers about to read or delete the durable stores
-    * (engine drop path, probes): joins any deferred commit. */
-  private[graft] def drainCommits(): Unit = pipeline.drain()
-
-  /** Deliver any epoch the last crash interrupted RIGHT NOW (instead of
-    * at the next batch head — a quiet stream would otherwise withhold a
-    * spool-committed epoch's rows indefinitely). Must not be called while
-    * holding engine locks. No-op in at-least-once mode. */
-  def recover(): Unit =
-    if (exactlyOnce) { pipeline.drain(); synchronized(epochs.recoverPending()) }
 
   /** The payload column (nullable → row passes through unstored) computed
     * over the transform's projected columns, named `__p`. */
@@ -235,9 +203,6 @@ private[graft] abstract class IndexedNearDupGate[P](
   protected def storedPayloadOf(p: P): Any
   /** The external Spark type [[storedPayloadOf]] produces. */
   protected def storedPayloadType: org.apache.spark.sql.types.DataType
-  /** The gate family's `graft_gate_stats` kind (also the per-batch
-    * observation-name prefix). */
-  private[graft] def kind: String
 
   // ---- resident hot tier (see ResidentIndex scaladoc) --------------------
 
@@ -270,15 +235,7 @@ private[graft] abstract class IndexedNearDupGate[P](
   /** Executor-side form of [[sketchAdmissible]] (distributed fallback). */
   protected def sketchAdmissibleCol(a: Column, b: Column): Column = lit(true)
 
-  /** Sharded cores read their stores through a CLONED session (shared
-    * SparkContext, isolated SQLConf): concurrent cores each scope their
-    * own parquet In-pushdown raise (GateStore.withInPushdown mutates
-    * session conf — a shared session would race), and isolated conf also
-    * avoids cross-core planner-state contention. The unsharded gate keeps
-    * the engine session (no concurrency, and its plans stay visible to
-    * session-level debugging). */
-  private lazy val coreSession =
-    if (shardCount == 1) eng.spark else eng.spark.newSession()
+  protected def engineSession: SparkSession = eng.spark
 
   // null on the executor backend — NO corpus-sized driver structure exists
   // there at all, and an accidental probe/add fails loudly instead of
@@ -302,8 +259,6 @@ private[graft] abstract class IndexedNearDupGate[P](
     if (maxBucketSize == Int.MaxValue) null
     else graft.sketch.CountMinSketch.empty()
   private var batches = 0L
-  private var admitted = 0L
-  private var suppressed = 0L
 
   // Resident hot tier: the per-core index slice (ord → residentIds pool)
   // and, on the payload-writing core, the shared payload pool. The parquet
@@ -336,8 +291,6 @@ private[graft] abstract class IndexedNearDupGate[P](
       auxCol = sketchColOf.map(_ => skColName))
   /** Probe/spec seam: the distributed index (null on the driver backend). */
   private[graft] def executorIndex: ExecutorGateIndex = execIdx
-  /** (backend, resolved executor shard count — 0 on the driver tier):
-    * the `graft_gate_stats` placement columns. */
   private[graft] def backendInfo: (String, Int) =
     (backend, if (execIdx == null) 0 else execIdx.parts)
   /** Probe/spec seam: the executor payload pool (null on the driver
@@ -459,11 +412,7 @@ private[graft] abstract class IndexedNearDupGate[P](
   }
 
   @inline private def ensureResident(): Unit =
-    if (residentStale) traced("resident-rebuild")(rebuildResident())
-
-  /** (batches, admitted survivors, suppressed near-duplicates) so far
-    * (sharded cores don't count — their wrapper does). */
-  def stats: (Long, Long, Long) = synchronized((batches, admitted, suppressed))
+    if (residentStale) GateTrace(name, "resident-rebuild")(rebuildResident())
 
   // ---- key-position ownership --------------------------------------------
 
@@ -546,23 +495,11 @@ private[graft] abstract class IndexedNearDupGate[P](
       }
     }
     rebuildResident() // restart resumes the hot tier from the stores
-    if (exactlyOnce && shardCount == 1) {
-      // store half only — sink delivery at the next batch head (the DDL
-      // replay path holds the engine's registration lock here)
-      epochs.recoverStores()
-      batches = math.max(batches, epochs.maxEpoch())
-    }
   }
 
-  /** Append pre-keyed rows straight into the seen-stores (bloom/CMS
-    * updated, nothing forwarded) — the scale-probe's seeding hook. */
-  private[graft] def seedStore(rows: DataFrame): Unit = {
-    pipeline.drain() // no interleaving with a deferred batch commit
-    seedStoreLocked(rows)
-  }
-
-  private def seedStoreLocked(rows: DataFrame): Unit = synchronized {
-    batches += 1
+  private[streaming] override def seedStore(rows: DataFrame,
+      batch: Long): Unit = synchronized {
+    batches = batch
     val keyed = rows.withColumn(pCol, payloadCol)
       .where(col(pCol).isNotNull && col(orderCol).isNotNull)
       .persist()
@@ -630,7 +567,7 @@ private[graft] abstract class IndexedNearDupGate[P](
       }
     // the overlapped collect must not outlive a failure in the index append
     // or the ttl agg below: a leaked background job would keep running
-    // after seedStoreLocked's finally unpersists `keyed` (forcing a full
+    // after seedStore's finally unpersists `keyed` (forcing a full
     // recompute) and would poison exactly what a bench probe deadline
     // measures next — cancel-or-await on every exit path
     var seedOk = false
@@ -709,21 +646,10 @@ private[graft] abstract class IndexedNearDupGate[P](
     }
   }
 
-  // opt-in phase timing on stderr (GRAFT_GATE_TRACE=1) — dev diagnosis only
-  private val trace = sys.env.get("GRAFT_GATE_TRACE").contains("1")
-  @inline protected final def traced[T](label: String)(f: => T): T =
-    if (!trace) f
-    else {
-      val t0 = System.nanoTime()
-      val out = f
-      System.err.println(f"[gate-trace] $name%s $label%s ${(System.nanoTime() - t0) / 1e3}%.0f us")
-      out
-    }
-
   // ---- the batch lifecycle (ShardableGateCore) ---------------------------
 
   /** Per-batch decision state handed from [[decideBatch]] to
-    * [[verifySharedPairs]] and the commit hooks (the wrapper forwards
+    * [[verifySharedPairs]] and the commit hooks (the loop forwards
     * survivors in between). `pairs` maps candidate STORE ids to the batch
     * row indices they must be exact-verified against — phase 2 runs once
     * over the union across cores (the payload store is shared). */
@@ -738,10 +664,10 @@ private[graft] abstract class IndexedNearDupGate[P](
       private[streaming] val storeTs: java.util.HashMap[Any, java.lang.Long] = null)
 
   private[streaming] def prepareBatch(batch: DataFrame,
-      obs: Option[org.apache.spark.sql.Observation]): DataFrame = {
-    val base = batch.drop("arrival_timestamp")
-    val observed = obs.fold(base)(o => base.observe(o, count(lit(1)).as("rows")))
-    val projected = observed.withColumn(pCol, payloadCol)
+      obs: org.apache.spark.sql.Observation): DataFrame = {
+    val projected = batch.drop("arrival_timestamp")
+      .observe(obs, count(lit(1)).as("rows"))
+      .withColumn(pCol, payloadCol)
     // Scale-adaptive task sizing for the per-batch jobs (round 19, guide
     // §2.2/§6): every row of this frame lands on the driver via the batch
     // collect anyway, so tasks beyond ~rowsPerTask rows each add scheduler
@@ -772,9 +698,8 @@ private[graft] abstract class IndexedNearDupGate[P](
       private[streaming] val sks: Array[Long],
       private[streaming] val tss: Array[Long]) // micros; null when unwindowed
 
-  /** The live batch collect (this gate's and the sharded wrapper's
-    * onBatch): [[collectRows]], recording the row count that sizes the
-    * next batch's tasks. */
+  /** The live batch collect: [[collectRows]], recording the row count
+    * that sizes the next batch's tasks. */
   private[streaming] def collectBatchRows(keyed: DataFrame): AnyRef = {
     val c = collectRows(keyed)
     lastCollectedRows = c.rows.length.toLong
@@ -782,7 +707,7 @@ private[graft] abstract class IndexedNearDupGate[P](
   }
 
   private def collectRows(keyed: DataFrame): CollectedRows =
-    traced("collect") {
+    GateTrace(name, "collect-rows") {
       // rows with a null order id pass through, are never stored and
       // never suppress: the suppression filter could not target them, and
       // a stored null id could not be fetched back by the candidate-id
@@ -835,12 +760,6 @@ private[graft] abstract class IndexedNearDupGate[P](
   private[streaming] def suppressedOf(ctx: AnyRef): java.util.HashSet[Any] =
     ctx.asInstanceOf[BatchCtx].sup
 
-  private[streaming] def survivorsOf(keyed: DataFrame,
-      sup: java.util.HashSet[Any]): DataFrame =
-    // the internal payload column goes; an exact-sketch gate's (`fp`) is
-    // the sink payload its DDL declares and stays
-    GateStore.exceptIds(keyed, orderCol, sup.toArray).drop("__p")
-
   private[streaming] def orderColName: String = orderCol
 
   private[streaming] override def storeMaxBatch: Long =
@@ -868,9 +787,10 @@ private[graft] abstract class IndexedNearDupGate[P](
     }
   }
 
-  private[streaming] def decideBatch(keyed: DataFrame, rows0: AnyRef): AnyRef =
-    synchronized { traced("decide") {
-      batches += 1
+  private[streaming] def decideBatch(keyed: DataFrame, rows0: AnyRef,
+      batch: Long): AnyRef =
+    synchronized { GateTrace(name, "decide-core") {
+      batches = batch
       ensureResident()
       val s = coreSession
       val collected = rows0.asInstanceOf[CollectedRows]
@@ -954,7 +874,7 @@ private[graft] abstract class IndexedNearDupGate[P](
         // lookups — O(batch keys · log store), zero store reads; the
         // sketch prefilter applies in place, and windowed mode prunes
         // out-of-window candidates before they ever reach phase 2
-        traced("phase1-resident") {
+        GateTrace(name, "phase1-resident") {
           var i = 0
           while (i < rows.length) {
             val ri = i
@@ -971,7 +891,7 @@ private[graft] abstract class IndexedNearDupGate[P](
             i += 1
           }
         }
-      } else if (executorBackend) traced("phase1-exec") {
+      } else if (executorBackend) GateTrace(name, "phase1-exec") {
         // distributed phase 1: ship (rowIdx, bucket, sketch[, ts]) for ALL
         // under-cap keys — no driver bloom prefilter (the shards answer
         // misses from memory at the same O(batch) job cost, and a
@@ -1029,8 +949,7 @@ private[graft] abstract class IndexedNearDupGate[P](
         while (it.hasNext) { arr(k) = it.next(); k += 1 }
         arr
       }
-      if (trace) System.err.println(
-        s"[gate-trace] $name phase1-hitkeys ${hitKeys.length}")
+      GateTrace.count(name, "phase1-hitkeys", hitKeys.length)
       val keyPush = hitKeys.length <= GateStore.maxPushdownKeys
       val idxPaths =
         if (hitKeys.isEmpty) Array.empty[String]
@@ -1051,14 +970,13 @@ private[graft] abstract class IndexedNearDupGate[P](
             (if (rowSks == null) Nil else Seq(col(skColName))) ++
             (if (ttlEnabled) Seq(unix_micros(col("ts"))) else Nil)
         val tsPos = idxReadCols.length - 1
-        if (keyPush && idxBytes <= GateStore.maxDriverVerifyBytes) traced("phase1") {
+        if (keyPush && idxBytes <= GateStore.maxDriverVerifyBytes) GateTrace(name, "phase1") {
           val fetched = GateStore.withInPushdown(s, hitKeys.length)(
             s.read.parquet(idxPaths: _*)
               .where(GateStore.inSetCol(col("bucket"), hitKeys.toSeq))
               .select(idxReadCols: _*)
               .collect())
-          if (trace)
-            System.err.println(s"[gate-trace] $name phase1-rows ${fetched.length}")
+          GateTrace.count(name, "phase1-rows", fetched.length)
           fetched.foreach { r =>
               val cands = candByBucket.get(r.getLong(0))
               if (cands != null) {
@@ -1073,7 +991,7 @@ private[graft] abstract class IndexedNearDupGate[P](
                 }
               }
             }
-        } else traced("phase1-dist") {
+        } else GateTrace(name, "phase1-dist") {
           val hitRows = new java.util.ArrayList[Row]()
           candByBucket.forEach { (b, list) =>
             list.forEach(i => {
@@ -1122,7 +1040,7 @@ private[graft] abstract class IndexedNearDupGate[P](
     * collected unfiltered to the driver, and never read more than once
     * per batch however many cores contributed candidates. */
   private[streaming] override def verifySharedPairs(
-      ctxs: Seq[AnyRef]): java.util.HashSet[Any] = traced("phase2") {
+      ctxs: Seq[AnyRef]): java.util.HashSet[Any] = GateTrace(name, "phase2") {
     val out = new java.util.HashSet[Any]()
     val first = ctxs.head.asInstanceOf[BatchCtx]
     val rows = first.rows
@@ -1202,8 +1120,7 @@ private[graft] abstract class IndexedNearDupGate[P](
     val s = coreSession
     val payF = GateStore.storeFiles(payloadDir)
     val idArr = pairs.keySet().toArray
-    if (trace) System.err.println(
-      s"[gate-trace] $name phase2-cands ${idArr.length}")
+    GateTrace.count(name, "phase2-cands", idArr.length)
     val idPush = idArr.length <= GateStore.maxPushdownKeys
     val payPaths =
       if (idPush && idArr.forall(_.isInstanceOf[Long]))
@@ -1231,7 +1148,7 @@ private[graft] abstract class IndexedNearDupGate[P](
             }
           }
         }
-    } else traced("phase2-dist") {
+    } else GateTrace(name, "phase2-dist") {
       // (store id, batch row) pairs and batch payloads ride in TWO
       // broadcast relations joined in sequence — a combined
       // pairs×payload relation would broadcast each batch payload
@@ -1273,8 +1190,8 @@ private[graft] abstract class IndexedNearDupGate[P](
     out
   }
 
-  private[streaming] def commitPayloadBatch(ctx0: AnyRef): Unit =
-    synchronized { traced("append-pay") {
+  private[streaming] override def commitPayloadBatch(ctx0: AnyRef): Unit =
+    synchronized { GateTrace(name, "append-pay") {
       val ctx = ctx0.asInstanceOf[BatchCtx]
       // the append is BUILT on the driver from the rows already in hand —
       // a LocalRelation write, no second execution of the payload
@@ -1324,8 +1241,8 @@ private[graft] abstract class IndexedNearDupGate[P](
           ctx.rows.map(r => (r._1, residentPayloadOf(r._2))))
     } }
 
-  private[streaming] def commitIndexBatch(ctx0: AnyRef): Unit =
-    synchronized { traced("append-idx") {
+  private[streaming] override def commitIndexBatch(ctx0: AnyRef): Unit =
+    synchronized { GateTrace(name, "append-idx") {
       val ctx = ctx0.asInstanceOf[BatchCtx]
       if (ctx.rows.nonEmpty) {
         val idType =
@@ -1374,7 +1291,7 @@ private[graft] abstract class IndexedNearDupGate[P](
           val schema = org.apache.spark.sql.types.StructType(idxFields)
           // driver-direct parquet write — no Spark job (see appendLocal);
           // exotic id types fall back to the LocalRelation write
-          traced("append-idx-write") {
+          GateTrace(name, "append-idx-write") {
             if (!GateStore.appendLocal(idx, schema, idxDir, idxPrefix, batches,
                 sortCol = Some("bucket")))
               GateStore.append(coreSession.createDataFrame(idx, schema),
@@ -1426,71 +1343,17 @@ private[graft] abstract class IndexedNearDupGate[P](
         }
         execIdx.bufferDelta(batches, delta.toArray)
       }
-      traced("filters")(updateFilters(ctx.rowKeys.flatten))
+      GateTrace(name, "filters")(updateFilters(ctx.rowKeys.flatten))
     } }
 
-  private[streaming] def maybeCompact(): Unit =
-    if (compactEvery > 0 && synchronized(batches) % compactEvery == 0) compact()
-
-  private[streaming] def compactNow(): Unit = compact()
-
-  private[streaming] def onBatch(batch: DataFrame): Unit = ingestLock.synchronized { traced("onbatch-total") {
-    if (exactlyOnce) { pipeline.drain(); synchronized(epochs.recoverPending()) }
-    val obs = new org.apache.spark.sql.Observation(
-      s"${kind}_${name}_${System.nanoTime()}")
-    val keyed = prepareBatch(batch, Some(obs))
-    var deferred = false
-    try {
-      // prepare + collect run OUTSIDE the gate monitor: they are pure
-      // per-batch math, and this is where they overlap the previous
-      // batch's deferred store commit (CommitPipeline)
-      val rows = collectBatchRows(keyed)
-      pipeline.drain() // decisions serialize on the committed store state
-      val ctx = decideBatch(keyed, rows).asInstanceOf[BatchCtx]
-      ctx.sup.addAll(verifySharedPairs(Seq(ctx)))
-      val total = obs.get("rows").asInstanceOf[Long]
-      val n = total - ctx.sup.size
-      synchronized { admitted += n; suppressed += total - n }
-      if (exactlyOnce) synchronized {
-        // epoch protocol (GateEpochs): spool is THE commit point; store
-        // appends and the sink delivery replay from it after any crash —
-        // the spool ordering is the batch's durability, so exactly-once
-        // never defers
-        val epoch = batches // decideBatch advanced it to this batch
-        epochs.failpoint("before-spool")
-        epochs.spool(epoch, keyed, orderCol, ctx.sup)
-        epochs.failpoint("after-spool")
-        commitPayloadBatch(ctx)
-        commitIndexBatch(ctx)
-        epochs.failpoint("after-store")
-        epochs.deliverAndMark(epoch, knownNonEmpty = Some(n > 0))
-      } else {
-        // sink BEFORE store append (at-least-once under failure-retry —
-        // see StreamDedupGate's delivery contract)
-        if (n > 0) eng.insertInto(sink, survivorsOf(keyed, ctx.sup))
-        if (CommitPipeline.enabled) {
-          deferred = true
-          pipeline.submit({ () =>
-            try { commitPayloadBatch(ctx); commitIndexBatch(ctx); maybeCompact() }
-            finally { keyed.unpersist(); () }
-          }, label = s"batch ${synchronized(batches)}")
-        } else { commitPayloadBatch(ctx); commitIndexBatch(ctx) }
-      }
-    } finally { if (!deferred) { keyed.unpersist(); () } }
-    if (!deferred) maybeCompact()
-  } }
+  private[streaming] override def maybeCompact(): Unit =
+    if (compactEvery > 0 && synchronized(batches) % compactEvery == 0) compactNow()
 
   /** Fold the stores into range shards — the index by bucket, the
     * payloads by id — and regrow the driver bloom when the index outgrew
     * its design size, so the fast path survives unbounded streams.
     * Crash-safe without a manifest (duplicated rows change nothing). */
-  def compact(): Unit = {
-    pipeline.drain() // no fold under a still-in-flight append (no-op on
-    // the pipeline's own thread — the cadence fold runs inside the task)
-    compactLocked()
-  }
-
-  private def compactLocked(): Unit = synchronized {
+  private[streaming] override def compactNow(): Unit = synchronized {
     // windowed mode: fold-time reap of rows older than (max seen ts − ttl)
     // on BOTH stores, mirrored into the resident tier — the state is
     // bounded by the window, not the stream's lifetime (reaper.c:49-352)

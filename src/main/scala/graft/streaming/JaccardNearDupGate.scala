@@ -40,7 +40,6 @@ final class JaccardNearDupGate private (
     name: String,
     textSql: String,
     orderCol: String,
-    sink: String,
     sigDir: String,
     idxDir: String,
     threshold: Double,
@@ -53,16 +52,15 @@ final class JaccardNearDupGate private (
     compactEvery: Int,
     shardId: Int,
     shardCount: Int,
-    delivery: String,
     ttlMillis: Long,
     ttlColumn: String,
     backend: String = StreamDedupGate.DriverBackend,
     stateParts: Int = 0,
     residentMb: Long = -1L)
-  extends IndexedNearDupGate[Array[Long]](eng, name, orderCol, sink,
+  extends IndexedNearDupGate[Array[Long]](eng, name, orderCol,
     sigDir, idxDir, "sigs", "sig", "keys", "sk",
     bloomP, bloomN0, maxBucketSize, compactEvery,
-    shardId, shardCount, delivery, ttlMillis, ttlColumn, backend, stateParts,
+    shardId, shardCount, ttlMillis, ttlColumn, backend, stateParts,
     residentMb) {
 
   override private[graft] def kind: String = "jaccard"
@@ -197,20 +195,17 @@ object JaccardNearDupGate {
     GateStore.stampGeometry(idxDir,
       s"jaccard_n${shingleN}_nb${numBands}_r${rowsPerBand}_sk64" +
         (if (ttlMillis > 0) "_ttl" else ""))
-    val gate = new JaccardNearDupGate(eng, name, textSql, orderCol, sink,
+    val gate = new JaccardNearDupGate(eng, name, textSql, orderCol,
       sigDir, idxDir, threshold, shingleN, numBands, rowsPerBand,
-      bloomP, bloomN, maxBucketSize, compactEvery, 0, 1, delivery,
+      bloomP, bloomN, maxBucketSize, compactEvery, 0, 1,
       ttlMillis, ttlColumn, backend, stateParts, residentMb)
     gate.bootstrap()
-    eng.createContTransform(name, selectSql,
-      outputFunc = Some(gate.onBatch _), emitChanges = false)
-    // a catalog-replayed transform is bare (no callback) — re-attach
-    eng.rebindTransformOutput(name, gate.onBatch _)
+    ShardedGate.register(eng, name, selectSql, sink, Seq(gate), root, delivery)
     gate
   }
 
   /** The G-core horizontally-sharded form of [[create]] (see
-    * [[ShardedNearDupGate]]): core k owns band positions ≡ k (mod
+    * [[ShardedGate]]): core k owns band positions ≡ k (mod
     * `shards`) with its own index slice + bloom; the signature store is
     * shared (written once per batch by core 0). Admitted set identical to
     * the unsharded gate's; reopening under a different G is refused. */
@@ -223,7 +218,7 @@ object JaccardNearDupGate {
       compactEvery: Int = 256,
       delivery: String = StreamDedupGate.AtLeastOnce,
       ttlMillis: Long = 0L, ttlColumn: String = "",
-      residentMb: Long = -1L): ShardedNearDupGate = {
+      residentMb: Long = -1L): ShardedGate = {
     require(shards >= 2, s"use create() for an unsharded gate (shards=$shards)")
     require(threshold > 0.0 && threshold <= 1.0,
       s"jaccard gate threshold must be in (0, 1], got $threshold")
@@ -246,19 +241,14 @@ object JaccardNearDupGate {
       GateStore.stampGeometry(idxDir,
         s"jaccard_n${shingleN}_nb${numBands}_r${rowsPerBand}_sk64" +
           (if (ttlMillis > 0) "_ttl" else ""))
-      val core = new JaccardNearDupGate(eng, name, textSql, orderCol, sink,
+      val core = new JaccardNearDupGate(eng, name, textSql, orderCol,
         sigDir, idxDir, threshold, shingleN, numBands, rowsPerBand,
         bloomP, bloomN, maxBucketSize, compactEvery, k, shards,
-        StreamDedupGate.AtLeastOnce, ttlMillis, ttlColumn,
+        ttlMillis, ttlColumn,
         residentMb = residentMb)
       core.bootstrap()
       core
     }
-    val gate = new ShardedNearDupGate(eng, name, sink, cores,
-      spoolRoot = Some(root), delivery = delivery)
-    eng.createContTransform(name, selectSql,
-      outputFunc = Some(gate.onBatch _), emitChanges = false)
-    eng.rebindTransformOutput(name, gate.onBatch _)
-    gate
+    ShardedGate.register(eng, name, selectSql, sink, cores, root, delivery)
   }
 }

@@ -44,7 +44,6 @@ final class SimHashNearDupGate private (
     name: String,
     textSql: String,
     orderCol: String,
-    sink: String,
     storeDir: String,
     maxDist: Int,
     blocks: Int,
@@ -54,16 +53,15 @@ final class SimHashNearDupGate private (
     compactEvery: Int,
     shardId: Int = 0,
     shardCount: Int = 1,
-    delivery: String = StreamDedupGate.AtLeastOnce,
     ttlMillis: Long = 0L,
     ttlColumn: String = "",
     backend: String = StreamDedupGate.DriverBackend,
     stateParts: Int = 0,
     residentMb: Long = -1L)
-  extends IndexedNearDupGate[Long](eng, name, orderCol, sink,
+  extends IndexedNearDupGate[Long](eng, name, orderCol,
     null, storeDir, null, null, "fps", "fp",
     bloomP, bloomN0, maxBucketSize, compactEvery,
-    shardId, shardCount, delivery, ttlMillis, ttlColumn, backend, stateParts,
+    shardId, shardCount, ttlMillis, ttlColumn, backend, stateParts,
     residentMb) {
 
   override private[graft] def kind: String = "simhash"
@@ -130,20 +128,17 @@ object SimHashNearDupGate {
     // silently-mismatched reopen (see GateStore.stampGeometry)
     GateStore.stampGeometry(dir,
       s"simhash_k$blocks" + (if (ttlMillis > 0) "_ttl" else ""))
-    val gate = new SimHashNearDupGate(eng, name, textSql, orderCol, sink, dir,
+    val gate = new SimHashNearDupGate(eng, name, textSql, orderCol, dir,
       maxDist, blocks, bloomP, bloomN, maxBucketSize, compactEvery,
-      delivery = delivery, ttlMillis = ttlMillis, ttlColumn = ttlColumn,
+      ttlMillis = ttlMillis, ttlColumn = ttlColumn,
       backend = backend, stateParts = stateParts, residentMb = residentMb)
     gate.bootstrap() // resume from a persisted store after an engine restart
-    eng.createContTransform(name, selectSql,
-      outputFunc = Some(gate.onBatch _), emitChanges = false)
-    // a catalog-replayed transform is bare (no callback) — re-attach
-    eng.rebindTransformOutput(name, gate.onBatch _)
+    ShardedGate.register(eng, name, selectSql, sink, Seq(gate), root, delivery)
     gate
   }
 
   /** The G-core horizontally-sharded form of [[create]] (see
-    * [[ShardedNearDupGate]]): core k owns block-combination positions ≡ k
+    * [[ShardedGate]]): core k owns block-combination positions ≡ k
     * (mod `shards`) of the banded key set, each with its own (bucket, id,
     * fp) store slice + bloom/CMS. Admitted set identical to the unsharded
     * gate's; reopening under a different G is refused. */
@@ -155,7 +150,7 @@ object SimHashNearDupGate {
       compactEvery: Int = 256,
       delivery: String = StreamDedupGate.AtLeastOnce,
       ttlMillis: Long = 0L, ttlColumn: String = "",
-      residentMb: Long = -1L): ShardedNearDupGate = {
+      residentMb: Long = -1L): ShardedGate = {
     require(shards >= 2, s"use create() for an unsharded gate (shards=$shards)")
     val root = GateStore.gateRoot(storeRoot, name)
     val sfs = graft.io.StoreFs.forRoot(root)
@@ -166,18 +161,13 @@ object SimHashNearDupGate {
       sfs.mkdirs(dir)
       GateStore.stampGeometry(dir,
         s"simhash_k$blocks" + (if (ttlMillis > 0) "_ttl" else ""))
-      val core = new SimHashNearDupGate(eng, name, textSql, orderCol, sink,
+      val core = new SimHashNearDupGate(eng, name, textSql, orderCol,
         dir, maxDist, blocks, bloomP, bloomN, maxBucketSize, compactEvery,
         k, shards, ttlMillis = ttlMillis, ttlColumn = ttlColumn,
         residentMb = residentMb)
       core.bootstrap()
       core
     }
-    val gate = new ShardedNearDupGate(eng, name, sink, cores,
-      spoolRoot = Some(root), delivery = delivery)
-    eng.createContTransform(name, selectSql,
-      outputFunc = Some(gate.onBatch _), emitChanges = false)
-    eng.rebindTransformOutput(name, gate.onBatch _)
-    gate
+    ShardedGate.register(eng, name, selectSql, sink, cores, root, delivery)
   }
 }

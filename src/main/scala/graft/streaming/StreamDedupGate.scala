@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cv.ContViewEngine
@@ -31,25 +31,15 @@ import graft.sketch.BloomFilter
   *    the sink twice (detectable downstream via `h`), but a document can
   *    never be silently suppressed by state its failed delivery left
   *    behind.
-  *  - `exactly_once`: each batch is an EPOCH committed by ONE atomic
-  *    rename — the survivor set is spooled to `spool/fwd_<E>.parquet`
-  *    (temp-write + atomic move), then the seen-keys append, the sink
-  *    delivery, and a `delivered_<E>` marker follow, and RECOVERY
-  *    finishes any epoch whose spool exists but whose marker doesn't: the
-  *    keys file is rebuilt from the spool if missing (survivor `h` values
-  *    ARE the admitted keys — deterministic), the spool is delivered, the
-  *    marker lands. The store half runs at restart bootstrap; the sink
-  *    delivery runs at the head of the next batch (or an explicit
-  *    [[recover]]) — it cannot run under the engine's registration lock,
-  *    which the DDL-replay path holds during bootstrap. A crash at any point before the spool rename loses nothing
-  *    (the upstream retry re-decides identically); after it, the retry's
-  *    re-fed content is fully suppressed by the recovered store, so the
-  *    sink sees each admitted row once. Residual windows, documented
-  *    rather than hidden: (1) a crash BETWEEN the sink delivery and the
-  *    marker rename re-delivers that epoch on recovery — the irreducible
-  *    ack window of a non-transactional sink (the reference's
-  *    sync_commit has the same client-retry hole); (2) null-KEY rows
-  *    carry no identity and stay at-least-once under upstream re-feed.
+  *  - `exactly_once`: each batch is an epoch of the gate family's one
+  *    spool protocol, [[GateEpochs]] — the flagged batch is spooled by ONE
+  *    atomic rename, then the seen-keys append, the sink delivery, and a
+  *    `delivered_<E>` marker follow, and recovery re-derives the keys (or
+  *    the windowed (h, max ts) rows) of any undelivered epoch from its
+  *    spool. The plain and the windowed gate run the same protocol.
+  *    Residual windows are [[GateEpochs]]' (the sink ack window), plus
+  *    null-KEY rows, which carry no identity and stay at-least-once under
+  *    upstream re-feed.
   *
   * Mechanics, sized for the 100-TB regime:
   *  - The seen-key store is APPEND-ONLY key-column parquet (a dedup set
@@ -76,9 +66,10 @@ import graft.sketch.BloomFilter
   *    regrows at compaction (exact store count known there), so the fast
   *    path survives unbounded streams.
   *
-  * Concurrency: `onBatch` is serialized on the gate — the engine's sync and
-  * async ingest paths already order batches, and the gate's first-wins
-  * guarantee is only meaningful under an ordered feed.
+  * The batch lifecycle is [[ShardedGate]]'s (this class is its
+  * [[ShardableGateCore]]): batches are serialized on the gate — the
+  * engine's sync and async ingest paths already order batches, and the
+  * gate's first-wins guarantee is only meaningful under an ordered feed.
   *
   * Restart: `create` on an engine whose catalog already replayed this
   * transform re-binds the callback and `bootstrap` rebuilds the bloom from
@@ -95,21 +86,17 @@ final class StreamDedupGate private[streaming] (
     val name: String,
     keySql: String,
     orderCol: String,
-    sink: String,
     storeDir: String,
     bloomP: Double,
     bloomN0: Int,
     compactEvery: Int,
-    delivery: String = StreamDedupGate.AtLeastOnce,
     ttlMillis: Long = 0L,
     ttlColumn: String = "",
     backend: String = StreamDedupGate.DriverBackend,
-    stateParts: Int = 0) {
+    stateParts: Int = 0,
+    shardId: Int = 0,
+    private[streaming] val shardCount: Int = 1) extends ShardableGateCore {
 
-  require(delivery == StreamDedupGate.AtLeastOnce ||
-    delivery == StreamDedupGate.ExactlyOnce,
-    s"unknown delivery mode '$delivery' (expected " +
-      s"'${StreamDedupGate.AtLeastOnce}' or '${StreamDedupGate.ExactlyOnce}')")
   require(ttlMillis >= 0, s"negative ttl $ttlMillis")
   require(ttlMillis == 0 || ttlColumn.nonEmpty,
     "a windowed gate needs the event-time column: pass ttlColumn")
@@ -157,83 +144,9 @@ final class StreamDedupGate private[streaming] (
     t
   }
 
-  private val exactlyOnce = delivery == StreamDedupGate.ExactlyOnce
-  private val spoolDir: String =
-    GateStore.child(GateStore.parentOf(storeDir), "spool")
-  if (exactlyOnce) graft.io.StoreFs.forRoot(spoolDir).mkdirs(spoolDir)
-
-  /** ttl × exactly_once: the survivors-only spool cannot rebuild a
-    * windowed store (every arrival's seen-time must be recorded, not just
-    * winners'), so the combination runs the near-dup family's FULL-BATCH
-    * spool protocol instead ([[GateEpochs]]): the whole keyed batch +
-    * `__admitted` lands atomically, recovery re-derives the (h, max ts)
-    * append from it, and delivery filters the flag. Same spool dir and
-    * marker convention as the plain exactly-once mode. */
-  private[graft] lazy val ttlEpochs = new GateEpochs(eng, name, sink,
-    spoolDir, (spooled: org.apache.spark.sql.DataFrame, e: Long) =>
-      recoverTtlEpoch(spooled, e), dropCols = Nil)
-
-  private def recoverTtlEpoch(spooled: org.apache.spark.sql.DataFrame,
-      epoch: Long): Unit = {
-    if (batches < epoch) batches = epoch
-    val rows = spooled
-      .where(col("h").isNotNull && col(ttlColumn).isNotNull)
-      .select(col("h"), unix_micros(col(ttlColumn).cast("timestamp")))
-      .collect()
-    if (GateStore.maxBatch(storeDir, "keys") < epoch && rows.nonEmpty) {
-      val maxByKey = new java.util.HashMap[Any, java.lang.Long]()
-      rows.foreach { r =>
-        val t = r.getLong(1)
-        val prev = maxByKey.get(r.get(0))
-        if (prev == null || t > prev) maxByKey.put(r.get(0), t)
-        if (t > maxSeenTsMicros) maxSeenTsMicros = t
-      }
-      appendTtlKeys(spooled, maxByKey, epoch)
-    }
-    if (!executorBackend) rows.foreach(r => bloom.add(r.get(0)))
-    else execSeen.invalidate() // recovered append: shards rebuild lazily
-  }
-
-  /** The windowed store append: ONE (h, max ts) row per batch key. */
-  private def appendTtlKeys(keyed: org.apache.spark.sql.DataFrame,
-      maxByKey: java.util.HashMap[Any, java.lang.Long], epoch: Long): Unit = {
-    if (maxByKey.isEmpty) return
-    val hType = keyed.schema(keyed.schema.fieldIndex("h")).dataType
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](maxByKey.size)
-    maxByKey.forEach { (h, t) =>
-      out.add(org.apache.spark.sql.Row(h, microsToTs(t.longValue))); ()
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("h", hType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    if (!GateStore.appendLocal(out, schema, storeDir, "keys", epoch,
-        sortCol = Some("h")))
-      GateStore.append(keyed.sparkSession.createDataFrame(out, schema),
-        storeDir, "keys", epoch, sortCol = Some("h"))
-    // executor shards: delta AFTER the durable append (the module-wide
-    // ordering contract) — a failed append must fail the batch WITHOUT
-    // the shards learning its keys, or the retry would self-suppress
-    if (executorBackend) {
-      val delta = new scala.collection.mutable.ArrayBuffer[(Any, Long)]()
-      maxByKey.forEach { (h, t) => delta += ((h, t.longValue)); () }
-      execSeen.bufferDelta(delta.toArray)
-    }
-  }
-
   private var bloom = BloomFilter.empty(bloomP, bloomN0)
   private var bloomN = bloomN0
   private var batches = 0L
-  private var admitted = 0L
-  private var suppressed = 0L
-
-  /** Deferred-commit pipeline (plain at-least-once batches): the key-store
-    * append of batch N overlaps batch N+1's collect; `drain()` before the
-    * store-presence check keeps decisions serialized on committed store
-    * state ([[CommitPipeline]] documents the contract). */
-  private val pipeline = new CommitPipeline(name, Seq(storeDir))
-  /** Test/stats seam: see [[CommitPipeline]]. */
-  private[graft] def commitPipeline: CommitPipeline = pipeline
 
   /** Executor-partitioned seen-key store (executor backend only). */
   private val execSeen: ExecutorSeenStore =
@@ -243,75 +156,56 @@ final class StreamDedupGate private[streaming] (
       else ExecutorGateIndex.defaultParts(eng.spark), ttlEnabled)
   /** Probe/spec seam (null on the driver backend). */
   private[graft] def executorSeen: ExecutorSeenStore = execSeen
-  /** (backend, resolved executor shard count — 0 on the driver tier). */
+  private[graft] def kind: String = "dedup"
   private[graft] def backendInfo: (String, Int) =
     (backend, if (execSeen == null) 0 else execSeen.parts)
-  private val ingestLock = new Object
 
-  /** Barrier for callers about to read or delete the durable store. */
-  private[graft] def drainCommits(): Unit = pipeline.drain()
+  protected def engineSession: SparkSession = eng.spark
 
-  // test failpoint: throws once when execution reaches the named point
-  // (failWith overrides the thrown exception — how the specs simulate a
-  // corrupt-data-page read surfacing mid-recovery)
-  private[graft] var failAt: String = null
-  private[graft] var failWith: Throwable = null
-  @inline private def failpoint(p: String): Unit =
-    if (p == failAt) {
-      failAt = null
-      val t = failWith
-      failWith = null
-      if (t != null) throw t
-      throw new IllegalStateException(s"failpoint:$p")
-    }
-
-  /** (batches, admitted survivors, suppressed duplicates) so far. */
-  def stats: (Long, Long, Long) = synchronized((batches, admitted, suppressed))
-
-  /** Current bloom design size (grows at compaction — see [[compact]]). */
+  /** Current bloom design size (grows at compaction — see [[compactNow]]). */
   private[streaming] def currentBloomN: Int = synchronized(bloomN)
+
+  /** Key-hash ownership: core k owns the keys with
+    * pmod(xxhash64(h), G) = k (all of them at G = 1). */
+  private def ownerCol: org.apache.spark.sql.Column =
+    pmod(xxhash64(col("h")), lit(shardCount))
+  private def owned(keyed: DataFrame): DataFrame =
+    if (shardCount == 1) keyed else keyed.where(ownerCol === lit(shardId))
 
   /** Restart bootstrap: a re-created gate on an existing store resumes
     * exactly — the key set IS the store; only the bloom is memory-resident,
     * and one distributed bloom_agg over the persisted keys rebuilds it.
-    * Exactly-once mode finishes any epoch the crash interrupted FIRST, so
-    * the bloom covers the recovered keys too. (admitted/suppressed
-    * counters restart at zero: session telemetry, not dedup state.)
-    */
+    * (Exactly-once recovery of an interrupted epoch then runs in the
+    * loop's construction — [[GateEpochs.recoverStores]] — and feeds the
+    * recovered keys through [[commitRecovered]].) */
   private[streaming] def bootstrap(): Unit = {
     // same-JVM restart fixtures: wait out any deferred commit an abandoned
     // instance of this store still has in flight (see CommitPipeline)
-    CommitPipeline.drainRoots(Seq(storeDir))
-    bootstrapLocked()
+    CommitPipeline.drainRoots(storeRoots)
+    synchronized {
+      val files = GateStore.files(storeDir)
+      if (files.nonEmpty && !executorBackend) {
+        // right-size FIRST (metadata-only count): a corpus-sized store under
+        // the construction-time design n would run the filter saturated.
+        // (executor backend: no driver bloom at all — membership lives on
+        // the shards, rebuilt lazily at the first lookup)
+        bloomN = GateStore.bloomSizeFor(
+          eng.spark.read.parquet(files: _*).count(), bloomN)
+        bloom = GateStore.buildBloom(eng.spark, storeDir, "h", bloomP, bloomN)
+      }
+      batches = storeMaxBatch
+      if (ttlEnabled && files.nonEmpty) {
+        val r = eng.spark.read.parquet(files: _*)
+          .agg(max(unix_micros(col("ts")))).collect()(0)
+        if (!r.isNullAt(0)) maxSeenTsMicros = r.getLong(0)
+      }
+    }
   }
 
-  private def bootstrapLocked(): Unit = synchronized {
-    // restore the STORE only: rebuilding keys_E from a pending spool is
-    // pure file work, but the sink DELIVERY would call eng.insertInto
-    // while the DDL-replay path holds the engine's registration lock —
-    // the ingest futures need that lock and the await would deadlock
-    // (observed: ingestAwaitMs timeout). Delivery completes at the next
-    // batch (recoverPending at every onBatch head) or via [[recover]].
-    if (exactlyOnce && ttlEnabled) ttlEpochs.recoverStores()
-    else if (exactlyOnce) recoverStores()
-    val files = GateStore.files(storeDir)
-    if (files.nonEmpty && !executorBackend) {
-      // right-size FIRST (metadata-only count): a corpus-sized store under
-      // the construction-time design n would run the filter saturated.
-      // (executor backend: no driver bloom at all — membership lives on
-      // the shards, rebuilt lazily at the first lookup)
-      bloomN = GateStore.bloomSizeFor(
-        eng.spark.read.parquet(files: _*).count(), bloomN)
-      bloom = GateStore.buildBloom(eng.spark, storeDir, "h", bloomP, bloomN)
-    }
-    batches = math.max(GateStore.maxBatch(storeDir, "keys"),
-      if (exactlyOnce) math.max(spoolMaxEpoch(), deliveredEpoch()) else 0L)
-    if (ttlEnabled && files.nonEmpty) {
-      val r = eng.spark.read.parquet(files: _*)
-        .agg(max(unix_micros(col("ts")))).collect()(0)
-      if (!r.isNullAt(0)) maxSeenTsMicros = r.getLong(0)
-    }
-  }
+  private[streaming] override def storeMaxBatch: Long =
+    GateStore.maxBatch(storeDir, "keys")
+  private[streaming] override def storeRoots: Seq[String] = Seq(storeDir)
+  private[streaming] def orderColName: String = orderCol
 
   /** Fold the per-batch key files into key-range shards (also runs
     * automatically every `compactEvery` batches) — a parallel rewrite,
@@ -323,12 +217,7 @@ final class StreamDedupGate private[streaming] (
     * and silently degrade every batch to the full store anti-join, so the
     * filter is regrown (and rebuilt distributed) once the store outgrows
     * its design size. */
-  def compact(): Unit = {
-    pipeline.drain() // no fold under a still-in-flight append
-    compactLocked()
-  }
-
-  private def compactLocked(): Unit = synchronized {
+  private[streaming] override def compactNow(): Unit = synchronized {
     val cols = if (ttlEnabled) Seq("h", "ts") else Seq("h")
     // the TTL reaper: expired seen-times drop at fold time
     val reap =
@@ -348,142 +237,92 @@ final class StreamDedupGate private[streaming] (
     }
   }
 
-  /** Append pre-keyed rows straight into the seen-store (bloom updated,
-    * nothing forwarded) — the scale-probe's way of standing up a 10×/100×
-    * store without replaying history through the join path. */
-  private[graft] def seedStore(rows: DataFrame): Unit = {
-    pipeline.drain() // no interleaving with a deferred batch commit
-    seedStoreLocked(rows)
-  }
+  private[streaming] override def maybeCompact(): Unit =
+    if (compactEvery > 0 && synchronized(batches) % compactEvery == 0) compactNow()
 
-  private def seedStoreLocked(rows: DataFrame): Unit = synchronized {
-    batches += 1
-    val keys = rows.withColumn("h", expr(keySql)).where(col("h").isNotNull)
-      .select("h")
-    GateStore.append(keys, storeDir, "keys", batches, sortCol = Some("h"))
-    if (executorBackend) execSeen.invalidate()
-    else keys.collect().foreach(r => bloom.add(r.get(0)))
-  }
+  private[streaming] override def seedStore(rows: DataFrame, batch: Long): Unit =
+    synchronized {
+      batches = batch
+      val keys = owned(rows.withColumn("h", expr(keySql)).where(col("h").isNotNull))
+        .select("h")
+      GateStore.append(keys, storeDir, "keys", batches, sortCol = Some("h"))
+      if (executorBackend) execSeen.invalidate()
+      else keys.collect().foreach(r => bloom.add(r.get(0)))
+    }
 
-  // ---- the per-batch decision (shared by both delivery modes) ------------
+  // ---- the batch lifecycle (ShardableGateCore) ---------------------------
 
+  /** The batch's ONE bounded collect: (orderCol, key) per non-null-key row
+    * — plus the event time (micros, windowed mode; rows with a null event
+    * time pass through un-stored) and, at G ≥ 2, the owning core. */
+  private final class Collected(
+      val rows: Array[(Any, Any)],
+      val ts: Array[Long],
+      val owner: Array[Long])
+
+  /** One core's decision over its key slice. Plain mode: within-batch
+    * first-wins, the store-present keys, and the winners whose key is
+    * new (the store append); windowed mode: the (h, max ts) seen-refresh
+    * rows. */
   private final class Decision(
       val keyed: DataFrame,
-      val obs: org.apache.spark.sql.Observation,
+      val batch: Long,
       val rows: Array[(Any, Any)],
       val batchKeys: Array[Any],
-      val winnerByKey: java.util.HashMap[Any, (Any, Int)],
-      val present: java.util.HashSet[Any],
       val suppressedIds: java.util.HashSet[Any],
-      val storeSuppressedNullId: Int) {
+      val present: java.util.HashSet[Any],
+      val newKeys: java.util.ArrayList[org.apache.spark.sql.Row],
+      val storeSuppressedNullId: Int,
+      val maxByKey: java.util.HashMap[Any, java.lang.Long])
 
-    /** Rows the survivor filter will drop — exact, over the same collected
-      * rows the filter semantics cover. */
-    lazy val dropped: Int = {
-      val keyBasedFilter = storeSuppressedNullId > 0
-      var d = 0
-      if (!suppressedIds.isEmpty || keyBasedFilter) {
-        var i = 0
-        while (i < rows.length) {
-          val (id, h) = rows(i)
-          val drop =
-            if (keyBasedFilter)
-              present.contains(h) || (id != null && suppressedIds.contains(id))
-            else id != null && suppressedIds.contains(id)
-          if (drop) d += 1
-          i += 1
-        }
-      }
-      d
-    }
-
-    def survivors: DataFrame =
-      if (suppressedIds.isEmpty && storeSuppressedNullId == 0) keyed
-      else if (storeSuppressedNullId == 0)
-        // InSet filter under the task-binary bound, broadcast anti-join
-        // above it (GateStore.exceptIds) — the suppressed-id set grows
-        // with the batch, like the candidate set
-        GateStore.exceptIds(keyed, orderCol, suppressedIds.toArray)
-      else {
-        // a suppressed null-order-id winner is only filterable by key
-        val presentKeys = new java.util.ArrayList[Any]()
-        present.forEach(h => { presentKeys.add(h); () })
-        keyed.where(col("h").isNull ||
-          (!GateStore.inSetCol(col("h"), presentKeys.toArray.toSeq) &&
-            (col(orderCol).isNull ||
-              !GateStore.inSetCol(col(orderCol), suppressedIds.toArray.toSeq))))
-      }
-
-    /** The admitted winners' keys — what the store append records. */
-    def newKeyRows: java.util.ArrayList[org.apache.spark.sql.Row] = {
-      val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      winnerByKey.forEach { (h, _) =>
-        if (!present.contains(h)) { out.add(org.apache.spark.sql.Row(h)); () }
-      }
-      out
-    }
-
-    def appendNewKeys(epoch: Long): Unit = {
-      val newKeys = newKeyRows
-      if (!newKeys.isEmpty) {
-        val hType = keyed.schema(keyed.schema.fieldIndex("h")).dataType
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("h", hType)))
-        // driver-direct parquet write — no Spark job (GateStore.appendLocal)
-        if (!GateStore.appendLocal(newKeys, schema, storeDir, "keys", epoch,
-            sortCol = Some("h")))
-          GateStore.append(keyed.sparkSession.createDataFrame(newKeys, schema),
-            storeDir, "keys", epoch, sortCol = Some("h"))
-      }
-      // executor shards: the new winners' keys ride the next lookup job
-      // (EVERY batch buffers, even empty — the delta range is contiguous)
-      if (executorBackend) {
-        val delta = new Array[(Any, Long)](newKeys.size)
-        var i = 0
-        while (i < newKeys.size) {
-          delta(i) = (newKeys.get(i).get(0), Long.MinValue)
-          i += 1
-        }
-        execSeen.bufferDelta(delta)
-      }
-    }
-  }
-
-  /** ONE bounded collect — (orderCol, key) — and the whole suppression
-    * decision runs on the driver: within-batch first-wins is a hash
-    * group + min, the bloom is probed in place (never shipped to
-    * executors), and the store check collects ONLY the candidate keys
-    * actually present in the pruned, in-set-filtered store slice. The
-    * old shape paid a window shuffle + an anti-join + a count job per
-    * batch; this shape runs zero shuffles. */
-  /** The store-independent half of a decision — safe to compute while the
-    * previous batch's deferred append is still in flight. */
-  private final class Collected(
-      val keyed: DataFrame,
-      val obs: org.apache.spark.sql.Observation,
-      val rows: Array[(Any, Any)],
-      val batchKeys: Array[Any],
-      val winnerByKey: java.util.HashMap[Any, (Any, Int)],
-      val inBatchSuppressed: java.util.HashSet[Any])
-
-  private def collectBatch(batch: DataFrame): Collected = {
+  private[streaming] def prepareBatch(batch: DataFrame,
+      obs: org.apache.spark.sql.Observation): DataFrame =
     // input-row count rides the first action via observe() — a separate
     // batch.count() would re-run the transform projection per batch
-    val obs = new org.apache.spark.sql.Observation(
-      s"gate_${name}_${System.nanoTime()}")
-    val keyed = batch.drop("arrival_timestamp")
+    batch.drop("arrival_timestamp")
       .observe(obs, count(lit(1)).as("rows"))
       .withColumn("h", expr(keySql))
       .persist()
-    val rows: Array[(Any, Any)] =
-      keyed.where(col("h").isNotNull).select(col(orderCol), col("h"))
-        .collect().map(r => (r.get(0), r.get(1)))
+
+  private[streaming] def collectBatchRows(keyed: DataFrame): AnyRef = {
+    val base = keyed.where(col("h").isNotNull)
+    val live = if (ttlEnabled) base.where(col(ttlColumn).isNotNull) else base
+    val cols = Seq(col(orderCol), col("h")) ++
+      (if (ttlEnabled) Seq(unix_micros(col(ttlColumn).cast("timestamp"))) else Nil) ++
+      (if (shardCount > 1) Seq(ownerCol) else Nil)
+    val rs = live.select(cols: _*).collect()
+    new Collected(rs.map(r => (r.get(0), r.get(1))),
+      if (ttlEnabled) rs.map(_.getLong(2)) else null,
+      if (shardCount > 1) rs.map(_.getLong(cols.length - 1)) else null)
+  }
+
+  private[streaming] def decideBatch(keyed: DataFrame, rows0: AnyRef,
+      batch: Long): AnyRef = synchronized {
+    batches = batch
+    val all = rows0.asInstanceOf[Collected]
+    val mine: Array[Int] =
+      if (all.owner == null) null
+      else all.owner.indices.filter(i => all.owner(i) == shardId).toArray
+    val rows = if (mine == null) all.rows else mine.map(all.rows(_))
+    if (ttlEnabled)
+      decideWindowed(keyed, batch, rows,
+        if (mine == null) all.ts else mine.map(all.ts(_)))
+    else decidePlain(keyed, batch, rows)
+  }
+
+  /** First-wins + bloom + store presence. The whole suppression decision
+    * runs on the driver: within-batch first-wins is a hash group + min,
+    * the bloom is probed in place (never shipped to executors), and the
+    * store check collects ONLY the candidate keys actually present in the
+    * pruned, in-set-filtered store slice — zero shuffles. */
+  private def decidePlain(keyed: DataFrame, batch: Long,
+      rows: Array[(Any, Any)]): Decision = {
     val batchKeys: Array[Any] = rows.map(_._2).distinct
     // within-batch first-wins: min orderCol per key; later rows of the
     // same key are suppressed (rows with a null order id can't order
     // and are never suppressed — the unique-orderCol contract)
     val winnerByKey = new java.util.HashMap[Any, (Any, Int)]()
-    val inBatchSuppressed = new java.util.HashSet[Any]()
+    val suppressedIds = new java.util.HashSet[Any]()
     if (rows.length != batchKeys.length) {
       var i = 0
       while (i < rows.length) {
@@ -495,155 +334,118 @@ final class StreamDedupGate private[streaming] (
           // the window path did); a later non-null row is suppressed; a
           // SECOND null-id row cannot be targeted by any id filter and
           // passes through — off the unique-orderCol contract either way
-          if (id != null) inBatchSuppressed.add(id)
+          if (id != null) suppressedIds.add(id)
         } else if (id == null || GateStore.lt(id, prev._1)) {
-          inBatchSuppressed.add(prev._1)
+          suppressedIds.add(prev._1)
           winnerByKey.put(h, (id, i))
-        } else inBatchSuppressed.add(id)
+        } else suppressedIds.add(id)
         i += 1
       }
     } else rows.foreach { case (id, h) => winnerByKey.put(h, (id, -1)) }
-    new Collected(keyed, obs, rows, batchKeys, winnerByKey, inBatchSuppressed)
-  }
-
-  /** The store-dependent half: must run with the pipeline DRAINED. */
-  private def storeCheck(pre: Collected): Decision = {
-    val s = pre.keyed.sparkSession
-    // Bloom gate: misses are definitely-new and bypass the store scan;
-    // only possible repeats (true dups + ~p false positives) pay the
-    // store-presence check — a collect of the candidate keys that exist
-    // in the pruned slice (bounded by the candidate count itself)
-    val present: java.util.HashSet[Any] = if (executorBackend) {
-      // distributed membership: ship the batch's distinct keys, get the
-      // present ones back — no driver bloom, no store read
-      val set = new java.util.HashSet[Any]()
-      execSeen.lookup(pre.batchKeys).keySet().forEach(k => { set.add(k); () })
-      set
-    } else {
-      val storeF = GateStore.storeFiles(storeDir)
-      val cand = pre.batchKeys.filter(bloom.contains)
-      val set = new java.util.HashSet[Any]()
-      if (storeF.nonEmpty && cand.nonEmpty) {
-        if (GateStore.pushdownOk(cand)) {
-          GateStore.withInPushdown(s, cand.length)(
-            s.read.parquet(GateStore.pruned(storeF, cand): _*)
-              .where(GateStore.inSetCol(col("h"), cand.toSeq))
-              .select("h").collect()).foreach(r => set.add(r.get(0)))
-        } else {
-          // candidate set too big for task closures (measured ~45 B per
-          // md5 key — a 100k-row batch's candidates cross Spark's 1 MiB
-          // task warning): ship it ONCE per executor as a broadcast
-          // semi-join side instead; result identical
-          val hType = pre.keyed.schema(pre.keyed.schema.fieldIndex("h")).dataType
-          val rows = new java.util.ArrayList[org.apache.spark.sql.Row](cand.length)
-          cand.foreach(k => { rows.add(org.apache.spark.sql.Row(k)); () })
-          val candDf = s.createDataFrame(rows,
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("h", hType))))
-          s.read.parquet(GateStore.pruned(storeF, cand): _*)
-            .join(broadcast(candDf), Seq("h"), "left_semi")
-            .select("h").collect().foreach(r => set.add(r.get(0)))
-        }
-      }
-      set
-    }
-    // a winner whose key is already stored is suppressed too
-    val suppressedIds = new java.util.HashSet[Any]()
-    pre.inBatchSuppressed.forEach(id => { suppressedIds.add(id); () })
+    val present = storePresence(keyed, batchKeys)
+    // a winner whose key is already stored is suppressed too; the others
+    // are the batch's new keys — what the store append records
     var storeSuppressedNullId = 0
-    pre.winnerByKey.forEach { (h, winner) =>
+    val newKeys = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    winnerByKey.forEach { (h, winner) =>
       if (present.contains(h)) {
         if (winner._1 != null) suppressedIds.add(winner._1)
         else storeSuppressedNullId += 1
+      } else { newKeys.add(org.apache.spark.sql.Row(h)); () }
+    }
+    new Decision(keyed, batch, rows, batchKeys, suppressedIds, present,
+      newKeys, storeSuppressedNullId, null)
+  }
+
+  /** The store-present subset of the batch's keys. Bloom gate: misses are
+    * definitely-new and bypass the store scan; only possible repeats (true
+    * dups + ~p false positives) pay the store-presence check — a collect
+    * of the candidate keys that exist in the pruned slice (bounded by the
+    * candidate count itself). */
+  private def storePresence(keyed: DataFrame,
+      batchKeys: Array[Any]): java.util.HashSet[Any] = {
+    val set = new java.util.HashSet[Any]()
+    if (executorBackend) {
+      // distributed membership: ship the batch's distinct keys, get the
+      // present ones back — no driver bloom, no store read
+      execSeen.lookup(batchKeys).keySet().forEach(k => { set.add(k); () })
+      return set
+    }
+    val s = coreSession
+    val storeF = GateStore.storeFiles(storeDir)
+    val cand = batchKeys.filter(bloom.contains)
+    if (storeF.nonEmpty && cand.nonEmpty) {
+      if (GateStore.pushdownOk(cand)) {
+        GateStore.withInPushdown(s, cand.length)(
+          s.read.parquet(GateStore.pruned(storeF, cand): _*)
+            .where(GateStore.inSetCol(col("h"), cand.toSeq))
+            .select("h").collect()).foreach(r => set.add(r.get(0)))
+      } else {
+        // candidate set too big for task closures (measured ~45 B per
+        // md5 key — a 100k-row batch's candidates cross Spark's 1 MiB
+        // task warning): ship it ONCE per executor as a broadcast
+        // semi-join side instead; result identical
+        s.read.parquet(GateStore.pruned(storeF, cand): _*)
+          .join(broadcast(candidates(s, keyed, cand)), Seq("h"), "left_semi")
+          .select("h").collect().foreach(r => set.add(r.get(0)))
       }
     }
-    new Decision(pre.keyed, pre.obs, pre.rows, pre.batchKeys, pre.winnerByKey,
-      present, suppressedIds, storeSuppressedNullId)
+    set
   }
 
-  private def decide(batch: DataFrame): Decision = storeCheck(collectBatch(batch))
-
-  private[streaming] def onBatch(batch: DataFrame): Unit = ingestLock.synchronized {
-    // windowed and exactly-once modes run fully inline (the spool is the
-    // commit point; windowed appends carry seen-time refreshes the next
-    // decision needs) — only the plain at-least-once path pipelines
-    if (ttlEnabled && exactlyOnce) { synchronized { onBatchTtlExactlyOnce(batch) }; maybeCompact() }
-    else if (ttlEnabled) { synchronized { onBatchTtl(batch) }; maybeCompact() }
-    else if (exactlyOnce) { synchronized { onBatchExactlyOnce(batch) }; maybeCompact() }
-    else onBatchAtLeastOnce(batch) // cadence rides the deferred commit task
+  /** Candidate keys as a one-column `h` frame (the broadcast side of the
+    * over-the-task-binary-bound store reads). */
+  private def candidates(s: org.apache.spark.sql.SparkSession, keyed: DataFrame,
+      cand: Array[Any]): DataFrame = {
+    val hType = keyed.schema(keyed.schema.fieldIndex("h")).dataType
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](cand.length)
+    cand.foreach(k => { rows.add(org.apache.spark.sql.Row(k)); () })
+    s.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("h", hType))))
   }
 
-  private def maybeCompact(): Unit =
-    if (compactEvery > 0 && synchronized(batches) % compactEvery == 0) compact()
-
-  /** Windowed-mode batch: per-key arrival-ordered pass over the collected
+  /** Windowed decision: per-key arrival-ordered pass over the collected
     * (orderCol, key, ts) rows against the store's max seen-time per
-    * candidate key — same zero-shuffle shape as the exact path, plus the
-    * per-row window compare. */
-  private final class TtlDecision(
-      val keyed: DataFrame,
-      val obs: org.apache.spark.sql.Observation,
-      val rows: Array[(Any, Any, Long)],
-      val batchKeys: Array[Any],
-      val suppressedIds: java.util.HashSet[Any],
-      val maxByKey: java.util.HashMap[Any, java.lang.Long])
-
-  /** The windowed decision, shared by both delivery modes: collect
-    * (orderCol, h, ts micros), look up stored max seen-time per candidate
-    * key, and run the per-key arrival-ordered window pass. */
-  private def decideTtl(batch: DataFrame): TtlDecision = {
-    val s = batch.sparkSession
-    val obs = new org.apache.spark.sql.Observation(s"gate_${name}_$batches")
-    val keyed = batch.drop("arrival_timestamp")
-      .observe(obs, count(lit(1)).as("rows"))
-      .withColumn("h", expr(keySql))
-      .persist()
-    val rows: Array[(Any, Any, Long)] =
-      keyed.where(col("h").isNotNull && col(ttlColumn).isNotNull)
-        .select(col(orderCol), col("h"),
-          unix_micros(col(ttlColumn).cast("timestamp")))
-        .collect().map(r => (r.get(0), r.get(1), r.getLong(2)))
+    * candidate key — same zero-shuffle shape as the plain decision, plus
+    * the per-row window compare. */
+  private def decideWindowed(keyed: DataFrame, batch: Long,
+      rows: Array[(Any, Any)], ts: Array[Long]): Decision = {
+    val s = coreSession
     val batchKeys: Array[Any] = rows.map(_._2).distinct
     // store lookup: max stored seen-time per bloom-positive candidate
     // key — (h, micros) rows collected and maxed on the driver (bounded
     // by the candidate slice; no shuffle)
-    val storeF = GateStore.storeFiles(storeDir)
-    val cand =
-      if (executorBackend) Array.empty[Any]
-      else batchKeys.filter(bloom.contains)
     val storeMax = new java.util.HashMap[Any, java.lang.Long]()
     if (executorBackend) {
       execSeen.lookup(batchKeys).forEach { (k, t) =>
         if (t.longValue != Long.MinValue) storeMax.put(k, t)
         ()
       }
-    } else if (storeF.nonEmpty && cand.nonEmpty) {
-      val collected =
-        if (GateStore.pushdownOk(cand)) {
-          GateStore.withInPushdown(s, cand.length)(
+    } else {
+      val storeF = GateStore.storeFiles(storeDir)
+      val cand = batchKeys.filter(bloom.contains)
+      if (storeF.nonEmpty && cand.nonEmpty) {
+        val collected =
+          if (GateStore.pushdownOk(cand)) {
+            GateStore.withInPushdown(s, cand.length)(
+              s.read.parquet(GateStore.pruned(storeF, cand): _*)
+                .where(GateStore.inSetCol(col("h"), cand.toSeq))
+                .select(col("h"), unix_micros(col("ts")))
+                .collect())
+          } else {
+            // over the task-binary bound: broadcast-join the candidates
+            // (seen-times needed, so inner join rather than semi)
             s.read.parquet(GateStore.pruned(storeF, cand): _*)
-              .where(GateStore.inSetCol(col("h"), cand.toSeq))
+              .join(broadcast(candidates(s, keyed, cand)), Seq("h"))
               .select(col("h"), unix_micros(col("ts")))
-              .collect())
-        } else {
-          // over the task-binary bound: broadcast-join the candidates
-          // (seen-times needed, so inner join rather than semi)
-          val hType = keyed.schema(keyed.schema.fieldIndex("h")).dataType
-          val rows = new java.util.ArrayList[org.apache.spark.sql.Row](cand.length)
-          cand.foreach(k => { rows.add(org.apache.spark.sql.Row(k)); () })
-          val candDf = s.createDataFrame(rows,
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("h", hType))))
-          s.read.parquet(GateStore.pruned(storeF, cand): _*)
-            .join(broadcast(candDf), Seq("h"))
-            .select(col("h"), unix_micros(col("ts")))
-            .collect()
-        }
-      collected.foreach { r =>
-        if (!r.isNullAt(1)) {
-          val t = r.getLong(1)
-          val prev = storeMax.get(r.get(0))
-          if (prev == null || t > prev) storeMax.put(r.get(0), t)
+              .collect()
+          }
+        collected.foreach { r =>
+          if (!r.isNullAt(1)) {
+            val t = r.getLong(1)
+            val prev = storeMax.get(r.get(0))
+            if (prev == null || t > prev) storeMax.put(r.get(0), t)
+          }
         }
       }
     }
@@ -662,7 +464,7 @@ final class StreamDedupGate private[streaming] (
       val idxs = new Array[Integer](list.size)
       list.toArray(idxs)
       // arrival order within the batch = orderCol order (nulls first,
-      // matching the exact path's window-function heritage)
+      // matching the plain decision's first-wins)
       java.util.Arrays.sort(idxs, (a: Integer, b: Integer) => {
         val (ia, ib) = (rows(a)._1, rows(b)._1)
         if (ia == null && ib == null) 0
@@ -673,232 +475,164 @@ final class StreamDedupGate private[streaming] (
       var prevMax = Option(storeMax.get(h)).map(_.longValue).getOrElse(Long.MinValue)
       var k = 0
       while (k < idxs.length) {
-        val r = rows(idxs(k))
-        val tsUs = r._3
-        if (r._1 != null && prevMax != Long.MinValue && prevMax > tsUs - ttlMicros)
-          suppressedIds.add(r._1)
+        val id = rows(idxs(k))._1
+        val tsUs = ts(idxs(k))
+        if (id != null && prevMax != Long.MinValue && prevMax > tsUs - ttlMicros)
+          suppressedIds.add(id)
         if (tsUs > prevMax) prevMax = tsUs
         k += 1
       }
     }
-    // seen-refresh rows: ONE (h, max ts) per batch key — every arrival
-    // refreshes, suppressed or not
+    new Decision(keyed, batch, rows, batchKeys, suppressedIds, null, null, 0,
+      maxTsByKey(rows.iterator.map(_._2), ts.iterator))
+  }
+
+  /** Seen-refresh rows: ONE (h, max ts) per key — every arrival
+    * refreshes, suppressed or not — advancing the reaper's watermark. */
+  private def maxTsByKey(keys: Iterator[Any],
+      ts: Iterator[Long]): java.util.HashMap[Any, java.lang.Long] = {
     val maxByKey = new java.util.HashMap[Any, java.lang.Long]()
-    rows.foreach { r =>
-      val t = r._3
-      val prev = maxByKey.get(r._2)
-      if (prev == null || t > prev) maxByKey.put(r._2, t)
+    keys.zip(ts).foreach { case (h, t) =>
+      val prev = maxByKey.get(h)
+      if (prev == null || t > prev) maxByKey.put(h, t)
       if (t > maxSeenTsMicros) maxSeenTsMicros = t
     }
-    new TtlDecision(keyed, obs, rows, batchKeys, suppressedIds, maxByKey)
+    maxByKey
   }
 
-  private def ttlSurvivors(d: TtlDecision): DataFrame =
-    GateStore.exceptIds(d.keyed, orderCol, d.suppressedIds.toArray)
+  private[streaming] def suppressedOf(ctx: AnyRef): java.util.HashSet[Any] =
+    ctx.asInstanceOf[Decision].suppressedIds
 
-  private def onBatchTtl(batch: DataFrame): Unit = {
-    batches += 1
-    val d = decideTtl(batch)
-    try {
-      val total = d.obs.get("rows").asInstanceOf[Long]
-      val n = total - d.suppressedIds.size
-      admitted += n
-      suppressed += total - n
-      // sink BEFORE store append (the family's at-least-once contract)
-      if (n > 0) eng.insertInto(sink, ttlSurvivors(d))
-      appendTtlKeys(d.keyed, d.maxByKey, batches)
-      if (!executorBackend) d.batchKeys.foreach(bloom.add)
-    } finally { d.keyed.unpersist(); () }
-  }
+  /** A suppressed null-order-id winner can only be filtered BY KEY: once
+    * any core has one, the survivor predicate drops every row whose key
+    * is store-present (the key slices are disjoint, so the union of the
+    * cores' present sets is exact). */
+  private def keyBased(ds: Seq[Decision]): Boolean =
+    ds.exists(_.storeSuppressedNullId > 0)
 
-  /** ttl × exactly_once: the full-batch spool protocol (see [[ttlEpochs]]).
-    * The spool carries the keyed batch (h + the event-time column), so
-    * recovery re-derives the (h, max ts) append exactly, and a crashed
-    * batch's upstream retry is suppressed by the recovered seen-times. */
-  private def onBatchTtlExactlyOnce(batch: DataFrame): Unit = {
-    ttlEpochs.recoverPending()
-    batches += 1
-    val epoch = batches
-    val d = decideTtl(batch)
-    try {
-      val total = d.obs.get("rows").asInstanceOf[Long]
-      val n = total - d.suppressedIds.size
-      admitted += n
-      suppressed += total - n
-      ttlEpochs.failpoint("before-spool")
-      ttlEpochs.spool(epoch, d.keyed, orderCol, d.suppressedIds)
-      ttlEpochs.failpoint("after-spool")
-      appendTtlKeys(d.keyed, d.maxByKey, epoch)
-      ttlEpochs.failpoint("after-store")
-      ttlEpochs.deliverAndMark(epoch, knownNonEmpty = Some(n > 0))
-      if (!executorBackend) d.batchKeys.foreach(bloom.add)
-    } finally { d.keyed.unpersist(); () }
-  }
-
-  private def onBatchAtLeastOnce(batch: DataFrame): Unit = {
-    // the collect half runs OUTSIDE the gate monitor — this is where it
-    // overlaps the previous batch's deferred key append (CommitPipeline)
-    val pre = collectBatch(batch)
-    var deferred = false
-    try {
-      pipeline.drain() // decisions serialize on the committed store state
-      val (d, epoch) = synchronized {
-        batches += 1
-        (storeCheck(pre), batches)
-      }
-      val total = d.obs.get("rows").asInstanceOf[Long]
-      val n = total - d.dropped
-      synchronized { admitted += n; suppressed += total - n }
-      // admitted keys — the winners not already stored — are known on the
-      // driver, so the append is a plain LocalRelation write; null-key
-      // rows pass through the sink unconditionally and are never stored
-      if (n > 0) {
-        // sink BEFORE store append: see the delivery contract above
-        eng.insertInto(sink, d.survivors)
-        if (CommitPipeline.enabled) {
-          deferred = true
-          pipeline.submit({ () =>
-            // compaction cadence rides the task too, so the periodic fold
-            // overlaps the next batch instead of blocking a timed one
-            try { synchronized(d.appendNewKeys(epoch)); maybeCompact() }
-            finally { d.keyed.unpersist(); () }
-          }, label = s"batch $epoch")
-        } else d.appendNewKeys(epoch)
-      }
-      // every non-null batch key is stored-or-already-stored (or one drain
-      // away from it), so adding them all keeps bloom ⊇ store — a bloom
-      // transiently AHEAD of the store only costs a false-positive probe
-      if (!executorBackend) synchronized { d.batchKeys.foreach(bloom.add) }
-    } finally { if (!deferred) { pre.keyed.unpersist(); () } }
-    if (!deferred) maybeCompact() // n == 0 or pipelining disabled
-  }
-
-  // ---- exactly-once epochs -----------------------------------------------
-
-  // spool/marker file protocol: ONE implementation shared with the
-  // seen-based gate family ([[GateSpool]]) — parsing/housekeeping fixes
-  // cannot drift between the two spool formats
-  private def spoolEpochs(): Seq[(Long, String)] = GateSpool.spoolEpochs(spoolDir)
-  private def spoolMaxEpoch(): Long =
-    spoolEpochs().lastOption.map(_._1).getOrElse(0L)
-  private def deliveredEpoch(): Long = GateSpool.deliveredEpoch(spoolDir)
-  private def markDelivered(epoch: Long): Unit =
-    GateSpool.markDelivered(spoolDir, epoch)
-
-  /** Store half of epoch recovery: rebuild keys_E from any pending spool
-    * whose rename committed before the crash beat the store append —
-    * survivor `h` values ARE the admitted keys, so the rebuild is exact.
-    * Engine-API-free (file ops + a parquet read), safe under any lock. */
-  private def recoverStores(): Unit = {
-    val delivered = deliveredEpoch()
-    var rebuilt = false
-    spoolEpochs().filter(_._1 > delivered).foreach { case (e, path) =>
-      if (GateStore.maxBatch(storeDir, "keys") < e) {
-        GateSpool.readSpool(eng.spark, path, s"gate $name epoch $e").foreach {
-          df =>
-            // corrupt data PAGES surface at the FULL-COLUMN validation,
-            // BEFORE the store append — same ordering + quarantine-or-
-            // rethrow split as GateEpochs.recoverEach (post-validation
-            // corruption rethrows: state is already partially committed)
-            var validated = false
-            try {
-              val spooled = df.persist()
-              try {
-                spooled.count()
-                validated = true
-                val keys = spooled
-                  .where(col("h").isNotNull).select("h").distinct()
-                GateStore.append(keys, storeDir, "keys", e, sortCol = Some("h"))
-              } finally { spooled.unpersist(); () }
-              rebuilt = true
-            } catch {
-              case t: Throwable if scala.util.control.NonFatal(t) &&
-                  GateSpool.looksCorrupt(t) && !validated =>
-                GateSpool.quarantine(path, s"gate $name epoch $e",
-                  s"corrupt data pages: ${t.getClass.getSimpleName}")
-            }
-        }
+  /** Exact over the collected rows the predicate covers (off-contract
+    * duplicate order ids can make it differ from the suppressed-set size). */
+  private[streaming] override def droppedOf(ctxs: Seq[AnyRef],
+      sup: java.util.HashSet[Any]): Long = {
+    if (ttlEnabled) return sup.size.toLong
+    val ds = ctxs.map(_.asInstanceOf[Decision])
+    val byKey = keyBased(ds)
+    var d = 0L
+    ds.foreach { c =>
+      c.rows.foreach { case (id, h) =>
+        if ((byKey && c.present.contains(h)) || (id != null && sup.contains(id)))
+          d += 1
       }
     }
-    if (rebuilt && executorBackend) execSeen.invalidate()
+    d
   }
 
-  /** Finish every epoch whose spool rename committed but whose delivery
-    * marker didn't land: rebuild the keys file if needed, deliver the
-    * spooled survivors to the sink, mark. Runs at the head of every
-    * exactly-once batch (and via [[recover]]), so both restart-recovery
-    * and in-process retry converge on the same state. */
-  private def recoverPending(): Unit = {
-    val delivered = deliveredEpoch()
-    spoolEpochs().filter(_._1 > delivered).foreach { case (e, path) =>
-      GateSpool.readSpool(eng.spark, path, s"gate $name epoch $e").foreach {
-      df =>
-      // FULL-COLUMN validation first (cache-building count), so corrupt
-      // data pages surface BEFORE the keys append / bloom feed — a
-      // quarantine after those would leave the epoch's keys admitted in
-      // the store while its rows never reach the sink (silent
-      // at-most-once loss). Post-validation corruption rethrows instead.
-      var validated = false
-      val spooled = df.persist()
-      try {
-        spooled.count()
-        validated = true
-        if (GateStore.maxBatch(storeDir, "keys") < e) {
-          val keys = spooled.where(col("h").isNotNull).select("h").distinct()
-          GateStore.append(keys, storeDir, "keys", e, sortCol = Some("h"))
-          if (executorBackend) execSeen.invalidate() // shards rebuild lazily
-        }
-        if (!executorBackend)
-          spooled.where(col("h").isNotNull).select("h")
-            .collect().foreach(r => bloom.add(r.get(0)))
-        failpoint("recovery-after-store")
-        if (spooled.take(1).nonEmpty) eng.insertInto(sink, spooled)
-        markDelivered(e)
-        if (e > batches) batches = e
-      } catch {
-        // pre-commit corruption evidence: quarantine (→ documented
-        // at-least-once class); anything else — transient errors, or
-        // corruption reported only after a clean full read — rethrows
-        case t: Throwable if scala.util.control.NonFatal(t) &&
-            GateSpool.looksCorrupt(t) && !validated =>
-          GateSpool.quarantine(path, s"gate $name epoch $e",
-            s"corrupt data pages: ${t.getClass.getSimpleName}")
-      } finally { spooled.unpersist(); () }
-      }
+  private[streaming] override def withAdmitted(keyed: DataFrame,
+      ctxs: Seq[AnyRef], sup: java.util.HashSet[Any]): DataFrame = {
+    val ds = ctxs.map(_.asInstanceOf[Decision])
+    if (ttlEnabled || !keyBased(ds)) super.withAdmitted(keyed, ctxs, sup)
+    else {
+      val presentKeys = ds.flatMap(_.present.toArray)
+      keyed.withColumn(GateEpochs.AdmittedCol, col("h").isNull ||
+        (!GateStore.inSetCol(col("h"), presentKeys) &&
+          (col(orderCol).isNull ||
+            !GateStore.inSetCol(col(orderCol), sup.toArray.toSeq))))
     }
   }
 
-  /** Deliver any epoch the last crash interrupted RIGHT NOW (instead of at
-    * the next batch). Must not be called while holding engine locks. */
-  def recover(): Unit = synchronized {
-    if (exactlyOnce && ttlEnabled) ttlEpochs.recoverPending()
-    else if (exactlyOnce) recoverPending()
+  /** The store append: the plain gate's new keys, or the windowed gate's
+    * (h, max ts) seen-refresh rows — driver-direct parquet writes (no
+    * Spark job; GateStore.appendLocal) — then the bloom and executor-shard
+    * updates. Every non-null batch key ends up stored-or-already-stored,
+    * so adding them all keeps bloom ⊇ store. */
+  private[streaming] override def commitIndexBatch(ctx: AnyRef): Unit =
+    synchronized {
+      val d = ctx.asInstanceOf[Decision]
+      if (ttlEnabled) appendTtlKeys(d.keyed, d.maxByKey, d.batch)
+      else appendNewKeys(d.keyed, d.newKeys, d.batch)
+      if (!executorBackend) d.batchKeys.foreach(bloom.add)
+    }
+
+  private def appendNewKeys(keyed: DataFrame,
+      newKeys: java.util.ArrayList[org.apache.spark.sql.Row], batch: Long): Unit = {
+    if (!newKeys.isEmpty) {
+      val hType = keyed.schema(keyed.schema.fieldIndex("h")).dataType
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("h", hType)))
+      if (!GateStore.appendLocal(newKeys, schema, storeDir, "keys", batch,
+          sortCol = Some("h")))
+        GateStore.append(keyed.sparkSession.createDataFrame(newKeys, schema),
+          storeDir, "keys", batch, sortCol = Some("h"))
+    }
+    // executor shards: the new winners' keys ride the next lookup job —
+    // AFTER the durable append (the module-wide ordering contract)
+    if (executorBackend) {
+      val delta = new Array[(Any, Long)](newKeys.size)
+      var i = 0
+      while (i < newKeys.size) {
+        delta(i) = (newKeys.get(i).get(0), Long.MinValue)
+        i += 1
+      }
+      execSeen.bufferDelta(delta)
+    }
   }
 
-  private def onBatchExactlyOnce(batch: DataFrame): Unit = {
-    recoverPending()
-    val epoch = batches + 1
-    val d = decide(batch)
-    try {
-      val total = d.obs.get("rows").asInstanceOf[Long]
-      val n = total - d.dropped
-      failpoint("before-spool")
-      // THE commit point: the survivor set lands as one atomically-renamed
-      // file; everything after it is replayable from this file alone
-      GateStore.append(d.survivors, spoolDir, "fwd", epoch, force = true)
-      batches = epoch
-      admitted += n
-      suppressed += total - n
-      failpoint("after-spool")
-      d.appendNewKeys(epoch)
-      failpoint("after-store")
-      val spooled = eng.spark.read.parquet(
-        GateStore.child(spoolDir, f"fwd_$epoch%05d.parquet"))
-      if (n > 0) eng.insertInto(sink, spooled)
-      failpoint("after-deliver")
-      markDelivered(epoch)
-      d.batchKeys.foreach(bloom.add)
-    } finally { d.keyed.unpersist(); () }
+  /** The windowed store append: ONE (h, max ts) row per batch key. */
+  private def appendTtlKeys(keyed: DataFrame,
+      maxByKey: java.util.HashMap[Any, java.lang.Long], batch: Long): Unit = {
+    if (maxByKey.isEmpty) return
+    val hType = keyed.schema(keyed.schema.fieldIndex("h")).dataType
+    val out = new java.util.ArrayList[org.apache.spark.sql.Row](maxByKey.size)
+    maxByKey.forEach { (h, t) =>
+      out.add(org.apache.spark.sql.Row(h, microsToTs(t.longValue))); ()
+    }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("h", hType),
+      org.apache.spark.sql.types.StructField("ts",
+        org.apache.spark.sql.types.TimestampType)))
+    if (!GateStore.appendLocal(out, schema, storeDir, "keys", batch,
+        sortCol = Some("h")))
+      GateStore.append(keyed.sparkSession.createDataFrame(out, schema),
+        storeDir, "keys", batch, sortCol = Some("h"))
+    // executor shards: delta AFTER the durable append (the module-wide
+    // ordering contract) — a failed append must fail the batch WITHOUT
+    // the shards learning its keys, or the retry would self-suppress
+    if (executorBackend) {
+      val delta = new scala.collection.mutable.ArrayBuffer[(Any, Long)]()
+      maxByKey.forEach { (h, t) => delta += ((h, t.longValue)); () }
+      execSeen.bufferDelta(delta.toArray)
+    }
+  }
+
+  /** Re-derive this core's append for `epoch` from the spooled batch: the
+    * admitted rows' keys ARE the plain gate's new keys (deterministic);
+    * the windowed gate re-derives (h, max ts) from every arrival. Skipped
+    * when the store already holds the epoch; the bloom (or the executor
+    * shards) learn the keys either way. */
+  private[streaming] override def commitRecovered(spooled: DataFrame,
+      epoch: Long): Unit = synchronized {
+    if (batches < epoch) batches = epoch
+    val need = GateStore.maxBatch(storeDir, "keys") < epoch
+    if (ttlEnabled) {
+      val rows = owned(spooled.where(col("h").isNotNull && col(ttlColumn).isNotNull))
+        .select(col("h"), unix_micros(col(ttlColumn).cast("timestamp")))
+        .collect()
+      val maxByKey = maxTsByKey(rows.iterator.map(_.get(0)),
+        rows.iterator.map(_.getLong(1)))
+      if (need) appendTtlKeys(spooled, maxByKey, epoch)
+      if (!executorBackend) rows.foreach(r => bloom.add(r.get(0)))
+    } else {
+      val keys = owned(GateEpochs.admittedOf(spooled).where(col("h").isNotNull))
+        .select("h").distinct().collect()
+      if (need) {
+        val out = new java.util.ArrayList[org.apache.spark.sql.Row](keys.length)
+        keys.foreach(r => { out.add(org.apache.spark.sql.Row(r.get(0))); () })
+        appendNewKeys(spooled, out, epoch)
+      }
+      if (!executorBackend) keys.foreach(r => bloom.add(r.get(0)))
+    }
+    // recovered append: the executor shards rebuild lazily
+    if (executorBackend) execSeen.invalidate()
   }
 }
 
@@ -944,61 +678,56 @@ object StreamDedupGate {
       backend: String = DriverBackend,
       stateParts: Int = 0): StreamDedupGate = {
     val root = GateStore.gateRoot(storeRoot, name)
-    val sfs = graft.io.StoreFs.forRoot(root)
-    sfs.mkdirs(root)
-    GateStore.stampGeometry(root, "shards_1")
-    val dir = GateStore.child(root, "seen_keys")
-    sfs.mkdirs(dir)
-    // the windowed store carries (h, ts), the plain one (h): a mode flip
-    // over an existing store is refused, not silently misread
-    GateStore.stampGeometry(dir,
-      if (ttlMillis > 0) "dedup_windowed" else "dedup")
-    val gate = new StreamDedupGate(eng, name, keySql, orderCol, sink, dir,
-      bloomP, bloomN, compactEvery, delivery, ttlMillis, ttlColumn,
-      backend, stateParts)
+    val gate = new StreamDedupGate(eng, name, keySql, orderCol,
+      keysDir(root, "seen_keys", ttlMillis), bloomP, bloomN, compactEvery,
+      ttlMillis, ttlColumn, backend, stateParts)
     gate.bootstrap() // resume from a persisted store after an engine restart
-    eng.createContTransform(name, selectSql,
-      outputFunc = Some(gate.onBatch _), emitChanges = false)
-    // the catalog replays the transform BARE (a callback can't persist);
-    // if that's what createContTransform just idempotently returned,
-    // re-attach this gate so it doesn't sit silently dead
-    eng.rebindTransformOutput(name, gate.onBatch _)
+    ShardedGate.register(eng, name, selectSql, sink, Seq(gate), root, delivery)
     gate
   }
 
   /** The G-core horizontally-sharded form of [[create]] (see
-    * [[ShardedDedupGate]]): rows route to core hash(key) mod `shards`,
-    * each core a full single-key-slice gate with its own store + bloom
-    * (and, under exactly-once delivery, its own spool — the cores' row
-    * slices are disjoint, so the epoch protocol composes per core).
-    * Admitted set identical to the unsharded gate's; reopening under a
-    * different G is refused. */
+    * [[ShardedGate]]): core k owns the keys with pmod(xxhash64(h), G) = k,
+    * each with its own store + bloom; the batch is collected, spooled and
+    * forwarded once. Admitted set identical to the unsharded gate's;
+    * reopening under a different G is refused. */
   def createSharded(eng: ContViewEngine, name: String, selectSql: String,
       keySql: String, orderCol: String, sink: String, storeRoot: String,
       shards: Int,
       bloomP: Double = 0.01, bloomN: Int = 1 << 17,
       compactEvery: Int = 256,
       delivery: String = AtLeastOnce,
-      ttlMillis: Long = 0L, ttlColumn: String = ""): ShardedDedupGate = {
+      ttlMillis: Long = 0L, ttlColumn: String = ""): ShardedGate = {
     require(shards >= 2, s"use create() for an unsharded gate (shards=$shards)")
     val root = GateStore.gateRoot(storeRoot, name)
-    val sfs = graft.io.StoreFs.forRoot(root)
-    sfs.mkdirs(root)
-    GateStore.stampGeometry(root, s"shards_$shards")
     val cores = (0 until shards).map { k =>
-      val dir = GateStore.child(GateStore.child(root, s"s${k}of$shards"), "seen_keys")
-      sfs.mkdirs(dir)
-      GateStore.stampGeometry(dir,
-        if (ttlMillis > 0) "dedup_windowed" else "dedup")
-      val core = new StreamDedupGate(eng, name, keySql, orderCol, sink, dir,
-        bloomP, bloomN, compactEvery, delivery, ttlMillis, ttlColumn)
+      val coreDir = s"s${k}of$shards"
+      // the gate spools once, at its root: a per-core spool is no longer
+      // read, so one still holding an undelivered epoch refuses the open
+      GateEpochs.refuseOrphanedSpool(
+        GateStore.child(GateStore.child(root, coreDir), "spool"), name)
+      val core = new StreamDedupGate(eng, name, keySql, orderCol,
+        keysDir(root, s"$coreDir/seen_keys", ttlMillis, shards), bloomP,
+        bloomN, compactEvery, ttlMillis, ttlColumn, shardId = k,
+        shardCount = shards)
       core.bootstrap()
       core
     }
-    val gate = new ShardedDedupGate(eng, name, keySql, cores)
-    eng.createContTransform(name, selectSql,
-      outputFunc = Some(gate.onBatch _), emitChanges = false)
-    eng.rebindTransformOutput(name, gate.onBatch _)
-    gate
+    ShardedGate.register(eng, name, selectSql, sink, cores, root, delivery)
+  }
+
+  /** Create (or reopen) a seen-key store dir under gate root `root`,
+    * stamping the shard count on the root and the store shape on the dir:
+    * the windowed store carries (h, ts), the plain one (h) — a mode flip
+    * over an existing store is refused, not silently misread. */
+  private def keysDir(root: String, sub: String, ttlMillis: Long,
+      shards: Int = 1): String = {
+    val sfs = graft.io.StoreFs.forRoot(root)
+    sfs.mkdirs(root)
+    GateStore.stampGeometry(root, s"shards_$shards")
+    val dir = GateStore.child(root, sub)
+    sfs.mkdirs(dir)
+    GateStore.stampGeometry(dir, if (ttlMillis > 0) "dedup_windowed" else "dedup")
+    dir
   }
 }

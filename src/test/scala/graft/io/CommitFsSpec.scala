@@ -114,14 +114,14 @@ class CommitFsSpec extends AnyFunSuite {
       assert(counts(eng1) === Map(1L -> 1L, 2L -> 1L))
 
       // crash after spool-commit, before store append: in-process retry
-      g1.failAt = "after-spool"
+      g1.epochs.failAt = "after-spool"
       intercept[Exception] { eng1.insertInto("f_in", b((4L, "cc"))) }
       eng1.insertInto("f_in", b((4L, "cc")))
       assert(counts(eng1) === Map(1L -> 1L, 2L -> 1L, 4L -> 1L),
         "retried epoch delivers exactly once under the no-rename FS")
 
       // crash after store append, before delivery: RESTART recovery
-      g1.failAt = "after-store"
+      g1.epochs.failAt = "after-store"
       intercept[Exception] { eng1.insertInto("f_in", b((5L, "dd"))) }
       val (eng2, g2) = build("2")
       g2.recover()

@@ -167,7 +167,7 @@ class ObjectRootSpec extends AnyFunSuite {
     val root = objRoot("eo")
     val (eng1, g1) = buildGate(root, "1")
     eng1.insertInto("g_in", b((1L, "aa")))
-    g1.failAt = "after-spool"
+    g1.epochs.failAt = "after-spool"
     intercept[Exception] {
       eng1.insertInto("g_in", b((2L, "bb"), (3L, "aa"), (4L, "cc")))
     }
@@ -182,7 +182,7 @@ class ObjectRootSpec extends AnyFunSuite {
     val root = objRoot("eo")
     val (eng1, g1) = buildGate(root, "1")
     eng1.insertInto("g_in", b((1L, "aa")))
-    g1.failAt = "after-store"
+    g1.epochs.failAt = "after-store"
     intercept[Exception] { eng1.insertInto("g_in", b((2L, "bb"))) }
     val (eng2, _) = buildGate(root, "2")
     eng2.insertInto("g_in", b((3L, "cc")))
@@ -195,7 +195,7 @@ class ObjectRootSpec extends AnyFunSuite {
     val root = objRoot("eoq")
     val (eng1, g1) = buildGate(root, "1")
     eng1.insertInto("g_in", b((1L, "aa")))
-    g1.failAt = "after-spool"
+    g1.epochs.failAt = "after-spool"
     intercept[Exception] { eng1.insertInto("g_in", b((2L, "bb"))) }
     val fs = StoreFs.forRoot(root)
     val f = s"$root/gate/g_gate/spool/fwd_00002.parquet"

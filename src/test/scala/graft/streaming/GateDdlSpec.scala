@@ -43,18 +43,18 @@ class GateDdlSpec extends AnyFunSuite {
     assert(row.getLong(3) === 2L && row.getLong(4) === 1L,
       "admitted/suppressed counters aggregate the shard cores")
     assert(row.getLong(5) === 0L, "no deferred commit has been lost")
-    // force a lost deferred commit: arm every routed core's failpoint —
-    // only the core owning the new key submits an append task, so exactly
+    // force a lost deferred commit: arm the gate's one commit pipeline —
+    // the batch submits one deferred commit for all its cores, so exactly
     // one loss is counted, and the live batch itself must NOT fail
-    val sharded = eng.gateOf("gs_gate").get.asInstanceOf[ShardedDedupGate]
-    sharded.coreGates.foreach(_.commitPipeline.failNextTask = true)
+    val sharded = eng.gateOf("gs_gate").get.asInstanceOf[ShardedGate]
+    sharded.commitPipeline.failNextTask = true
     eng.sql("INSERT INTO gs_in (id, body) VALUES (5, 'dd')")
-    sharded.coreGates.foreach(_.drainCommits())
+    sharded.drainCommits()
     val lost = eng.sql(
       "SELECT lostCommits FROM graft_gate_stats WHERE gate = 'gs_gate'")
       .collect()(0).getLong(0)
     assert(lost === 1L, "the dropped append is counted in lost_commits")
-    sharded.coreGates.foreach(_.commitPipeline.failNextTask = false)
+    sharded.commitPipeline.failNextTask = false
   }
 
   test("dedup gate declared in DDL replays with its store at restart") {

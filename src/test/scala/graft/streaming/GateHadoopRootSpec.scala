@@ -80,7 +80,7 @@ class GateHadoopRootSpec extends AnyFunSuite {
     val root = uriRoot("eo1")
     val (eng1, g1) = build(root, "1")
     eng1.insertInto("g_in", b((1L, "aa")))
-    g1.failAt = "after-spool"
+    g1.epochs.failAt = "after-spool"
     intercept[Exception] {
       eng1.insertInto("g_in", b((2L, "bb"), (3L, "aa"), (4L, "cc")))
     }
@@ -99,7 +99,7 @@ class GateHadoopRootSpec extends AnyFunSuite {
     val root = uriRoot("eo2")
     val (eng1, g1) = build(root, "1")
     eng1.insertInto("g_in", b((1L, "aa")))
-    g1.failAt = "after-store"
+    g1.epochs.failAt = "after-store"
     intercept[Exception] { eng1.insertInto("g_in", b((2L, "bb"))) }
     val (eng2, _) = build(root, "2")
     eng2.insertInto("g_in", b((3L, "cc")))
@@ -112,7 +112,7 @@ class GateHadoopRootSpec extends AnyFunSuite {
     val root = uriRoot("eoq")
     val (eng1, g1) = build(root, "1")
     eng1.insertInto("g_in", b((1L, "aa")))
-    g1.failAt = "after-spool"
+    g1.epochs.failAt = "after-spool"
     intercept[Exception] { eng1.insertInto("g_in", b((2L, "bb"))) }
     val fs = graft.io.StoreFs.forRoot(root)
     val spool = s"$root/gate/g_gate/spool"

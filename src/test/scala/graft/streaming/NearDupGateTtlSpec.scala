@@ -299,7 +299,7 @@ class NearDupGateTtlSpec extends AnyFunSuite {
         .drop("tss")
     val (eng, g) = build("1")
     eng.insertInto("te_in", rows((1L, "u", "2024-01-01 00:00:00")))
-    g.ttlEpochs.failAt = "after-spool"
+    g.epochs.failAt = "after-spool"
     intercept[Exception] {
       eng.insertInto("te_in", rows(
         (2L, "u", "2024-01-01 06:00:00"),  // inside window of id 1 → suppressed

@@ -275,7 +275,7 @@ class ShardedGateSpec extends AnyFunSuite {
     eng.sql("""CREATE VIEW dg_gate WITH (action = transform, sink = 'dg_out',
               |  outputfunc = dedup_gate('md5(body)', 'id', 3)) AS
               |SELECT id, body FROM dg_in""".stripMargin)
-    assert(eng.gateOf("dg_gate").exists(_.isInstanceOf[ShardedDedupGate]))
+    assert(eng.gateOf("dg_gate").exists(_.isInstanceOf[ShardedGate]))
     eng.createContView("v_dg", "SELECT id FROM dg_out", emitChanges = false)
     eng.insertInto("dg_in", Seq((1L, "aa"), (2L, "bb"), (3L, "aa")).toDF("id", "body"))
     eng.insertInto("dg_in", Seq((4L, "bb"), (5L, "cc")).toDF("id", "body"))

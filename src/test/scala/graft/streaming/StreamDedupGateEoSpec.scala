@@ -66,7 +66,7 @@ class StreamDedupGateEoSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_eo1").toString
     val (eng, g) = build(root, "1")
     eng.insertInto("e_in", b((1L, "aa")))
-    g.failAt = "after-spool"
+    g.epochs.failAt = "after-spool"
     intercept[Exception] {
       eng.insertInto("e_in", b((2L, "bb"), (3L, "aa"), (4L, "cc")))
     }
@@ -88,7 +88,7 @@ class StreamDedupGateEoSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_eoq").toString
     val (eng1, g1) = build(root, "1")
     eng1.insertInto("e_in", b((1L, "aa")))
-    g1.failAt = "after-spool"
+    g1.epochs.failAt = "after-spool"
     intercept[Exception] { eng1.insertInto("e_in", b((2L, "bb"))) }
     // simulate the torn write: truncate epoch 2's spool to garbage
     val spool = java.nio.file.Paths.get(s"$root/gate/e_gate/spool")
@@ -116,10 +116,10 @@ class StreamDedupGateEoSpec extends AnyFunSuite {
     // next attempt delivers exactly once
     val root = java.nio.file.Files.createTempDirectory("graft_eot").toString
     val (eng, g) = build(root, "1")
-    g.failAt = "after-spool"
+    g.epochs.failAt = "after-spool"
     intercept[Exception] { eng.insertInto("e_in", b((1L, "aa"), (2L, "bb"))) }
-    g.failAt = "recovery-after-store"
-    g.failWith = new java.io.IOException("fs hiccup")
+    g.epochs.failAt = "recovery-after-store"
+    g.epochs.failWith = new java.io.IOException("fs hiccup")
     intercept[Exception] {
       eng.insertInto("e_in", b((1L, "aa"), (2L, "bb")))
     }
@@ -145,10 +145,10 @@ class StreamDedupGateEoSpec extends AnyFunSuite {
     // as duplicates.
     val root = java.nio.file.Files.createTempDirectory("graft_eoc").toString
     val (eng, g) = build(root, "1")
-    g.failAt = "after-spool"
+    g.epochs.failAt = "after-spool"
     intercept[Exception] { eng.insertInto("e_in", b((1L, "aa"))) }
-    g.failAt = "recovery-after-store"
-    g.failWith =
+    g.epochs.failAt = "recovery-after-store"
+    g.epochs.failWith =
       new org.apache.parquet.io.ParquetDecodingException("Can not read value")
     intercept[Exception] { eng.insertInto("e_in", b((1L, "aa"))) }
     val spool = java.nio.file.Paths.get(s"$root/gate/e_gate/spool")
@@ -166,7 +166,7 @@ class StreamDedupGateEoSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_eo2").toString
     val (eng1, g1) = build(root, "1")
     eng1.insertInto("e_in", b((1L, "aa")))
-    g1.failAt = "after-store"
+    g1.epochs.failAt = "after-store"
     intercept[Exception] {
       eng1.insertInto("e_in", b((2L, "bb"), (3L, "cc")))
     }
@@ -185,19 +185,46 @@ class StreamDedupGateEoSpec extends AnyFunSuite {
   test("double crash: recovery itself dies after the store append; third attempt delivers once") {
     val root = java.nio.file.Files.createTempDirectory("graft_eo3").toString
     val (eng, g) = build(root, "1")
-    g.failAt = "after-spool"
+    g.epochs.failAt = "after-spool"
     intercept[Exception] { eng.insertInto("e_in", b((1L, "aa"), (2L, "bb"))) }
-    g.failAt = "recovery-after-store"
+    g.epochs.failAt = "recovery-after-store"
     intercept[Exception] { eng.insertInto("e_in", b((1L, "aa"), (2L, "bb"))) }
     eng.insertInto("e_in", b((1L, "aa"), (2L, "bb")))
     assert(counts(eng) === Map(1L -> 1L, 2L -> 1L),
       "two crashes, one delivery per admitted row")
   }
 
+  test("recover() racing a batch between its spool and its delivery: each row once") {
+    val root = java.nio.file.Files.createTempDirectory("graft_eo_race").toString
+    val (eng, g) = build(root, "1")
+    val parked = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    // park the batch after its store commit: spool written, no marker yet
+    g.epochs.onPoint = p =>
+      if (p == "after-store") { parked.countDown(); release.await() }
+    @volatile var failure: Throwable = null
+    def thread(f: => Unit): Thread = {
+      val t = new Thread(() => try f catch { case e: Throwable => failure = e })
+      t.start()
+      t
+    }
+    val batch = thread(eng.insertInto("e_in", b((1L, "aa"), (2L, "bb"))))
+    assert(parked.await(120, java.util.concurrent.TimeUnit.SECONDS))
+    g.epochs.onPoint = null
+    val rec = thread(g.recover())
+    rec.join(3000) // an unserialized recover delivers the parked epoch here
+    release.countDown()
+    batch.join()
+    rec.join()
+    assert(failure === null)
+    assert(counts(eng) === Map(1L -> 1L, 2L -> 1L),
+      "the parked epoch is delivered by the batch alone")
+  }
+
   test("crash before the spool commit: nothing lost, nothing duplicated") {
     val root = java.nio.file.Files.createTempDirectory("graft_eo4").toString
     val (eng, g) = build(root, "1")
-    g.failAt = "before-spool"
+    g.epochs.failAt = "before-spool"
     intercept[Exception] { eng.insertInto("e_in", b((1L, "aa"))) }
     eng.insertInto("e_in", b((1L, "aa")))
     assert(counts(eng) === Map(1L -> 1L))
@@ -215,7 +242,7 @@ class StreamDedupGateEoSpec extends AnyFunSuite {
     eng.sql("""CREATE VIEW se_gate WITH (action = transform, sink = 'se_out',
               |  outputfunc = dedup_gate('md5(body)', 'id', 2, 'exactly_once')) AS
               |SELECT id, body FROM se_in""".stripMargin)
-    assert(eng.gateOf("se_gate").exists(_.isInstanceOf[ShardedDedupGate]))
+    assert(eng.gateOf("se_gate").exists(_.isInstanceOf[ShardedGate]))
     eng.insertInto("se_in", b((1L, "aa"), (2L, "bb"), (3L, "aa")))
     eng.insertInto("se_in", b((4L, "bb"), (5L, "cc")))
     assert(eng.overlay("v_se").collect()

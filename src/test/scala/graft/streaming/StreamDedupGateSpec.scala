@@ -141,6 +141,35 @@ class StreamDedupGateSpec extends AnyFunSuite {
       "admitted must equal the rows the survivor filter actually forwarded")
   }
 
+  test("off-contract duplicate null order ids, exactly-once: the spool forwards what at-least-once would") {
+    val root = java.nio.file.Files.createTempDirectory("graft_gate_neo").toString
+    val eng = new ContViewEngine(spark, root)
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType, nullable = true),
+      org.apache.spark.sql.types.StructField("body",
+        org.apache.spark.sql.types.StringType)))
+    eng.createStream("n_in", schema)
+    eng.createStream("n_out", org.apache.spark.sql.types.StructType(
+      schema.fields :+ org.apache.spark.sql.types.StructField("h",
+        org.apache.spark.sql.types.StringType)))
+    val gate = StreamDedupGate.create(eng, "n_gate", "SELECT id, body FROM n_in",
+      keySql = "md5(body)", orderCol = "id", sink = "n_out",
+      storeRoot = root, delivery = StreamDedupGate.ExactlyOnce)
+    eng.createContView("v_n", "SELECT body FROM n_out", emitChanges = false)
+    eng.insertInto("n_in", spark.createDataFrame(
+      java.util.Arrays.asList(org.apache.spark.sql.Row(1L, "aa")), schema))
+    // two null-order-id rows whose key is already stored: the key-based
+    // survivor predicate drops both, in the spool's admitted flag too
+    eng.insertInto("n_in", spark.createDataFrame(
+      java.util.Arrays.asList(
+        org.apache.spark.sql.Row(null, "aa"), org.apache.spark.sql.Row(null, "aa")),
+      schema))
+    assert(eng.overlay("v_n").collect().map(_.getString(0)).toSeq === Seq("aa"),
+      "neither null-id row is delivered")
+    assert(gate.stats === ((2L, 1L, 2L)))
+  }
+
   test("within-batch repeats: lowest order-column row wins its key") {
     val (eng, gate, _) = fixture()
     eng.insertInto("g_in",
