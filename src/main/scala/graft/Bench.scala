@@ -136,10 +136,10 @@ object Bench {
       .withColumn("rk", row_number().over(w)).agg(sum("rk")).collect()
     // JIT/codegen warm-up for the heavy near-dup pipelines: the first
     // invocation in a JVM pays ~10 s of interpreter→C2 warm-up on the
-    // sketch expressions and join machinery (ProfileQueries: 13 s cold →
-    // 1.5 s steady over repeats). A ~200-row pass compiles the same code
-    // paths at negligible data cost, so the timed minimums measure the
-    // plan, not the JVM.
+    // sketch expressions and join machinery (13 s cold → 1.5 s steady
+    // over repeats). A ~200-row pass compiles the same code paths at
+    // negligible data cost, so the timed minimums measure the plan, not
+    // the JVM.
     val warmDocs = graft.queries.Tables.documents(spark, sfDir)
       .limit(200).select(col("doc_id"), col("text"))
     graft.ops.DedupClusters.clusterSummary(
@@ -709,8 +709,8 @@ object Bench {
       })
       // row-skip evidence (round 18): what the pruned phases collected
       // vs the matching postings full scoring reads — the measured basis
-      // of the 100× retrieval claim (ProfileBm25Scale carries the
-      // large-corpus version). Only stamped when the pruned path
+      // of the 100× retrieval claim (PERF_NOTES records the 1.5M-doc
+      // skewed-corpus version). Only stamped when the pruned path
       // actually ran; a fallback stamps its reason instead so the
       // artifact never carries numbers that belong to another call.
       if (graft.ops.KeywordScore.lastTopKPath == "pruned") {
@@ -937,93 +937,6 @@ object Bench {
         dnum("cc_distributed_sec", (System.nanoTime() - tD) / 1e9)
         dlng("cc_rounds", graft.ops.DedupClusters.lastClosure._2.toLong)
         pairs.unpersist(); docs10.unpersist()
-      }
-
-
-    // Sketch-expression codegen A/B (round 19): the r18 round moved 9
-    // near-dup/ANN expressions from CodegenFallback to fused static-call
-    // codegen — a plan-shape win invisible at sf0.1, where per-query job
-    // overhead dominates per-row compute. This probe measures the per-row
-    // effect directly on a COMPUTE-DOMINANT synthetic corpus (long docs,
-    // wide vectors): each stage is timed fused (production) and then in
-    // the pre-r18 execution shape (wholeStage codegen off + the
-    // SketchCodegen seam emitting CodegenFallback-equivalent boxed eval).
-    // Noop sink per guide §1.4; min-of-2 per mode, modes interleaved.
-    if (sys.env.getOrElse("SPARK_GRAFT_CODEGEN_AB", "1") != "0")
-      probe("sketch_codegen_ab", estSec = 45) {
-        val nDocs = 30000L
-        def longBody(c: org.apache.spark.sql.Column) = concat_ws(" ",
-          (0 until 160).map(i => concat(lit(s"w$i"),
-            pmod(xxhash64(c * (i + 1)), lit(99991L)).cast("string"))): _*)
-        val docs = spark.range(nDocs)
-          .select(col("id").as("doc_id"), longBody(col("id")).as("text"))
-          .persist()
-        docs.count()
-        val emb = spark.range(nDocs).select(col("id").as("vec_id"),
-          array((1 to 64).map(k =>
-            (pmod(xxhash64(col("id") * k), lit(2001L)) - lit(1000L))
-              .cast("double") / lit(1000.0)): _*).as("v")).persist()
-        emb.count()
-        val planes = Array.fill(8, 12)(Array.fill(64)(0.01))
-        val centroids = Array.fill(16)(Array.fill(64)(0.02))
-        val codebooks = Array.fill(16, 16)(Array.fill(4)(0.03))
-        import org.apache.spark.sql.GraftBridge.{column => gcol, expression => gexp}
-        val stages: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
-          // WordShingles + MinHashSignature + MinHashBuckets
-          "minhash" -> docs.select(col("doc_id"),
-            explode(gcol(graft.ops.MinHashLsh.MinHashBuckets(
-              gexp(graft.ops.MinHashLsh.minhashSignature(
-                graft.ops.TextOps.shingles(col("text"), 3), 128)), 64, 2)))
-              .as("bucket")),
-          // WordTokens + SimHash64 + SimHashBlockKeys
-          "simhash" -> docs.select(col("doc_id"),
-            explode(graft.ops.SimHash.blockKeys(
-              graft.ops.SimHash.simhash64(
-                graft.ops.TextOps.tokens(col("text"))), 6, 3)).as("k")),
-          // LshBuckets + IvfAssign
-          "ann_assign" -> emb.select(col("vec_id"),
-            explode(gcol(graft.ops.AnnSearch.LshBuckets(
-              gexp(col("v")), planes))).as("bkt"),
-            gcol(graft.ops.AnnSearch.IvfAssign(
-              gexp(col("v")), centroids, 2)).as("cl")),
-          // PqEncode
-          "pq_encode" -> emb.select(col("vec_id"),
-            gcol(graft.ops.PqSearch.PqEncode(gexp(col("v")), codebooks))
-              .as("codes")))
-        def timeStage(df: org.apache.spark.sql.DataFrame): Double = {
-          val t0 = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val wsKey = "spark.sql.codegen.wholeStage"
-        val wsPrev = spark.conf.getOption(wsKey)
-        val parts = scala.collection.mutable.ArrayBuffer[String]()
-        try {
-          stages.foreach { case (sname, df) =>
-            BenchAbort.check()
-            // interleave modes A/B/A/B so a co-tenant burst cannot bias
-            // one whole mode; keep the min per mode
-            var fused = Double.MaxValue
-            var interp = Double.MaxValue
-            (0 until 2).foreach { _ =>
-              spark.conf.unset(wsKey)
-              graft.ops.SketchCodegen.interpretedForBench = false
-              fused = math.min(fused, timeStage(df))
-              spark.conf.set(wsKey, "false")
-              graft.ops.SketchCodegen.interpretedForBench = true
-              interp = math.min(interp, timeStage(df))
-            }
-            parts += s""""$sname":{"fused_sec":${f3(fused)},"interp_sec":${f3(interp)},"speedup":${f3(if (fused > 0) interp / fused else 0.0)}}"""
-          }
-        } finally {
-          graft.ops.SketchCodegen.interpretedForBench = false
-          wsPrev match {
-            case Some(v) => spark.conf.set(wsKey, v)
-            case None => spark.conf.unset(wsKey)
-          }
-          docs.unpersist(); emb.unpersist(); ()
-        }
-        draw("sketch_codegen_ab", parts.mkString("{", ",", "}"))
       }
 
     // Gate-scale growth probes (GateProbes.dualScaleProbe): per-batch gate

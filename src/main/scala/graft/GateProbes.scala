@@ -3,10 +3,9 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Gate-scale growth probe, shared by [[Bench]] (the per-round artifact)
-  * and [[ProfileGateScale]] (fast iteration): per-batch latency of each
-  * streaming dedup gate against a seen-store seeded to multiples of the
-  * per-batch volume. The 100-TB claim under test: with bucket-range-pruned
+/** Gate-scale growth probes behind [[Bench]]'s per-round artifact:
+  * per-batch latency of each streaming dedup gate against a seen-store
+  * seeded to multiples of the per-batch volume. The 100-TB claim under test: with bucket-range-pruned
   * store reads, per-batch cost tracks the BATCH's candidate keys, so ev/s
   * should stay roughly flat as the store grows 10x — not fall 10x, which
   * is what a whole-store-rescan design measures.
@@ -371,194 +370,5 @@ object GateProbes {
     eng.dropContTransform("gs_gate")
     eng.dropStream("gs_in"); eng.dropStream("gs_out")
     out
-  }
-}
-
-/** Contamination-gate reference-scale probe: `runMain
-  * graft.ProfileContaminationScale [batchRows] [refDocs,csv]` — per-batch
-  * gate ev/s for BOTH backends at growing REFERENCE sizes (the gate's
-  * state axis: the reference is static, so this is the only dimension
-  * that grows). Batches carry 25% contaminated rows (a verbatim 3-token
-  * span of a reference doc) so every batch pays the membership path. */
-object ProfileContaminationScale {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val batchRows = args.headOption.map(_.toInt).getOrElse(5000)
-    val refDocs = args.lift(1).map(_.split(",").toSeq.map(_.toInt))
-      .getOrElse(Seq(10000, 100000))
-    val nBatches = 4
-    // doc body: 30 tokens unique to the doc id (hash-spread namespaces)
-    def body(c: Column, ns: String) = concat_ws(" ",
-      (0 until 30).map(i => concat(lit(ns),
-        xxhash64(c * (i + 1)).cast("string"))): _*)
-    // contaminated body: fresh prefix + a 3-token verbatim reference span
-    def span(refId: Column) = concat_ws(" ",
-      (5 to 7).map(i => concat(lit("r"),
-        xxhash64(refId * (i + 1)).cast("string"))): _*)
-    refDocs.foreach { nRef =>
-      Seq(graft.streaming.StreamDedupGate.DriverBackend,
-          graft.streaming.StreamDedupGate.ExecutorBackend).foreach { backend =>
-        val root = java.nio.file.Files.createTempDirectory("graft_ctsc").toString
-        // engine root == store root: dropContTransform's shard eviction
-        // sweeps <engineRoot>/<gate>, so a split root would leak the
-        // executor shard registry across iterations and skew later points
-        val eng = new graft.cv.ContViewEngine(spark, root + "/eng")
-        import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType}
-        val schema = StructType(Seq(StructField("id", LongType),
-          StructField("text", StringType)))
-        eng.createStream("cs_in", schema)
-        eng.createStream("cs_out", schema)
-        val ref = spark.range(nRef).select(body(col("id"), "r").as("text"))
-        val t0 = System.nanoTime()
-        val gate = graft.streaming.ContaminationGate.create(eng, "cs_gate",
-          "SELECT id, text FROM cs_in", textSql = "text", orderCol = "id",
-          sink = "cs_out", storeRoot = root + "/eng", reference = ref,
-          backend = backend, stateParts = 0)
-        val setupSec = (System.nanoTime() - t0) / 1e9
-        var nextId = 1L << 40
-        def feedOne(): Double = {
-          val nNew = batchRows * 3 / 4
-          val base = nextId
-          nextId += batchRows
-          val fresh = spark.range(nNew).select((col("id") + base).as("id"),
-            body(col("id") + base, "f").as("text"))
-          val dirty = spark.range(batchRows - nNew)
-            .select((col("id") + base + nNew).as("id"),
-              concat(body(col("id") + base + nNew, "f"), lit(" "),
-                span(pmod(xxhash64(col("id") + base), lit(nRef.toLong))))
-                .as("text"))
-          val batch = fresh.unionByName(dirty).persist()
-          batch.count()
-          val s0 = System.nanoTime()
-          eng.insertInto("cs_in", batch)
-          val sec = (System.nanoTime() - s0) / 1e9
-          batch.unpersist()
-          sec
-        }
-        (0 until 2).foreach(_ => feedOne()) // untimed JIT/bootstrap warm-up
-        val secs = (0 until nBatches).map(_ => feedOne())
-        val steady = secs.drop(1).sorted.apply((nBatches - 1) / 2)
-        val (_, adm, sup) = gate.stats
-        println(f"[ct-scale] backend=$backend%s refDocs=$nRef%d " +
-          f"(~${nRef * 28L}%d grams) batchRows=$batchRows%d " +
-          f"ev_s=${math.round(batchRows / steady)}%d setup=${setupSec}%.1f s " +
-          f"admitted=$adm%d suppressed=$sup%d")
-        eng.dropContTransform("cs_gate")
-        eng.dropStream("cs_in"); eng.dropStream("cs_out")
-        graft.streaming.StreamDedupGate.deleteRecursively(
-          new java.io.File(root))
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** Dual-backend scale-probe driver: `runMain graft.ProfileGateDual [kind]
-  * [batchRows] [bigBatchRows]` — the exact probe Bench runs, in isolation,
-  * for estimate tuning and anomaly reproduction. */
-object ProfileGateDual {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val kind = args.headOption.getOrElse("jaccard")
-    val rows = args.lift(1).map(_.toInt).getOrElse(kind match {
-      case "exact" => 20000
-      case "simhash" => 5000
-      case "jaccard" => 4000
-      case _ => 2000
-    })
-    val big = args.lift(2).map(_.toInt).getOrElse(0)
-    val t0 = System.nanoTime()
-    val r = GateProbes.dualScaleProbe(spark, kind, rows, bigBatchRows = big)
-    val wall = (System.nanoTime() - t0) / 1e9
-    println(f"[gate-dual] $kind%s batchRows=$rows%d driver=${r.driver.mkString("/")} " +
-      f"exec=${r.exec.mkString("/")} attempts=${r.driverAttempts}%d/${r.execAttempts}%d " +
-      (if (big > 0) f"pushdown=${r.pushdownEvPerSec}%d ev/s keys=${r.pushdownKeys}%d " +
-        f"keysetKb=${r.pushdownKeySetKb}%d " else "") +
-      f"(wall $wall%.1f s)")
-    spark.stop()
-  }
-}
-
-/** Shard scale-out driver: `runMain graft.ProfileGateShards [kind]
-  * [batchRows] [storeMult] [gs,csv]` — aggregate ev/s per shard count at a
-  * seeded store. */
-object ProfileGateShards {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val kinds = args.headOption.map(Seq(_)).getOrElse(Seq("exact", "cosine"))
-    val batchRows = args.lift(1).map(_.toInt)
-    val storeMult = args.lift(2).map(_.toLong).getOrElse(100L)
-    val gs = args.lift(3).map(_.split(",").toSeq.map(_.toInt))
-      .getOrElse(Seq(1, 2, 4, 8))
-    kinds.foreach { kind =>
-      val rows = batchRows.getOrElse(kind match {
-        case "exact" => 20000
-        case "simhash" => 5000
-        case "jaccard" => 4000
-        case _ => 2000
-      })
-      val t0 = System.nanoTime()
-      val out = GateProbes.shardProbe(spark, kind, rows, storeMult, gs)
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[gate-shards] $kind%s batchRows=$rows%d store=${storeMult}%dx " +
-        out.map { case (g, e) => s"g$g=$e ev/s" }.mkString(" ") +
-        f" (wall $wall%.1f s)")
-    }
-    spark.stop()
-  }
-}
-
-/** Quick iteration driver: `runMain graft.ProfileGateScale [kind] [batchRows]
-  * [scales,csv]` — prints per-scale ev/s without the rest of the bench. */
-object ProfileGateScale {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val kinds = args.headOption.map(Seq(_))
-      .getOrElse(Seq("exact", "simhash", "jaccard", "cosine"))
-    val batchRows = args.lift(1).map(_.toInt)
-    val scales = args.lift(2).map(_.split(",").toSeq.map(_.toLong))
-      .getOrElse(Seq(10L, 100L))
-    val backend = args.lift(3)
-      .getOrElse(graft.streaming.StreamDedupGate.DriverBackend)
-    kinds.foreach { kind =>
-      val rows = batchRows.getOrElse(kind match {
-        case "exact" => 20000
-        case "simhash" => 5000
-        case "jaccard" => 4000
-        case _ => 2000
-      })
-      val t0 = System.nanoTime()
-      val evs = GateProbes.scaleProbe(spark, kind, rows, scales,
-        backend = backend)
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[gate-scale] $kind%s($backend%s) batchRows=$rows%d " +
-        scales.sorted.zip(evs).map { case (s, e) => s"${s}x=$e ev/s" }.mkString(" ") +
-        f" (wall $wall%.1f s)")
-    }
-    spark.stop()
   }
 }

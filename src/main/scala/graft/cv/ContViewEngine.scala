@@ -2461,8 +2461,10 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       } catch { case _: Throwable => () } // next pass retries
     }
 
-  /** Structured Streaming driver for a CV: every micro-batch runs the same
-    * ingest path (foreachBatch ≈ the combiner's sync cycle).
+  /** Structured Streaming driver for a CV: every micro-batch goes through
+    * [[insertInto]] targeted at this CV alone (foreachBatch ≈ the
+    * combiner's sync cycle), so it gets the same arrival stamp, active
+    * check, bounded await and stream batch counter as a direct insert.
     */
   def startStreaming(cvName: String, stream: DataFrame,
       trigger: org.apache.spark.sql.streaming.Trigger =
@@ -2474,17 +2476,9 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       .trigger(trigger)
       .option("checkpointLocation", s"$root/${cvName}/_checkpoint")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // re-resolve the handle per batch: deactivate() swaps the handle
-        // (active = false), and a closure-captured one would keep merging
-        // batches into a deactivated CV's state forever
-        val h = views(cvName)
-        if (h.active) {
-          val withArrival =
-            if (batch.columns.contains("arrival_timestamp")) batch
-            else batch.withColumn("arrival_timestamp",
-              lit(new java.sql.Timestamp(System.currentTimeMillis())))
-          ingestBatch(h, withArrival)
-        }
+        // re-resolve the stream per batch: a stream rename re-points the
+        // handle, and insertInto skips the CV once it is deactivated
+        insertInto(views(cvName).streamName, batch, Some(Set(cvName)))
       }
       .start()
   }

@@ -87,16 +87,6 @@ final class StateStore(
 
   private def manifestPath: String = s"$root/_manifest.json"
 
-  // opt-in phase timing (GRAFT_PROF=1): prints driver-side wall per phase
-  private val prof = sys.env.contains("GRAFT_PROF")
-  @inline private def timed[T](label: String)(f: => T): T =
-    if (!prof) f
-    else {
-      val t = System.nanoTime(); val r = f
-      println(f"[prof-store] ${root.split('/').takeRight(2).head}%-12s $label%-16s ${(System.nanoTime() - t) / 1e9}%6.2f s")
-      r
-    }
-
   /** Within-file clustering columns (the CREATE INDEX analogue —
     * cont_index.sql; set by the engine for SW/TTL views or via
     * createIndex). Rows are sorted by these columns inside every written
@@ -421,9 +411,9 @@ final class StateStore(
     // through whole-stage codegen and caches the partials without the
     // per-row InternalRow→Row conversion a Dataset.foreach pays; the
     // CollectMetrics barrier still delivers the observation
-    phase(lastWorkerMs = _)(timed("scan+cache")(up
+    phase(lastWorkerMs = _)(up
       .observe(obs, collect_set(col(BucketCol)).as("touched"), count(lit(1)).as("n"))
-      .count()))
+      .count())
     val touched = obs.get("touched").asInstanceOf[scala.collection.Seq[Long]]
       .map(_.toInt).toSet
     val groupsTouched = obs.get("n").asInstanceOf[Long]
@@ -483,8 +473,8 @@ final class StateStore(
     val arranged =
       if (writeTasks <= 2) merged.coalesce(writeTasks)
       else merged.repartition(writeTasks, col(BucketCol))
-    phase(lastCombinerMs = _)(timed("merge-write")(clustered(arranged)
-      .write.partitionBy(BucketCol).mode("overwrite").parquet(outDir)))
+    phase(lastCombinerMs = _)(clustered(arranged)
+      .write.partitionBy(BucketCol).mode("overwrite").parquet(outDir))
 
     // A constraint filter can leave a touched bucket with NO output rows
     // (its only group was brand-new and violating): the partitionBy write
@@ -577,8 +567,8 @@ final class StateStore(
 
       val version = m.version + 1
       val outDir = s"$root/v$version"
-      phase(lastCombinerMs = _)(timed("small-merge")(clustered(merged.coalesce(1))
-        .write.partitionBy(BucketCol).mode("overwrite").parquet(outDir)))
+      phase(lastCombinerMs = _)(clustered(merged.coalesce(1))
+        .write.partitionBy(BucketCol).mode("overwrite").parquet(outDir))
       val written = writtenBuckets(outDir)
       // full rewrite: the manifest is replaced wholesale by this version
       val newBuckets = written.map(b => b -> s"v$version/$BucketCol=$b").toMap
@@ -635,11 +625,10 @@ final class StateStore(
     // sizing even at scale), and per-task commit overhead dominates a
     // 32-way fan-out of tiny files — measured 4-6x the flat-write floor.
     // Subsequent large merges size tasks by group volume (see writeTasks).
-    phase(lastCombinerMs = _)(
-      timed("first-write")(clustered(
+    phase(lastCombinerMs = _)(clustered(
         up.observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("n"))
           .coalesce(math.min(2, numBuckets)))
-      .write.partitionBy(BucketCol).mode("overwrite").parquet(outDir)))
+      .write.partitionBy(BucketCol).mode("overwrite").parquet(outDir))
     val groupsTouched = observedCount(obs, up.count())
     val written = writtenBuckets(outDir)
     writeManifest(Manifest(0L, written.map(b => b -> s"v0/$BucketCol=$b").toMap,
@@ -682,9 +671,9 @@ final class StateStore(
     val segRel = s"v$version/$BucketCol=$newSeg"
     val obs = org.apache.spark.sql.Observation()
     lastWorkerMs = 0L
-    phase(lastCombinerMs = _)(timed("append")(clustered(up
+    phase(lastCombinerMs = _)(clustered(up
       .observe(obs, count(lit(1)).as("n")))
-      .write.mode("overwrite").parquet(s"$root/$segRel")))
+      .write.mode("overwrite").parquet(s"$root/$segRel"))
     val n = observedCount(obs, up.count())
     if (n == 0L) {
       // nothing arrived: drop the empty segment, no manifest bump
@@ -700,9 +689,9 @@ final class StateStore(
       val compactId = newSeg + 1
       val compactRel = s"v$version/$BucketCol=$compactId"
       val tasks = math.max(1, (toMerge.map(_._3).sum / (128L * 1024 * 1024)).toInt)
-      timed("compact")(clustered(spark.read.schema(up.schema)
+      clustered(spark.read.schema(up.schema)
         .parquet(toMerge.map(t => s"$root/${t._2}"): _*)
-        .coalesce(tasks)).write.mode("overwrite").parquet(s"$root/$compactRel"))
+        .coalesce(tasks)).write.mode("overwrite").parquet(s"$root/$compactRel")
       buckets = (buckets -- toMerge.map(_._1)) + (compactId -> compactRel)
     }
     writeManifest(Manifest(version, buckets, small = false))

@@ -76,10 +76,8 @@ object AnnSearch {
         ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
         : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      SketchCodegen.gen(ctx, ev, this) {
-        val ps = ctx.addReferenceObj("lshPlanes", planes, "double[][][]")
-        defineCodeGen(ctx, ev, c => s"graft.ops.AnnSearch.lshBucketsEval($c, $ps)")
-      }
+      val ps = ctx.addReferenceObj("lshPlanes", planes, "double[][][]")
+      defineCodeGen(ctx, ev, c => s"graft.ops.AnnSearch.lshBucketsEval($c, $ps)")
     }
     override protected def withNewChildInternal(
         c: org.apache.spark.sql.catalyst.expressions.Expression): LshBuckets = copy(child = c)
@@ -211,11 +209,9 @@ object AnnSearch {
         ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
         : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      SketchCodegen.gen(ctx, ev, this) {
-        val cs = ctx.addReferenceObj("ivfCentroids", centroids, "double[][]")
-        defineCodeGen(ctx, ev,
-          c => s"graft.ops.AnnSearch.ivfAssignEval($c, $cs, $nprobe)")
-      }
+      val cs = ctx.addReferenceObj("ivfCentroids", centroids, "double[][]")
+      defineCodeGen(ctx, ev,
+        c => s"graft.ops.AnnSearch.ivfAssignEval($c, $cs, $nprobe)")
     }
     override protected def withNewChildInternal(
         c: org.apache.spark.sql.catalyst.expressions.Expression): IvfAssign = copy(child = c)

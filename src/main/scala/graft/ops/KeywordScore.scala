@@ -786,8 +786,8 @@ object KeywordScore {
       terms.map(t => dfRows.get(t).map(_._2).getOrElse(0.0)).toArray
     // θ is PER TERM (round 18 — a single global θ cannot prune a
     // frequent low-idf term's tf=1 tail whenever the true kth score sits
-    // below the all-terms cap, the no-co-occurrence shape ProfileBm25Scale
-    // exposed): round 1 scans everything at θ_t = 0.5 — an ABSOLUTE
+    // below the all-terms cap, the no-co-occurrence shape a skewed
+    // large corpus exposed): round 1 scans everything at θ_t = 0.5 — an ABSOLUTE
     // start (impact ∈ (0,1]; 0.5 ≈ the tf=1 saturation point at average
     // dl), not derived from max_impact, so the first scan launches
     // immediately and overlaps the df job. Failed rounds re-allocate by

@@ -40,8 +40,7 @@ object MinHashLsh {
         ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
         : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      SketchCodegen.gen(ctx, ev, this)(
-        defineCodeGen(ctx, ev, c => s"graft.ops.MinHashLsh.signatureEval($c, $k)"))
+      defineCodeGen(ctx, ev, c => s"graft.ops.MinHashLsh.signatureEval($c, $k)")
     override protected def withNewChildInternal(c: Expression): MinHashSignature = copy(child = c)
   }
 
@@ -118,8 +117,8 @@ object MinHashLsh {
         ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
         : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      SketchCodegen.gen(ctx, ev, this)(defineCodeGen(ctx, ev,
-        c => s"graft.ops.MinHashLsh.bucketsEval($c, $numBands, $rowsPerBand)"))
+      defineCodeGen(ctx, ev,
+        c => s"graft.ops.MinHashLsh.bucketsEval($c, $numBands, $rowsPerBand)")
     override protected def withNewChildInternal(c: Expression): MinHashBuckets = copy(child = c)
   }
 

@@ -62,10 +62,8 @@ object PqSearch {
     override def nullSafeEval(v: Any): Any =
       PqSearch.pqEncodeEval(v.asInstanceOf[ArrayData], codebooks)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      SketchCodegen.gen(ctx, ev, this) {
-        val cb = ctx.addReferenceObj("pqCodebooks", codebooks, "double[][][]")
-        defineCodeGen(ctx, ev, c => s"graft.ops.PqSearch.pqEncodeEval($c, $cb)")
-      }
+      val cb = ctx.addReferenceObj("pqCodebooks", codebooks, "double[][][]")
+      defineCodeGen(ctx, ev, c => s"graft.ops.PqSearch.pqEncodeEval($c, $cb)")
     }
     override protected def withNewChildInternal(c: Expression): PqEncode = copy(child = c)
   }

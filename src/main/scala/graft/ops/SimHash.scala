@@ -30,8 +30,7 @@ object SimHash {
         ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
         : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      SketchCodegen.gen(ctx, ev, this)(
-        defineCodeGen(ctx, ev, c => s"graft.ops.SimHash.simhashEval($c)"))
+      defineCodeGen(ctx, ev, c => s"graft.ops.SimHash.simhashEval($c)")
     override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
   }
 
@@ -90,11 +89,9 @@ object SimHash {
         ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
         : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      SketchCodegen.gen(ctx, ev, this) {
-        val geoRef = ctx.addReferenceObj("shbkGeo", geo, "scala.Tuple2")
-        defineCodeGen(ctx, ev,
-          c => s"graft.ops.SimHash.blockKeysData($geoRef, $c)")
-      }
+      val geoRef = ctx.addReferenceObj("shbkGeo", geo, "scala.Tuple2")
+      defineCodeGen(ctx, ev,
+        c => s"graft.ops.SimHash.blockKeysData($geoRef, $c)")
     }
     override protected def withNewChildInternal(c: Expression): SimHashBlockKeys =
       copy(child = c)

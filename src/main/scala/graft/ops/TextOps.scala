@@ -33,8 +33,7 @@ object TextOps {
         ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
         : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      SketchCodegen.gen(ctx, ev, this)(
-        defineCodeGen(ctx, ev, c => s"graft.ops.TextOps.shinglesEval($c, $n)"))
+      defineCodeGen(ctx, ev, c => s"graft.ops.TextOps.shinglesEval($c, $n)")
     override protected def withNewChildInternal(c: Expression): WordShingles = copy(child = c)
   }
 
@@ -82,8 +81,7 @@ object TextOps {
         ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
         : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      SketchCodegen.gen(ctx, ev, this)(
-        defineCodeGen(ctx, ev, c => s"graft.ops.TextOps.tokensEval($c)"))
+      defineCodeGen(ctx, ev, c => s"graft.ops.TextOps.tokensEval($c)")
     override protected def withNewChildInternal(c: Expression): WordTokens = copy(child = c)
   }
 

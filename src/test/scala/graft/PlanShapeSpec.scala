@@ -201,4 +201,66 @@ class PlanShapeSpec extends AnyFunSuite {
     val bhj = p.sliding("BroadcastHashJoin".length).count(_ == "BroadcastHashJoin")
     assert(bhj >= 2, s"customer and nation should broadcast-join, found $bhj BHJs")
   }
+
+  // The near-dup/ANN pipelines' internal stages sit behind localCheckpoint,
+  // so the registry plans above never show them. A CodegenFallback
+  // expression would pull its operator out of whole-stage codegen without
+  // changing any result; this pins the fused codegen of all nine.
+  test("near-dup/ANN sketch expressions run inside whole-stage codegen") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.GraftBridge.{column => gcol, expression => gexp}
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.functions._
+    import graft.ops._
+    val docs = spark.range(50).select(col("id").as("doc_id"),
+      concat_ws(" ", (0 until 12).map(i => concat(lit(s"w$i"),
+        pmod(xxhash64(col("id") * (i + 1)), lit(7L)).cast("string"))): _*).as("text"))
+    val emb = spark.range(50).select(col("id").as("vec_id"),
+      array((1 to 64).map(k => (pmod(xxhash64(col("id") * k), lit(201L)) - lit(100L))
+        .cast("double") / lit(100.0)): _*).as("v"))
+    val planes = Array.fill(8, 12)(Array.fill(64)(0.01))
+    val centroids = Array.fill(16)(Array.fill(64)(0.02))
+    val codebooks = Array.fill(16, 16)(Array.fill(4)(0.03))
+    val stages: Seq[(String, DataFrame, Seq[Class[_ <: Expression]])] = Seq(
+      ("minhash", docs.select(col("doc_id"),
+        explode(gcol(MinHashLsh.MinHashBuckets(gexp(MinHashLsh.minhashSignature(
+          TextOps.shingles(col("text"), 3), 128)), 64, 2))).as("bucket")),
+        Seq(classOf[TextOps.WordShingles], classOf[MinHashLsh.MinHashSignature],
+          classOf[MinHashLsh.MinHashBuckets])),
+      ("simhash", docs.select(col("doc_id"),
+        explode(SimHash.blockKeys(SimHash.simhash64(TextOps.tokens(col("text"))), 6, 3))
+          .as("k")),
+        Seq(classOf[TextOps.WordTokens], classOf[SimHash.SimHash64],
+          classOf[SimHash.SimHashBlockKeys])),
+      ("lsh_buckets", emb.select(col("vec_id"),
+        explode(gcol(AnnSearch.LshBuckets(gexp(col("v")), planes))).as("bkt")),
+        Seq(classOf[AnnSearch.LshBuckets])),
+      ("ivf_assign", emb.select(col("vec_id"),
+        explode(gcol(AnnSearch.IvfAssign(gexp(col("v")), centroids, 2))).as("cl")),
+        Seq(classOf[AnnSearch.IvfAssign])),
+      ("pq_encode", emb.select(col("vec_id"),
+        gcol(PqSearch.PqEncode(gexp(col("v")), codebooks)).as("codes")),
+        Seq(classOf[PqSearch.PqEncode])))
+    // operators fused into one stage: stop at InputAdapter, the boundary
+    // of a non-codegen child
+    def fusedNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(fusedNodes)
+    }
+    stages.foreach { case (name, df, classes) =>
+      assert(df.collect().nonEmpty, name) // runs the generated code
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val fused = plan.collect { case w: WholeStageCodegenExec => fusedNodes(w.child) }
+        .flatten.flatMap(_.expressions)
+      classes.foreach { c =>
+        assert(fused.exists(_.exists(e => c.isInstance(e))),
+          s"$name: ${c.getSimpleName} is outside every WholeStageCodegen span\n$plan")
+      }
+    }
+  }
 }

@@ -1171,6 +1171,9 @@ class CvSpec extends AnyFunSuite {
     val expect = asMap(mkBatch(allRows).groupBy("key")
       .agg(count(lit(1)).as("n"), sum("x").as("sx")))
     assert(got == expect)
+    // each micro-batch is a normal stream insert: it shows in stream_stats
+    assert(eng.sql("SELECT batches FROM graft_stream_stats WHERE stream = 'st_s'")
+      .collect()(0).getLong(0) == 2L)
   }
 
   test("viewsCatalog/transformsCatalog list definitions, options, active flags") {
