@@ -41,8 +41,10 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * is bounded by batch_size/batch_mem — reference config.c:357-372 — not
     * by cluster width; size this up for real deployments) and no AQE (its
     * per-query-stage scheduling adds more latency than it saves on jobs
-    * this small). The caller's session keeps its own settings for ad-hoc
-    * reads of overlays/state.
+    * this small). A batch within one file split (sizedToWorker) and a
+    * small-state merge run in one task each, so the shuffle partitions serve
+    * larger batches and large-state merges only. The caller's session keeps
+    * its own settings for ad-hoc reads of overlays/state.
     */
   private val exec: SparkSession = {
     val s = spark.newSession()
@@ -770,9 +772,10 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
         .map(_.name).getOrElse(throw new IllegalStateException(
           s"CV $name does not read a registered stream"))
       // bucket count follows the ingest shuffle width: buckets are the
-      // scale-out unit (≈ executors × few on a real cluster), and micro-
-      // batch merges should not pay list/write overhead for more dirs than
-      // the ingest session can even fill in parallel
+      // scale-out unit of a large store (≈ executors × few on a real
+      // cluster), and its merges should not pay list/write overhead for more
+      // dirs than the ingest session can even fill in parallel; a small
+      // store keeps the bucket ids in its manifest but one flat file on disk
       val store = new StateStore(exec, s"$root/$name/state", plan.stateKeys,
         numBuckets = math.max(8, ingestShufflePartitions),
         smallStateBytes = smallStateBytes, appendOnly = plan.append,
@@ -2057,7 +2060,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     // (or a concurrent thread's, since the fields are shared)
     var workerMs = 0L
     var combinerMs = 0L
-    val raw = h.plan.workerPartials(exec, batch)
+    val raw = h.plan.workerPartials(exec, sizedToWorker(batch))
     // LIMIT n on a CV caps total materialized groups (cont_limit.sql):
     // updates to existing groups always apply; NEW groups only admit while
     // the cap has room, chosen deterministically by key order.
@@ -2112,6 +2115,19 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       recordStats(h.plan.name, "view", groups, (System.nanoTime() - t0) / 1000000, failed,
         workerMs = workerMs, combinerMs = combinerMs)
     }
+  }
+
+  /** A batch no larger than one file split — its optimized-plan size
+    * estimate against the batch session's `spark.sql.files.maxPartitionBytes`
+    * — is coalesced to one partition, so the CV's partial aggregate runs in
+    * ONE task with no Exchange. Larger batches, and batches of unknown size,
+    * keep their partitioning.
+    */
+  private def sizedToWorker(batch: DataFrame): DataFrame = {
+    val qe = batch.queryExecution
+    if (qe.optimizedPlan.stats.sizeInBytes <=
+        qe.sparkSession.sessionState.conf.filesMaxPartitionBytes) batch.coalesce(1)
+    else batch
   }
 
   /** Append-only ingest: project the batch through the CV's child plan and

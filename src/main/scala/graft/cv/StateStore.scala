@@ -13,14 +13,17 @@ import org.apache.spark.sql.functions._
   *
   * Layout (plain parquet + a tiny JSON manifest; no table format needed):
   *
-  *   root/v<N>/__bucket=<b>/part-*.parquet   — state files, one dir per bucket
-  *   root/_manifest.json                     — {version, buckets: {b: "v<N>/__bucket=<b>"}}
+  *   root/v<N>/__bucket=<b>/part-*.parquet   — large state, one dir per bucket
+  *   root/v<N>/part-*.parquet                — small state, one flat file
+  *   root/_manifest.json                     — {version, small, buckets: {b: dir}}
   *
-  * An upsert only reads and rewrites the buckets containing updated groups
-  * (the incoming micro-batch is partial-aggregated first, so per-batch work
-  * is O(groups-touched), never O(events) against storage). Untouched buckets
-  * stay on their old files via the manifest — a poor man's snapshot commit,
-  * the same idea a real deployment would delegate to Delta/Iceberg MERGE.
+  * A large-store upsert only reads and rewrites the buckets containing
+  * updated groups (the incoming micro-batch is partial-aggregated first, so
+  * per-batch work is O(groups-touched), never O(events) against storage).
+  * Untouched buckets stay on their old files via the manifest — a poor
+  * man's snapshot commit, the same idea a real deployment would delegate to
+  * Delta/Iceberg MERGE. A small store is rewritten whole by every merge as
+  * ONE file in a flat dir shared by every bucket (see [[readBuckets]]).
   * Manifest swap is atomic (temp file + rename), readers see old or new.
   *
   * Scale notes (100 TB): numBuckets scales with cluster size (buckets ≈
@@ -74,8 +77,8 @@ final class StateStore(
     quiesceGc() // belt: callers quiesce before moving the tree (see above)
     _root = newRoot
     // stale version dirs awaiting deferred GC moved with the tree
-    pendingGc = pendingGc.map(p =>
-      newRoot.stripSuffix("/") + "/" + p.stripPrefix(old + "/"))
+    pendingGc = pendingGc.map { case (p, due) =>
+      (newRoot.stripSuffix("/") + "/" + p.stripPrefix(old + "/")) -> due }
     footerMinCache.clear() // keyed by absolute file path under the old root
     refreshCache() // cached plan reads parquet at old absolute paths
   }
@@ -248,7 +251,7 @@ final class StateStore(
   private def dirBytes(rel: String): Long = sfs.treeBytes(s"$root/$rel")
 
   private def measureSmall(buckets: Map[Int, String]): Boolean =
-    buckets.values.map(dirBytes).sum < SmallStateBytes
+    buckets.values.toSet.toSeq.map(dirBytes).sum < SmallStateBytes
 
   def exists: Boolean = readManifest().isDefined
 
@@ -334,23 +337,60 @@ final class StateStore(
     }: _*)
   }
 
-  /** State restricted to the given bucket ids (file-level pruning). */
+  /** State restricted to the given bucket ids (file-level pruning). Each
+    * distinct dir is read once. A flat dir (a small merge's whole state) is
+    * read as is only while it is the current version's and all its buckets
+    * are wanted; otherwise (a later commit rewrote or deleted some of its
+    * buckets) its rows are filtered to the wanted buckets it still serves.
+    */
   private def readBuckets(only: Option[Set[Int]]): Option[DataFrame] =
     readManifest().flatMap { m =>
       val wanted = only.map(s => m.buckets.view.filterKeys(s).toMap).getOrElse(m.buckets)
-      val paths = wanted.values.map(rel => s"$root/$rel").toSeq
-      if (paths.isEmpty) None
-      else Some(knownSchema match {
-        case Some(sch) =>
-          recordMeta(sch)
-          spark.read.schema(sch).parquet(paths: _*)
-        case None =>
-          val df = spark.read.parquet(paths: _*)
-          knownSchema = Some(df.schema)
-          recordMeta(df.schema) // parquet footers persist column metadata
-          df
-      })
+      val (whole, partial) = wanted.groupMap(_._2)(_._1).toSeq.partition {
+        case (rel, bs) => !isFlat(rel) ||
+          (rel == s"v${m.version}" && bs.size == m.buckets.count(_._2 == rel))
+      }
+      val frames = Seq(whole.map(_._1)).filter(_.nonEmpty).map(loadState) ++
+        partial.map { case (rel, bs) =>
+          loadState(Seq(rel)).where(bucketOf.isInCollection(bs.map(_.toLong)))
+        }
+      frames.reduceOption(_ unionByName _)
     }
+
+  private def loadState(rels: Seq[String]): DataFrame = {
+    val paths = rels.map(rel => s"$root/$rel")
+    knownSchema match {
+      case Some(sch) =>
+        recordMeta(sch)
+        spark.read.schema(sch).parquet(paths: _*)
+      case None =>
+        val df = spark.read.parquet(paths: _*)
+        knownSchema = Some(df.schema)
+        recordMeta(df.schema) // parquet footers persist column metadata
+        df
+    }
+  }
+
+  // a flat (shared) state dir is a bare `v<N>`, a bucket dir `v<N>/__bucket=<b>`
+  private def isFlat(rel: String): Boolean = !rel.contains('/')
+
+  // null-safe key match against the batch's groups: NULL group keys still
+  // select their state row
+  private def semiOnKeys(up: DataFrame)(l: DataFrame): DataFrame = {
+    val r = up.select(keyCols.map(col): _*).distinct()
+    val cond =
+      if (keyCols.isEmpty) lit(true) // keyless: the single global group
+      else keyCols.map(k => l(k) <=> r(k)).reduce(_ && _)
+    l.join(r, cond, "left_semi")
+  }
+
+  // merge aggregates that preserve state-column metadata (combine-kind tags)
+  private def stateCols(updates: DataFrame,
+      reAgg: Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)])
+      : Seq[org.apache.spark.sql.Column] = {
+    val metaByName = updates.schema.fields.map(f => f.name -> f.metadata).toMap
+    reAgg.map { case (name, agg) => agg(col(name)).as(name, metaByName(name)) }
+  }
 
   /** Merge partial-aggregated updates into the store.
     *
@@ -414,50 +454,41 @@ final class StateStore(
     phase(lastWorkerMs = _)(up
       .observe(obs, collect_set(col(BucketCol)).as("touched"), count(lit(1)).as("n"))
       .count())
-    val touched = obs.get("touched").asInstanceOf[scala.collection.Seq[Long]]
+    val updated = obs.get("touched").asInstanceOf[scala.collection.Seq[Long]]
       .map(_.toInt).toSet
     val groupsTouched = obs.get("n").asInstanceOf[Long]
     // a micro-batch whose rows were all filtered out touches nothing: no new
     // version, no manifest bump — return empty old/new frames so the changes
     // emitter writes zero rows
-    if (touched.isEmpty) {
+    if (updated.isEmpty) {
       lastCombinerMs = 0L
       val empty = updates.limit(0)
       return (if (needOldRows) Some(empty) else None, () => empty, 0L)
     }
+    // a store that just crossed SmallStateBytes rewrites its flat dir's
+    // buckets into bucket dirs now, so no later merge scans the flat file
+    val touched = updated ++
+      manifest.get.buckets.collect { case (b, rel) if isFlat(rel) => b }
     val existingTouched = cachedState.filter(_ => cacheWarm)
       .map(_.where(bucketOf.isInCollection(touched.map(_.toLong))))
       .orElse(readBuckets(Some(touched)))
-
-    // null-safe key match: NULL group keys still select their state row
-    def semiOnKeys(l: DataFrame): DataFrame = {
-      val r = up.select(keyCols.map(col): _*).distinct()
-      val cond =
-        if (keyCols.isEmpty) lit(true) // keyless: the single global group
-        else keyCols.map(k => l(k) <=> r(k)).reduce(_ && _)
-      l.join(r, cond, "left_semi")
-    }
 
     // Lazy pre-image: the superseded version's files stay on disk until the
     // NEXT mutation (deferred GC flushes then), and the engine consumes old
     // rows synchronously within this ingest cycle (reference does lookup+emit
     // in one transaction — combiner.c:1402-1638) — so reading them re-scans
     // the pre-merge bucket files instead of paying a snapshot job here.
-    val old = if (!needOldRows) None else existingTouched.map(semiOnKeys)
+    val old = if (!needOldRows) None else existingTouched.map(semiOnKeys(up))
 
     val exBOpt = existingTouched.map(ex =>
       ex.withColumn(BucketCol, bucketOf).select(up.columns.map(col): _*))
     val merged0 = exBOpt match {
       case None => up
       case Some(exB) =>
-        // preserve state-column metadata (combine-kind tags) across merges
-        val metaByName = updates.schema.fields.map(f => f.name -> f.metadata).toMap
-        val stateCols = reAgg.map { case (name, agg) =>
-          agg(col(name)).as(name, metaByName(name))
-        }
+        val aggs = stateCols(updates, reAgg)
         exB.unionByName(up)
           .groupBy((keyCols :+ BucketCol).map(col): _*)
-          .agg(stateCols.head, stateCols.tail: _*)
+          .agg(aggs.head, aggs.tail: _*)
     }
     val merged = constrain.map(f => f(merged0, exBOpt)).getOrElse(merged0)
 
@@ -484,17 +515,17 @@ final class StateStore(
     val newBuckets = manifest.map(_.buckets).getOrElse(Map.empty) ++
       effTouched.map(b => b -> s"v$version/$BucketCol=$b").toMap
     writeManifest(Manifest(version, newBuckets, small = false))
-    // Defer deleting superseded version dirs until the NEXT mutation: the
+    // Defer deleting superseded version dirs (see deferGcOldVersions): the
     // returned newRows (and the caller's lazily-evaluated delta, which for
     // LIMIT CVs joins against the pre-merge state) still reference this
     // cycle's inputs; deleting now would FAILED_READ_FILE on cache eviction.
-    deferGcOldVersions(keep = newBuckets.values.map(_.takeWhile(_ != '/')).toSet)
+    deferGcOldVersions(manifest.get.buckets, newBuckets)
     refreshCache()
 
     // lazy: building the post-image DataFrame costs a driver-side file
     // listing — changes-disabled CVs never pay it
     val newRows = () =>
-      readBuckets(Some(effTouched)).map(semiOnKeys).getOrElse(updates.limit(0))
+      readBuckets(Some(effTouched)).map(semiOnKeys(up)).getOrElse(updates.limit(0))
     (old, newRows, groupsTouched)
     } finally {
       // merge has run (or failed) — the cache has no later consumer either way
@@ -503,10 +534,13 @@ final class StateStore(
   }
 
   /** Small-state merge: union the full (cached) state with the batch
-    * partials, re-aggregate, rewrite every bucket in one write job. No
-    * touched-bucket pre-scan: the touched set IS the set of written partition
-    * dirs. The batch partials are self-persisted (mirroring the large path)
-    * so the count, the semi-joins, and the merge all read one materialized
+    * partials, re-aggregate, and rewrite the whole state as ONE parquet file
+    * in a flat `v<N>` dir — one task, no shuffle: the union is coalesced to
+    * a single partition, so the group-by needs no Exchange and the merge
+    * and the write run in the same task. The buckets present come from an
+    * observe() on that write job; the manifest maps each to the flat dir.
+    * The batch partials are self-persisted (mirroring the large path) so
+    * the count, the semi-joins, and the merge all read one materialized
     * evaluation — a non-deterministic batch can never report old/new key
     * sets inconsistent with what was merged — and the count doubles as the
     * empty-batch short-circuit (a zero-row micro-batch must not rewrite the
@@ -532,24 +566,11 @@ final class StateStore(
       // rather than crashing, and fall through to a plain re-agg write.
       val existingOpt = cachedState.orElse(readBuckets(None))
 
-      // null-safe key match: NULL group keys still select their state row
-      def semiOnKeys(l: DataFrame): DataFrame = {
-        val r = up.select(keyCols.map(col): _*).distinct()
-        val cond =
-        if (keyCols.isEmpty) lit(true) // keyless: the single global group
-        else keyCols.map(k => l(k) <=> r(k)).reduce(_ && _)
-      l.join(r, cond, "left_semi")
-      }
       // Lazy pre-image: superseded version files stay on disk until the NEXT
       // mutation (deferred GC), and the engine consumes old rows synchronously
       // within this ingest cycle — no snapshot job needed.
-      val old = if (needOldRows) existingOpt.map(semiOnKeys) else None
+      val old = if (needOldRows) existingOpt.map(semiOnKeys(up)) else None
 
-      // preserve state-column metadata (combine-kind tags) across merges
-      val metaByName = updates.schema.fields.map(f => f.name -> f.metadata).toMap
-      val stateCols = reAgg.map { case (name, agg) =>
-        agg(col(name)).as(name, metaByName(name))
-      }
       // The union chain MUST start from `up`: the write below runs on the
       // session of the Dataset heading the chain, and `updates` may come from
       // a different session than the store's (combine_table passes
@@ -560,24 +581,28 @@ final class StateStore(
         case Some(exB) => up.unionByName(exB)
         case None => up
       }
-      val merged0 = unioned
+      val aggs = stateCols(updates, reAgg)
+      val merged0 = unioned.coalesce(1)
         .groupBy((keyCols :+ BucketCol).map(col): _*)
-        .agg(stateCols.head, stateCols.tail: _*)
+        .agg(aggs.head, aggs.tail: _*)
       val merged = constrain.map(f => f(merged0, exBOpt)).getOrElse(merged0)
 
-      val version = m.version + 1
-      val outDir = s"$root/v$version"
-      phase(lastCombinerMs = _)(clustered(merged.coalesce(1))
-        .write.partitionBy(BucketCol).mode("overwrite").parquet(outDir))
-      val written = writtenBuckets(outDir)
+      val rel = s"v${m.version + 1}"
+      val obs = org.apache.spark.sql.Observation()
+      phase(lastCombinerMs = _)(clustered(merged.coalesce(1)
+          .observe(obs, collect_set(col(BucketCol)).as("buckets")).drop(BucketCol))
+        .write.mode("overwrite").parquet(s"$root/$rel"))
+      val written: Set[Int] = observed(obs, loadState(Seq(rel)).select(bucketOf).distinct()
+          .collect().map(_.getLong(0).toInt).toSet)(
+        _("buckets").asInstanceOf[scala.collection.Seq[Long]].map(_.toInt).toSet)
       // full rewrite: the manifest is replaced wholesale by this version
-      val newBuckets = written.map(b => b -> s"v$version/$BucketCol=$b").toMap
-      writeManifest(Manifest(version, newBuckets,
-        small = newBuckets.values.map(dirBytes).sum < SmallStateBytes))
-      deferGcOldVersions(keep = Set(s"v$version"))
+      val newBuckets = written.map(_ -> rel).toMap
+      writeManifest(Manifest(m.version + 1, newBuckets,
+        small = dirBytes(rel) < SmallStateBytes))
+      deferGcOldVersions(m.buckets, newBuckets)
       refreshCache()
       val newRows = () =>
-        readBuckets(Some(written)).map(semiOnKeys).getOrElse(updates.limit(0))
+        readBuckets(Some(written)).map(semiOnKeys(up)).getOrElse(updates.limit(0))
       (old, newRows, groupsTouched)
     } finally {
       // merge has run (or failed) — the cache has no later consumer either way
@@ -585,13 +610,13 @@ final class StateStore(
     }
   }
 
-  /** obs.get with a timeout fallback: if the optimizer pruned the observed
-    * subtree (AQE empty-relation propagation on a zero-row batch can delete
-    * the CollectMetrics node), the metric never arrives and a bare get()
-    * would block forever. The fallback re-counts — stats-only accuracy.
+  /** An observed metric with a timeout fallback: if the optimizer pruned
+    * the observed subtree (AQE empty-relation propagation on a zero-row
+    * batch can delete the CollectMetrics node), the metric never arrives and
+    * a bare get() would block forever. The fallback recomputes it.
     */
-  private def observedCount(obs: org.apache.spark.sql.Observation,
-      fallback: => Long): Long = {
+  private def observed[T](obs: org.apache.spark.sql.Observation,
+      fallback: => T)(pick: Map[String, Any] => T): T = {
     // Poll the observation's completion handle with a bounded deadline
     // instead of Await-ing an uninterruptible obs.get Future (which leaked
     // one blocked global-EC thread per pruned-observation batch); get() is
@@ -599,8 +624,8 @@ final class StateStore(
     val fut = obs.future
     val deadlineNs = System.nanoTime() + 10L * 1000 * 1000 * 1000
     while (System.nanoTime() < deadlineNs) {
-      if (fut.isCompleted) return obs.get("n").asInstanceOf[Long]
-      Thread.sleep(25)
+      if (fut.isCompleted) return pick(obs.get)
+      Thread.sleep(5)
     }
     fallback
   }
@@ -629,7 +654,7 @@ final class StateStore(
         up.observe(obs, org.apache.spark.sql.functions.count(lit(1)).as("n"))
           .coalesce(math.min(2, numBuckets)))
       .write.partitionBy(BucketCol).mode("overwrite").parquet(outDir))
-    val groupsTouched = observedCount(obs, up.count())
+    val groupsTouched = observed(obs, up.count())(_("n").asInstanceOf[Long])
     val written = writtenBuckets(outDir)
     writeManifest(Manifest(0L, written.map(b => b -> s"v0/$BucketCol=$b").toMap,
       small = written.map(b => dirBytes(s"v0/$BucketCol=$b")).sum < SmallStateBytes))
@@ -674,7 +699,7 @@ final class StateStore(
     phase(lastCombinerMs = _)(clustered(up
       .observe(obs, count(lit(1)).as("n")))
       .write.mode("overwrite").parquet(s"$root/$segRel"))
-    val n = observedCount(obs, up.count())
+    val n = observed(obs, up.count())(_("n").asInstanceOf[Long])
     if (n == 0L) {
       // nothing arrived: drop the empty segment, no manifest bump
       sfs.deleteRecursively(s"$root/v$version")
@@ -698,7 +723,7 @@ final class StateStore(
     // keep every version dir still holding a live segment; a compacted-away
     // segment inside a still-live version dir lingers until that dir's last
     // segment compacts too (bounded: compaction favors the smallest dirs)
-    deferGcOldVersions(keep = buckets.values.map(_.takeWhile(_ != '/')).toSet)
+    deferGcOldVersions(manifest.map(_.buckets).getOrElse(Map.empty), buckets)
     // NO state cache for append stores: state is O(events), not O(groups) —
     // persisting it in executor memory would be an unbounded cache.
     // newRows reads the segment by its physical path, NOT its manifest id:
@@ -744,9 +769,9 @@ final class StateStore(
         val total = m.buckets.size
         val candidates: Set[Int] = pruneLtMicros match {
           case Some((cn, bound)) =>
-            m.buckets.collect {
-              case (b, rel) if bucketMayMatchLt(rel, cn, bound) => b
-            }.toSet
+            // footers are read per distinct dir: a flat dir serves many buckets
+            val mayMatch = m.buckets.values.toSet.filter(dirMayMatchLt(_, cn, bound))
+            m.buckets.collect { case (b, rel) if mayMatch(rel) => b }.toSet
           case None => m.buckets.keySet.toSet
         }
         if (candidates.isEmpty) return StateStore.DeleteStats(total, 0, 0)
@@ -768,7 +793,7 @@ final class StateStore(
         // deletes only shrink state: a small store stays small, and a large
         // store stays on the pruned path (no re-measuring walk)
         writeManifest(Manifest(version, newBuckets, small = m.small))
-        deferGcOldVersions(keep = newBuckets.values.map(_.takeWhile(_ != '/')).toSet)
+        deferGcOldVersions(m.buckets, newBuckets)
         refreshCache()
         StateStore.DeleteStats(total, candidates.size, affected.size)
     }
@@ -838,7 +863,7 @@ final class StateStore(
         val newBuckets = (m.buckets -- affected) ++
           written.map(b => b -> s"v$version/$BucketCol=$b").toMap
         writeManifest(Manifest(version, newBuckets, small = m.small))
-        deferGcOldVersions(keep = newBuckets.values.map(_.takeWhile(_ != '/')).toSet)
+        deferGcOldVersions(m.buckets, newBuckets)
         refreshCache()
         nUpdated
     }
@@ -851,10 +876,10 @@ final class StateStore(
   // flushPendingGc drops entries for deleted version dirs.
   private val footerMinCache = mutable.Map.empty[(String, String), Option[Long]]
 
-  /** Can any row of this bucket have `colName < boundMicros`? Conservative:
-    * missing/unusable stats answer true (the bucket gets scanned).
+  /** Can any row of this state dir have `colName < boundMicros`? Conservative:
+    * missing/unusable stats answer true (the dir's buckets get scanned).
     */
-  private def bucketMayMatchLt(rel: String, colName: String, boundMicros: Long): Boolean = {
+  private def dirMayMatchLt(rel: String, colName: String, boundMicros: Long): Boolean = {
     val dir = s"$root/$rel"
     // sfs.list closes its directory handle eagerly: this runs per bucket
     // per reaper pass (1 s cadence) — leaked descriptors reach EMFILE
@@ -930,30 +955,40 @@ final class StateStore(
     // traverses the SAME tree the deleter is removing entries from, and a
     // racing walk throws NoSuchFileException mid-traversal
     quiesceGc()
-    pendingGc = Set.empty // everything below root dies right here
+    pendingGc = Map.empty // everything below root dies right here
     cachedState.foreach(_.unpersist())
     cachedState = None
     cacheWarm = false
     sfs.deleteRecursively(root)
   }
 
-  /** Version dirs superseded by the last commit, deleted at the next
-    * mutation — by which point the previous cycle's readers have drained.
+  /** Version dirs no manifest names any more → the System.nanoTime() after
+    * which a mutation may delete them. A dir the superseded manifest named
+    * was PUBLISHED: a concurrent reader may have planned a scan of it (an
+    * overlay built before this commit runs its action after it), so it is
+    * kept for [[StateStore.GcGraceNs]]. An orphan no manifest ever named (a
+    * crashed write's dir) has no readers and is due at the next mutation.
     */
-  private var pendingGc: Set[String] = Set.empty
+  private var pendingGc: Map[String, Long] = Map.empty
 
   // last background deletion handed to the shared GC thread; relocate()
   // joins it before moving the tree
   private var gcInFlight: Option[java.util.concurrent.Future[_]] = None
 
-  private def deferGcOldVersions(keep: Set[String]): Unit = {
+  private def deferGcOldVersions(prev: Map[Int, String], next: Map[Int, String]): Unit = {
+    def dirsOf(bs: Map[Int, String]) = bs.values.map(_.takeWhile(_ != '/')).toSet
+    val (published, keep) = (dirsOf(prev), dirsOf(next))
+    val now = System.nanoTime()
     pendingGc = sfs.list(root)
       .filter(n => n.startsWith("v") && !keep.contains(n))
-      .map(n => s"$root/$n")
-      .toSet
+      .map { n =>
+        val dir = s"$root/$n"
+        dir -> pendingGc.getOrElse(dir,
+          if (published(n)) now + StateStore.GcGraceNs else now)
+      }.toMap
   }
 
-  /** Hand superseded version dirs to the shared deletion thread. The
+  /** Hand due superseded version dirs to the shared deletion thread. The
     * footer-stat cache is scrubbed synchronously (cheap map filter, and a
     * stale entry would silently mis-prune); the file walks — the actual I/O,
     * tens of ms per batch on a wide bucket layout — come off the ingest hot
@@ -961,9 +996,11 @@ final class StateStore(
     * so deletions stay ordered behind the commit that superseded them.
     */
   private def flushPendingGc(): Unit = {
-    if (pendingGc.isEmpty) return
-    val batch = pendingGc
-    pendingGc = Set.empty
+    val now = System.nanoTime()
+    val (due, waiting) = pendingGc.partition { case (_, at) => at - now <= 0 }
+    if (due.isEmpty) return
+    val batch = due.keySet
+    pendingGc = waiting
     footerMinCache.filterInPlace { case ((path, _), _) =>
       !batch.exists(d => path.startsWith(d + "/") || path == d)
     }
@@ -985,6 +1022,10 @@ final class StateStore(
 object StateStore {
   /** Default small-state threshold (see the `SmallStateBytes` doc). */
   val DefaultSmallStateBytes: Long = 64L * 1024 * 1024
+
+  /** How long a superseded published version dir outlives the commit that
+    * superseded it: longer than an overlay read takes from plan to finish. */
+  private[cv] val GcGraceNs: Long = 10L * 1000 * 1000 * 1000
 
   /** Shared single-thread daemon for deferred version-dir deletion: one
     * thread keeps deletions serialized per JVM (orderings within a store

@@ -2038,11 +2038,12 @@ class CvSpec extends AnyFunSuite {
     allRows.grouped(1000).foreach(c => eng.insertInto("ix_s", mkBatch(c)))
     // physical check: inside each LIVE state parquet file (per the
     // manifest — superseded version dirs linger until the next mutation's
-    // deferred GC), x is non-decreasing
+    // deferred GC), x is non-decreasing. A manifest entry names a bucket
+    // dir (v<N>/__bucket=<b>) or a small store's flat dir (v<N>).
     val stateDir = java.nio.file.Paths.get(dir, "v_ix", "state")
     def liveFiles(): Seq[java.nio.file.Path] = {
       val txt = java.nio.file.Files.readString(stateDir.resolve("_manifest.json"))
-      """"(v\d+/[^"]+)"""".r.findAllMatchIn(txt).map(_.group(1)).toSeq
+      """"(v\d+(?:/[^"]+)?)"""".r.findAllMatchIn(txt).map(_.group(1)).toSeq.distinct
         .flatMap(rel => java.nio.file.Files.walk(stateDir.resolve(rel))
           .iterator().asScala.filter(_.toString.endsWith(".parquet")))
     }
