@@ -16,6 +16,31 @@ import org.apache.spark.sql.functions._
   */
 object GateProbes {
 
+  private type Gate =
+    graft.streaming.ShardedGate[graft.streaming.ShardableGateCore]
+
+  /** The probes' `kind` gate "gs_gate" from stream gs_in to gs_out. */
+  private def probeGate(eng: graft.cv.ContViewEngine, kind: String,
+      storeRoot: String, dim: Int, backend: String, shards: Int = 1): Gate =
+    kind match {
+      case "exact" => graft.streaming.StreamDedupGate.create(eng, "gs_gate",
+        "SELECT id, body FROM gs_in", keySql = "md5(body)", orderCol = "id",
+        sink = "gs_out", storeRoot = storeRoot, backend = backend,
+        shards = shards)
+      case "simhash" => graft.streaming.SimHashNearDupGate.create(eng, "gs_gate",
+        "SELECT id, body FROM gs_in", textSql = "body", orderCol = "id",
+        sink = "gs_out", storeRoot = storeRoot, backend = backend,
+        shards = shards)
+      case "jaccard" => graft.streaming.JaccardNearDupGate.create(eng, "gs_gate",
+        "SELECT id, body FROM gs_in", textSql = "body", orderCol = "id",
+        sink = "gs_out", storeRoot = storeRoot, threshold = 0.8,
+        backend = backend, shards = shards)
+      case _ => graft.streaming.CosineNearDupGate.create(eng, "gs_gate",
+        "SELECT id, embedding FROM gs_in", embSql = "embedding",
+        orderCol = "id", sink = "gs_out", storeRoot = storeRoot,
+        threshold = 0.98, dim = dim, backend = backend, shards = shards)
+    }
+
   /** One kind's DUAL-backend scale probe result: per-scale ev/s for the
     * driver and executor backends, measurement attempts actually spent,
     * and (exact kind, when requested) the big-batch pushdown fields. */
@@ -74,27 +99,11 @@ object GateProbes {
     def payload(rows: DataFrame) =
       if (textual) rows.select(col("id"), body(col("cid")).as("body"))
       else rows.select(col("id"), vec(col("cid")).as("embedding"))
-    def mkGate(backend: String): graft.streaming.GateHandle = kind match {
-      case "exact" => graft.streaming.StreamDedupGate.create(eng, "gs_gate",
-        "SELECT id, body FROM gs_in", keySql = "md5(body)", orderCol = "id",
-        sink = "gs_out", storeRoot = storeRoot, backend = backend)
-      case "simhash" => graft.streaming.SimHashNearDupGate.create(eng, "gs_gate",
-        "SELECT id, body FROM gs_in", textSql = "body", orderCol = "id",
-        sink = "gs_out", storeRoot = storeRoot, backend = backend)
-      case "jaccard" => graft.streaming.JaccardNearDupGate.create(eng, "gs_gate",
-        "SELECT id, body FROM gs_in", textSql = "body", orderCol = "id",
-        sink = "gs_out", storeRoot = storeRoot, threshold = 0.8, backend = backend)
-      case _ => graft.streaming.CosineNearDupGate.create(eng, "gs_gate",
-        "SELECT id, embedding FROM gs_in", embSql = "embedding",
-        orderCol = "id", sink = "gs_out", storeRoot = storeRoot,
-        threshold = 0.98, dim = dim, backend = backend)
-    }
-    def detach(gate: graft.streaming.GateHandle): Unit = {
-      gate.loop.drainCommits()
+    def detach(gate: Gate): Unit = {
+      gate.drainCommits()
       eng.dropContTransform("gs_gate")
     }
-    def seed(gate: graft.streaming.GateHandle, fromId: Long, n: Long): Unit = {
-      val loop = gate.loop
+    def seed(gate: Gate, fromId: Long, n: Long): Unit = {
       val chunk = 100000L
       var off = 0L
       while (off < n) {
@@ -103,10 +112,10 @@ object GateProbes {
         val rows = payload(spark.range(m)
           .select((col("id") + fromId + off).as("id"))
           .withColumn("cid", col("id")))
-        loop.seedStore(rows)
+        gate.seedStore(rows)
         off += m
       }
-      loop.compact()
+      gate.compact()
     }
     var nextId = 1L << 40
     val warmedBackends = scala.collection.mutable.Set[String]()
@@ -158,10 +167,10 @@ object GateProbes {
       val target = batchRows.toLong * mult
       // ONE seeding chain (through a fresh driver gate — it also regrows
       // the bloom), shared by both backends at this scale
-      var g = mkGate(DriverBackend)
+      var g = probeGate(eng, kind, storeRoot, dim, DriverBackend)
       if (target > seededTo) { seed(g, seededTo, target - seededTo); seededTo = target }
       Seq(DriverBackend, ExecutorBackend).foreach { backend =>
-        if (backend == ExecutorBackend) g = mkGate(ExecutorBackend)
+        if (backend == ExecutorBackend) g = probeGate(eng, kind, storeRoot, dim, backend)
         // max-of-attempts per point: a co-tenant burst squeezing one
         // window reads as a too-slow minimum, and the maximum ev/s is
         // the honest throughput (each attempt re-runs the full path)
@@ -194,7 +203,7 @@ object GateProbes {
     val (pdEv, pdKeys, pdKb, pdTries) =
       if (bigBatchRows <= 0) (0L, 0, 0L, 0)
       else {
-        val g = mkGate(DriverBackend)
+        val g = probeGate(eng, kind, storeRoot, dim, DriverBackend)
         graft.streaming.StreamDedupGate.setInSetCapture(true)
         try {
           def measurePd(): Long = {
@@ -283,35 +292,7 @@ object GateProbes {
     def payload(rows: DataFrame) =
       if (textual) rows.select(col("id"), body(col("cid")).as("body"))
       else rows.select(col("id"), vec(col("cid")).as("embedding"))
-    val gate: graft.streaming.GateHandle = (kind, shards) match {
-      case ("exact", 1) => graft.streaming.StreamDedupGate.create(eng, "gs_gate",
-        "SELECT id, body FROM gs_in", keySql = "md5(body)", orderCol = "id",
-        sink = "gs_out", storeRoot = root, backend = backend)
-      case ("exact", g) => graft.streaming.StreamDedupGate.createSharded(eng,
-        "gs_gate", "SELECT id, body FROM gs_in", keySql = "md5(body)",
-        orderCol = "id", sink = "gs_out", storeRoot = root, shards = g)
-      case ("simhash", 1) => graft.streaming.SimHashNearDupGate.create(eng, "gs_gate",
-        "SELECT id, body FROM gs_in", textSql = "body", orderCol = "id",
-        sink = "gs_out", storeRoot = root, backend = backend)
-      case ("simhash", g) => graft.streaming.SimHashNearDupGate.createSharded(eng,
-        "gs_gate", "SELECT id, body FROM gs_in", textSql = "body",
-        orderCol = "id", sink = "gs_out", storeRoot = root, shards = g)
-      case ("jaccard", 1) => graft.streaming.JaccardNearDupGate.create(eng, "gs_gate",
-        "SELECT id, body FROM gs_in", textSql = "body", orderCol = "id",
-        sink = "gs_out", storeRoot = root, threshold = 0.8, backend = backend)
-      case ("jaccard", g) => graft.streaming.JaccardNearDupGate.createSharded(eng,
-        "gs_gate", "SELECT id, body FROM gs_in", textSql = "body",
-        orderCol = "id", sink = "gs_out", storeRoot = root, threshold = 0.8,
-        shards = g)
-      case (_, 1) => graft.streaming.CosineNearDupGate.create(eng, "gs_gate",
-        "SELECT id, embedding FROM gs_in", embSql = "embedding",
-        orderCol = "id", sink = "gs_out", storeRoot = root,
-        threshold = 0.98, dim = dim, backend = backend)
-      case (_, g) => graft.streaming.CosineNearDupGate.createSharded(eng,
-        "gs_gate", "SELECT id, embedding FROM gs_in", embSql = "embedding",
-        orderCol = "id", sink = "gs_out", storeRoot = root,
-        threshold = 0.98, dim = dim, shards = g)
-    }
+    val gate = probeGate(eng, kind, root, dim, backend, shards)
     def seed(fromId: Long, n: Long): Unit = {
       val chunk = 100000L
       var off = 0L
@@ -321,12 +302,12 @@ object GateProbes {
         val rows = payload(spark.range(m)
           .select((col("id") + fromId + off).as("id"))
           .withColumn("cid", col("id")))
-        gate.loop.seedStore(rows)
+        gate.seedStore(rows)
         off += m
       }
       // compacted range shards + a right-sized bloom are the steady state
       // the per-batch numbers should measure
-      gate.loop.compact()
+      gate.compact()
     }
     var nextId = 1L << 40 // batch ids above any seed id
     var warmed = false

@@ -1021,9 +1021,11 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * the exactly-once form commits each batch via an atomic spool rename
     * of the full flagged batch and recovers interrupted epochs at restart
     * (GateEpochs — one protocol for every gate kind).
-    * A `shards` of G ≥ 2 key-space-partitions the gate into G concurrent
-    * cores under one batch loop (ShardedGate) — identical admitted set,
-    * horizontally-scaled decision loop.
+    * `shards` (default 1, must be ≥ 1) is passed to the kind's one
+    * `create`: G ≥ 2 key-space-partitions the gate into G concurrent cores
+    * under its batch loop (ShardedGate) — identical admitted set,
+    * horizontally-scaled decision loop; `backend`, `state_parts` and
+    * `resident_mb` pass through the same way at any G.
     * String arguments follow SQL literal quoting — a literal single quote
     * inside one is escaped by doubling it ('').
     */
@@ -1032,15 +1034,16 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       ttlColumn: Option[String] = None,
       residentMb: Option[Long] = None,
       backendOpt: Option[String] = None,
-      statePartsOpt: Option[Int] = None): graft.streaming.GateHandle = synchronized {
+      statePartsOpt: Option[Int] = None)
+      : graft.streaming.ShardedGate[graft.streaming.ShardableGateCore] = synchronized {
     val name = normalizeName(name0, "continuous transform")
     val sink = normalizeName(sink0, "stream")
     require(streams.contains(sink), s"gate sink: unknown stream $sink")
     // per-gate state options (beyond-ref; the combiner-tier analogues):
-    // resident_mb caps THIS gate's driver hot tier (beats the process-wide
-    // GRAFT_GATE_RESIDENT_MB); backend = 'executor' moves the probe state
-    // to executor-partitioned shards — every gate kind, and the
-    // executor backend does not compose with driver-thread core sharding
+    // resident_mb caps THIS gate's driver hot tier (default 512 MB);
+    // backend = 'executor' moves the probe state to executor-partitioned
+    // shards — every gate kind, and the executor backend does not compose
+    // with driver-thread core sharding
     val kindWord = gateSpec.trim.takeWhile(c => c.isLetter || c == '_').toLowerCase
     val nearDupKind = Set("neardup_gate", "cosine_gate", "jaccard_gate")(kindWord)
     require(residentMb.isEmpty || nearDupKind,
@@ -1103,110 +1106,50 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     val prevSuppress = suppressCatalog
     suppressCatalog = true
     def shardsOf(s: String): Int = Option(s).map(_.toInt).getOrElse(1)
-    val gate: graft.streaming.GateHandle =
+    def deliveryOf(s: String): String = Option(s).map(unq)
+      .getOrElse(graft.streaming.StreamDedupGate.AtLeastOnce)
+    val backend =
+      backendOpt.getOrElse(graft.streaming.StreamDedupGate.DriverBackend)
+    val stateParts = statePartsOpt.getOrElse(0)
+    val gate: graft.streaming.ShardedGate[graft.streaming.ShardableGateCore] =
       try gateSpec match {
-        case dedupRe(keySql, orderCol, shards, dv) if shardsOf(shards) <= 1 =>
+        case dedupRe(keySql, orderCol, shards, dv) =>
           graft.streaming.StreamDedupGate.create(this, name, selectSql,
             unq(keySql), unq(orderCol), sink, storeRoot = root,
-            delivery = Option(dv).map(unq)
-              .getOrElse(graft.streaming.StreamDedupGate.AtLeastOnce),
+            delivery = deliveryOf(dv),
             ttlMillis = ttlMillis, ttlColumn = ttlColumn.getOrElse(""),
-            backend = backendOpt
-              .getOrElse(graft.streaming.StreamDedupGate.DriverBackend),
-            stateParts = statePartsOpt.getOrElse(0))
-        case dedupRe(keySql, orderCol, shards, dv) =>
-          require(!backendOpt.contains(
-            graft.streaming.StreamDedupGate.ExecutorBackend),
-            "backend = 'executor' does not compose with shards >= 2")
-          graft.streaming.StreamDedupGate.createSharded(this, name, selectSql,
-            unq(keySql), unq(orderCol), sink, storeRoot = root,
-            shards = shards.toInt,
-            delivery = Option(dv).map(unq)
-              .getOrElse(graft.streaming.StreamDedupGate.AtLeastOnce),
-            ttlMillis = ttlMillis, ttlColumn = ttlColumn.getOrElse(""))
-        case neardupRe(textSql, orderCol, maxDist, cap, shards, dv)
-            if shardsOf(shards) <= 1 =>
+            backend = backend, stateParts = stateParts,
+            shards = shardsOf(shards))
+        case neardupRe(textSql, orderCol, maxDist, cap, shards, dv) =>
           graft.streaming.SimHashNearDupGate.create(this, name, selectSql,
             unq(textSql), unq(orderCol), sink, storeRoot = root,
             maxDist = Option(maxDist).map(_.toInt).getOrElse(3),
             maxBucketSize = Option(cap).map(_.toInt).getOrElse(Int.MaxValue),
-            delivery = Option(dv).map(unq)
-              .getOrElse(graft.streaming.StreamDedupGate.AtLeastOnce),
+            delivery = deliveryOf(dv),
             ttlMillis = ttlMillis, ttlColumn = ttlColumn.getOrElse(""),
-            backend = backendOpt
-              .getOrElse(graft.streaming.StreamDedupGate.DriverBackend),
-            stateParts = statePartsOpt.getOrElse(0),
-            residentMb = residentMb.getOrElse(-1L))
-        case neardupRe(textSql, orderCol, maxDist, cap, shards, dv) =>
-          require(!backendOpt.contains(
-            graft.streaming.StreamDedupGate.ExecutorBackend),
-            "backend = 'executor' does not compose with shards >= 2")
-          graft.streaming.SimHashNearDupGate.createSharded(this, name,
-            selectSql, unq(textSql), unq(orderCol), sink, storeRoot = root,
-            shards = shards.toInt,
-            maxDist = Option(maxDist).map(_.toInt).getOrElse(3),
-            maxBucketSize = Option(cap).map(_.toInt).getOrElse(Int.MaxValue),
-            delivery = Option(dv).map(unq)
-              .getOrElse(graft.streaming.StreamDedupGate.AtLeastOnce),
-            ttlMillis = ttlMillis, ttlColumn = ttlColumn.getOrElse(""),
-            residentMb = residentMb.getOrElse(-1L))
-        case cosineRe(embSql, orderCol, threshold, dim, cap, expected, shards, dv)
-            if shardsOf(shards) <= 1 =>
+            backend = backend, stateParts = stateParts,
+            residentMb = residentMb.getOrElse(-1L), shards = shardsOf(shards))
+        case cosineRe(embSql, orderCol, threshold, dim, cap, expected, shards, dv) =>
           graft.streaming.CosineNearDupGate.create(this, name, selectSql,
             unq(embSql), unq(orderCol), sink, storeRoot = root,
             threshold = threshold.toDouble, dim = dim.toInt,
             maxBucketSize = Option(cap).map(_.toInt).getOrElse(Int.MaxValue),
             expectedStoreSize =
               Option(expected).map(_.toLong).getOrElse(1L << 20),
-            delivery = Option(dv).map(unq)
-              .getOrElse(graft.streaming.StreamDedupGate.AtLeastOnce),
+            delivery = deliveryOf(dv),
             ttlMillis = ttlMillis, ttlColumn = ttlColumn.getOrElse(""),
-            backend = backendOpt
-              .getOrElse(graft.streaming.StreamDedupGate.DriverBackend),
-            stateParts = statePartsOpt.getOrElse(0),
-            residentMb = residentMb.getOrElse(-1L))
-        case cosineRe(embSql, orderCol, threshold, dim, cap, expected, shards, dv) =>
-          require(!backendOpt.contains(
-            graft.streaming.StreamDedupGate.ExecutorBackend),
-            "backend = 'executor' does not compose with shards >= 2")
-          graft.streaming.CosineNearDupGate.createSharded(this, name,
-            selectSql, unq(embSql), unq(orderCol), sink, storeRoot = root,
-            threshold = threshold.toDouble, dim = dim.toInt,
-            shards = shards.toInt,
-            maxBucketSize = Option(cap).map(_.toInt).getOrElse(Int.MaxValue),
-            expectedStoreSize =
-              Option(expected).map(_.toLong).getOrElse(1L << 20),
-            delivery = Option(dv).map(unq)
-              .getOrElse(graft.streaming.StreamDedupGate.AtLeastOnce),
-            ttlMillis = ttlMillis, ttlColumn = ttlColumn.getOrElse(""),
-            residentMb = residentMb.getOrElse(-1L))
-        case jaccardRe(textSql, orderCol, threshold, cap, shards, dv)
-            if shardsOf(shards) <= 1 =>
+            backend = backend, stateParts = stateParts,
+            residentMb = residentMb.getOrElse(-1L), shards = shardsOf(shards))
+        case jaccardRe(textSql, orderCol, threshold, cap, shards, dv) =>
           graft.streaming.JaccardNearDupGate.create(this, name, selectSql,
             unq(textSql), unq(orderCol), sink, storeRoot = root,
             threshold = threshold.toDouble,
             maxBucketSize = Option(cap).map(_.toInt).getOrElse(Int.MaxValue),
-            delivery = Option(dv).map(unq)
-              .getOrElse(graft.streaming.StreamDedupGate.AtLeastOnce),
+            delivery = deliveryOf(dv),
             ttlMillis = ttlMillis, ttlColumn = ttlColumn.getOrElse(""),
-            backend = backendOpt
-              .getOrElse(graft.streaming.StreamDedupGate.DriverBackend),
-            stateParts = statePartsOpt.getOrElse(0),
-            residentMb = residentMb.getOrElse(-1L))
-        case jaccardRe(textSql, orderCol, threshold, cap, shards, dv) =>
-          require(!backendOpt.contains(
-            graft.streaming.StreamDedupGate.ExecutorBackend),
-            "backend = 'executor' does not compose with shards >= 2")
-          graft.streaming.JaccardNearDupGate.createSharded(this, name,
-            selectSql, unq(textSql), unq(orderCol), sink, storeRoot = root,
-            threshold = threshold.toDouble, shards = shards.toInt,
-            maxBucketSize = Option(cap).map(_.toInt).getOrElse(Int.MaxValue),
-            delivery = Option(dv).map(unq)
-              .getOrElse(graft.streaming.StreamDedupGate.AtLeastOnce),
-            ttlMillis = ttlMillis, ttlColumn = ttlColumn.getOrElse(""),
-            residentMb = residentMb.getOrElse(-1L))
-        case contaminationRe(textSql, orderCol, refSql, n, shards, dv)
-            if shardsOf(shards) <= 1 =>
+            backend = backend, stateParts = stateParts,
+            residentMb = residentMb.getOrElse(-1L), shards = shardsOf(shards))
+        case contaminationRe(textSql, orderCol, refSql, n, shards, dv) =>
           // the reference SELECT resolves against the SPARK session (temp
           // views / catalog tables) and must project the `text` column; at
           // catalog replay the hashed store already exists, so the query
@@ -1215,21 +1158,9 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
             unq(textSql), unq(orderCol), sink, storeRoot = root,
             reference = spark.sql(unq(refSql)),
             n = Option(n).map(_.toInt).getOrElse(3),
-            delivery = Option(dv).map(unq)
-              .getOrElse(graft.streaming.StreamDedupGate.AtLeastOnce),
-            backend = backendOpt
-              .getOrElse(graft.streaming.StreamDedupGate.DriverBackend),
-            stateParts = statePartsOpt.getOrElse(0))
-        case contaminationRe(textSql, orderCol, refSql, n, shards, dv) =>
-          require(!backendOpt.contains(
-            graft.streaming.StreamDedupGate.ExecutorBackend),
-            "backend = 'executor' does not compose with shards >= 2")
-          graft.streaming.ContaminationGate.createSharded(this, name,
-            selectSql, unq(textSql), unq(orderCol), sink, storeRoot = root,
-            reference = spark.sql(unq(refSql)), shards = shards.toInt,
-            n = Option(n).map(_.toInt).getOrElse(3),
-            delivery = Option(dv).map(unq)
-              .getOrElse(graft.streaming.StreamDedupGate.AtLeastOnce))
+            delivery = deliveryOf(dv),
+            backend = backend, stateParts = stateParts,
+            shards = shardsOf(shards))
         case other => throw new IllegalArgumentException(
           s"unparseable gate outputfunc '$other' (expected dedup_gate('<key>','<order>'[,shards[,'<delivery>']]), " +
             "neardup_gate('<text>','<order>'[,maxDist[,maxBucketSize[,shards[,'<delivery>']]]]), " +
@@ -1247,13 +1178,16 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
 
   // lazy: the constructor's catalog replay reaches createGateTransform
   // before later-declared fields would otherwise initialize
-  private lazy val gates = mutable.Map.empty[String, graft.streaming.GateHandle]
+  private lazy val gates =
+    mutable.Map.empty[String, graft.streaming.ShardedGate[graft.streaming.ShardableGateCore]]
   private lazy val gateSignatures =
     mutable.Map.empty[String,
       (String, String, String, Option[String], Option[String], String)]
 
   /** The declared gate registered under `name`, if any. */
-  def gateOf(name: String): Option[graft.streaming.GateHandle] = synchronized(gates.get(name))
+  def gateOf(name: String)
+      : Option[graft.streaming.ShardedGate[graft.streaming.ShardableGateCore]] =
+    synchronized(gates.get(name))
 
   /** activate/deactivate persist across restarts (the reference stores the
     * active flag in its cont_query catalog row).
@@ -1818,14 +1752,11 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     val pendingDrops = graft.streaming.ExecutorGateState.pendingRemoteDrops
     synchronized {
       gates.toSeq.sortBy(_._1).map { case (nm, g) =>
-        // every gate handle is a core (unsharded) or a sharded loop; the
-        // sharded loops are always driver-tier (exec×shards refused)
-        val loop = g.loop
-        val (batches, admitted, suppressed) = loop.stats
-        val (backend, parts) = loop.backendInfo
-        GateStats(nm, loop.kind, loop.shardCount, batches, admitted,
+        val (batches, admitted, suppressed) = g.stats
+        val (backend, parts) = g.backendInfo
+        GateStats(nm, g.kind, g.shardCount, batches, admitted,
           suppressed, rowsIn = admitted + suppressed, rowsOut = admitted,
-          lostCommits = loop.commitPipeline.lostCommits,
+          lostCommits = g.commitPipeline.lostCommits,
           backend = backend, stateParts = parts,
           pendingRemoteDrops = pendingDrops)
       }

@@ -474,8 +474,7 @@ object CvQueries {
       val eng1 = setup(new ContViewEngine(s, root))
       feed(eng1, Long.MinValue, 150L)
       // forced crash: epoch 2's spool + store land, its delivery doesn't
-      eng1.gateOf("eo_gate").get
-        .asInstanceOf[graft.streaming.StreamDedupGate].epochs.failAt = "after-store"
+      eng1.gateOf("eo_gate").get.epochs.failAt = "after-store"
       try feed(eng1, 150L, 300L)
       catch { case e: IllegalStateException
         if e.getMessage.startsWith("failpoint") => () }
@@ -549,7 +548,6 @@ object CvQueries {
       // is fed after it, so no decision depends on the dropped append):
       // graft_gate_stats.lost_commits is oracle-gated alongside the funnel
       val g1 = eng2.gateOf("pl_g1").get
-        .asInstanceOf[graft.streaming.StreamDedupGate]
       g1.commitPipeline.failNextTask = true
       feed(eng2, 400L, Long.MaxValue)
       g1.drainCommits() // observe + count the loss before stats are read
@@ -714,9 +712,7 @@ object CvQueries {
       feed(eng1, Long.MinValue, 200L)
       // forced crash INSIDE stage 2's epoch: its spool lands, its commit/
       // delivery don't — and stage 1 is left mid-delivery too
-      eng1.gateOf("pl2_g2").get
-        .asInstanceOf[graft.streaming.JaccardNearDupGate].epochs.failAt =
-        "after-spool"
+      eng1.gateOf("pl2_g2").get.epochs.failAt = "after-spool"
       try feed(eng1, 200L, 400L)
       catch { case e: IllegalStateException
         if e.getMessage.startsWith("failpoint") => () }
@@ -846,9 +842,7 @@ object CvQueries {
         // checkpoint does NOT commit the batch and the resume re-delivers it
         base.where(pmod(col("doc_id"), lit(2)) === 1)
           .coalesce(1).write.mode("append").parquet(srcDir)
-        eng1.gateOf("ngst_gate").get
-          .asInstanceOf[graft.streaming.JaccardNearDupGate]
-          .epochs.failAt = "after-spool"
+        eng1.gateOf("ngst_gate").get.epochs.failAt = "after-spool"
         val q2 = eng1.startStreamingInto("ngst_in", source())
         intercept(q2.processAllAvailable())
         q2.stop()
@@ -1036,7 +1030,7 @@ object CvQueries {
       eng.createStream("cg_clean", cosCorpus.schema)
       // sharded form (2 table-position cores, shared embedding store) so
       // the near-dup scale-out path is oracle-gated too
-      graft.streaming.CosineNearDupGate.createSharded(eng, "cg_gate",
+      graft.streaming.CosineNearDupGate.create(eng, "cg_gate",
         "SELECT vec_id, embedding, label FROM cg_in",
         embSql = "embedding", orderCol = "vec_id", sink = "cg_clean",
         storeRoot = root, threshold = 0.99, dim = 64, shards = 2)

@@ -143,8 +143,7 @@ private[graft] final class CommitPipeline(name: String,
 private[graft] object CommitPipeline {
   /** Consecutive lost commits before the pipeline stops deferring and
     * surfaces store failures synchronously (see [[CommitPipeline.submit]]). */
-  val escalateAfter: Int =
-    sys.env.get("GRAFT_GATE_COMMIT_ESCALATE").map(_.toInt).getOrElse(3)
+  val escalateAfter: Int = 3
 
   private val inFlight = new ConcurrentHashMap[String, JFuture[_]]()
 

@@ -85,8 +85,6 @@ final class ContaminationGate private (
     * compose with driver-thread core sharding (the family rule — the
     * shards ARE the horizontal scale-out). */
   private val executorBackend = backend == StreamDedupGate.ExecutorBackend
-  require(!executorBackend || shardCount == 1,
-    "backend = 'executor' does not compose with shards >= 2")
 
   /** Exactly-once delivery ([[GateEpochs]]): the reference store is
     * static — recovery rebuilds no store — but the spool+marker still
@@ -356,7 +354,10 @@ object ContaminationGate {
     * reference-clean survivors are forwarded to stream `sink`. The
     * reference grams come from `reference(refTextCol)` — seeded into the
     * persisted store on FIRST creation; a restart re-uses the store and
-    * only rebuilds the driver bloom.
+    * only rebuilds the driver bloom. `shards` = G ≥ 2 key-slices the gate
+    * (see [[ShardedGate]]): core k owns gram hashes ≡ k (mod G) — its
+    * reference slice, bloom, and candidate work shrink by G, and a
+    * contaminated doc is flagged by whichever core owns a shared gram.
     */
   def create(eng: ContViewEngine, name: String, selectSql: String,
       textSql: String, orderCol: String, sink: String, storeRoot: String,
@@ -364,49 +365,14 @@ object ContaminationGate {
       bloomP: Double = 0.01, bloomN: Int = 1 << 20,
       delivery: String = StreamDedupGate.AtLeastOnce,
       backend: String = StreamDedupGate.DriverBackend,
-      stateParts: Int = 0): ContaminationGate = {
+      stateParts: Int = 0, shards: Int = 1): ShardedGate[ContaminationGate] = {
     require(n >= 1, s"gram size must be >= 1, got $n")
-    val root = GateStore.gateRoot(storeRoot, name)
-    val sfs = graft.io.StoreFs.forRoot(root)
-    sfs.mkdirs(root)
-    GateStore.stampGeometry(root, "shards_1")
-    val dir = GateStore.child(root, "ref_grams")
-    sfs.mkdirs(dir)
-    val gate = new ContaminationGate(eng, name, textSql, orderCol,
-      dir, n, bloomP, bloomN, backend = backend, stateParts = stateParts)
-    gate.seedReference(reference, refTextCol)
-    gate.bootstrap()
-    ShardedGate.register(eng, name, selectSql, sink, Seq(gate), root, delivery)
-    gate
-  }
-
-  /** The G-core horizontally-sharded form of [[create]] (see
-    * [[ShardedGate]]): core k owns gram hashes ≡ k (mod `shards`)
-    * — its reference slice, bloom, and candidate work shrink by G, and a
-    * contaminated doc is flagged by whichever core owns a shared gram.
-    * Admitted set identical to the unsharded gate's; reopening under a
-    * different G is refused. */
-  def createSharded(eng: ContViewEngine, name: String, selectSql: String,
-      textSql: String, orderCol: String, sink: String, storeRoot: String,
-      reference: DataFrame, shards: Int, refTextCol: String = "text",
-      n: Int = 3,
-      bloomP: Double = 0.01, bloomN: Int = 1 << 20,
-      delivery: String = StreamDedupGate.AtLeastOnce): ShardedGate = {
-    require(shards >= 2, s"use create() for an unsharded gate (shards=$shards)")
-    require(n >= 1, s"gram size must be >= 1, got $n")
-    val root = GateStore.gateRoot(storeRoot, name)
-    val sfs = graft.io.StoreFs.forRoot(root)
-    sfs.mkdirs(root)
-    GateStore.stampGeometry(root, s"shards_$shards")
-    val cores = (0 until shards).map { k =>
-      val dir = GateStore.child(GateStore.child(root, s"s${k}of$shards"), "ref_grams")
-      sfs.mkdirs(dir)
-      val core = new ContaminationGate(eng, name, textSql, orderCol,
-        dir, n, bloomP, bloomN, k, shards)
+    ShardedGate.open(eng, name, selectSql, sink, storeRoot, shards, delivery,
+      backend, "ref_grams", None) { (_, dir, k) =>
+      val core = new ContaminationGate(eng, name, textSql, orderCol, dir, n,
+        bloomP, bloomN, k, shards, backend, stateParts)
       core.seedReference(reference, refTextCol)
-      core.bootstrap()
       core
     }
-    ShardedGate.register(eng, name, selectSql, sink, cores, root, delivery)
   }
 }

@@ -218,8 +218,8 @@ object CosineNearDupGate {
     * knowingly trade recall for wall-clock) but warned about loudly on
     * stderr, with the computed estimate, so a DDL user can't silently get
     * under-suppression.
-    */
-  /** `numTables`/`bitsPerTable` of 0 (the default) auto-size from
+    *
+    * `numTables`/`bitsPerTable` of 0 (the default) auto-size from
     * `expectedStoreSize` via [[autoGeometry]] — the bucket keyspace MUST
     * scale with the corpus or per-batch candidate volume (and with it
     * gate cost) grows linearly in store size: the round-9 probe measured
@@ -227,7 +227,12 @@ object CosineNearDupGate {
     * ~50 bucket-mates per table per row at a 200k store, every one
     * exact-verified). The geometry is part of the STORE's identity —
     * reopening an existing store with different (dim, tables, bits, seed)
-    * is refused loudly (stored bucket keys would silently mismatch). */
+    * is refused loudly (stored bucket keys would silently mismatch).
+    *
+    * `shards` = G ≥ 2 key-slices the gate (see [[ShardedGate]]): core k
+    * owns SRP table positions ≡ k (mod G), with its own index slice +
+    * bloom; the embedding store is shared (written once per batch by
+    * core 0). */
   def create(eng: ContViewEngine, name: String, selectSql: String,
       embSql: String, orderCol: String, sink: String, storeRoot: String,
       threshold: Double, dim: Int,
@@ -239,7 +244,8 @@ object CosineNearDupGate {
       delivery: String = StreamDedupGate.AtLeastOnce,
       ttlMillis: Long = 0L, ttlColumn: String = "",
       backend: String = StreamDedupGate.DriverBackend,
-      stateParts: Int = 0, residentMb: Long = -1L): CosineNearDupGate = {
+      stateParts: Int = 0, residentMb: Long = -1L,
+      shards: Int = 1): ShardedGate[CosineNearDupGate] = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"cosine gate threshold must be in (0, 1], got $threshold")
     val (autoT, autoB) =
@@ -256,74 +262,16 @@ object CosineNearDupGate {
         f"bitsPerTable=$autoB%d is ~$recall%.3f — near-pairs at the " +
         "threshold may be falsely admitted; raise numTables or lower " +
         "bitsPerTable to restore recall")
-    val root = GateStore.gateRoot(storeRoot, name)
-    val sfs = graft.io.StoreFs.forRoot(root)
-    sfs.mkdirs(root)
-    GateStore.stampGeometry(root, "shards_1")
-    val embDir = GateStore.child(root, "seen_embs")
-    val idxDir = GateStore.child(root, "seen_keys")
-    sfs.mkdirs(embDir)
-    sfs.mkdirs(idxDir)
-    GateStore.stampGeometry(idxDir,
-      s"cosine_d${dim}_t${autoT}_b${autoB}_s${seed}_sk64" +
-        (if (ttlMillis > 0) "_ttl" else ""))
-    val gate = new CosineNearDupGate(eng, name, embSql, orderCol,
-      embDir, idxDir, threshold, dim, autoT, autoB, seed,
-      bloomP, bloomN, maxBucketSize, compactEvery, 0, 1,
-      ttlMillis, ttlColumn, backend, stateParts, residentMb)
-    gate.bootstrap()
-    ShardedGate.register(eng, name, selectSql, sink, Seq(gate), root, delivery)
-    gate
-  }
-
-  /** The G-core horizontally-sharded form of [[create]] (see
-    * [[ShardedGate]]): core k owns SRP table positions ≡ k (mod
-    * `shards`), with its own index slice + bloom; the embedding store is
-    * shared (written once per batch by core 0). Admitted set is identical
-    * to the unsharded gate's; per-batch decisions run on `shards`
-    * concurrent threads. The shard count is part of the store's identity
-    * — reopening under a different G is refused. */
-  def createSharded(eng: ContViewEngine, name: String, selectSql: String,
-      embSql: String, orderCol: String, sink: String, storeRoot: String,
-      threshold: Double, dim: Int, shards: Int,
-      numTables: Int = 0, bitsPerTable: Int = 0, seed: Long = 42L,
-      expectedStoreSize: Long = 1L << 20, recallTarget: Double = 0.95,
-      bloomP: Double = 0.01, bloomN: Int = 1 << 20,
-      maxBucketSize: Int = Int.MaxValue,
-      compactEvery: Int = 256,
-      delivery: String = StreamDedupGate.AtLeastOnce,
-      ttlMillis: Long = 0L, ttlColumn: String = "",
-      residentMb: Long = -1L): ShardedGate = {
-    require(shards >= 2, s"use create() for an unsharded gate (shards=$shards)")
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"cosine gate threshold must be in (0, 1], got $threshold")
-    val (autoT, autoB) =
-      if (numTables > 0 && bitsPerTable > 0) (numTables, bitsPerTable)
-      else {
-        val (t, b) = autoGeometry(threshold, expectedStoreSize, recallTarget)
-        (if (numTables > 0) numTables else t,
-          if (bitsPerTable > 0) bitsPerTable else b)
-      }
-    val root = GateStore.gateRoot(storeRoot, name)
-    val sfs = graft.io.StoreFs.forRoot(root)
-    sfs.mkdirs(root)
-    GateStore.stampGeometry(root, s"shards_$shards")
-    val embDir = GateStore.child(root, "seen_embs")
-    sfs.mkdirs(embDir)
-    val cores = (0 until shards).map { k =>
-      val idxDir = GateStore.child(GateStore.child(root, s"s${k}of$shards"), "seen_keys")
-      sfs.mkdirs(idxDir)
-      GateStore.stampGeometry(idxDir,
-        s"cosine_d${dim}_t${autoT}_b${autoB}_s${seed}_sk64" +
-          (if (ttlMillis > 0) "_ttl" else ""))
-      val core = new CosineNearDupGate(eng, name, embSql, orderCol,
-        embDir, idxDir, threshold, dim, autoT, autoB, seed,
-        bloomP, bloomN, maxBucketSize, compactEvery, k, shards,
-        ttlMillis, ttlColumn,
-        residentMb = residentMb)
-      core.bootstrap()
-      core
+    ShardedGate.open(eng, name, selectSql, sink, storeRoot, shards, delivery,
+      backend, "seen_keys",
+      Some(s"cosine_d${dim}_t${autoT}_b${autoB}_s${seed}_sk64" +
+        (if (ttlMillis > 0) "_ttl" else ""))) { (root, idxDir, k) =>
+      val embDir = GateStore.child(root, "seen_embs")
+      if (k == 0) graft.io.StoreFs.forRoot(embDir).mkdirs(embDir)
+      new CosineNearDupGate(eng, name, embSql, orderCol, embDir, idxDir,
+        threshold, dim, autoT, autoB, seed, bloomP, bloomN, maxBucketSize,
+        compactEvery, k, shards, ttlMillis, ttlColumn, backend, stateParts,
+        residentMb)
     }
-    ShardedGate.register(eng, name, selectSql, sink, cores, root, delivery)
   }
 }

@@ -92,9 +92,6 @@ private[graft] abstract class IndexedNearDupGate[P](
   require(backend == StreamDedupGate.DriverBackend ||
     backend == StreamDedupGate.ExecutorBackend,
     s"unknown state backend '$backend'")
-  require(backend == StreamDedupGate.DriverBackend || shardCount == 1,
-    "the executor backend IS the scale-out — it does not compose with " +
-      "driver-thread core sharding")
 
   /** EXECUTOR STATE BACKEND — `backend = "executor"`
     * ([[ExecutorGateIndex]]): phase 1 runs against bucket-partitioned
@@ -1430,6 +1427,6 @@ private[streaming] object IndexedNearDupGate {
   val overflowAdvice: String =
     "Recreate the gate with backend = 'executor' to shard this state " +
       "across the cluster (probes stay flat past any driver budget — " +
-      "BENCH gate_exec_* vs gate_large_store_*), or raise resident_mb / " +
-      "GRAFT_GATE_RESIDENT_MB, shard the gate, or window it with a ttl."
+      "BENCH gate_exec_* vs gate_large_store_*), or raise the gate's " +
+      "resident_mb, shard the gate, or window it with a ttl."
 }

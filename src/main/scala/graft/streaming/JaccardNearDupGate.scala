@@ -161,6 +161,10 @@ object JaccardNearDupGate {
     * banding recall is probabilistic in (threshold, numBands,
     * rowsPerBand); a configuration whose recall floor at `threshold`
     * falls below 0.95 is accepted but warned about loudly on stderr.
+    *
+    * `shards` = G ≥ 2 key-slices the gate (see [[ShardedGate]]): core k
+    * owns band positions ≡ k (mod G) with its own index slice + bloom; the
+    * signature store is shared (written once per batch by core 0).
     */
   def create(eng: ContViewEngine, name: String, selectSql: String,
       textSql: String, orderCol: String, sink: String, storeRoot: String,
@@ -172,7 +176,8 @@ object JaccardNearDupGate {
       delivery: String = StreamDedupGate.AtLeastOnce,
       ttlMillis: Long = 0L, ttlColumn: String = "",
       backend: String = StreamDedupGate.DriverBackend,
-      stateParts: Int = 0, residentMb: Long = -1L): JaccardNearDupGate = {
+      stateParts: Int = 0, residentMb: Long = -1L,
+      shards: Int = 1): ShardedGate[JaccardNearDupGate] = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"jaccard gate threshold must be in (0, 1], got $threshold")
     val recall = recallEstimate(threshold, numBands, rowsPerBand)
@@ -182,73 +187,18 @@ object JaccardNearDupGate {
         f"rowsPerBand=$rowsPerBand%d is ~$recall%.3f — near-pairs at the " +
         "threshold may be falsely admitted; raise numBands or lower " +
         "rowsPerBand to restore recall")
-    val root = GateStore.gateRoot(storeRoot, name)
-    val sfs = graft.io.StoreFs.forRoot(root)
-    sfs.mkdirs(root)
-    GateStore.stampGeometry(root, "shards_1")
-    val sigDir = GateStore.child(root, "seen_sigs")
-    val idxDir = GateStore.child(root, "seen_keys")
-    sfs.mkdirs(sigDir)
-    sfs.mkdirs(idxDir)
     // band keys and signatures are pure functions of the shingle/banding
     // geometry — refuse a silently-mismatched reopen
-    GateStore.stampGeometry(idxDir,
-      s"jaccard_n${shingleN}_nb${numBands}_r${rowsPerBand}_sk64" +
-        (if (ttlMillis > 0) "_ttl" else ""))
-    val gate = new JaccardNearDupGate(eng, name, textSql, orderCol,
-      sigDir, idxDir, threshold, shingleN, numBands, rowsPerBand,
-      bloomP, bloomN, maxBucketSize, compactEvery, 0, 1,
-      ttlMillis, ttlColumn, backend, stateParts, residentMb)
-    gate.bootstrap()
-    ShardedGate.register(eng, name, selectSql, sink, Seq(gate), root, delivery)
-    gate
-  }
-
-  /** The G-core horizontally-sharded form of [[create]] (see
-    * [[ShardedGate]]): core k owns band positions ≡ k (mod
-    * `shards`) with its own index slice + bloom; the signature store is
-    * shared (written once per batch by core 0). Admitted set identical to
-    * the unsharded gate's; reopening under a different G is refused. */
-  def createSharded(eng: ContViewEngine, name: String, selectSql: String,
-      textSql: String, orderCol: String, sink: String, storeRoot: String,
-      threshold: Double, shards: Int, shingleN: Int = 3,
-      numBands: Int = 16, rowsPerBand: Int = 4,
-      bloomP: Double = 0.01, bloomN: Int = 1 << 20,
-      maxBucketSize: Int = Int.MaxValue,
-      compactEvery: Int = 256,
-      delivery: String = StreamDedupGate.AtLeastOnce,
-      ttlMillis: Long = 0L, ttlColumn: String = "",
-      residentMb: Long = -1L): ShardedGate = {
-    require(shards >= 2, s"use create() for an unsharded gate (shards=$shards)")
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"jaccard gate threshold must be in (0, 1], got $threshold")
-    val recall = recallEstimate(threshold, numBands, rowsPerBand)
-    if (recall < 0.95)
-      System.err.println(f"[graft] JaccardNearDupGate($name%s): banding " +
-        f"recall at threshold=$threshold%.3f with numBands=$numBands%d, " +
-        f"rowsPerBand=$rowsPerBand%d is ~$recall%.3f — near-pairs at the " +
-        "threshold may be falsely admitted; raise numBands or lower " +
-        "rowsPerBand to restore recall")
-    val root = GateStore.gateRoot(storeRoot, name)
-    val sfs = graft.io.StoreFs.forRoot(root)
-    sfs.mkdirs(root)
-    GateStore.stampGeometry(root, s"shards_$shards")
-    val sigDir = GateStore.child(root, "seen_sigs")
-    sfs.mkdirs(sigDir)
-    val cores = (0 until shards).map { k =>
-      val idxDir = GateStore.child(GateStore.child(root, s"s${k}of$shards"), "seen_keys")
-      sfs.mkdirs(idxDir)
-      GateStore.stampGeometry(idxDir,
-        s"jaccard_n${shingleN}_nb${numBands}_r${rowsPerBand}_sk64" +
-          (if (ttlMillis > 0) "_ttl" else ""))
-      val core = new JaccardNearDupGate(eng, name, textSql, orderCol,
-        sigDir, idxDir, threshold, shingleN, numBands, rowsPerBand,
-        bloomP, bloomN, maxBucketSize, compactEvery, k, shards,
-        ttlMillis, ttlColumn,
-        residentMb = residentMb)
-      core.bootstrap()
-      core
+    ShardedGate.open(eng, name, selectSql, sink, storeRoot, shards, delivery,
+      backend, "seen_keys",
+      Some(s"jaccard_n${shingleN}_nb${numBands}_r${rowsPerBand}_sk64" +
+        (if (ttlMillis > 0) "_ttl" else ""))) { (root, idxDir, k) =>
+      val sigDir = GateStore.child(root, "seen_sigs")
+      if (k == 0) graft.io.StoreFs.forRoot(sigDir).mkdirs(sigDir)
+      new JaccardNearDupGate(eng, name, textSql, orderCol, sigDir, idxDir,
+        threshold, shingleN, numBands, rowsPerBand, bloomP, bloomN,
+        maxBucketSize, compactEvery, k, shards, ttlMillis, ttlColumn,
+        backend, stateParts, residentMb)
     }
-    ShardedGate.register(eng, name, selectSql, sink, cores, root, delivery)
   }
 }

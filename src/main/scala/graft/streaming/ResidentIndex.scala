@@ -248,12 +248,9 @@ private[streaming] object ResidentIndex {
   /** Default per-gate resident budget (index entries + id/payload pools,
     * all cores combined): 512 MB holds ~3M docs of the heaviest layout
     * (SimHash: 20 exploded entries/doc) — far past the probe decade — and
-    * stays a fraction of a typical driver heap. Env-overridable for a
-    * deployment that wants a bigger hot tier (`GRAFT_GATE_RESIDENT_MB`) or
-    * none (`0`). */
-  val DefaultBudgetBytes: Long =
-    sys.env.get("GRAFT_GATE_RESIDENT_MB").map(_.toLong << 20)
-      .getOrElse(512L << 20)
+    * stays a fraction of a typical driver heap. A gate that wants a
+    * bigger hot tier, or none (`0`), sets its own `resident_mb`. */
+  val DefaultBudgetBytes: Long = 512L << 20
 
   /** Test seam: force the disk path (0) in equivalence specs. */
   private[graft] var budgetOverride: Option[Long] = None

@@ -29,10 +29,9 @@ import graft.cv.ContViewEngine
   * spooled epoch and the store batches it produced share one number
   * ([[commitRecovered]] compares them).
   *
-  * The handle an unsharded gate's `create` returns is the core itself; the
-  * members below forward to the loop it runs under.
+  * A core is built only by [[ShardedGate.open]]; callers hold the loop.
   */
-private[graft] trait ShardableGateCore extends GateHandle {
+private[graft] trait ShardableGateCore {
   /** The gate family's `graft_gate_stats` kind. */
   private[graft] def kind: String
   /** (backend, resolved executor shard count — 0 on the driver tier): the
@@ -98,6 +97,8 @@ private[graft] trait ShardableGateCore extends GateHandle {
   /** The core's durable store directories — the [[CommitPipeline]]
     * cross-instance drain keys (same-JVM restart fixtures). */
   private[streaming] def storeRoots: Seq[String] = Nil
+  /** Resume from the persisted store (filters, batch floor) at open. */
+  private[streaming] def bootstrap(): Unit
 
   /** Key slices of the gate this core belongs to (1 = unsharded). */
   private[streaming] def shardCount: Int
@@ -112,35 +113,6 @@ private[graft] trait ShardableGateCore extends GateHandle {
     * session-level debugging). */
   protected final lazy val coreSession: SparkSession =
     if (shardCount == 1) engineSession else engineSession.newSession()
-
-  private[this] var loop0: ShardedGate = null
-  private[streaming] final def attach(l: ShardedGate): Unit = {
-    require(loop0 == null, "a gate core runs under one batch loop")
-    loop0 = l
-  }
-  /** The batch loop this core runs under. */
-  private[graft] final def loop: ShardedGate = loop0
-
-  /** (batches, admitted survivors, suppressed rows) so far — the loop's
-    * counters (admitted/suppressed restart at zero: session telemetry). */
-  def stats: (Long, Long, Long) = loop.stats
-  /** See [[ShardedGate.recover]]. */
-  def recover(): Unit = loop.recover()
-  /** See [[ShardedGate.compact]]. */
-  def compact(): Unit = loop.compact()
-  /** Test seam: the loop's exactly-once epoch protocol (failpoints). */
-  private[graft] def epochs: GateEpochs = loop.epochs
-  /** Test/stats seam: the loop's deferred-commit pipeline. */
-  private[graft] def commitPipeline: CommitPipeline = loop.commitPipeline
-  /** Barrier for callers about to read or delete the durable stores. */
-  private[graft] def drainCommits(): Unit = loop.drainCommits()
-}
-
-/** What a gate's `create`/`createSharded` returns and the engine
-  * registers: an unsharded gate's core or a sharded gate's loop — either
-  * way, the ONE batch loop behind it. */
-trait GateHandle {
-  private[graft] def loop: ShardedGate
 }
 
 /** THE gate batch loop: G ≥ 1 key-slice cores ([[ShardableGateCore]])
@@ -171,21 +143,22 @@ trait GateHandle {
   * Restart: a re-created gate on the same store root re-binds bootstrapped
   * cores; the shard count is stamped into the store root and a mismatched
   * reopen is refused (slices would silently mix).
+  *
+  * Every gate kind's `create` returns this loop; `cores` exposes the
+  * kind's cores (test seams).
   */
-final class ShardedGate private[streaming] (
+final class ShardedGate[+C <: ShardableGateCore] private (
     eng: ContViewEngine,
     val name: String,
     sink: String,
-    cores: Seq[ShardableGateCore],
+    private[graft] val cores: Seq[C],
     root: String,
-    delivery: String) extends GateHandle {
+    delivery: String) {
 
-  require(cores.nonEmpty, "a gate needs at least one core")
   require(delivery == StreamDedupGate.AtLeastOnce ||
     delivery == StreamDedupGate.ExactlyOnce,
     s"unknown delivery mode '$delivery' (expected " +
       s"'${StreamDedupGate.AtLeastOnce}' or '${StreamDedupGate.ExactlyOnce}')")
-  cores.foreach(_.attach(this))
 
   private val exactlyOnce = delivery == StreamDedupGate.ExactlyOnce
   /** ONE spool for the whole gate — the batch is decided jointly, so the
@@ -230,7 +203,6 @@ final class ShardedGate private[streaming] (
   def stats: (Long, Long, Long) = synchronized((batches, admitted, suppressed))
 
   def shardCount: Int = cores.size
-  private[graft] def loop: ShardedGate = this
   private[graft] def kind: String = cores.head.kind
   private[graft] def backendInfo: (String, Int) = cores.head.backendInfo
 
@@ -345,14 +317,41 @@ private[graft] object ShardedGate {
     * and the exact gate's `h` are sink payload and stay). */
   val InternalCols: Seq[String] = Seq("__p", "__gh")
 
-  /** Build the loop over `cores` and register it as transform `name`'s
-    * output function. The catalog replays a transform BARE (a callback
-    * can't persist): if that is what createContTransform idempotently
-    * returned, the rebind re-attaches this loop so the gate does not sit
-    * silently dead. */
-  private[streaming] def register(eng: ContViewEngine, name: String,
-      selectSql: String, sink: String, cores: Seq[ShardableGateCore],
-      root: String, delivery: String): ShardedGate = {
+  /** The one open step of every gate kind's `create`: check `shards` and
+    * the backend, resolve the gate root and stamp `shards_<G>` on it, build
+    * and bootstrap core k over `<root>/<sub>` (G = 1) or
+    * `<root>/s<k>of<G>/<sub>` (G ≥ 2), stamping `stamp` on each core dir,
+    * then build the loop and register it as transform `name`'s output
+    * function. `core(root, dir, k)` is the kind's core constructor.
+    *
+    * The catalog replays a transform BARE (a callback can't persist): if
+    * that is what createContTransform idempotently returned, the rebind
+    * re-attaches this loop so the gate does not sit silently dead. */
+  private[streaming] def open[C <: ShardableGateCore](eng: ContViewEngine,
+      name: String, selectSql: String, sink: String, storeRoot: String,
+      shards: Int, delivery: String, backend: String, sub: String,
+      stamp: Option[String])(core: (String, String, Int) => C): ShardedGate[C] = {
+    require(shards >= 1, s"gate $name: shards must be >= 1, got $shards")
+    require(shards == 1 || backend != StreamDedupGate.ExecutorBackend,
+      "backend = 'executor' does not compose with shards >= 2")
+    val root = GateStore.gateRoot(storeRoot, name)
+    val sfs = graft.io.StoreFs.forRoot(root)
+    sfs.mkdirs(root)
+    GateStore.stampGeometry(root, s"shards_$shards")
+    val cores = (0 until shards).map { k =>
+      val slice =
+        if (shards == 1) root else GateStore.child(root, s"s${k}of$shards")
+      // the gate spools once, at its root: a per-core spool is no longer
+      // read, so one still holding an undelivered epoch refuses the open
+      if (shards > 1)
+        GateEpochs.refuseOrphanedSpool(GateStore.child(slice, "spool"), name)
+      val dir = GateStore.child(slice, sub)
+      sfs.mkdirs(dir)
+      stamp.foreach(GateStore.stampGeometry(dir, _))
+      val c = core(root, dir, k)
+      c.bootstrap() // resume from a persisted store after an engine restart
+      c
+    }
     val gate = new ShardedGate(eng, name, sink, cores, root, delivery)
     eng.createContTransform(name, selectSql,
       outputFunc = Some(gate.onBatch _), emitChanges = false)

@@ -107,6 +107,9 @@ object SimHashNearDupGate {
     * `selectSql` (must project `orderCol`; `textSql` computes the text the
     * fingerprint hashes) whose not-near-anything-earlier survivors are
     * forwarded to stream `sink` with the fingerprint attached as `fp`.
+    * `shards` = G ≥ 2 key-slices the gate (see [[ShardedGate]]): core k
+    * owns block-combination positions ≡ k (mod G) of the banded key set,
+    * each with its own (bucket, id, fp) store slice + bloom/CMS.
     */
   def create(eng: ContViewEngine, name: String, selectSql: String,
       textSql: String, orderCol: String, sink: String, storeRoot: String,
@@ -117,57 +120,16 @@ object SimHashNearDupGate {
       delivery: String = StreamDedupGate.AtLeastOnce,
       ttlMillis: Long = 0L, ttlColumn: String = "",
       backend: String = StreamDedupGate.DriverBackend,
-      stateParts: Int = 0, residentMb: Long = -1L): SimHashNearDupGate = {
-    val root = GateStore.gateRoot(storeRoot, name)
-    val sfs = graft.io.StoreFs.forRoot(root)
-    sfs.mkdirs(root)
-    GateStore.stampGeometry(root, "shards_1")
-    val dir = GateStore.child(root, "seen_fps")
-    sfs.mkdirs(dir)
+      stateParts: Int = 0, residentMb: Long = -1L,
+      shards: Int = 1): ShardedGate[SimHashNearDupGate] =
     // bucket keys are a pure function of the block split — refuse a
     // silently-mismatched reopen (see GateStore.stampGeometry)
-    GateStore.stampGeometry(dir,
-      s"simhash_k$blocks" + (if (ttlMillis > 0) "_ttl" else ""))
-    val gate = new SimHashNearDupGate(eng, name, textSql, orderCol, dir,
-      maxDist, blocks, bloomP, bloomN, maxBucketSize, compactEvery,
-      ttlMillis = ttlMillis, ttlColumn = ttlColumn,
-      backend = backend, stateParts = stateParts, residentMb = residentMb)
-    gate.bootstrap() // resume from a persisted store after an engine restart
-    ShardedGate.register(eng, name, selectSql, sink, Seq(gate), root, delivery)
-    gate
-  }
-
-  /** The G-core horizontally-sharded form of [[create]] (see
-    * [[ShardedGate]]): core k owns block-combination positions ≡ k
-    * (mod `shards`) of the banded key set, each with its own (bucket, id,
-    * fp) store slice + bloom/CMS. Admitted set identical to the unsharded
-    * gate's; reopening under a different G is refused. */
-  def createSharded(eng: ContViewEngine, name: String, selectSql: String,
-      textSql: String, orderCol: String, sink: String, storeRoot: String,
-      shards: Int, maxDist: Int = 3, blocks: Int = 6,
-      bloomP: Double = 0.01, bloomN: Int = 1 << 20,
-      maxBucketSize: Int = Int.MaxValue,
-      compactEvery: Int = 256,
-      delivery: String = StreamDedupGate.AtLeastOnce,
-      ttlMillis: Long = 0L, ttlColumn: String = "",
-      residentMb: Long = -1L): ShardedGate = {
-    require(shards >= 2, s"use create() for an unsharded gate (shards=$shards)")
-    val root = GateStore.gateRoot(storeRoot, name)
-    val sfs = graft.io.StoreFs.forRoot(root)
-    sfs.mkdirs(root)
-    GateStore.stampGeometry(root, s"shards_$shards")
-    val cores = (0 until shards).map { k =>
-      val dir = GateStore.child(GateStore.child(root, s"s${k}of$shards"), "seen_fps")
-      sfs.mkdirs(dir)
-      GateStore.stampGeometry(dir,
-        s"simhash_k$blocks" + (if (ttlMillis > 0) "_ttl" else ""))
-      val core = new SimHashNearDupGate(eng, name, textSql, orderCol,
-        dir, maxDist, blocks, bloomP, bloomN, maxBucketSize, compactEvery,
-        k, shards, ttlMillis = ttlMillis, ttlColumn = ttlColumn,
-        residentMb = residentMb)
-      core.bootstrap()
-      core
+    ShardedGate.open(eng, name, selectSql, sink, storeRoot, shards, delivery,
+      backend, "seen_fps",
+      Some(s"simhash_k$blocks" + (if (ttlMillis > 0) "_ttl" else ""))) {
+      (_, dir, k) =>
+        new SimHashNearDupGate(eng, name, textSql, orderCol, dir, maxDist,
+          blocks, bloomP, bloomN, maxBucketSize, compactEvery, k, shards,
+          ttlMillis, ttlColumn, backend, stateParts, residentMb)
     }
-    ShardedGate.register(eng, name, selectSql, sink, cores, root, delivery)
-  }
 }

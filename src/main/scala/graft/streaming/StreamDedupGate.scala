@@ -667,6 +667,9 @@ object StreamDedupGate {
     * over the projected columns) whose first-occurrence survivors are
     * forwarded to stream `sink` with the key attached as column `h`.
     * `delivery` ∈ {at_least_once, exactly_once} — see the class contract.
+    * `shards` = G ≥ 2 key-slices the gate (see [[ShardedGate]]): core k
+    * owns the keys with pmod(xxhash64(h), G) = k, each with its own store
+    * + bloom; the admitted set is the unsharded gate's.
     */
   def create(eng: ContViewEngine, name: String, selectSql: String,
       keySql: String, orderCol: String, sink: String,
@@ -676,58 +679,14 @@ object StreamDedupGate {
       delivery: String = AtLeastOnce,
       ttlMillis: Long = 0L, ttlColumn: String = "",
       backend: String = DriverBackend,
-      stateParts: Int = 0): StreamDedupGate = {
-    val root = GateStore.gateRoot(storeRoot, name)
-    val gate = new StreamDedupGate(eng, name, keySql, orderCol,
-      keysDir(root, "seen_keys", ttlMillis), bloomP, bloomN, compactEvery,
-      ttlMillis, ttlColumn, backend, stateParts)
-    gate.bootstrap() // resume from a persisted store after an engine restart
-    ShardedGate.register(eng, name, selectSql, sink, Seq(gate), root, delivery)
-    gate
-  }
-
-  /** The G-core horizontally-sharded form of [[create]] (see
-    * [[ShardedGate]]): core k owns the keys with pmod(xxhash64(h), G) = k,
-    * each with its own store + bloom; the batch is collected, spooled and
-    * forwarded once. Admitted set identical to the unsharded gate's;
-    * reopening under a different G is refused. */
-  def createSharded(eng: ContViewEngine, name: String, selectSql: String,
-      keySql: String, orderCol: String, sink: String, storeRoot: String,
-      shards: Int,
-      bloomP: Double = 0.01, bloomN: Int = 1 << 17,
-      compactEvery: Int = 256,
-      delivery: String = AtLeastOnce,
-      ttlMillis: Long = 0L, ttlColumn: String = ""): ShardedGate = {
-    require(shards >= 2, s"use create() for an unsharded gate (shards=$shards)")
-    val root = GateStore.gateRoot(storeRoot, name)
-    val cores = (0 until shards).map { k =>
-      val coreDir = s"s${k}of$shards"
-      // the gate spools once, at its root: a per-core spool is no longer
-      // read, so one still holding an undelivered epoch refuses the open
-      GateEpochs.refuseOrphanedSpool(
-        GateStore.child(GateStore.child(root, coreDir), "spool"), name)
-      val core = new StreamDedupGate(eng, name, keySql, orderCol,
-        keysDir(root, s"$coreDir/seen_keys", ttlMillis, shards), bloomP,
-        bloomN, compactEvery, ttlMillis, ttlColumn, shardId = k,
-        shardCount = shards)
-      core.bootstrap()
-      core
+      stateParts: Int = 0, shards: Int = 1): ShardedGate[StreamDedupGate] =
+    // the windowed store carries (h, ts), the plain one (h) — a mode flip
+    // over an existing store is refused, not silently misread
+    ShardedGate.open(eng, name, selectSql, sink, storeRoot, shards, delivery,
+      backend, "seen_keys",
+      Some(if (ttlMillis > 0) "dedup_windowed" else "dedup")) { (_, dir, k) =>
+      new StreamDedupGate(eng, name, keySql, orderCol, dir, bloomP, bloomN,
+        compactEvery, ttlMillis, ttlColumn, backend, stateParts,
+        shardId = k, shardCount = shards)
     }
-    ShardedGate.register(eng, name, selectSql, sink, cores, root, delivery)
-  }
-
-  /** Create (or reopen) a seen-key store dir under gate root `root`,
-    * stamping the shard count on the root and the store shape on the dir:
-    * the windowed store carries (h, ts), the plain one (h) — a mode flip
-    * over an existing store is refused, not silently misread. */
-  private def keysDir(root: String, sub: String, ttlMillis: Long,
-      shards: Int = 1): String = {
-    val sfs = graft.io.StoreFs.forRoot(root)
-    sfs.mkdirs(root)
-    GateStore.stampGeometry(root, s"shards_$shards")
-    val dir = GateStore.child(root, sub)
-    sfs.mkdirs(dir)
-    GateStore.stampGeometry(dir, if (ttlMillis > 0) "dedup_windowed" else "dedup")
-    dir
-  }
 }

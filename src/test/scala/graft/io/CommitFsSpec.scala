@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
-import graft.streaming.StreamDedupGate
+import graft.streaming.{ShardedGate, StreamDedupGate}
 
 /** The storage commit-point seam. Two things are pinned here: the local
   * implementation's primitive semantics, and — the point of the seam —
@@ -89,7 +89,7 @@ class CommitFsSpec extends AnyFunSuite {
     try {
       val root = Files.createTempDirectory("graft_cfs_eo").toString
       val schema = Seq((0L, "x")).toDF("id", "body").schema
-      def build(suffix: String): (ContViewEngine, StreamDedupGate) = {
+      def build(suffix: String): (ContViewEngine, ShardedGate[StreamDedupGate]) = {
         val eng = new ContViewEngine(spark, s"$root/eng$suffix")
         eng.createStream("f_in", schema)
         eng.createStream("f_out", org.apache.spark.sql.types.StructType(

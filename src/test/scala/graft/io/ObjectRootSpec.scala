@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
-import graft.streaming.{GateStore, SimHashNearDupGate, StreamDedupGate}
+import graft.streaming.{GateStore, ShardedGate, SimHashNearDupGate, StreamDedupGate}
 
 /** The THIRD root flavor (round 18): engine and gate stores on a
   * REGISTERED OBJECT-STORE SCHEME — `graftmem://…` roots whose metadata
@@ -132,7 +132,7 @@ class ObjectRootSpec extends AnyFunSuite {
   private val gSchema = Seq((0L, "x")).toDF("id", "body").schema
 
   private def buildGate(root: String,
-      engSuffix: String): (ContViewEngine, StreamDedupGate) = {
+      engSuffix: String): (ContViewEngine, ShardedGate[StreamDedupGate]) = {
     val eng = new ContViewEngine(spark, s"$root/eng$engSuffix")
     eng.createStream("g_in", gSchema)
     eng.createStream("g_out", StructType(
@@ -214,7 +214,7 @@ class ObjectRootSpec extends AnyFunSuite {
   test("near-dup (simhash) gate on the object root: suppression, driver-" +
       "direct parquet-mr appends, compaction fold, restart bootstrap") {
     val root = objRoot("nd")
-    def mk(suffix: String): (ContViewEngine, SimHashNearDupGate) = {
+    def mk(suffix: String): (ContViewEngine, ShardedGate[SimHashNearDupGate]) = {
       val eng = new ContViewEngine(spark, s"$root/eng$suffix")
       eng.createStream("n_in", gSchema)
       eng.createStream("n_out", StructType(

@@ -66,7 +66,7 @@ class ContaminationGateSpec extends AnyFunSuite {
   private def runGate(root: String, engSuffix: String, ref: DataFrame,
       batches: Seq[DataFrame],
       backend: String = StreamDedupGate.DriverBackend)
-      : (ContViewEngine, ContaminationGate) = {
+      : (ContViewEngine, ShardedGate[ContaminationGate]) = {
     val eng = new ContViewEngine(spark, root + "/eng" + engSuffix)
     val schema = Seq((0L, "x")).toDF("id", "body").schema
     eng.createStream("d_in", schema)
@@ -137,9 +137,9 @@ class ContaminationGateSpec extends AnyFunSuite {
       Seq(stream.where(col("id") < 120)),
       backend = StreamDedupGate.ExecutorBackend)
     assert(admitted(e1) === expected.filter(_ < 120L))
-    assert(g1.driverBloomForSpec == null,
+    assert(g1.cores(0).driverBloomForSpec == null,
       "executor backend must build NO driver bloom")
-    assert(g1.executorSeen != null && g1.executorSeen.parts === 3)
+    assert(g1.cores(0).executorSeen != null && g1.cores(0).executorSeen.parts === 3)
     // "crash" + restart with an EMPTY reference frame: the persisted store
     // must feed the new incarnation's shard rebuild, not a re-seed
     val (e2, _) = runGate(root, "y", ref.where(lit(false)),
@@ -292,11 +292,11 @@ class ContaminationGateSpec extends AnyFunSuite {
       x
     })
     val failing = spark.range(1).select(boom(col("id")).as("id"), lit("t").as("body"))
-    intercept[Exception] { g.commitRecovered(failing, 5L) }
+    intercept[Exception] { g.cores(0).commitRecovered(failing, 5L) }
     // the SAME epoch recovers on retry — its ids must land in the window
-    g.commitRecovered(Seq((500L, "t"), (501L, "t")).toDF("id", "body"), 5L)
+    g.cores(0).commitRecovered(Seq((500L, "t"), (501L, "t")).toDF("id", "body"), 5L)
     val sup = new java.util.HashSet[Any]()
-    g.retrySuppress(Seq((500L, "t"), (502L, "t")).toDF("id", "body"), sup)
+    g.cores(0).retrySuppress(Seq((500L, "t"), (502L, "t")).toDF("id", "body"), sup)
     assert(sup.contains(500L) && !sup.contains(502L),
       s"the retried epoch's ids must be window-suppressed, got $sup")
   }

@@ -55,7 +55,7 @@ class CosineNearDupGateSpec extends AnyFunSuite {
   }
 
   private def runGate(root: String, engSuffix: String,
-      bounds: Seq[(Long, Long)]): (ContViewEngine, CosineNearDupGate) = {
+      bounds: Seq[(Long, Long)]): (ContViewEngine, ShardedGate[CosineNearDupGate]) = {
     val eng = new ContViewEngine(spark, root + "/eng" + engSuffix)
     val schema = corpus.schema
     eng.createStream("c_in", schema)

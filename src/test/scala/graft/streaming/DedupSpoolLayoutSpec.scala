@@ -90,7 +90,7 @@ class DedupSpoolLayoutSpec extends AnyFunSuite {
     val eng = new ContViewEngine(spark, root.resolve("eng").toString)
     eng.createStream("p_in", inSchema)
     eng.createStream("p_out", outSchema)
-    def open() = StreamDedupGate.createSharded(eng, "p_gate",
+    def open() = StreamDedupGate.create(eng, "p_gate",
       "SELECT id, body FROM p_in", keySql = "md5(body)", orderCol = "id",
       sink = "p_out", storeRoot = root.resolve("gate").toString, shards = 2,
       delivery = StreamDedupGate.ExactlyOnce)

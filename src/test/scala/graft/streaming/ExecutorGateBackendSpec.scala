@@ -43,7 +43,7 @@ class ExecutorGateBackendSpec extends AnyFunSuite {
   private def runGate(root: String, engSuffix: String, backend: String,
       batches: Seq[DataFrame], ttl: Boolean = false,
       compactBetween: Boolean = false,
-      storeSuffix: String = null): (ContViewEngine, SimHashNearDupGate) = {
+      storeSuffix: String = null): (ContViewEngine, ShardedGate[SimHashNearDupGate]) = {
     val stSuffix = if (storeSuffix == null) engSuffix else storeSuffix
     val eng = new ContViewEngine(spark, s"$root/eng$engSuffix")
     val schema0 = Seq((0L, "x")).toDF("id", "body").schema
@@ -173,10 +173,10 @@ class ExecutorGateBackendSpec extends AnyFunSuite {
       sink = "xh_out", storeRoot = s"$root/gate", maxDist = 3,
       backend = StreamDedupGate.ExecutorBackend, stateParts = 5)
     eng.insertInto("xh_in", batches(0))
-    g.executorIndex.poisonShard(2)
+    g.cores(0).executorIndex.poisonShard(2)
     eng.insertInto("xh_in", batches(1)) // heals via rebuild, then decides
-    g.executorIndex.poisonShard(0)
-    g.executorIndex.poisonShard(4)
+    g.cores(0).executorIndex.poisonShard(0)
+    g.cores(0).executorIndex.poisonShard(4)
     eng.insertInto("xh_in", batches(2))
     assert(eng.overlay("v_xh").collect().map(_.getLong(0)).toSet === expected,
       "self-healed shards must decide identically")
@@ -230,7 +230,7 @@ class ExecutorGateBackendSpec extends AnyFunSuite {
     // windowed re-admission schedule — both must match the driver backend
     // bit-for-bit with NO driver bloom at all
     def b(rows: (Long, String)*) = rows.toDF("id", "k")
-    def run(backend: String, root: String): (ContViewEngine, StreamDedupGate) = {
+    def run(backend: String, root: String): (ContViewEngine, ShardedGate[StreamDedupGate]) = {
       val eng = new ContViewEngine(spark, s"$root/eng${backend.take(1)}")
       val schema = Seq((0L, "x")).toDF("id", "k").schema
       eng.createStream("xd_in", schema)
@@ -480,17 +480,17 @@ class ExecutorGateBackendSpec extends AnyFunSuite {
     val c = corpus(60)
     val rD = java.nio.file.Files.createTempDirectory("graft_xnb_d").toString
     val (_, gD) = runGate(rD, "d", StreamDedupGate.DriverBackend, Seq(c))
-    assert(gD.driverBloomForSpec != null, "driver backend must keep its bloom")
+    assert(gD.cores(0).driverBloomForSpec != null, "driver backend must keep its bloom")
     val rX = java.nio.file.Files.createTempDirectory("graft_xnb_x").toString
     val (_, gX) = runGate(rX, "x1", StreamDedupGate.ExecutorBackend,
       Seq(c.where(col("id") < 30)), compactBetween = true,
       storeSuffix = "shared")
-    assert(gX.driverBloomForSpec == null,
+    assert(gX.cores(0).driverBloomForSpec == null,
       "simhash executor backend must hold no driver bloom")
     // restart on the same store: bootstrap must not rebuild a bloom either
     val (e2, g2) = runGate(rX, "x2", StreamDedupGate.ExecutorBackend,
       Seq(c.where(col("id") >= 30)), storeSuffix = "shared")
-    assert(g2.driverBloomForSpec == null,
+    assert(g2.cores(0).driverBloomForSpec == null,
       "bootstrap on the executor backend must not rebuild a driver bloom")
     assert(admitted(e2).nonEmpty)
     // split-store family: same invariant on the jaccard gate
@@ -506,7 +506,7 @@ class ExecutorGateBackendSpec extends AnyFunSuite {
     engJ.insertInto("xnb_in",
       (0 until 20).map(i => (i.toLong,
         (0 until 30).map(j => s"n${i}t$j").mkString(" "))).toDF("id", "body"))
-    assert(gJ.driverBloomForSpec == null,
+    assert(gJ.cores(0).driverBloomForSpec == null,
       "jaccard executor backend must hold no driver bloom")
   }
 
@@ -528,7 +528,7 @@ class ExecutorGateBackendSpec extends AnyFunSuite {
       (0 until 30).map(j => s"u${i}t$j").mkString(" "))).toDF("id", "body")
     (0 until 6).foreach(b => eng.insertInto("xpd_in", uniq(b * 10, b * 10 + 10)))
     g.drainCommits() // join the deferred commit of the last batch
-    val pool = g.executorPayloads
+    val pool = g.cores(0).executorPayloads
     assert(pool != null)
     assert(pool.pendingDepthForSpec <= 1,
       s"payload deltas accumulated on the driver (depth ${pool.pendingDepthForSpec})")

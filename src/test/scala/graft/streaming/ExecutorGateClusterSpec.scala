@@ -69,7 +69,7 @@ class ExecutorGateClusterSpec extends AnyFunSuite {
 
   private def runSimhash(root: String, engSuffix: String, backend: String,
       batches: Seq[DataFrame],
-      storeSuffix: String = null): (ContViewEngine, SimHashNearDupGate) = {
+      storeSuffix: String = null): (ContViewEngine, ShardedGate[SimHashNearDupGate]) = {
     val st = if (storeSuffix == null) engSuffix else storeSuffix
     val eng = new ContViewEngine(spark, s"$root/eng$engSuffix")
     val schema = Seq((0L, "x")).toDF("id", "body").schema
@@ -106,8 +106,8 @@ class ExecutorGateClusterSpec extends AnyFunSuite {
     // for this gate's store (on local[n] these registries coincide)
     assert(ExecutorGateState.registeredUnder(s"$r2/gate_x") === 0,
       "shards must live in the executor JVMs, not the driver registry")
-    assert(g2.driverBloomForSpec == null)
-    assert(g2.executorIndex.totalEntries > 0L,
+    assert(g2.cores(0).driverBloomForSpec == null)
+    assert(g2.cores(0).executorIndex.totalEntries > 0L,
       "executor-resident shards must hold the exploded store")
   }
 
@@ -182,8 +182,8 @@ class ExecutorGateClusterSpec extends AnyFunSuite {
       eng.insertInto("xj_in", c.where(col("id") >= 30))
       if (backend == StreamDedupGate.ExecutorBackend) {
         g.drainCommits()
-        assert(g.executorPayloads != null &&
-          g.executorPayloads.pendingDepthForSpec <= 1)
+        assert(g.cores(0).executorPayloads != null &&
+          g.cores(0).executorPayloads.pendingDepthForSpec <= 1)
         assert(ExecutorGateState.registeredUnder(s"$root/gate") === 0,
           "payload pool shards must live in the executor JVMs too")
       }
@@ -213,7 +213,7 @@ class ExecutorGateClusterSpec extends AnyFunSuite {
     val c60 = corpus(60)
     eng.insertInto("xg_in", c60.where(col("id") < 30))
     eng.insertInto("xg_in", c60.where(col("id") >= 30))
-    assert(g.executorIndex.totalEntries > 0L)
+    assert(g.cores(0).executorIndex.totalEntries > 0L)
     val gateDir = java.nio.file.Paths.get(root, "xg_gate")
       .toAbsolutePath.toString
     // probe every executor JVM's registry: one instantaneous task per core
@@ -256,7 +256,7 @@ class ExecutorGateClusterSpec extends AnyFunSuite {
     val c = corpus(40)
     eng.insertInto("xl_in", c.where(col("id") < 20))
     eng.insertInto("xl_in", c.where(col("id") >= 20))
-    assert(g.executorIndex.totalEntries > 0L)
+    assert(g.cores(0).executorIndex.totalEntries > 0L)
     // a second gate (DDL-declared: the graft_gate_stats relation lists
     // catalog gates) stays live so the stats view has rows to stamp
     eng.sql("""CREATE VIEW xl_live WITH (action = transform, sink = 'xl_out',
@@ -303,7 +303,7 @@ class ExecutorGateClusterSpec extends AnyFunSuite {
       backend = StreamDedupGate.ExecutorBackend, stateParts = 4)
     eng.insertInto("xh_in", c.where(col("id") < 20))
     eng.insertInto("xh_in", c.where(col("id") >= 20))
-    assert(g2.executorIndex.totalEntries > 0L)
+    assert(g2.cores(0).executorIndex.totalEntries > 0L)
     eng.dropContTransform("xh_gate") // true executor count: full sweep
     assert(ExecutorGateState.pendingRemoteDrops === 0L,
       "a full-cluster sweep must clear previously-pending drops")
@@ -383,7 +383,7 @@ class ExecutorGateClusterSpec extends AnyFunSuite {
       eng.insertInto("xm_in", stream.where(col("id") < 130))
       eng.insertInto("xm_in", stream.where(col("id") >= 130))
       if (backend == StreamDedupGate.ExecutorBackend) {
-        assert(g.driverBloomForSpec == null)
+        assert(g.cores(0).driverBloomForSpec == null)
         assert(ExecutorGateState.registeredUnder(s"$root/gate") === 0,
           "reference shards must live in the executor JVMs, not the driver")
       }

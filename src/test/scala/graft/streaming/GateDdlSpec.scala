@@ -46,7 +46,7 @@ class GateDdlSpec extends AnyFunSuite {
     // force a lost deferred commit: arm the gate's one commit pipeline —
     // the batch submits one deferred commit for all its cores, so exactly
     // one loss is counted, and the live batch itself must NOT fail
-    val sharded = eng.gateOf("gs_gate").get.asInstanceOf[ShardedGate]
+    val sharded = eng.gateOf("gs_gate").get
     sharded.commitPipeline.failNextTask = true
     eng.sql("INSERT INTO gs_in (id, body) VALUES (5, 'dd')")
     sharded.drainCommits()
@@ -96,7 +96,7 @@ class GateDdlSpec extends AnyFunSuite {
               |SELECT id, body FROM r_in""".stripMargin)
     eng1.sql("""CREATE CONTINUOUS VIEW v_r WITH (changes = false) AS
               |SELECT id FROM r_clean""".stripMargin)
-    val g1 = eng1.gateOf("r_gate").get.asInstanceOf[SimHashNearDupGate]
+    val g1 = eng1.gateOf("r_gate").get.cores(0).asInstanceOf[SimHashNearDupGate]
     assert(!g1.residentStats._1, "resident_mb = 0 must disable the hot tier")
     eng1.sql("INSERT INTO r_in (id, body) VALUES " +
       "(1, 'alpha beta gamma delta'), (2, 'alpha beta gamma delta'), " +
@@ -115,7 +115,7 @@ class GateDdlSpec extends AnyFunSuite {
               |SELECT id, body FROM x_in""".stripMargin)
     eng2.sql("""CREATE CONTINUOUS VIEW v_x WITH (changes = false) AS
               |SELECT id FROM x_clean""".stripMargin)
-    val g2 = eng2.gateOf("x_gate").get.asInstanceOf[SimHashNearDupGate]
+    val g2 = eng2.gateOf("x_gate").get.cores(0).asInstanceOf[SimHashNearDupGate]
     assert(g2.executorIndex != null && !g2.residentStats._1,
       "backend = 'executor' must stand up the distributed index")
     eng2.sql("INSERT INTO x_in (id, body) VALUES " +
@@ -126,7 +126,7 @@ class GateDdlSpec extends AnyFunSuite {
       "the executor backend suppresses across batches")
     // catalog replay carries BOTH options (new engine on the same root)
     val eng3 = new ContViewEngine(spark, root2)
-    val g3 = eng3.gateOf("x_gate").get.asInstanceOf[SimHashNearDupGate]
+    val g3 = eng3.gateOf("x_gate").get.cores(0).asInstanceOf[SimHashNearDupGate]
     assert(g3.executorIndex != null, "replay must restore backend = 'executor'")
     eng3.sql("INSERT INTO x_in (id, body) VALUES (4, 'alpha beta gamma delta')")
     assert(eng3.sql("SELECT id FROM v_x ORDER BY id")
@@ -177,7 +177,7 @@ class GateDdlSpec extends AnyFunSuite {
               |SELECT id, body FROM p_in""".stripMargin)
     eng1.sql("""CREATE CONTINUOUS VIEW v_p WITH (changes = false) AS
               |SELECT id FROM p_clean""".stripMargin)
-    val g1 = eng1.gateOf("p_gate").get.asInstanceOf[SimHashNearDupGate]
+    val g1 = eng1.gateOf("p_gate").get.cores(0).asInstanceOf[SimHashNearDupGate]
     assert(g1.executorIndex.parts === 7, "state_parts must size the shards")
     eng1.sql("INSERT INTO p_in (id, body) VALUES " +
       "(1, 'alpha beta gamma delta'), (2, 'epsilon zeta eta theta')")
@@ -186,7 +186,7 @@ class GateDdlSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq === Seq(1L, 2L))
     // catalog replay restores the shard count
     val eng2 = new ContViewEngine(spark, root)
-    val g2 = eng2.gateOf("p_gate").get.asInstanceOf[SimHashNearDupGate]
+    val g2 = eng2.gateOf("p_gate").get.cores(0).asInstanceOf[SimHashNearDupGate]
     assert(g2.executorIndex.parts === 7, "replay must restore state_parts")
     eng2.sql("INSERT INTO p_in (id, body) VALUES (4, 'alpha beta gamma delta')")
     assert(eng2.sql("SELECT id FROM v_p ORDER BY id")
@@ -241,7 +241,7 @@ class GateDdlSpec extends AnyFunSuite {
     eng.sql("""CREATE VIEW n_gate WITH (action = transform, sink = 'n_clean',
               |  outputfunc = neardup_gate('body', 'id', 3, 5000)) AS
               |SELECT id, body FROM n_in""".stripMargin)
-    assert(eng.gateOf("n_gate").exists(_.isInstanceOf[SimHashNearDupGate]))
+    assert(eng.gateOf("n_gate").exists(_.cores(0).isInstanceOf[SimHashNearDupGate]))
     val e = intercept[IllegalArgumentException] {
       eng.sql("""CREATE VIEW bad_gate WITH (action = transform, sink = 'n_clean',
                 |  outputfunc = dedup_gate('md5(body)')) AS
@@ -285,12 +285,37 @@ class GateDdlSpec extends AnyFunSuite {
     eng.sql("""CREATE VIEW j_gate WITH (action = transform, sink = 'n_clean',
               |  outputfunc = jaccard_gate('body', 'id', 0.9, 1000)) AS
               |SELECT id, body FROM n_in""".stripMargin)
-    assert(eng.gateOf("j_gate").exists(_.isInstanceOf[JaccardNearDupGate]))
+    assert(eng.gateOf("j_gate").exists(_.cores(0).isInstanceOf[JaccardNearDupGate]))
     eng.sql("CREATE STREAM c_in (id int8, embedding array<double>)")
     eng.sql("CREATE STREAM c_clean (id int8, embedding array<double>)")
     eng.sql("""CREATE VIEW c_gate WITH (action = transform, sink = 'c_clean',
               |  outputfunc = cosine_gate('embedding', 'id', 0.98, 16, 500)) AS
               |SELECT id, embedding FROM c_in""".stripMargin)
-    assert(eng.gateOf("c_gate").exists(_.isInstanceOf[CosineNearDupGate]))
+    assert(eng.gateOf("c_gate").exists(_.cores(0).isInstanceOf[CosineNearDupGate]))
+  }
+
+  test("a gate with shards < 1 is refused, by DDL and by the Scala API") {
+    val root = java.nio.file.Files.createTempDirectory("graft_gddl_s0").toString
+    val eng = new ContViewEngine(spark, root)
+    eng.sql("CREATE STREAM z_in (id int8, body text)")
+    eng.sql("CREATE STREAM z_clean (id int8, body text, h text)")
+    val e1 = intercept[IllegalArgumentException] {
+      eng.sql("""CREATE VIEW z_gate WITH (action = transform, sink = 'z_clean',
+                |  outputfunc = dedup_gate('md5(body)', 'id', 0)) AS
+                |SELECT id, body FROM z_in""".stripMargin)
+    }
+    assert(e1.getMessage.contains("shards"), e1.getMessage)
+    assert(eng.gateOf("z_gate").isEmpty, "a refused gate is not registered")
+    val e2 = intercept[IllegalArgumentException] {
+      StreamDedupGate.create(eng, "z_api", "SELECT id, body FROM z_in",
+        keySql = "md5(body)", orderCol = "id", sink = "z_clean",
+        storeRoot = s"$root/gate", shards = 0)
+    }
+    assert(e2.getMessage.contains("shards"), e2.getMessage)
+    // G = 2 still opens, and the DDL catalog records the sharded gate
+    eng.sql("""CREATE VIEW z_gate WITH (action = transform, sink = 'z_clean',
+              |  outputfunc = dedup_gate('md5(body)', 'id', 2)) AS
+              |SELECT id, body FROM z_in""".stripMargin)
+    assert(eng.gateOf("z_gate").map(_.shardCount) === Some(2))
   }
 }

@@ -40,7 +40,7 @@ class GateHadoopRootSpec extends AnyFunSuite {
   /** Engine + counting CV + exactly-once exact gate, everything on the
     * URI root (engine store AND gate store). */
   private def build(root: String,
-      engSuffix: String): (ContViewEngine, StreamDedupGate) = {
+      engSuffix: String): (ContViewEngine, ShardedGate[StreamDedupGate]) = {
     val eng = new ContViewEngine(spark, s"$root/eng$engSuffix")
     eng.createStream("g_in", schema)
     eng.createStream("g_out", org.apache.spark.sql.types.StructType(
@@ -133,7 +133,7 @@ class GateHadoopRootSpec extends AnyFunSuite {
   test("near-dup (simhash) gate on the URI root: suppression, driver-" +
       "direct appends, compaction fold, restart bootstrap") {
     val root = uriRoot("nd")
-    def mk(suffix: String): (ContViewEngine, SimHashNearDupGate) = {
+    def mk(suffix: String): (ContViewEngine, ShardedGate[SimHashNearDupGate]) = {
       val eng = new ContViewEngine(spark, s"$root/eng$suffix")
       eng.createStream("n_in", schema)
       eng.createStream("n_out", org.apache.spark.sql.types.StructType(

@@ -230,8 +230,8 @@ class GateStoreSpec extends AnyFunSuite {
         (0 until 40).map(i => ((b * 40 + i).toLong, s"w-$b-$i")).toDF("id", "body"))
     }
     gate.drainCommits() // the regrow rides the deferred compaction cadence
-    assert(gate.currentBloomN >= 240,
-      s"filter must regrow past 2x the 120-key store, got ${gate.currentBloomN}")
+    assert(gate.cores(0).currentBloomN >= 240,
+      s"filter must regrow past 2x the 120-key store, got ${gate.cores(0).currentBloomN}")
     // regrown-filter behavior: repeats still suppressed, fresh still admitted
     eng.insertInto("bg_in",
       Seq((500L, "w-0-0"), (501L, "w-2-39"), (502L, "fresh")).toDF("id", "body"))

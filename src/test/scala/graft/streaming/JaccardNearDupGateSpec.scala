@@ -66,7 +66,7 @@ class JaccardNearDupGateSpec extends AnyFunSuite {
   }
 
   private def runGate(root: String, engSuffix: String,
-      bounds: Seq[(Long, Long)]): (ContViewEngine, JaccardNearDupGate) = {
+      bounds: Seq[(Long, Long)]): (ContViewEngine, ShardedGate[JaccardNearDupGate]) = {
     val eng = new ContViewEngine(spark, root + "/eng" + engSuffix)
     val schema = Seq((0L, "x")).toDF("id", "body").schema
     eng.createStream("j_in", schema)

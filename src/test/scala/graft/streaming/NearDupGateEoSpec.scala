@@ -41,7 +41,7 @@ class NearDupGateEoSpec extends AnyFunSuite {
 
   // ---- simhash (unsharded) ----------------------------------------------
 
-  private def buildSimhash(root: String, n: String): (ContViewEngine, SimHashNearDupGate) = {
+  private def buildSimhash(root: String, n: String): (ContViewEngine, ShardedGate[SimHashNearDupGate]) = {
     val eng = new ContViewEngine(spark, s"$root/eng$n")
     eng.createStream("n_in", textSchema)
     eng.createStream("n_out", StructType(
@@ -136,7 +136,7 @@ class NearDupGateEoSpec extends AnyFunSuite {
     eng.createStream("c_out", embSchema)
     eng.createContView("v_c", "SELECT id, count(*) AS c FROM c_out GROUP BY id",
       emitChanges = false)
-    val g = CosineNearDupGate.createSharded(eng, "c_gate",
+    val g = CosineNearDupGate.create(eng, "c_gate",
       "SELECT id, embedding FROM c_in", embSql = "embedding", orderCol = "id",
       sink = "c_out", storeRoot = s"$root/gate", threshold = 0.999, dim = 8,
       shards = 2, delivery = StreamDedupGate.ExactlyOnce)
@@ -187,7 +187,7 @@ class NearDupGateEoSpec extends AnyFunSuite {
       emitChanges = false)
     Seq("benchmark question one two three").toDF("text")
       .createOrReplaceTempView("eo_ref2")
-    val g = ContaminationGate.createSharded(eng, "s_gate",
+    val g = ContaminationGate.create(eng, "s_gate",
       "SELECT id, body FROM s_in", textSql = "body", orderCol = "id",
       sink = "s_out", storeRoot = s"$root/gate",
       reference = spark.sql("SELECT text FROM eo_ref2"), shards = 2,
@@ -228,7 +228,7 @@ class NearDupGateEoSpec extends AnyFunSuite {
     Seq("benchmark question one two three").toDF("text")
       .createOrReplaceTempView("eo_ref3")
     val eng1 = build("1")
-    val g1 = ContaminationGate.createSharded(eng1, "r_gate",
+    val g1 = ContaminationGate.create(eng1, "r_gate",
       "SELECT id, body FROM r_in", textSql = "body", orderCol = "id",
       sink = "r_out", storeRoot = s"$root/gate",
       reference = spark.sql("SELECT text FROM eo_ref3"), shards = 2,
@@ -241,7 +241,7 @@ class NearDupGateEoSpec extends AnyFunSuite {
     // construction (re-remembering its ids into the window) and delivers
     // it at the next batch head; the re-fed row is then window-suppressed
     val eng2 = build("2")
-    ContaminationGate.createSharded(eng2, "r_gate",
+    ContaminationGate.create(eng2, "r_gate",
       "SELECT id, body FROM r_in", textSql = "body", orderCol = "id",
       sink = "r_out", storeRoot = s"$root/gate",
       reference = spark.sql("SELECT text FROM eo_ref3").where(lit(false)),

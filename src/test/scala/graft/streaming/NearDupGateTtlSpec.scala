@@ -66,7 +66,7 @@ class NearDupGateTtlSpec extends AnyFunSuite {
   }
 
   private def runSimhashTtl(root: String, batchBounds: Seq[(Long, Long)],
-      compactAfter: Boolean = false): (ContViewEngine, SimHashNearDupGate) = {
+      compactAfter: Boolean = false): (ContViewEngine, ShardedGate[SimHashNearDupGate]) = {
     val eng = new ContViewEngine(spark, s"$root/eng${batchBounds.head._1}")
     val schema = corpus.schema
     eng.createStream("w_in", schema)
@@ -176,7 +176,7 @@ class NearDupGateTtlSpec extends AnyFunSuite {
       (2002L, vec(2), "2024-01-04 00:00:00")  // aged out → admitted
     ).toDF("id", "embedding", "tss")
       .withColumn("ts", col("tss").cast("timestamp")).drop("tss")
-    def build(n: String): (ContViewEngine, CosineNearDupGate) = {
+    def build(n: String): (ContViewEngine, ShardedGate[CosineNearDupGate]) = {
       val eng = new ContViewEngine(spark, s"$root/eng$n")
       eng.createStream("cw_in", rows.schema)
       eng.createStream("cw_out", rows.schema)
@@ -239,11 +239,11 @@ class NearDupGateTtlSpec extends AnyFunSuite {
       (0 until 12).foreach { b =>
         engS.insertInto("w8_in", batchDf(b, 40))
         gs.compact()
-        val (active, _, _, slots, _) = gs.residentStats
+        val (active, _, _, slots, _) = gs.cores(0).residentStats
         if (b == 0) slotsPerBatch = slots
         assert(active, s"simhash tier deactivated at batch $b on dead slots")
       }
-      val (_, _, bytesS, slotsS, _) = gs.residentStats
+      val (_, _, bytesS, slotsS, _) = gs.cores(0).residentStats
       // pre-fix the ts pool accreted one dead slot per stored row forever
       // (12 batches' worth here); post-fix it tracks the live window
       assert(slotsPerBatch > 0 && slotsS <= 2 * slotsPerBatch,
@@ -263,12 +263,12 @@ class NearDupGateTtlSpec extends AnyFunSuite {
       (0 until 12).foreach { b =>
         engJ.insertInto("w9_in", batchDf(b, 40))
         gj.compact()
-        val (active, _, _, slots, poolActive) = gj.residentStats
+        val (active, _, _, slots, poolActive) = gj.cores(0).residentStats
         if (b == 0) jSlotsPerBatch = slots
         assert(active && poolActive,
           s"jaccard tier/pool deactivated at batch $b on dead slots")
       }
-      val (_, _, bytesJ, slotsJ, _) = gj.residentStats
+      val (_, _, bytesJ, slotsJ, _) = gj.cores(0).residentStats
       assert(slotsJ <= 2 * jSlotsPerBatch,
         s"id pool must track the window (slots=$slotsJ, per-batch=$jSlotsPerBatch)")
       assert(bytesJ <= (64L << 10), s"budget accounting must shrink (bytes=$bytesJ)")
@@ -277,7 +277,7 @@ class NearDupGateTtlSpec extends AnyFunSuite {
 
   test("exact gate ttl x exactly_once: windowed admission with crash recovery") {
     val root = java.nio.file.Files.createTempDirectory("graft_wt6").toString
-    def build(n: String): (ContViewEngine, StreamDedupGate) = {
+    def build(n: String): (ContViewEngine, ShardedGate[StreamDedupGate]) = {
       val eng = new ContViewEngine(spark, s"$root/eng$n")
       val schema = Seq((0L, "u", "2024-01-01 00:00:00")).toDF("id", "k", "tss")
         .withColumn("ts", col("tss").cast("timestamp")).drop("tss").schema

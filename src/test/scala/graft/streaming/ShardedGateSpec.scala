@@ -93,14 +93,9 @@ class ShardedGateSpec extends AnyFunSuite {
         e.createStream("sd_out", org.apache.spark.sql.types.StructType(
           schema.fields :+ org.apache.spark.sql.types.StructField("h",
             org.apache.spark.sql.types.StringType)))
-        if (shards == 1)
-          StreamDedupGate.create(e, "sd_gate", "SELECT id, body FROM sd_in",
-            keySql = "md5(body)", orderCol = "id", sink = "sd_out",
-            storeRoot = s"$root/gate")
-        else
-          StreamDedupGate.createSharded(e, "sd_gate", "SELECT id, body FROM sd_in",
-            keySql = "md5(body)", orderCol = "id", sink = "sd_out",
-            storeRoot = s"$root/gate", shards = shards)
+        StreamDedupGate.create(e, "sd_gate", "SELECT id, body FROM sd_in",
+          keySql = "md5(body)", orderCol = "id", sink = "sd_out",
+          storeRoot = s"$root/gate", shards = shards)
         e.createContView("v_sd", "SELECT id FROM sd_out", emitChanges = false)
       }, corpus, splits)
       admittedIds(eng, "v_sd")
@@ -120,14 +115,9 @@ class ShardedGateSpec extends AnyFunSuite {
         e.createStream("sn_out", org.apache.spark.sql.types.StructType(
           schema.fields :+ org.apache.spark.sql.types.StructField("fp",
             org.apache.spark.sql.types.LongType)))
-        if (shards == 1)
-          SimHashNearDupGate.create(e, "sn_gate", "SELECT id, body FROM sn_in",
-            textSql = "body", orderCol = "id", sink = "sn_out",
-            storeRoot = s"$root/gate")
-        else
-          SimHashNearDupGate.createSharded(e, "sn_gate", "SELECT id, body FROM sn_in",
-            textSql = "body", orderCol = "id", sink = "sn_out",
-            storeRoot = s"$root/gate", shards = shards)
+        SimHashNearDupGate.create(e, "sn_gate", "SELECT id, body FROM sn_in",
+          textSql = "body", orderCol = "id", sink = "sn_out",
+          storeRoot = s"$root/gate", shards = shards)
         e.createContView("v_sn", "SELECT id FROM sn_out", emitChanges = false)
       }, corpus, splits)
       admittedIds(eng, "v_sn")
@@ -145,14 +135,9 @@ class ShardedGateSpec extends AnyFunSuite {
       val eng = feedWithRestart(root, "sj_in", { e =>
         e.createStream("sj_in", schema)
         e.createStream("sj_out", schema)
-        if (shards == 1)
-          JaccardNearDupGate.create(e, "sj_gate", "SELECT id, body FROM sj_in",
-            textSql = "body", orderCol = "id", sink = "sj_out",
-            storeRoot = s"$root/gate", threshold = 0.6)
-        else
-          JaccardNearDupGate.createSharded(e, "sj_gate", "SELECT id, body FROM sj_in",
-            textSql = "body", orderCol = "id", sink = "sj_out",
-            storeRoot = s"$root/gate", threshold = 0.6, shards = shards)
+        JaccardNearDupGate.create(e, "sj_gate", "SELECT id, body FROM sj_in",
+          textSql = "body", orderCol = "id", sink = "sj_out",
+          storeRoot = s"$root/gate", threshold = 0.6, shards = shards)
         e.createContView("v_sj", "SELECT id FROM sj_out", emitChanges = false)
       }, corpus, splits)
       admittedIds(eng, "v_sj")
@@ -170,16 +155,10 @@ class ShardedGateSpec extends AnyFunSuite {
       val eng = feedWithRestart(root, "sc_in", { e =>
         e.createStream("sc_in", schema)
         e.createStream("sc_out", schema)
-        if (shards == 1)
-          CosineNearDupGate.create(e, "sc_gate", "SELECT id, embedding FROM sc_in",
-            embSql = "embedding", orderCol = "id", sink = "sc_out",
-            storeRoot = s"$root/gate", threshold = 0.97, dim = dim,
-            numTables = 6, bitsPerTable = 8)
-        else
-          CosineNearDupGate.createSharded(e, "sc_gate", "SELECT id, embedding FROM sc_in",
-            embSql = "embedding", orderCol = "id", sink = "sc_out",
-            storeRoot = s"$root/gate", threshold = 0.97, dim = dim, shards = shards,
-            numTables = 6, bitsPerTable = 8)
+        CosineNearDupGate.create(e, "sc_gate", "SELECT id, embedding FROM sc_in",
+          embSql = "embedding", orderCol = "id", sink = "sc_out",
+          storeRoot = s"$root/gate", threshold = 0.97, dim = dim, shards = shards,
+          numTables = 6, bitsPerTable = 8)
         e.createContView("v_sc", "SELECT id FROM sc_out", emitChanges = false)
       }, corpus, splits)
       admittedIds(eng, "v_sc")
@@ -198,14 +177,9 @@ class ShardedGateSpec extends AnyFunSuite {
       val eng = feedWithRestart(root, "sx_in", { e =>
         e.createStream("sx_in", schema)
         e.createStream("sx_out", schema)
-        if (shards == 1)
-          ContaminationGate.create(e, "sx_gate", "SELECT id, body FROM sx_in",
-            textSql = "body", orderCol = "id", sink = "sx_out",
-            storeRoot = s"$root/gate", reference = reference)
-        else
-          ContaminationGate.createSharded(e, "sx_gate", "SELECT id, body FROM sx_in",
-            textSql = "body", orderCol = "id", sink = "sx_out",
-            storeRoot = s"$root/gate", reference = reference, shards = shards)
+        ContaminationGate.create(e, "sx_gate", "SELECT id, body FROM sx_in",
+          textSql = "body", orderCol = "id", sink = "sx_out",
+          storeRoot = s"$root/gate", reference = reference, shards = shards)
         e.createContView("v_sx", "SELECT id FROM sx_out", emitChanges = false)
       }, corpus, splits)
       admittedIds(eng, "v_sx")
@@ -224,7 +198,7 @@ class ShardedGateSpec extends AnyFunSuite {
       e.createStream("se_out", org.apache.spark.sql.types.StructType(
         schema.fields :+ org.apache.spark.sql.types.StructField("h",
           org.apache.spark.sql.types.StringType)))
-      StreamDedupGate.createSharded(e, "se_gate", "SELECT id, body FROM se_in",
+      StreamDedupGate.create(e, "se_gate", "SELECT id, body FROM se_in",
         keySql = "md5(body)", orderCol = "id", sink = "se_out",
         storeRoot = s"$root/gate", shards = 3,
         delivery = StreamDedupGate.ExactlyOnce)
@@ -248,7 +222,7 @@ class ShardedGateSpec extends AnyFunSuite {
     eng.createStream("sg_out", org.apache.spark.sql.types.StructType(
       schema.fields :+ org.apache.spark.sql.types.StructField("h",
         org.apache.spark.sql.types.StringType)))
-    StreamDedupGate.createSharded(eng, "sg_gate", "SELECT id, body FROM sg_in",
+    StreamDedupGate.create(eng, "sg_gate", "SELECT id, body FROM sg_in",
       keySql = "md5(body)", orderCol = "id", sink = "sg_out",
       storeRoot = s"$root/gate", shards = 2)
     val eng2 = new ContViewEngine(spark, s"$root/eng2")
@@ -257,7 +231,7 @@ class ShardedGateSpec extends AnyFunSuite {
       schema.fields :+ org.apache.spark.sql.types.StructField("h",
         org.apache.spark.sql.types.StringType)))
     val e = intercept[IllegalArgumentException] {
-      StreamDedupGate.createSharded(eng2, "sg_gate", "SELECT id, body FROM sg_in",
+      StreamDedupGate.create(eng2, "sg_gate", "SELECT id, body FROM sg_in",
         keySql = "md5(body)", orderCol = "id", sink = "sg_out",
         storeRoot = s"$root/gate", shards = 4)
     }
@@ -275,7 +249,7 @@ class ShardedGateSpec extends AnyFunSuite {
     eng.sql("""CREATE VIEW dg_gate WITH (action = transform, sink = 'dg_out',
               |  outputfunc = dedup_gate('md5(body)', 'id', 3)) AS
               |SELECT id, body FROM dg_in""".stripMargin)
-    assert(eng.gateOf("dg_gate").exists(_.isInstanceOf[ShardedGate]))
+    assert(eng.gateOf("dg_gate").exists(_.shardCount == 3))
     eng.createContView("v_dg", "SELECT id FROM dg_out", emitChanges = false)
     eng.insertInto("dg_in", Seq((1L, "aa"), (2L, "bb"), (3L, "aa")).toDF("id", "body"))
     eng.insertInto("dg_in", Seq((4L, "bb"), (5L, "cc")).toDF("id", "body"))

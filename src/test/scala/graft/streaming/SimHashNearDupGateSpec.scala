@@ -153,7 +153,7 @@ class SimHashNearDupGateSpec extends AnyFunSuite {
   test("restart: re-created gate resumes from the fingerprint store") {
     val root = java.nio.file.Files.createTempDirectory("graft_ndgate_rs").toString
     val schema = Seq((0L, "x")).toDF("id", "body").schema
-    def build(i: Int): (ContViewEngine, SimHashNearDupGate) = {
+    def build(i: Int): (ContViewEngine, ShardedGate[SimHashNearDupGate]) = {
       val eng = new ContViewEngine(spark, root + s"/eng$i")
       eng.createStream("rr_in", schema)
       eng.createStream("rr_out", org.apache.spark.sql.types.StructType(

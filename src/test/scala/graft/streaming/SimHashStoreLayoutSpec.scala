@@ -81,7 +81,7 @@ class SimHashStoreLayoutSpec extends AnyFunSuite {
           textSql = "body", orderCol = "id", sink = "l_out", storeRoot = copy,
           ttlMillis = if (ttl) 24L * 3600 * 1000 else 0L,
           ttlColumn = if (ttl) "ts" else "")
-        assert(g.residentStats._1 === budget.isEmpty)
+        assert(g.cores(0).residentStats._1 === budget.isEmpty)
         eng.insertInto("l_in", batch)
         eng.overlay("v_l").collect().map(_.getLong(0)).toSet
       } finally ResidentIndex.budgetOverride = None

@@ -34,7 +34,7 @@ class StreamDedupGateEoSpec extends AnyFunSuite {
   /** Engine + counting CV + exactly-once gate (API form so the test can
     * reach the failpoint hook). CV created BEFORE the gate so a recovery
     * delivery during bootstrap lands in it. */
-  private def build(root: String, engSuffix: String): (ContViewEngine, StreamDedupGate) = {
+  private def build(root: String, engSuffix: String): (ContViewEngine, ShardedGate[StreamDedupGate]) = {
     val eng = new ContViewEngine(spark, s"$root/eng$engSuffix")
     eng.createStream("e_in", schema)
     eng.createStream("e_out", org.apache.spark.sql.types.StructType(
@@ -242,7 +242,7 @@ class StreamDedupGateEoSpec extends AnyFunSuite {
     eng.sql("""CREATE VIEW se_gate WITH (action = transform, sink = 'se_out',
               |  outputfunc = dedup_gate('md5(body)', 'id', 2, 'exactly_once')) AS
               |SELECT id, body FROM se_in""".stripMargin)
-    assert(eng.gateOf("se_gate").exists(_.isInstanceOf[ShardedGate]))
+    assert(eng.gateOf("se_gate").exists(_.shardCount == 2))
     eng.insertInto("se_in", b((1L, "aa"), (2L, "bb"), (3L, "aa")))
     eng.insertInto("se_in", b((4L, "bb"), (5L, "cc")))
     assert(eng.overlay("v_se").collect()

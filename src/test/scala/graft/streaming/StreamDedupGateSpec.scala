@@ -193,7 +193,7 @@ class StreamDedupGateSpec extends AnyFunSuite {
     val schema = Seq((0L, "x")).toDF("id", "body").schema
     // fresh engine root per incarnation: the ENGINE's own replay is covered
     // by q_cv_restart; what must survive here is only the gate's store dir
-    def build(i: Int): (ContViewEngine, StreamDedupGate) = {
+    def build(i: Int): (ContViewEngine, ShardedGate[StreamDedupGate]) = {
       val eng = new ContViewEngine(spark, root + s"/eng$i")
       eng.createStream("r_in", schema)
       eng.createStream("r_out", org.apache.spark.sql.types.StructType(
@@ -236,7 +236,7 @@ class StreamDedupGateSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_gate_ts").toString
     val ts = (s: String) => java.sql.Timestamp.valueOf(s)
     val schema = Seq((0L, ts("2026-01-01 00:00:00"))).toDF("id", "ts").schema
-    def build(i: Int): (ContViewEngine, StreamDedupGate) = {
+    def build(i: Int): (ContViewEngine, ShardedGate[StreamDedupGate]) = {
       val eng = new ContViewEngine(spark, root + s"/eng$i")
       eng.createStream("t_in", schema)
       eng.createStream("t_out", org.apache.spark.sql.types.StructType(
@@ -264,7 +264,7 @@ class StreamDedupGateSpec extends AnyFunSuite {
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def at(min: Long) = new java.sql.Timestamp(t0.getTime + min * 60000L)
     val schema = Seq((0L, "x", t0)).toDF("id", "k", "ts").schema
-    def build(i: Int): (ContViewEngine, StreamDedupGate) = {
+    def build(i: Int): (ContViewEngine, ShardedGate[StreamDedupGate]) = {
       val eng = new ContViewEngine(spark, root + s"/eng$i")
       eng.createStream("w_in", schema)
       eng.createStream("w_out", org.apache.spark.sql.types.StructType(
