@@ -45,8 +45,23 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * small-state merge run in one task each, so the shuffle partitions serve
     * larger batches and large-state merges only. The caller's session keeps
     * its own settings for ad-hoc reads of overlays/state.
+    *
+    * Small micro-batch work runs on [[interp]], the same settings with
+    * codegen off: an aggregating commit whose batch fits the worker
+    * (sizedToWorker) into an empty store or a small one under
+    * `StateStore.InterpretedStateBytes` (its partial aggregate, small merge
+    * and changes emit), an append commit whose batch fits the worker, and
+    * every read, cache, tick and reap of such a small store. One
+    * insert/read/tick cycle over a few CVs plans about 100 distinct
+    * generated classes; Spark's codegen cache holds 100 in four LRU
+    * segments, and the per-call timestamp literals never hit it, so on the
+    * codegen session a steady-state insert into five small CVs recompiled
+    * 77–86 classes (1.3–1.9 s). Large
+    * stores, larger batches, append-store reads, gates and batch queries
+    * keep whole-stage codegen, which pays for its compile time there
+    * (DESIGN_NOTES "Interpreted small micro-batches").
     */
-  private val exec: SparkSession = {
+  private def ingestSession(interpreted: Boolean): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", ingestShufflePartitions.toString)
     s.conf.set("spark.sql.adaptive.enabled", "false")
@@ -54,8 +69,17 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     // reaper's bucket pruning reads footer min/max statistics of the ttl
     // column, and INT96 columns have none
     s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    if (interpreted) {
+      // both: with whole-stage codegen off alone, the operators' own
+      // projections, predicates and orderings still compile per class
+      s.conf.set("spark.sql.codegen.wholeStage", "false")
+      s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    }
+    graft.functions.GraftFunctions.register(s)
     s
   }
+  private val exec: SparkSession = ingestSession(interpreted = false)
+  private val interp: SparkSession = ingestSession(interpreted = true)
 
   final case class StreamDef(name: String, schema: StructType,
       leafIds: Seq[org.apache.spark.sql.catalyst.expressions.ExprId])
@@ -84,7 +108,6 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
   private val defs = mutable.HashMap.empty[String, String]
 
   graft.functions.GraftFunctions.register(spark)
-  graft.functions.GraftFunctions.register(exec)
   loadCatalog()
 
   // ---- catalog persistence (reference pipelinedb.cont_query +
@@ -514,7 +537,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * stream schema as an empty relation so CV SQL analyzes against it.
     * `arrival_timestamp` is appended implicitly (pipeline_stream.c:101-132).
     */
-  def createStream(name0: String, schema: StructType): Unit = {
+  def createStream(name0: String, schema: StructType): Unit = synchronized {
     val name = normalizeName(name0, "stream")
     // streams accept NULLs in any column (missing INSERT fields default to
     // NULL — stream_fdw.c:270-438), and batches often arrive from parquet
@@ -725,8 +748,10 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     parts.mkString("'")
   }
 
+  // runs under the engine lock, like drop and rename: creates mutate the
+  // routing maps that insertInto and the readers snapshot under it
   private def idempotent[H](name: String, signature: String)(create: => H): Option[H] =
-    defSignatures.get(name) match {
+    synchronized(defSignatures.get(name) match {
       case Some(existing) =>
         require(existing == signature,
           s"continuous query '$name' already exists with a different definition")
@@ -738,7 +763,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
         // fail looking up a handle that was never registered
         try Some(create)
         catch { case t: Throwable => defSignatures.remove(name); throw t }
-    }
+    })
 
   /** CREATE VIEW name WITH (action=materialize, ...) AS selectSql.
     * Re-creating an existing view with the same definition is a no-op;
@@ -779,7 +804,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       val store = new StateStore(exec, s"$root/$name/state", plan.stateKeys,
         numBuckets = math.max(8, ingestShufflePartitions),
         smallStateBytes = smallStateBytes, appendOnly = plan.append,
-        maxAppendSegments = maxAppendSegments)
+        maxAppendSegments = maxAppendSegments, smallSpark = interp)
       store.clusterBy = defaultClusterBy(plan)
       val handle = CvHandle(plan, store, streamName, changes = emitChanges)
       views(name) = handle
@@ -802,7 +827,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
         options.pk.getOrElse(""), changes = emitChanges))
       defs(name) = selectSql
       handle
-    }.getOrElse(views(name))
+    }.getOrElse(viewOf(name))
   }
 
   /** ALTER VIEW name RENAME TO newName (cont_alter.sql:5): the view answers
@@ -986,7 +1011,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
         sink.getOrElse(""), changes = emitChanges))
       defs(name) = selectSql
       handle
-    }.getOrElse(transforms(name))
+    }.getOrElse(synchronized(transforms(name)))
   }
 
   /** Re-attach an output callback to a registered transform. A Scala-API
@@ -1193,13 +1218,17 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * active flag in its cont_query catalog row).
     */
   def activate(name: String): Unit = {
-    views.get(name).foreach(h => views(name) = h.copy(active = true))
-    transforms.get(name).foreach(h => transforms(name) = h.copy(active = true))
+    synchronized {
+      views.get(name).foreach(h => views(name) = h.copy(active = true))
+      transforms.get(name).foreach(h => transforms(name) = h.copy(active = true))
+    }
     appendCatalog(CatalogEntry("activate", name, "", "", "", 0, "", "", "", changes = false))
   }
   def deactivate(name: String): Unit = {
-    views.get(name).foreach(h => views(name) = h.copy(active = false))
-    transforms.get(name).foreach(h => transforms(name) = h.copy(active = false))
+    synchronized {
+      views.get(name).foreach(h => views(name) = h.copy(active = false))
+      transforms.get(name).foreach(h => transforms(name) = h.copy(active = false))
+    }
     appendCatalog(CatalogEntry("deactivate", name, "", "", "", 0, "", "", "", changes = false))
   }
 
@@ -1207,16 +1236,25 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * at runtime; the reaper (`expireTtl`) picks it up on its next pass.
     */
   def setTtl(name: String, ttl: Option[String], ttlColumn: Option[String] = None): Unit = {
-    val h = views(name)
-    val opts = h.plan.options.copy(
-      ttl = ttl,
-      ttlColumn = ttlColumn.orElse(h.plan.options.ttlColumn))
-    views(name) = h.copy(plan = h.plan.copy(options = opts))
+    val opts = synchronized {
+      val h = views(name)
+      val opts = h.plan.options.copy(
+        ttl = ttl,
+        ttlColumn = ttlColumn.orElse(h.plan.options.ttlColumn))
+      views(name) = h.copy(plan = h.plan.copy(options = opts))
+      opts
+    }
     appendCatalog(CatalogEntry("set_ttl", name, "", "", "", 0,
       ttl.getOrElse(""), opts.ttlColumn.getOrElse(""), "", changes = false))
   }
 
-  def truncateContView(name: String): Unit = views(name).store.truncate()
+  def truncateContView(name: String): Unit = viewOf(name).store.truncate()
+
+  /** A CV's handle, read under the engine lock: DDL on other threads
+    * mutates the routing maps, and a LinkedHashMap read during a rehash is
+    * undefined (see insertInto). Throws like `views(name)` when unknown.
+    */
+  private def viewOf(name: String): CvHandle = synchronized(views(name))
 
   /** Default within-file clustering for a new CV (the CREATE INDEX analogue
     * the reference applies implicitly: every SW matrel gets an index on its
@@ -1434,8 +1472,8 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     */
   def insertInto(streamName: String, batch: DataFrame,
       targets: Option[Set[String]] = None): Unit = {
-    require(streams.contains(streamName), s"unknown stream $streamName")
     synchronized {
+      require(streams.contains(streamName), s"unknown stream $streamName")
       streamBatches(streamName) = streamBatches.getOrElse(streamName, 0L) + 1L
     }
     // Stamp the arrival timestamp as a LITERAL, not current_timestamp():
@@ -1605,7 +1643,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * used for backfill and partition-rebuild).
     */
   def combineTable(name: String, partials: DataFrame): Unit = {
-    val h = views(name)
+    val h = viewOf(name)
     require(!h.plan.append,
       s"combine_table requires an aggregating continuous view ($name is append-only)")
     val expected = (h.plan.stateKeys ++ h.plan.stateNames).toSet
@@ -1860,7 +1898,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * pipelinedb.get_worker_querydef): group keys + partial-state columns.
     */
   def workerQueryDef(name: String): String = {
-    val h = views(name)
+    val h = viewOf(name)
     if (h.plan.append)
       s"WORKER ${h.plan.name}: batch -> project (${h.plan.appendOutputs.mkString(", ")}) " +
         "-> append rows"
@@ -1873,7 +1911,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * per-state merge aggregates applied against the stored groups.
     */
   def combinerQueryDef(name: String): String = {
-    val h = views(name)
+    val h = viewOf(name)
     if (h.plan.append)
       s"COMBINER ${h.plan.name}: APPEND segment (no merge) -> overlay " +
         s"project (${h.plan.appendOutputs.mkString(", ")})" +
@@ -1930,10 +1968,12 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * downstream CVs can retract it.
     */
   def tickSw(name: String, now: Option[java.sql.Timestamp] = None): Long = {
-    val h = views(name)
+    val h = viewOf(name)
     val sw = h.plan.sw.getOrElse(
       throw new IllegalArgumentException(s"CV $name is not a sliding-window view"))
     require(h.changes, s"CV $name has no output stream (emitChanges=false)")
+    val osrel = osrelName(name)
+    val routed = synchronized(readers.get(osrel).exists(_.nonEmpty))
     // same monitor as the store mutators: the expiry scan + emit reads the
     // current version's files, which a concurrent merge would GC
     h.store.synchronized {
@@ -1969,9 +2009,8 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       // rows route to chained CQs exactly like upsert changes do, so both
       // read paths of output_of(cv) — the archive and live chaining — see
       // the same rows (downstream queries distinguish ticks by new IS NULL)
-      val osrel = osrelName(name)
       try {
-        if (readers.get(osrel).exists(_.nonEmpty)) insertInto(osrel, ticks)
+        if (routed) insertInto(osrel, ticks)
       } finally ticks.unpersist()
     }
     expired.unpersist()
@@ -1991,7 +2030,12 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     // (or a concurrent thread's, since the fields are shared)
     var workerMs = 0L
     var combinerMs = 0L
-    val raw = h.plan.workerPartials(exec, sizedToWorker(batch))
+    // a small batch into a small (or empty) store runs interpreted — its
+    // partial aggregate, and through `up` heading the union, the small
+    // merge and the changes emit too (see `exec`)
+    val fits = sizedToWorker(batch)
+    val raw = h.plan.workerPartials(if (fits && h.store.onSmallSession) interp else exec,
+      if (fits) batch.coalesce(1) else batch)
     // LIMIT n on a CV caps total materialized groups (cont_limit.sql):
     // updates to existing groups always apply; NEW groups only admit while
     // the cap has room, chosen deterministically by key order.
@@ -2048,17 +2092,17 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     }
   }
 
-  /** A batch no larger than one file split — its optimized-plan size
-    * estimate against the batch session's `spark.sql.files.maxPartitionBytes`
-    * — is coalesced to one partition, so the CV's partial aggregate runs in
-    * ONE task with no Exchange. Larger batches, and batches of unknown size,
-    * keep their partitioning.
+  /** Whether a batch is no larger than one file split: its optimized-plan
+    * size estimate against the batch session's
+    * `spark.sql.files.maxPartitionBytes`. An aggregating CV coalesces such a
+    * batch to one partition, so its partial aggregate runs in ONE task with
+    * no Exchange; larger batches, and batches of unknown size, keep their
+    * partitioning and run on codegen.
     */
-  private def sizedToWorker(batch: DataFrame): DataFrame = {
+  private def sizedToWorker(batch: DataFrame): Boolean = {
     val qe = batch.queryExecution
-    if (qe.optimizedPlan.stats.sizeInBytes <=
-        qe.sparkSession.sessionState.conf.filesMaxPartitionBytes) batch.coalesce(1)
-    else batch
+    qe.optimizedPlan.stats.sizeInBytes <=
+      qe.sparkSession.sessionState.conf.filesMaxPartitionBytes
   }
 
   /** Append-only ingest: project the batch through the CV's child plan and
@@ -2072,7 +2116,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     var workerMs = 0L
     var combinerMs = 0L
     try {
-      val out = h.plan.workerRows(exec, batch)
+      val out = h.plan.workerRows(if (sizedToWorker(batch)) interp else exec, batch)
       h.store.synchronized {
         val (_, newRows, n) = h.store.upsert(out, Nil, needOldRows = false)
         rows = n
@@ -2164,7 +2208,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * across step buckets (analyzer.c:2715-2760).
     */
   def overlay(name: String, now: Option[java.sql.Timestamp] = None): DataFrame = {
-    val h = views(name)
+    val h = viewOf(name)
     val state = h.store.read().getOrElse(emptyState(h))
     if (h.plan.append) {
       // append CV: rows are already final. SW liveness filters the hidden
@@ -2221,7 +2265,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * (reference RewriteCombineAggs, analyzer.c:4446-4615).
     */
   def combine(name: String, coarserKeys: Seq[String]): DataFrame = {
-    val h = views(name)
+    val h = viewOf(name)
     require(!h.plan.append,
       s"combine() requires an aggregating continuous view ($name is append-only)")
     val state = h.store.read().getOrElse(emptyState(h))
@@ -2235,7 +2279,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     */
   def swCombine(name: String, coarserKeys: Seq[String],
       now: Option[java.sql.Timestamp] = None): DataFrame = {
-    val h = views(name)
+    val h = viewOf(name)
     require(!h.plan.append,
       s"sw_combine() requires an aggregating continuous view ($name is append-only)")
     val sw = h.plan.sw.getOrElse(
@@ -2279,7 +2323,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     // resolve in caller SQL
     org.apache.spark.sql.GraftBridge.ofRows(spark,
       org.apache.spark.sql.GraftBridge.analyzed(
-        views(name).store.read().getOrElse(emptyState(views(name)))))
+        { val h = viewOf(name); h.store.read().getOrElse(emptyState(h)) }))
 
   /** Name of a CQ's output stream (reference `<name>_osrel`, matrel.h:42-46);
     * usable in downstream CV/CT SQL: `... FROM output_of("cv")`.
@@ -2298,7 +2342,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * analyze_osrel_combine).
     */
   def combineOutputDeltas(name: String, coarserKeys: Seq[String]): DataFrame = {
-    val h = views(name)
+    val h = viewOf(name)
     require(!h.plan.append,
       s"combine over output deltas requires an aggregating continuous view " +
         s"($name is append-only; read output_of directly)")
@@ -2324,7 +2368,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     */
   def expireTtl(name: String, now: Option[java.sql.Timestamp] = None)
       : StateStore.DeleteStats = {
-    val h = views(name)
+    val h = viewOf(name)
     // append CVs store the SW timestamp raw (no step buckets) — their
     // implied expiry column is the hidden raw-ts column
     val swExpiryCol =
@@ -2366,7 +2410,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
         .getOrElse(throw new IllegalArgumentException(
           s"ttl_column '$ttlCol' is neither a group key nor an output of CV $name"))
     val pruneHint = if (isPhysical) Some((ttlCol, cutoffTs.getTime * 1000L)) else None
-    views(name).store.deleteWhere(ttlColExpr < cutoff, pruneHint)
+    h.store.deleteWhere(ttlColExpr < cutoff, pruneHint)
   }
 
   // ---- background reaper (reference reaper procs, reaper.c:49-352; SW
@@ -2398,7 +2442,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * external schedulers).
     */
   def reapOnce(now: Option[java.sql.Timestamp] = None): Unit =
-    views.toSeq.foreach { case (name, h) =>
+    synchronized(views.toSeq).foreach { case (name, h) =>
       try {
         // tick BEFORE deleting: expiry rows need the expiring state still
         // present (the reference's reaper likewise lags the combiner's tick
@@ -2417,7 +2461,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
       : StreamingQuery = {
-    require(views.contains(cvName), s"unknown continuous view $cvName")
+    require(synchronized(views.contains(cvName)), s"unknown continuous view $cvName")
     stream.writeStream
       .outputMode("append")
       .trigger(trigger)
@@ -2425,7 +2469,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // re-resolve the stream per batch: a stream rename re-points the
         // handle, and insertInto skips the CV once it is deactivated
-        insertInto(views(cvName).streamName, batch, Some(Set(cvName)))
+        insertInto(viewOf(cvName).streamName, batch, Some(Set(cvName)))
       }
       .start()
   }

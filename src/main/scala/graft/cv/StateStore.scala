@@ -45,9 +45,18 @@ final class StateStore(
     // hidden (batch, row) arrival sequence; segment count is bounded by
     // size-tiered compaction (see appendWrite).
     val appendOnly: Boolean = false,
-    val maxAppendSegments: Int = 64) {
+    val maxAppendSegments: Int = 64,
+    // The session that reads and caches small state under
+    // InterpretedStateBytes (see [[onSmallSession]]), so the overlays,
+    // ticks and reaps over it and the merges and emits built from it run
+    // there. The engine passes its interpreted session: small micro-batch
+    // work compiles nothing (see ContViewEngine.exec). Larger and append
+    // stores read on `spark`. Defaults to `spark`.
+    smallSpark: SparkSession = null) {
 
   private val BucketCol = StateStore.BucketCol
+
+  private val smallSession = Option(smallSpark).getOrElse(spark)
 
   // the store's directory; mutable only via relocate() (ALTER VIEW RENAME)
   @volatile private var _root: String = initialRoot
@@ -255,12 +264,35 @@ final class StateStore(
 
   def exists: Boolean = readManifest().isDefined
 
+  /** Whether the state is not written yet, or small (manifest `small`) and
+    * under [[StateStore.InterpretedStateBytes]]: its reads and caches run on
+    * the small-state session, and the engine runs a small batch into it
+    * there too.
+    */
+  def onSmallSession: Boolean = readManifest().forall(interpreted)
+
+  // (version, bytes on disk) of the last small version measured: a merge
+  // records what it wrote; a delete or update is re-measured on first use
+  @volatile private var sizedVersion: (Long, Long) = (-1L, 0L)
+
+  private def interpreted(m: Manifest): Boolean = m.small && {
+    val (v, known) = sizedVersion
+    val bytes = if (v == m.version) known else {
+      val b = m.buckets.values.toSet.toSeq.map(dirBytes).sum
+      sizedVersion = (m.version, b)
+      b
+    }
+    bytes < StateStore.InterpretedStateBytes
+  }
+
   // Post-commit snapshot of the full state, persisted lazily: the next
   // merge (and any overlay read) serves from executor memory instead of
   // re-listing/re-scanning the bucket dirs. Invalidated by every mutation;
   // spill-safe (MEMORY_AND_DISK) and bounded by state size, which the
   // design keeps at O(groups), never O(events).
-  private var cachedState: Option[DataFrame] = None
+  // Volatile: mutators reassign it under the store monitor, read() hands
+  // it out on reader threads without the lock.
+  @volatile private var cachedState: Option[DataFrame] = None
 
   // Whether the snapshot has plausibly been materialized (an overlay read
   // ran since the last mutation). The bucket-pruned merge reads existing
@@ -350,21 +382,22 @@ final class StateStore(
         case (rel, bs) => !isFlat(rel) ||
           (rel == s"v${m.version}" && bs.size == m.buckets.count(_._2 == rel))
       }
-      val frames = Seq(whole.map(_._1)).filter(_.nonEmpty).map(loadState) ++
+      val s = if (interpreted(m)) smallSession else spark
+      val frames = Seq(whole.map(_._1)).filter(_.nonEmpty).map(loadState(s, _)) ++
         partial.map { case (rel, bs) =>
-          loadState(Seq(rel)).where(bucketOf.isInCollection(bs.map(_.toLong)))
+          loadState(s, Seq(rel)).where(bucketOf.isInCollection(bs.map(_.toLong)))
         }
       frames.reduceOption(_ unionByName _)
     }
 
-  private def loadState(rels: Seq[String]): DataFrame = {
+  private def loadState(s: SparkSession, rels: Seq[String]): DataFrame = {
     val paths = rels.map(rel => s"$root/$rel")
     knownSchema match {
       case Some(sch) =>
         recordMeta(sch)
-        spark.read.schema(sch).parquet(paths: _*)
+        s.read.schema(sch).parquet(paths: _*)
       case None =>
-        val df = spark.read.parquet(paths: _*)
+        val df = s.read.parquet(paths: _*)
         knownSchema = Some(df.schema)
         recordMeta(df.schema) // parquet footers persist column metadata
         df
@@ -592,13 +625,15 @@ final class StateStore(
       phase(lastCombinerMs = _)(clustered(merged.coalesce(1)
           .observe(obs, collect_set(col(BucketCol)).as("buckets")).drop(BucketCol))
         .write.mode("overwrite").parquet(s"$root/$rel"))
-      val written: Set[Int] = observed(obs, loadState(Seq(rel)).select(bucketOf).distinct()
+      val written: Set[Int] = observed(obs, loadState(up.sparkSession, Seq(rel))
+          .select(bucketOf).distinct()
           .collect().map(_.getLong(0).toInt).toSet)(
         _("buckets").asInstanceOf[scala.collection.Seq[Long]].map(_.toInt).toSet)
       // full rewrite: the manifest is replaced wholesale by this version
       val newBuckets = written.map(_ -> rel).toMap
-      writeManifest(Manifest(m.version + 1, newBuckets,
-        small = dirBytes(rel) < SmallStateBytes))
+      val bytes = dirBytes(rel)
+      sizedVersion = (m.version + 1, bytes)
+      writeManifest(Manifest(m.version + 1, newBuckets, small = bytes < SmallStateBytes))
       deferGcOldVersions(m.buckets, newBuckets)
       refreshCache()
       val newRows = () =>
@@ -656,8 +691,10 @@ final class StateStore(
       .write.partitionBy(BucketCol).mode("overwrite").parquet(outDir))
     val groupsTouched = observed(obs, up.count())(_("n").asInstanceOf[Long])
     val written = writtenBuckets(outDir)
+    val bytes = written.toSeq.map(b => dirBytes(s"v0/$BucketCol=$b")).sum
+    sizedVersion = (0L, bytes)
     writeManifest(Manifest(0L, written.map(b => b -> s"v0/$BucketCol=$b").toMap,
-      small = written.map(b => dirBytes(s"v0/$BucketCol=$b")).sum < SmallStateBytes))
+      small = bytes < SmallStateBytes))
     refreshCache()
     val newRows = () => read().getOrElse(up.limit(0).drop(BucketCol))
     (None, newRows, groupsTouched)
@@ -732,7 +769,9 @@ final class StateStore(
     // consumes newRows synchronously within this ingest cycle).
     val segPath = s"$root/$segRel"
     val writtenSchema = up.schema
-    val newRows = () => spark.read.schema(writtenSchema).parquet(segPath)
+    // read back on the commit's session: a small batch's changes emit
+    // stays interpreted with the rest of its commit
+    val newRows = () => updates.sparkSession.read.schema(writtenSchema).parquet(segPath)
     (if (needOldRows) Some(up.limit(0)) else None, newRows, n)
   }
 
@@ -1022,6 +1061,16 @@ final class StateStore(
 object StateStore {
   /** Default small-state threshold (see the `SmallStateBytes` doc). */
   val DefaultSmallStateBytes: Long = 64L * 1024 * 1024
+
+  /** Below this many state bytes a small store's work runs interpreted
+    * (see StateStore `smallSpark`). Above it, interpreting a merge costs
+    * more than compiling it: at ~0.27 MB of `count/sum/avg` state
+    * (10k groups) an interpreted small merge beat codegen with a warm or a
+    * cleared codegen cache; at 0.75 MB it ran 10–40% slower than warm and
+    * 30% faster than cold codegen; at 2.4 MB it matched cold codegen and
+    * ran 1.7–2.2× warm; at 7 MB and 24 MB it lost to both (PERF_NOTES §44).
+    */
+  val InterpretedStateBytes: Long = 1L * 1024 * 1024
 
   /** How long a superseded published version dir outlives the commit that
     * superseded it: longer than an overlay read takes from plan to finish. */

@@ -4,17 +4,22 @@ import java.sql.Timestamp
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.cv.CvPlanner.CvOptions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** What one CV commit costs in Spark work, and what a reader running
   * beside the commits sees: a small batch into a small aggregating state
-  * runs one task per job with no shuffle, a batch above one file split
-  * keeps its partitioning, and overlay reads planned before a commit still
-  * run after it.
+  * runs one task per job with no shuffle and compiles no generated class,
+  * a batch above one file split keeps its partitioning, a large store's
+  * merge keeps whole-stage codegen, and overlay reads planned before a
+  * commit still run after it.
   */
 class CvCommitSpec extends AnyFunSuite {
 
@@ -84,6 +89,32 @@ class CvCommitSpec extends AnyFunSuite {
     finally spark.sparkContext.removeSparkListener(l)
   }
 
+  /** Physical plans of the SQL executions `f` starts, as plan-info trees. */
+  private def executedPlansOf(f: => Unit): Seq[SparkPlanInfo] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      f
+      // the bus delivers asynchronously: wait until it has gone quiet
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      var seen = -1
+      while (seen != plans.size && System.nanoTime() < deadline) {
+        seen = plans.size
+        Thread.sleep(300)
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+    plans.asScala.toSeq
+  }
+
+  private def hasWholeStageCodegen(p: SparkPlanInfo): Boolean =
+    p.nodeName.startsWith("WholeStageCodegen") || p.children.exists(hasWholeStageCodegen)
+
   private def createCv(eng: ContViewEngine, stream: String, cv: String): Unit = {
     eng.createStream(stream, streamSchema)
     eng.createContView(cv,
@@ -107,6 +138,69 @@ class CvCommitSpec extends AnyFunSuite {
     val want = mkBatch(2000, 1).unionByName(mkBatch(2000, 2))
       .groupBy("key").agg(count(lit(1)), sum("x")).collect().toSet
     assert(eng.overlay("v_cs").collect().toSet == want)
+  }
+
+  test("steady-state small commits, overlays, ticks and reaps compile no class") {
+    val eng = newEngine()
+    eng.createStream("cc_s", streamSchema)
+    eng.createContView("v_cc_agg",
+      "SELECT key, count(*) AS n, sum(x) AS s, avg(x) AS a FROM cc_s GROUP BY key",
+      emitChanges = false)
+    eng.createContView("v_cc_sw", "SELECT key, count(*) AS n FROM cc_s GROUP BY key",
+      CvOptions(sw = Some("10 seconds"), swColumn = "ts"))
+    eng.createContView("v_cc_ttl",
+      "SELECT date_round(ts, '1 second') AS t, count(*) AS n FROM cc_s " +
+        "GROUP BY date_round(ts, '1 second')",
+      CvOptions(ttl = Some("10 seconds"), ttlColumn = Some("t")), emitChanges = false)
+    // built up front: encoding a local Seq compiles on the test's session
+    val batches = (0 until 8).map { i =>
+      val rng = new scala.util.Random(100 + i)
+      val now = System.currentTimeMillis()
+      (0 until 300).map(_ => (s"k${rng.nextInt(200)}", rng.nextInt(100).toLong,
+        new Timestamp(now - rng.nextInt(20000)))).toDF("key", "x", "ts")
+    }
+    def cycle(b: DataFrame): Unit = {
+      eng.insertInto("cc_s", b)
+      Seq("v_cc_agg", "v_cc_sw", "v_cc_ttl").foreach(eng.overlay(_).collect())
+      eng.tickSw("v_cc_sw")
+      eng.expireTtl("v_cc_ttl")
+    }
+    // first write, first merge, first tick and reap: class loading and the
+    // one-off plans of an empty store settle
+    batches.take(3).foreach(cycle)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val plans = executedPlansOf(batches.drop(3).foreach(cycle))
+    assert(compiles.getCount - before == 0L,
+      s"${compiles.getCount - before} classes compiled over 5 small commit cycles")
+    assert(plans.nonEmpty && !plans.exists(hasWholeStageCodegen),
+      "a small commit or read ran a whole-stage codegen plan")
+  }
+
+  test("a large store's merge keeps whole-stage codegen") {
+    val eng = new ContViewEngine(spark,
+      java.nio.file.Files.createTempDirectory("graft_commit").toString, smallStateBytes = 0L)
+    createCv(eng, "cl_s", "v_cl")
+    eng.insertInto("cl_s", mkBatch(2000, 1))
+    val plans = executedPlansOf(eng.insertInto("cl_s", mkBatch(2000, 2)))
+    val merge = plans.filter(_.nodeName.contains("InsertIntoHadoopFsRelationCommand"))
+    assert(merge.nonEmpty && merge.forall(hasWholeStageCodegen),
+      s"merge plans: ${merge.map(_.simpleString)}")
+  }
+
+  test("a small store at or above InterpretedStateBytes merges on codegen") {
+    val eng = newEngine()
+    eng.createStream("ci_s", streamSchema)
+    val h = eng.createContView("v_ci",
+      "SELECT key, count(*) AS n, sum(x) AS s FROM ci_s GROUP BY key", emitChanges = false)
+    val rng = new scala.util.Random(5)
+    eng.insertInto("ci_s", (0 until 150000).map(i =>
+      (s"key-$i-${rng.nextLong()}", rng.nextLong(), new Timestamp(t0))).toDF("key", "x", "ts"))
+    assert(!h.store.onSmallSession)
+    val plans = executedPlansOf(eng.insertInto("ci_s", mkBatch(200, 1)))
+    val merge = plans.filter(_.nodeName.contains("InsertIntoHadoopFsRelationCommand"))
+    assert(merge.nonEmpty && merge.forall(hasWholeStageCodegen),
+      s"merge plans: ${merge.map(_.simpleString)}")
   }
 
   test("a batch above spark.sql.files.maxPartitionBytes keeps its partitioning") {
