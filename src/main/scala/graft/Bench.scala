@@ -701,24 +701,12 @@ object Bench {
       num("bm25_indexed_query_sec", med3 {
         graft.ops.KeywordScore.bm25Indexed(spark, idxDir, terms).count(); ()
       })
-      // impact-ordered top-k (round 17): max-impact pruning must land
-      // BELOW full scoring — same scores (q_bm25_topk_pruned oracles that)
+      // single-query top-k (q_bm25_topk_pruned's spelling): full scoring
+      // plus Spark's bounded TakeOrderedAndProject
       num("bm25_topk_sec", med3 {
-        graft.ops.KeywordScore.bm25IndexedTopK(spark, idxDir, terms, 20)
-          .count(); ()
+        graft.ops.KeywordScore.bm25Indexed(spark, idxDir, terms)
+          .orderBy(desc("score"), col("doc_id")).limit(20).count(); ()
       })
-      // row-skip evidence (round 18): what the pruned phases collected
-      // vs the matching postings full scoring reads — the measured basis
-      // of the 100× retrieval claim (PERF_NOTES records the 1.5M-doc
-      // skewed-corpus version). Only stamped when the pruned path
-      // actually ran; a fallback stamps its reason instead so the
-      // artifact never carries numbers that belong to another call.
-      if (graft.ops.KeywordScore.lastTopKPath == "pruned") {
-        val (ra, rb, df) = graft.ops.KeywordScore.lastTopKScan
-        draw("bm25_topk_scan",
-          s"""{"phase_a_rows":$ra,"phase_b_rows":$rb,"matching_postings":$df}""")
-      } else draw("bm25_topk_scan", "\"" +
-        graft.ops.KeywordScore.lastTopKPath.replace("\"", "'") + "\"")
       // batch tier: 50 three-term queries over the corpus's most frequent
       // terms, scored in ONE pass — the number that shows batch cost
       // tracks matching postings, not query count (50 per-query calls

@@ -2478,8 +2478,12 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * through the normal ingest path and fans out to every active reader
     * CQ — the reference's runtime shape (one stream, many worker readers,
     * scheduler.c:615-698), where [[startStreaming]] drives a single CV.
-    * Checkpointed per stream, so a restarted query resumes exactly-once
-    * for all readers together.
+    * Checkpointed per stream, so a restarted query resumes from the
+    * committed offsets for all readers together. It is NOT exactly-once:
+    * the batch id is ignored, so a micro-batch whose CV commits landed
+    * before Spark's offset commit is replayed on restart and applied
+    * again (a 100-row batch then counts 200 rows). That holds until the
+    * CV manifest records the applied batch id.
     */
   def startStreamingInto(streamName: String, source: DataFrame,
       trigger: org.apache.spark.sql.streaming.Trigger =

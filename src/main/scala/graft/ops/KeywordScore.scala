@@ -116,20 +116,15 @@ object KeywordScore {
 
   // Explicit reader schemas: no footer-based inference, so files of an
   // UNCOMMITTED (possibly torn) generation are listed but never opened —
-  // the gen partition filter prunes them before any byte is read.
-  // `impact`/`max_impact` (round 17, postings format 2): the normalized
-  // tf-saturation term tfc/(k1+1) at the BUILD's reference avgdl and the
-  // DEFAULT (k1=1.2, b=0.75) — what impact-ordered row groups and the
-  // top-k pruning bound ([[bm25IndexedTopK]]) run on. NULL on format-1
-  // generations; readers fall back to full scoring there.
+  // the gen partition filter prunes them before any byte is read. Columns
+  // a file carries beyond these (older generations also stored a postings
+  // `impact` and a df `max_impact`) are never read.
   private val postingsSchema = StructType(Seq(
     StructField("term", StringType), StructField("doc_id", LongType),
     StructField("dl", DoubleType), StructField("tf", DoubleType),
-    StructField("impact", DoubleType),
     StructField("gen", IntegerType), StructField("bucket", IntegerType)))
   private val dfSchema = StructType(Seq(
     StructField("term", StringType), StructField("df", DoubleType),
-    StructField("max_impact", DoubleType),
     StructField("gen", IntegerType), StructField("bucket", IntegerType)))
   private val statsSchema = StructType(Seq(
     StructField("n", DoubleType), StructField("dl_sum", DoubleType),
@@ -137,18 +132,10 @@ object KeywordScore {
   private val deletedSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("gen", IntegerType)))
 
-  /** The (k1, b) the stored impact column was computed with. A top-k
-    * query at other parameters falls back to full scoring — the bound
-    * below is only valid at the build's parameters. */
-  val ImpactK1 = 1.2
-  val ImpactB = 0.75
-
   /** One committed generation, parsed from its `_commits/gen_<k>.json`
-    * marker. `kind`: base | delta | tombstone | compact | noop.
-    * `pfmt`: postings format — 2 carries the impact column (absent on
-    * pre-r17 markers → 1). */
+    * marker. `kind`: base | delta | tombstone | compact | noop. */
   private[graft] case class Gen(gen: Int, kind: String,
-      deltaId: Option[String], replaces: Seq[Int], pfmt: Int = 1)
+      deltaId: Option[String], replaces: Seq[Int])
 
   // Index metadata (markers, listings, sweeps) runs through the StoreFs
   // seam, so an index dir may be a plain path OR a URI root ("file:/…",
@@ -182,9 +169,7 @@ object KeywordScore {
         val replaces = """"replaces"\s*:\s*\[([^\]]*)\]""".r
           .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
           .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
-        val pfmt = """"pfmt"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
-          .map(_.group(1).toInt).getOrElse(1)
-        Some(Gen(k.toInt, kind, deltaId, replaces, pfmt))
+        Some(Gen(k.toInt, kind, deltaId, replaces))
       case _ => None
     }.sortBy(_.gen)
     if (gens.isEmpty && fs.list(s"$dir/postings").nonEmpty)
@@ -221,7 +206,7 @@ object KeywordScore {
     val repl = if (g.replaces.isEmpty) ""
       else s""","replaces": [${g.replaces.mkString(",")}]"""
     val txt =
-      s"""{"gen": ${g.gen}, "kind": "${g.kind}", "pfmt": ${g.pfmt}$delta$repl}"""
+      s"""{"gen": ${g.gen}, "kind": "${g.kind}"$delta$repl}"""
     val tmp = s"${commitsDir(dir)}/.gen_${g.gen}.tmp"
     fs.writeString(tmp, txt)
     fs.publish(tmp, s"${commitsDir(dir)}/gen_${g.gen}.json", durable = true)
@@ -264,7 +249,7 @@ object KeywordScore {
     graft.io.StoreFs.forRoot(dir).deleteRecursively(dir)
     statsCache.remove(dir)
     writeGeneration(docs, idCol, textCol, dir, gen = 0)
-    publishMarker(dir, Gen(0, "base", None, Nil, pfmt = 2))
+    publishMarker(dir, Gen(0, "base", None, Nil))
   }
 
   /** Append NEW documents (caller contract: doc_ids not already indexed —
@@ -287,63 +272,45 @@ object KeywordScore {
     statsCache.remove(dir) // this JVM's cached (n, dl_sum) is now stale
     val g = nextGen(dir, commits)
     writeGeneration(docs, idCol, textCol, dir, gen = g)
-    publishMarker(dir, Gen(g, "delta", deltaId, Nil, pfmt = 2))
+    publishMarker(dir, Gen(g, "delta", deltaId, Nil))
   }
-
-  /** The stored impact of a posting: tfc/(k1+1) at the build defaults
-    * and reference avgdl `a` — a (0,1] saturation value whose row-group
-    * min/max let a top-k scan skip groups that cannot contribute. */
-  private def impactCol(tf: Column, dl: Column, a: Double): Column =
-    tf / (tf + lit(ImpactK1 * (1 - ImpactB)) +
-      lit(ImpactK1 * ImpactB) * dl / lit(math.max(a, 1e-9)))
 
   /** Stage one generation's three tables under `gen=<gen>/` partition
     * dirs. NOT a commit — nothing is reader-visible until
     * [[publishMarker]] lands; a crash at any point here leaves an orphan
-    * dir that [[nextGen]] skips and [[compactIndex]] sweeps. The corpus
-    * stats run FIRST (one tiny-result job) because the generation's OWN
-    * avgdl is the impact column's reference (reader bound:
-    * tfc_now/(k1+1) ≤ impact × max(1, avgdl_now/avgdl_gen) — see
-    * [[bm25IndexedTopK]]); the df table then derives from the
-    * just-written postings (one doc-term pair per row), which replaces
-    * the old second corpus scan with a re-read of the generation's own
-    * (page-cached, pruned) output. */
+    * dir that [[nextGen]] skips and [[compactIndex]] sweeps. The df
+    * table derives from the just-written postings (one doc-term pair per
+    * row), which replaces a second corpus scan with a re-read of the
+    * generation's own (page-cached, pruned) output. */
   private def writeGeneration(docs: DataFrame, idCol: String,
       textCol: String, dir: String, gen: Int): Unit = {
     val toks = tokenize(col(textCol))
-    val st = docs.select(size(toks).cast("double").as("dl"))
-      .agg(count(lit(1)).cast("double").as("n"),
-        coalesce(sum("dl"), lit(0.0)).as("dl_sum"))
-      .collect()(0)
-    val (n, dlSum) = (st.getDouble(0), st.getDouble(1))
-    val aRef = if (n > 0) dlSum / n else 0.0
     docs.select(col(idCol).cast("long").as("doc_id"),
         size(toks).cast("double").as("dl"), explode(toks).as("term"))
       .groupBy("term", "doc_id", "dl")
       .agg(count(lit(1)).cast("double").as("tf"))
-      .withColumn("impact", impactCol(col("tf"), col("dl"), aRef))
       .withColumn("bucket",
         pmod(xxhash64(col("term")), lit(IndexBuckets.toLong)))
       .repartition(col("bucket"))
-      .sortWithinPartitions(col("term"), col("impact").desc)
+      .sortWithinPartitions(col("term"))
       .write.partitionBy("bucket")
       .parquet(s"$dir/postings/gen=$gen")
     failpoint("postings")
-    // this generation's per-term doc counts + max impact, derived from
-    // the staged postings (one row per doc-term pair) — readers SUM df
-    // and MAX max_impact across generations
+    // this generation's per-term doc counts, derived from the staged
+    // postings (one row per doc-term pair) — readers SUM df across
+    // generations
     spark(docs).read.schema(postingsSchema)
       .option("basePath", s"$dir/postings") // keep gen/bucket partition cols
       .parquet(s"$dir/postings/gen=$gen")
-      .groupBy("term").agg(count(lit(1)).cast("double").as("df"),
-        max("impact").as("max_impact"))
+      .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
       .withColumn("bucket",
         pmod(xxhash64(col("term")), lit(IndexBuckets.toLong)))
       .repartition(col("bucket"))
       .write.partitionBy("bucket").parquet(s"$dir/df/gen=$gen")
     failpoint("df")
-    docs.sparkSession.range(1)
-      .select(lit(n).as("n"), lit(dlSum).as("dl_sum"))
+    docs.select(size(toks).cast("double").as("dl"))
+      .agg(count(lit(1)).cast("double").as("n"),
+        coalesce(sum("dl"), lit(0.0)).as("dl_sum"))
       .coalesce(1).write.parquet(s"$dir/stats/gen=$gen")
     failpoint("stats")
   }
@@ -383,7 +350,7 @@ object KeywordScore {
       // readers skip it (activeOf), idempotence checks see it.
       deltaId.foreach { id =>
         publishMarker(dir,
-          Gen(nextGen(dir, commits), "noop", Some(id), Nil, pfmt = 2))
+          Gen(nextGen(dir, commits), "noop", Some(id), Nil))
       }
       return
     }
@@ -414,7 +381,7 @@ object KeywordScore {
         .write.parquet(s"$dir/deleted/gen=$g")
       failpoint("deleted")
     } finally { mine.unpersist(); () }
-    publishMarker(dir, Gen(g, "tombstone", deltaId, Nil, pfmt = 2))
+    publishMarker(dir, Gen(g, "tombstone", deltaId, Nil))
   }
 
   /** Fold every active generation (applying tombstones) into ONE fresh
@@ -440,29 +407,23 @@ object KeywordScore {
     }
     statsCache.remove(dir)
     val g = nextGen(dir, commits)
-    // folded stats first: the fold's OWN avgdl is the new generation's
-    // impact reference, so the impact column is recomputed here — which
-    // also UPGRADES a pre-impact (format-1) index to format 2
     val st = spark.read.schema(statsSchema).parquet(s"$dir/stats")
       .where(col("gen").isin(active: _*))
       .agg(coalesce(sum("n"), lit(0.0)), coalesce(sum("dl_sum"), lit(0.0)))
       .collect()(0)
     val (n, dlSum) = (st.getDouble(0), st.getDouble(1))
-    val aRef = if (n > 0) dlSum / n else 0.0
     activePostings(spark, dir, active, commits, lit(true))
-      .select(col("term"), col("doc_id"), col("dl"), col("tf"),
-        impactCol(col("tf"), col("dl"), aRef).as("impact"), col("bucket"))
+      .select(col("term"), col("doc_id"), col("dl"), col("tf"), col("bucket"))
       .repartition(col("bucket"))
-      .sortWithinPartitions(col("term"), col("impact").desc)
+      .sortWithinPartitions(col("term"))
       .write.partitionBy("bucket").parquet(s"$dir/postings/gen=$g")
-    // folded df + max_impact derive from the folded postings (tombstones
-    // already applied there), like writeGeneration's — token-less docs
-    // have no postings, so a df(term) can never go missing this way
+    // folded df derives from the folded postings (tombstones already
+    // applied there), like writeGeneration's — token-less docs have no
+    // postings, so a df(term) can never go missing this way
     spark.read.schema(postingsSchema)
       .option("basePath", s"$dir/postings")
       .parquet(s"$dir/postings/gen=$g")
-      .groupBy("term").agg(count(lit(1)).cast("double").as("df"),
-        max("impact").as("max_impact"))
+      .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
       .where(col("df") > 0)
       .withColumn("bucket",
         pmod(xxhash64(col("term")), lit(IndexBuckets.toLong)))
@@ -470,7 +431,7 @@ object KeywordScore {
       .write.partitionBy("bucket").parquet(s"$dir/df/gen=$g")
     spark.range(1).select(lit(n).as("n"), lit(dlSum).as("dl_sum"))
       .coalesce(1).write.parquet(s"$dir/stats/gen=$g")
-    publishMarker(dir, Gen(g, "compact", None, active, pfmt = 2))
+    publishMarker(dir, Gen(g, "compact", None, active))
     // data-dir sweep, DEFERRED by one compaction cycle: the generations
     // THIS fold just retired stay on disk until the NEXT compaction, so a
     // concurrent reader in another process that resolved the old active
@@ -524,30 +485,25 @@ object KeywordScore {
     }
   }
 
-  /** Corpus stats summed across active generations: (N, avgdl, and the
-    * SMALLEST per-generation avgdl — [[bm25IndexedTopK]]'s impact
-    * conversion reference; 0 when no generation has positive n). ONE
+  /** Corpus stats summed across active generations: (N, avgdl). ONE
     * tiny-result job, cached per dir WITH the active-generation
     * signature — a marker published by this or ANY OTHER process changes
     * the signature, so the cache self-refreshes on the next read instead
     * of serving stale stats. */
   private def readStats(spark: SparkSession, dir: String,
-      active: Seq[Int]): (Double, Double, Double) = {
+      active: Seq[Int]): (Double, Double) = {
     val sig = active.mkString(",")
     val cached = statsCache.get(dir)
-    if (cached != null && cached._1 == sig)
-      return (cached._2, cached._3, cached._4)
-    if (active.isEmpty) return (0.0, 0.0, 0.0)
+    if (cached != null && cached._1 == sig) return (cached._2, cached._3)
+    if (active.isEmpty) return (0.0, 0.0)
     val st = spark.read.schema(statsSchema).parquet(s"$dir/stats")
       .where(col("gen").isin(active: _*))
-      .agg(coalesce(sum("n"), lit(0.0)), coalesce(sum("dl_sum"), lit(0.0)),
-        min(when(col("n") > 0, col("dl_sum") / col("n"))))
+      .agg(coalesce(sum("n"), lit(0.0)), coalesce(sum("dl_sum"), lit(0.0)))
       .collect()(0)
     val n = st.getDouble(0)
     val avgdl = if (n > 0) st.getDouble(1) / n else 0.0
-    val aMin = if (st.isNullAt(2)) 0.0 else st.getDouble(2)
-    statsCache.put(dir, (sig, n, avgdl, aMin))
-    (n, avgdl, aMin)
+    statsCache.put(dir, (sig, n, avgdl))
+    (n, avgdl)
   }
 
   /** df of each queried term summed across active generations (tombstone
@@ -573,7 +529,7 @@ object KeywordScore {
     // corpus stats are STATIC per committed generation set — cached per
     // dir+signature, so repeated queries pay zero jobs for them, like any
     // search service holding N/avgdl in memory
-    val (n, avgdl0, _) = readStats(spark, dir, active)
+    val (n, avgdl0) = readStats(spark, dir, active)
     if (n == 0.0)
       return spark.range(0)
         .select(col("id").as("doc_id"), lit(0.0).as("score"))
@@ -602,315 +558,6 @@ object KeywordScore {
     pivoted.select(col("doc_id"), score.as("score"))
   }
 
-  /** Top-k BM25 over a persisted index with MAX-IMPACT PRUNING — exact
-    * scores, sub-full-scoring cost (round 17; the r15/r16 verdicts'
-    * carried stretch item). Doc-at-a-time WAND is inexpressible at Spark
-    * scan granularity (PERF_NOTES §30), but its bound carries over to
-    * scan-at-a-time: postings are IMPACT-ORDERED within each term (build
-    * sorts by (term, impact desc)), so a pushed `impact >= θ` filter
-    * skips whole row groups of low-impact postings via their min/max
-    * stats, and the per-term `max_impact` in the df table bounds what
-    * the skipped rows could have contributed.
-    *
-    * The stored impact was computed at the GENERATION's own avgdl A and
-    * the build defaults (K1, B) = ([[ImpactK1]], [[ImpactB]]); a query at
-    * ANY (k1', b') with the current avgdl is bounded through one
-    * conversion constant (round 18 — generalizing the r17 default-only
-    * bound). Write the saturation denominators as affine functions of dl:
-    *   stored:  I = tf/(tf + D),  D  = K1(1−B)      + (K1·B/A)·dl
-    *   query:       tfc'/(k1'+1) = tf/(tf + D'), D' = k1'(1−b') + (k1'·b'/avgdl_now)·dl
-    * For c = min( k1'(1−b') / (K1(1−B)),  k1'·b'·A / (K1·B·avgdl_now) )
-    * both affine coefficients of D' dominate c× those of D, so
-    * D' ≥ c·D for every dl ≥ 0, hence (substituting D = tf(1−I)/I)
-    *   tfc'/(k1'+1) ≤ tf/(tf + c·D) = I / (c + (1−c)·I)  (and ≤ 1).
-    * Across generations the conservative A is the smallest per-gen avgdl
-    * (aMin). At the defaults this reduces to the r17 bound exactly
-    * (c = aMin/avgdl_now, I/(c+(1−c)I) ≤ I·avgdl_now/aMin). The bound is
-    * vacuous — c = 0 — when k1' = 0, b' = 0, or b' = 1 (the dl term or
-    * the constant term vanishes and the stored impact can no longer cap
-    * the query's saturation); those parameters take the full-scoring
-    * fallback, loudly. Algorithm, exact by construction:
-    *  1. phase A reads only postings with impact ≥ θ (row-group skipped):
-    *     every (doc, term) pair is atomic — seen pairs contribute their
-    *     EXACT score term; unseen pairs are bounded by
-    *     idf·(k1+1)·min(1, θ·bf, max_impact_t·bf);
-    *  2. docs NOT seen at all are bounded by U0 = Σ_t that bound; the
-    *     kth-largest LOWER bound L_k among seen docs must beat U0, else
-    *     θ lowers and phase A re-runs (≤3 tries, then full fallback);
-    *  3. the candidate set C = {seen docs with upper ≥ L_k − tieMargin}
-    *     is re-scored EXACTLY (phase B: same pruned term slices, doc_id
-    *     IN-set filter, no aggregation shuffle — C is collected);
-    *  4. the final top-k (plus `tieMargin` ties for deterministic
-    *     rounded-boundary callers) selects by exact score.
-    * At corpus scale the win is twofold: phase A's IO is the high-impact
-    * row groups only, and nothing corpus-sized ever shuffles — full
-    * scoring's per-doc aggregation moves every matching doc.
-    *
-    * Falls back to full scoring (identical results) when: degenerate
-    * (k1, b) — k1 = 0, b = 0, or b = 1, see above; any active generation
-    * predates the impact format (pfmt<2 markers — compaction upgrades
-    * them); bounds fail to converge; or candidates exceed
-    * [[MaxTopKCandidates]]. Every fallback logs its reason to stderr and
-    * stamps [[lastTopKPath]] (spec/telemetry hook). */
-  def bm25IndexedTopK(spark: SparkSession, dir: String, terms: Seq[String],
-      k: Int, k1: Double = 1.2, b: Double = 0.75,
-      tieMargin: Double = 0.0): DataFrame = {
-    require(terms.nonEmpty, "bm25 requires at least one query term")
-    require(k >= 1, s"k must be >= 1, got $k")
-    // telemetry belongs to THIS call: a fallback or early return must
-    // not leave a previous pruned call's numbers for Bench/profiles
-    lastTopKScan = (0L, 0L, 0L)
-    lastTopKPath = ""
-    import spark.implicits._
-    def fromPairs(rows: Seq[(Long, Double)]): DataFrame =
-      rows.toDF("doc_id", "score")
-    def fallback(reason: String): DataFrame = {
-      lastTopKPath = s"fallback:$reason"
-      System.err.println(s"[graft] bm25IndexedTopK: impact pruning " +
-        s"unavailable ($reason) under $dir — full scoring (same answer)")
-      fullFallback()
-    }
-    def fullFallback(): DataFrame = {
-      val scored = bm25Indexed(spark, dir, terms, k1, b)
-      val top = scored.orderBy(col("score").desc, col("doc_id"))
-        .limit(k).collect()
-      if (top.isEmpty) return fromPairs(Nil)
-      val kth = top.last.getDouble(1)
-      scored.where(col("score") >= kth - tieMargin)
-    }
-    val commits = readCommits(dir)
-    val active = activeOf(commits)
-    val activeSet = active.toSet
-    // per-generation impact reference A = that gen's own dl_sum/n; the
-    // conservative global conversion factor uses the SMALLEST A —
-    // tombstones (negative n) have no postings and are excluded. Rides
-    // the SAME cached stats read as N/avgdl — zero extra jobs.
-    val (n, avgdl0, aMin) = readStats(spark, dir, active)
-    if (n == 0.0) return fromPairs(Nil)
-    // a DUPLICATED query term double-counts in the pivot tier (one
-    // contribution per term position) but would fill one tf slot here —
-    // the full path is the semantics, so duplicates take the fallback
-    if (terms.distinct.length != terms.length)
-      return fallback("duplicate query term")
-    if (commits.exists(c => activeSet(c.gen) && c.pfmt < 2))
-      return fallback("format-1 generation (pre-impact; compact to upgrade)")
-    val avgdl = math.max(avgdl0, 1e-9)
-    if (aMin <= 0.0) return fallback("no positive per-generation avgdl")
-    // the (k1', b') conversion constant of the scaladoc's bound proof;
-    // c = 1 when nothing drifted and the query runs at the build defaults
-    val convC = math.min(
-      k1 * (1 - b) / (ImpactK1 * (1 - ImpactB)),
-      k1 * b * aMin / (ImpactK1 * ImpactB * avgdl))
-    if (!(convC > 1e-9))
-      return fallback(s"degenerate (k1=$k1, b=$b) — the stored impact " +
-        "cannot bound this query's saturation")
-    // stored impact v caps the query-parameter saturation at g(v) ≤ 1
-    def gBound(v: Double): Double =
-      if (v <= 0.0) 0.0
-      else math.min(1.0, v / (convC + (1.0 - convC) * v))
-    val buckets = terms.map(termBucket).distinct
-    // df + per-term max impact, pruned — launched CONCURRENTLY with phase
-    // A's first scan (neither depends on the other; both are tiny-result
-    // jobs, and at small corpora the per-job fixed latency is the whole
-    // cost of this path)
-    val dfTask = new java.util.concurrent.FutureTask(() =>
-      spark.read.schema(dfSchema).parquet(s"$dir/df")
-        .where(col("gen").isin(active: _*) &&
-          col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-        .groupBy("term").agg(sum("df").as("df"),
-          max("max_impact").as("mi"))
-        .collect().map(r => r.getString(0) ->
-          (r.getDouble(1), if (r.isNullAt(2)) 1.0 else r.getDouble(2))).toMap)
-    val dfThread = new Thread(dfTask, "graft-bm25-topk-df")
-    dfThread.setDaemon(true)
-    dfThread.start()
-    // both phases collect RAW (doc_id, term, tf, dl) rows — CollectLimit
-    // scans with NO aggregation shuffle; scoring runs on the driver in
-    // the SAME fixed term order as the pivot tier's expression, so the
-    // floating-point arithmetic agrees bit-for-bit with bm25Indexed
-    def rawScan(cond: Column, max: Int): Array[org.apache.spark.sql.Row] = {
-      // take(max) alone runs CollectLimit's INCREMENTAL rounds (1, then 4,
-      // 16… partitions — a job per round); forcing the initial round to
-      // cover every partition keeps the row cap at ONE job. The set +
-      // restore is serialized across THIS module's queries (limitConfLock)
-      // so two concurrent top-k calls cannot torn-restore the session
-      // conf; other concurrent session users see the brief override, the
-      // same trade GateStore.withInPushdown already makes.
-      val key = "spark.sql.limit.initialNumPartitions"
-      limitConfLock.synchronized {
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, "100000")
-        try activePostings(spark, dir, active, commits,
-          col("bucket").isin(buckets: _*) && col("term").isin(terms: _*) && cond)
-          .select(col("doc_id"), col("term"), col("tf"), col("dl"))
-          .take(max)
-        finally prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-      }
-    }
-    val termIdx = terms.zipWithIndex.toMap
-    def tfVectors(rows: Array[org.apache.spark.sql.Row])
-        : java.util.LinkedHashMap[Long, (Double, Array[Double])] = {
-      val m = new java.util.LinkedHashMap[Long, (Double, Array[Double])]()
-      rows.foreach { r =>
-        val e = m.computeIfAbsent(r.getLong(0),
-          _ => (r.getDouble(3), new Array[Double](terms.length)))
-        // += not =: the pivot tier SUMS tf over rows, so a duplicated
-        // (term, doc) pair (an append-contract violation) degrades both
-        // tiers identically instead of diverging
-        e._2(termIdx(r.getString(1))) += r.getDouble(2)
-      }
-      m
-    }
-    def tfcOf(tf: Double, dl: Double): Double =
-      tf * (k1 + 1) / (tf + k1 * ((1 - b) + b * dl / avgdl))
-    // fixed term-order left fold — the pivot expression's exact shape
-    def scoreOf(dl: Double, tfs: Array[Double]): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < terms.length) {
-        s += idfArr(i) * tfcOf(tfs(i), dl)
-        i += 1
-      }
-      s
-    }
-    lazy val dfRows = dfTask.get()
-    lazy val idfArr: Array[Double] = terms.map { t =>
-      val df = math.max(dfRows.get(t).map(_._1).getOrElse(0.0), 0.0)
-      math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-    }.toArray
-    lazy val mi: Array[Double] =
-      // a term with NO df rows has no postings anywhere — its cap is 0
-      terms.map(t => dfRows.get(t).map(_._2).getOrElse(0.0)).toArray
-    // θ is PER TERM (round 18 — a single global θ cannot prune a
-    // frequent low-idf term's tf=1 tail whenever the true kth score sits
-    // below the all-terms cap, the no-co-occurrence shape a skewed
-    // large corpus exposed): round 1 scans everything at θ_t = 0.5 — an ABSOLUTE
-    // start (impact ∈ (0,1]; 0.5 ≈ the tf=1 saturation point at average
-    // dl), not derived from max_impact, so the first scan launches
-    // immediately and overlaps the df job. Failed rounds re-allocate by
-    // EQUAL BUDGET: each term gets cap_t = 0.9·lk/|T|, i.e.
-    // θ_t = g⁻¹(0.9·lk/(|T|·idf_t·(k1+1))) — low-idf (high-df) terms
-    // receive the HIGHEST thresholds, which is exactly where the rows
-    // are. θ_t only ever decreases (a rise can shrink the scan but never
-    // helps convergence, and monotone-down keeps progress guaranteed);
-    // the u0 < lk check re-gates soundness every round regardless.
-    def gInv(y: Double): Double = convC * y / (1.0 - (1.0 - convC) * y)
-    var thetas = Array.fill(terms.length)(0.5)
-    var tries = 0
-    while (tries < 3) {
-      tries += 1
-      val th = thetas.clone()
-      val cond = terms.indices.map(i =>
-        col("term") === terms(i) && col("impact") >= th(i)).reduce(_ || _)
-      val rawA = rawScan(cond, MaxTopKScanRows + 1)
-      if (rawA.length > MaxTopKScanRows)
-        return fallback(s"theta-scan exceeded $MaxTopKScanRows rows")
-      val perDoc = tfVectors(rawA)
-      // degraded-case fast path (round 18): when the θ-scan collected
-      // EVERY matching posting (Σ df rows — a corpus shape where the
-      // query terms rarely co-occur, so no θ can prune: the unseen-doc
-      // cap Σ idf·(k1+1)·g(θ) stays above the kth REAL score), the
-      // per-doc vectors in hand are already complete — score them
-      // exactly and return, skipping phase B and the convergence
-      // machinery. Bounds soundness is moot: nothing was skipped.
-      val matching = dfRows.values.map(v => math.max(v._1, 0.0)).sum.toLong
-      if (rawA.length >= matching) {
-        val exact = new scala.collection.mutable.ArrayBuffer[(Long, Double)]
-        perDoc.forEach { (id, e) =>
-          exact += ((id, scoreOf(e._1, e._2)))
-          ()
-        }
-        lastTopKPath = "pruned"
-        lastTopKScan = (rawA.length.toLong, 0L, matching)
-        if (exact.isEmpty) return fromPairs(Nil)
-        val kth = exact.map(_._2).sorted(Ordering[Double].reverse)
-          .take(k).last
-        return fromPairs(exact.filter(_._2 >= kth - tieMargin).toSeq)
-      }
-      def capOf(i: Int): Double =
-        idfArr(i) * (k1 + 1) * gBound(math.min(th(i), mi(i)))
-      val caps = terms.indices.map(capOf).toArray
-      val u0 = caps.sum
-      var lkSeen = -1.0
-      if (perDoc.size >= k) {
-        // lower = exact score over SEEN pairs (unseen tf slots are 0 and
-        // contribute 0 — identical arithmetic to the full pivot); upper
-        // adds each unseen term's cap
-        val docs = new Array[(Long, Double, Double)](perDoc.size)
-        var j = 0
-        perDoc.forEach { (id, e) =>
-          val lower = scoreOf(e._1, e._2)
-          var up = lower
-          var i = 0
-          while (i < terms.length) {
-            if (e._2(i) == 0.0) up += caps(i)
-            i += 1
-          }
-          docs(j) = (id, lower, up)
-          j += 1
-        }
-        val lowers = docs.map(_._2).sorted(Ordering[Double].reverse)
-        val lk = lowers(k - 1)
-        lkSeen = lk
-        if (u0 < lk - tieMargin) {
-          val cids = docs.filter(_._3 >= lk - tieMargin).map(_._1)
-          if (cids.length > MaxTopKCandidates)
-            return fallback(s"${cids.length} candidates > $MaxTopKCandidates")
-          // phase B: the candidates' FULL tf vectors — same pruned term
-          // slices, IN-set doc filter, still no shuffle
-          val rawB = rawScan(col("doc_id").isInCollection(cids.toSeq),
-            MaxTopKScanRows + 1)
-          if (rawB.length > MaxTopKScanRows)
-            return fallback(s"candidate re-scan exceeded $MaxTopKScanRows rows")
-          val exact = new scala.collection.mutable.ArrayBuffer[(Long, Double)]
-          tfVectors(rawB).forEach { (id, e) =>
-            exact += ((id, scoreOf(e._1, e._2)))
-            ()
-          }
-          val kth = exact.map(_._2).sorted(Ordering[Double].reverse)
-            .take(k).last
-          lastTopKPath = "pruned"
-          // scan-volume telemetry: rows the two pruned phases actually
-          // collected vs the matching postings full scoring reads (Σ df
-          // of the queried terms — already on the driver, zero jobs)
-          lastTopKScan = (rawA.length.toLong, rawB.length.toLong, matching)
-          return fromPairs(exact.filter(_._2 >= kth - tieMargin).toSeq)
-        }
-      }
-      // equal-budget re-allocation from the lk estimate (header comment);
-      // /4 when no estimate exists (fewer than k docs seen)
-      thetas = terms.indices.map { i =>
-        val byBudget =
-          if (lkSeen > 0) {
-            val y = 0.9 * lkSeen / (terms.length * idfArr(i) * (k1 + 1))
-            if (y > 0 && y < 1) gInv(y) else th(i) / 4.0
-          } else th(i) / 4.0
-        math.max(1e-4, math.min(byBudget, th(i)))
-      }.toArray
-    }
-    fallback("theta bounds failed to converge in 3 tries")
-  }
-
-  /** Which path the LAST [[bm25IndexedTopK]] call on this JVM took —
-    * "pruned" or "fallback:<reason>" (spec/telemetry hook; the fallback
-    * is also logged to stderr when it fires). */
-  @volatile private[graft] var lastTopKPath: String = ""
-
-  /** (phase-A rows, phase-B rows, Σ matching df) of the last PRUNED
-    * [[bm25IndexedTopK]] — what the bench's row-skip evidence reads. */
-  @volatile private[graft] var lastTopKScan: (Long, Long, Long) = (0L, 0L, 0L)
-
-  /** Phase-B candidate ceiling for [[bm25IndexedTopK]] — past it, the
-    * bound isn't selective enough to beat full scoring; fall back. */
-  val MaxTopKCandidates: Int = 65536
-
-  /** Raw-row collect ceiling for the top-k phases (~40 B/row driver
-    * heap); a θ-scan past it isn't selective enough to win. */
-  val MaxTopKScanRows: Int = 400000
-
   /** BM25 for a whole BATCH of queries against one index, in one pass:
     * returns (query, doc_id, score) for every document matching at least
     * one of its query's terms. The workload shape a pipeline actually
@@ -929,7 +576,7 @@ object KeywordScore {
       "every query needs at least one term")
     val commits = readCommits(dir)
     val active = activeOf(commits)
-    val (n, avgdl0, _) = readStats(spark, dir, active)
+    val (n, avgdl0) = readStats(spark, dir, active)
     import spark.implicits._
     if (n == 0.0)
       return Seq.empty[(String, Long, Double)].toDF("query", "doc_id", "score")
@@ -984,19 +631,16 @@ object KeywordScore {
     * summation order makes raw scores engine-ambiguous in the last
     * ulps).
     *
-    * A per-(query, term) impact PRUNE of the scoring pass (drop postings
-    * whose contribution bound cannot reach the query's phase-A k-boundary
-    * — the single-query tier's math vectorized over queries) was built,
-    * proven result-identical, measured, and REVERTED in round 19: any
-    * phase-A boundary estimate must RE-SCAN the matching postings (same
-    * columns; term-major row groups give an impact predicate nothing to
-    * skip), which costs about as much as the main scan, while the prune
-    * only saves aggregation input — measured 1.4× SLOWER at sf0.1 and
-    * 1.6× slower at a 1.5M-doc synthetic corpus at equal answers. The
-    * single-query tier wins with the same math only because its phases
-    * avoid all shuffles and collect ~k rows; a 50-query batch has no such
-    * asymmetry. An impact-major physical postings layout would change the
-    * trade, but that is a storage-format change, not an optimization. */
+    * A single query's top-k is [[bm25Indexed]] ordered by (score DESC,
+    * doc_id) with `limit(k)` — Spark's bounded TakeOrderedAndProject,
+    * which at sf0.1 on 4 cores ran in 0.46 s against 0.71 s for a
+    * one-entry `queries` map here. Two max-impact pruned top-k paths over
+    * impact-sorted postings were built, proven result-identical and
+    * measured: a per-(query, term) prune of this plan (1.4× slower at
+    * sf0.1) and a single-query two-phase bound-and-rescore path (level
+    * with full scoring at sf0.1, 0.95× of it at a 1.5M-doc skewed
+    * corpus). Both were removed, with the stored impact column they read
+    * (PERF_NOTES §45). */
   def bm25IndexedMultiTopK(spark: SparkSession, dir: String,
       queries: Map[String, Seq[String]], k: Int,
       k1: Double = 1.2, b: Double = 0.75,
@@ -1029,13 +673,9 @@ object KeywordScore {
     java.lang.Math.floorMod(h.asInstanceOf[Long], IndexBuckets.toLong).toInt
   }
 
-  private val limitConfLock = new Object
-
-  // (active-gen signature, N, avgdl, min per-generation avgdl) per index
-  // dir — the last slot is the top-k impact conversion's reference aMin
-  // (see bm25IndexedTopK)
+  // (active-gen signature, N, avgdl) per index dir
   private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Double, Double, Double)]()
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Double, Double)]()
 
   private def deleteRecursively(p: Path): Unit =
     graft.io.LocalStoreFs.deleteRecursively(p.toString)

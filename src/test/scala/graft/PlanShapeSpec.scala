@@ -88,10 +88,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // partition per query; the r17 window spelling moved EVERY matching
     // doc to one task per query)
     "q_bm25_multi_topk" -> 6,
-    // q_bm25_topk_pruned: the RETURNED frame is a LocalRelation of the
-    // exactly re-scored candidates (phases A/B ran inside the builder,
-    // each bounded by the pruned term slices) + presentation sort
-    "q_bm25_topk_pruned" -> 1,
+    // q_bm25_topk_pruned: the same spelling, hence plan, as q_bm25_topk
+    "q_bm25_topk_pruned" -> 2,
     // q_bm25_delete runs over the POST-COMPACTION index (single folded
     // generation, tombstones retired) — same plan as q_bm25_indexed
     "q_bm25_delete" -> 2,

@@ -235,37 +235,54 @@ class KeywordIndexSpec extends AnyFunSuite {
       KeywordScore.buildIndex(corpus, "doc_id", "text", fresh)
       val terms = Seq("spark", "vector", "join")
       assertSame(scores(dir, terms), scores(fresh, terms), s"step $step")
-      // the max-impact-pruned top-k must agree with full scoring at every
-      // mutation point — appends/deletes drift avgdl away from each
-      // generation's stored impact reference, which is exactly what the
-      // conversion-constant bound must absorb — at the build defaults AND
-      // at tuned non-default parameters (the round-18 generalization:
-      // same stored impacts, (k1', b')-dependent conversion)
+      // the single-query top-k must agree with full scoring at every
+      // mutation point, at the build defaults, at tuned parameters and at
+      // the edge parameters where a saturation term vanishes
       assertTopK(dir, terms, k = 4, s"step $step topk")
-      assertTopK(dir, terms, k = 4, s"step $step topk(0.9,0.4)",
-        k1 = 0.9, b = 0.4)
+      for ((k1x, bx) <- Seq((0.9, 0.4), (0.0, 0.75), (1.2, 0.0), (1.2, 1.0)))
+        assertTopK(dir, terms, k = 4, s"step $step topk($k1x,$bx)",
+          k1 = k1x, b = bx)
     }
   }
 
-  /** bm25IndexedTopK == the top-k slice of full scoring (score-tied
-    * boundary docs included on both sides; FP tolerance because the two
-    * paths sum contributions in different engine orders), at the build
+  /** The single-query top-k (a one-entry bm25IndexedMultiTopK) == the
+    * row_number slice of the same scores (bm25IndexedMulti), at the build
     * defaults or any caller (k1, b). */
   private def assertTopK(dir: String, terms: Seq[String], k: Int,
       what: String, k1: Double = 1.2, b: Double = 0.75): Unit = {
-    val full = KeywordScore.bm25Indexed(spark, dir, terms, k1, b)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val got = KeywordScore.bm25IndexedTopK(spark, dir, terms, k, k1, b,
-      tieMargin = 1e-9)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    if (full.isEmpty) { assert(got.isEmpty, s"$what: empty corpus"); return }
-    val kth = full.values.toSeq.sorted(Ordering[Double].reverse)
-      .take(k).last
-    val expect = full.filter { case (_, s) => s >= kth - 1e-9 }
-    assert(got.keySet === expect.keySet,
-      s"$what: got ${got.keySet} want ${expect.keySet} (kth=$kth)")
+    import org.apache.spark.sql.functions._
+    val q = Map("q" -> terms)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("query").orderBy(col("score").desc, col("doc_id"))
+    val slice = KeywordScore.bm25IndexedMulti(spark, dir, q, k1, b)
+      .withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    assertTopKOf(topKOf(dir, terms, k, k1, b), byDoc(slice, 1), what)
+  }
+
+  private def topKOf(dir: String, terms: Seq[String], k: Int,
+      k1: Double = 1.2, b: Double = 0.75): Map[Long, Double] =
+    byDoc(KeywordScore.bm25IndexedMultiTopK(spark, dir, Map("q" -> terms), k,
+      k1, b), 1)
+
+  private def byDoc(df: DataFrame, idAt: Int): Map[Long, Double] =
+    df.collect().map(r => r.getLong(idAt) -> r.getDouble(idAt + 1)).toMap
+
+  /** `got` is a top-k of `want`'s scores: the same doc set, except that
+    * docs within FP round-off of the kth score may trade places (the two
+    * sides sum a doc's contributions in engine-chosen orders), and every
+    * score agrees to round-off. */
+  private def assertTopKOf(got: Map[Long, Double], want: Map[Long, Double],
+      what: String): Unit = {
+    assert(got.size === want.size, s"$what: got $got want $want")
+    if (want.isEmpty) return
+    val kth = want.values.min
+    def firm(m: Map[Long, Double]) =
+      m.filter { case (_, s) => s > kth + 1e-9 }.keySet
+    assert(firm(got) === firm(want),
+      s"$what: got ${got.keySet} want ${want.keySet} (kth=$kth)")
     got.foreach { case (id, s) =>
-      assert(math.abs(s - full(id)) < 1e-9, s"$what: doc $id $s vs ${full(id)}")
+      assert(want.get(id).forall(w => math.abs(s - w) < 1e-9) &&
+        s > kth - 1e-9, s"$what: doc $id $s vs ${want.get(id)} (kth=$kth)")
     }
   }
 
@@ -345,45 +362,88 @@ class KeywordIndexSpec extends AnyFunSuite {
     assertSame(scores(dir, Seq("spark", "query")), full, "after retry")
   }
 
-  test("top-k pruning: exact agreement with full scoring, and a " +
-      "pre-impact (format-1) index falls back instead of mis-pruning") {
+  test("top-k equals full scoring at default, tuned and edge (k1, b)") {
     val dir = tmp()
     KeywordScore.buildIndex(part1.unionByName(part2), "doc_id", "text", dir)
     for (k <- Seq(1, 2, 3, 10))
       assertTopK(dir, Seq("spark", "query", "table"), k, s"k=$k")
-    // single-term and unmatched-term shapes
+    // single-term, duplicated-term and unmatched-term shapes
     assertTopK(dir, Seq("table"), 2, "single term")
-    // a DUPLICATED term double-counts in the pivot tier; the pruned path
-    // must agree (it falls back) rather than fill one tf slot
     assertTopK(dir, Seq("spark", "spark", "query"), 3, "duplicate term")
-    assert(KeywordScore.lastTopKPath.startsWith("fallback:"),
-      s"duplicate term takes the fallback, got ${KeywordScore.lastTopKPath}")
-    assert(KeywordScore.bm25IndexedTopK(spark, dir, Seq("zzznope"), 3)
-      .collect().isEmpty, "no matches → empty")
-    // tuned (k1, b): the generalized conversion bound keeps the PRUNED
-    // path engaged (round 18); degenerate parameters fall back loudly
-    for ((k1x, bx) <- Seq((0.9, 0.4), (2.0, 0.25), (1.2, 0.99)))
+    assert(topKOf(dir, Seq("zzznope"), 3).isEmpty, "no matches → empty")
+    // tuned (k1, b), and the edge values where a saturation term vanishes
+    for ((k1x, bx) <- Seq((0.9, 0.4), (2.0, 0.25), (1.2, 0.99),
+        (0.0, 0.75), (1.2, 0.0), (1.2, 1.0)))
       assertTopK(dir, Seq("spark", "query", "table"), 3,
         s"tuned ($k1x,$bx)", k1 = k1x, b = bx)
-    assertTopK(dir, Seq("spark", "query", "table"), 3, "pruned engages",
-      k1 = 0.9, b = 0.4)
-    assert(KeywordScore.lastTopKPath === "pruned",
-      s"(0.9,0.4) must ride the pruned path, got ${KeywordScore.lastTopKPath}")
-    for ((k1x, bx) <- Seq((0.0, 0.75), (1.2, 0.0), (1.2, 1.0))) {
-      assertTopK(dir, Seq("spark", "query", "table"), 3,
-        s"degenerate ($k1x,$bx)", k1 = k1x, b = bx)
-      assert(KeywordScore.lastTopKPath.startsWith("fallback:degenerate"),
-        s"($k1x,$bx) must fall back, got ${KeywordScore.lastTopKPath}")
+  }
+
+  test("an index in the impact postings format (impact column, df " +
+      "max_impact, pfmt marker) scores like the scan tier, before and " +
+      "after append + compact") {
+    import org.apache.spark.sql.functions._
+    val dir = tmp()
+    writeImpactFormatIndex(part1, dir)
+    val terms = Seq("spark", "query", "vector", "table")
+    def check(docs: DataFrame, what: String): Unit = {
+      val scan = byDoc(KeywordScore.bm25(docs, "doc_id", "text", terms), 0)
+      assertSame(scores(dir, terms), scan, s"$what: bm25Indexed")
+      for (k <- Seq(1, 3)) {
+        val top = scan.toSeq.sortBy { case (id, s) => (-s, id) }.take(k).toMap
+        assertTopKOf(topKOf(dir, terms, k), top, s"$what: top-$k")
+        // the single-query spelling (q_bm25_topk's): ordered full scoring
+        val ordered = KeywordScore.bm25Indexed(spark, dir, terms)
+          .orderBy(desc("score"), col("doc_id")).limit(k)
+        assertTopKOf(byDoc(ordered, 0), top, s"$what: ordered top-$k")
+      }
     }
-    // simulate a pre-r17 index: strip pfmt from the marker — the reader
-    // must take the full-scoring fallback (same answer), never trust a
-    // null impact column
+    check(part1, "impact-format index")
+    KeywordScore.appendIndex(part2, "doc_id", "text", dir)
+    KeywordScore.compactIndex(spark, dir)
+    check(part1.unionByName(part2), "after append + compact")
+    // the fold rewrote the postings without the impact column
+    val g = KeywordScore.readCommits(dir).last.gen
+    assert(!spark.read.parquet(s"$dir/postings/gen=$g").columns
+      .contains("impact"))
+    assert(!spark.read.parquet(s"$dir/df/gen=$g").columns
+      .contains("max_impact"))
+  }
+
+  /** Writes `docs` as a one-generation index in the impact postings
+    * format that earlier builds wrote: postings carry `impact` =
+    * tf/(tf + k1(1−b) + k1·b·dl/avgdl) at (1.2, 0.75), sorted
+    * (term, impact DESC); df carries the per-term `max_impact`; the
+    * marker records `"pfmt": 2`. */
+  private def writeImpactFormatIndex(docs: DataFrame, dir: String): Unit = {
+    import org.apache.spark.sql.functions._
+    val toks = KeywordScore.tokenize(col("text"))
+    val st = docs.select(size(toks).cast("double").as("dl"))
+      .agg(count(lit(1)).cast("double"), sum("dl")).collect()(0)
+    val (n, dlSum) = (st.getDouble(0), st.getDouble(1))
+    val bucket = pmod(xxhash64(col("term")), lit(64L))
+    docs.select(col("doc_id").cast("long").as("doc_id"),
+        size(toks).cast("double").as("dl"), explode(toks).as("term"))
+      .groupBy("term", "doc_id", "dl")
+      .agg(count(lit(1)).cast("double").as("tf"))
+      .select(col("term"), col("doc_id"), col("dl"), col("tf"),
+        (col("tf") / (col("tf") + lit(1.2 * 0.25) +
+          lit(1.2 * 0.75) * col("dl") / lit(dlSum / n))).as("impact"))
+      .withColumn("bucket", bucket)
+      .repartition(col("bucket"))
+      .sortWithinPartitions(col("term"), col("impact").desc)
+      .write.partitionBy("bucket").parquet(s"$dir/postings/gen=0")
+    spark.read.parquet(s"$dir/postings/gen=0")
+      .groupBy("term").agg(count(lit(1)).cast("double").as("df"),
+        max("impact").as("max_impact"))
+      .withColumn("bucket", bucket)
+      .repartition(col("bucket"))
+      .write.partitionBy("bucket").parquet(s"$dir/df/gen=0")
+    Seq((n, dlSum)).toDF("n", "dl_sum").coalesce(1)
+      .write.parquet(s"$dir/stats/gen=0")
     val fs = graft.io.StoreFs.forRoot(dir)
-    val marker = s"$dir/_commits/gen_0.json"
-    fs.writeString(marker,
-      fs.readString(marker).replaceAll(""",\s*"pfmt"\s*:\s*\d+""", ""))
-    assert(!fs.readString(marker).contains("pfmt"))
-    assertTopK(dir, Seq("spark", "query", "table"), 3, "format-1 fallback")
+    fs.mkdirs(s"$dir/_commits")
+    fs.writeString(s"$dir/_commits/gen_0.json",
+      """{"gen": 0, "kind": "base", "pfmt": 2}""")
   }
 
   test("a marker-less dir with postings data is refused as unmigrated " +
