@@ -62,14 +62,6 @@ final class StateStore(
   @volatile private var _root: String = initialRoot
   def root: String = _root
 
-  /** Redirect the store to a directory whose files the caller just moved
-    * (ALTER VIEW RENAME). Takes the store monitor, so a mutation in flight
-    * against the old path completes before the switch, and every later one
-    * — including async ingest threads still holding this instance —
-    * targets the new path. Keeping ONE store instance across the rename is
-    * what makes the move safe: there is no superseded instance left that
-    * could write into the moved-away directory.
-    */
   /** Join any in-flight background version-dir deletion. Callers about to
     * MOVE the store's directory tree (rename) must quiesce BEFORE the move:
     * the deleter holds absolute paths under the old root, and a move that
@@ -81,6 +73,14 @@ final class StateStore(
     gcInFlight = None
   }
 
+  /** Redirect the store to a directory whose files the caller just moved
+    * (ALTER VIEW RENAME). Takes the store monitor, so a mutation in flight
+    * against the old path completes before the switch, and every later one
+    * — including async ingest threads still holding this instance —
+    * targets the new path. Keeping ONE store instance across the rename is
+    * what makes the move safe: there is no superseded instance left that
+    * could write into the moved-away directory.
+    */
   def relocate(newRoot: String): Unit = this.synchronized {
     val old = _root.stripSuffix("/")
     quiesceGc() // belt: callers quiesce before moving the tree (see above)

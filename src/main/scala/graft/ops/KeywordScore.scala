@@ -593,17 +593,19 @@ object KeywordScore {
       .where(col("gen").isin(active: _*) &&
         col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
       .groupBy("term").agg(sum("df").as("df"))
+    // one (query, term) pair per distinct term, weighted by how often the
+    // term appears in the query: [[bm25]] sums every term position
     val qtPairs = queries.toSeq.flatMap { case (q, ts) =>
-      ts.distinct.map(t => (q, t))
-    }.toDF("query", "term")
+      ts.distinct.map(t => (q, t, ts.count(_ == t).toDouble))
+    }.toDF("query", "term", "w")
     // tombstone generations can drive a term's summed df negative-to-zero
     // and an unmatched term has no df row at all — both clamp to 0, the
     // same arithmetic the driver-side idfOf used
     val dfc = greatest(coalesce(col("df"), lit(0.0)), lit(0.0))
-    // (query, term, idf): one small broadcast side for the whole batch
+    // (query, term, weighted idf): one small broadcast side for the batch
     val qt = qtPairs.join(broadcast(dfAgg), Seq("term"), "left")
-      .select(col("query"), col("term"),
-        log(lit(1.0) + (lit(n) - dfc + lit(0.5)) / (dfc + lit(0.5)))
+      .select(col("query"), col("term"), (col("w") *
+        log(lit(1.0) + (lit(n) - dfc + lit(0.5)) / (dfc + lit(0.5))))
           .as("idf"))
     val posts = activePostings(spark, dir, active, commits,
       col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))

@@ -868,7 +868,7 @@ object CvQueries {
   /** EXECUTOR-BACKEND gate fixture (q_dedup_stream_exec /
     * q_neardup_stream_exec): an exact gate and a jaccard gate, both
     * DDL-declared with `backend = 'executor'` (state on
-    * executor-partitioned shards — ExecutorSeenStore / ExecutorGateIndex —
+    * executor-partitioned shards — SeenKind / IndexKind ExecutorShards —
     * no driver bloom, no driver hot tier), fed in three batches with a
     * mid-feed engine restart (catalog replay carries the backend option;
     * the new instance's shards rebuild from the durable stores). Jaccard
@@ -925,7 +925,7 @@ object CvQueries {
                     |SELECT doc_id, text FROM xg_in""".stripMargin)
           // third sibling, SAME input stream: the contamination gate with
           // its static reference membership on executor shards (no driver
-          // bloom, no driver reference read) — ExecutorSeenStore over the
+          // bloom, no driver reference read) — SeenKind shards over the
           // hashed-gram store, state_parts = 5 (another non-default count)
           eng.sql("""CREATE VIEW xg_ct WITH (action = transform,
                     |  sink = 'xg_ct_out', backend = 'executor',
@@ -1661,7 +1661,7 @@ object CvQueries {
     },
 
     // Contamination gate with backend = 'executor' (see execGateFor): the
-    // static reference-gram membership lives on ExecutorSeenStore shards
+    // static reference-gram membership lives on SeenKind shards
     // (state_parts = 5), catalog-replayed across the mid-feed restart.
     // Reference = every 20th base doc; tokens are doc-disjoint, so the
     // suppressed set is exactly the reference docs + their +600000 copies.

@@ -72,7 +72,7 @@ final class ContaminationGate private (
 
   /** EXECUTOR STATE BACKEND — `backend = "executor"`: the reference-gram
     * membership moves to hash-partitioned executor-local shards
-    * ([[ExecutorSeenStore]] over the static `gh` store), replacing BOTH
+    * ([[SeenKind]] shards over the static `gh` store), replacing BOTH
     * driver-resident O(reference) structures at once — the Bloom filter
     * (a 100-GB eval corpus is ~10^10 grams → ~12 GB of driver bloom bits
     * at p=0.01) and the pruned reference read whose driver-verify slice
@@ -173,14 +173,13 @@ final class ContaminationGate private (
 
   /** Executor-partitioned reference-gram store (executor backend only);
     * static — constructed lazily-rebuilding, never fed deltas. */
-  private val execSeen: ExecutorSeenStore =
+  private val execSeen: ExecutorShards.Seen =
     if (!executorBackend) null
-    else new ExecutorSeenStore(eng.spark, storeDir,
-      if (stateParts > 0) stateParts
-      else ExecutorGateIndex.defaultParts(eng.spark),
-      ttlEnabled = false, keyCol = "gh")
+    else new ExecutorShards(eng.spark, storeDir,
+      ExecutorShards.partsFor(eng.spark, stateParts),
+      SeenKind("gh", ttlEnabled = false))
   /** Probe/spec seams (null on the driver backend / executor backend). */
-  private[graft] def executorSeen: ExecutorSeenStore = execSeen
+  private[graft] def executorSeen: ExecutorShards.Seen = execSeen
   private[graft] def backendInfo: (String, Int) =
     (backend, if (execSeen == null) 0 else execSeen.parts)
   private[graft] def driverBloomForSpec: AnyRef = bloom
@@ -284,8 +283,8 @@ final class ContaminationGate private (
         // distributed membership: ship the batch's distinct gram hashes,
         // get back exactly the reference-present (= contaminated) ones —
         // no driver bloom, no reference read on the driver
-        execSeen.lookup(hitKeys.map(Long.box(_): Any))
-          .keySet().forEach { gh =>
+        execSeen.query(hitKeys.map(Long.box(_): Any))
+          .foreach { case (gh, _) =>
             val cands = candByHash.get(gh.asInstanceOf[java.lang.Long])
             if (cands != null)
               cands.forEach(i => {

@@ -2,81 +2,72 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.{Partition, Partitioner, SparkContext, TaskContext}
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
+
+import org.apache.spark.{HashPartitioner, Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** EXECUTOR-DISTRIBUTED gate index: the (bucket-key → 64-bit aux [, store
-  * id, event time]) probe state of a streaming near-dup gate, partitioned
-  * by bucket across long-lived executor-local shards — the scale-out past
-  * the single-driver ceiling of [[ResidentIndex]] (whose byte budget,
-  * G-thread sharding and O(store)/batch disk fallback all live in ONE
-  * driver JVM). Reference anchor: pipelinedb's combiner tier — a
-  * separately scalable process pool receiving group-hash-routed state
-  * updates (config.c:300-306 `num_combiners` 1-1024;
-  * combiner_receiver.c:160-177 group-hash routing) — re-expressed in
-  * Spark's execution model: state shards live where tasks run, the driver
-  * only routes and coordinates.
+/** EXECUTOR-DISTRIBUTED gate state: one store-backed piece of a streaming
+  * gate's decision state, partitioned across long-lived executor-local
+  * shards — the scale-out past the single-driver ceiling of
+  * [[ResidentIndex]] (whose byte budget, G-thread sharding and
+  * O(store)/batch disk fallback all live in ONE driver JVM). Reference
+  * anchor: pipelinedb's combiner tier — a separately scalable process pool
+  * receiving group-hash-routed state updates (config.c:300-306
+  * `num_combiners` 1-1024; combiner_receiver.c:160-177 group-hash routing)
+  * — re-expressed in Spark's execution model: state shards live where
+  * tasks run, the driver only routes and coordinates.
   *
-  * The aux word is the gate's inline similarity digest and ONE predicate
-  * serves the whole family — popcount(auxBatch ^ auxStore) ≤ cutoff: the
-  * SimHash fingerprint at Hamming radius maxDist, the jaccard parity
-  * sketch and the cosine SRP sketch at their calibrated cutoffs (a
-  * sketchless gate passes cutoff 64 ≡ every bucket-mate). Two result
-  * modes: `withIds = false` answers "is this row suppressed" directly
-  * (the SimHash decision is aux-complete); `withIds = true` returns
-  * sketch-admissible candidate (row, store id [, ts]) pairs for the
-  * owning gate's exact payload verification (the split-store gates).
+  * This class is the protocol; a [[ShardKind]] is what one tier keeps and
+  * answers. Three kinds exist: [[IndexKind]] (the near-dup bucket index),
+  * [[PayloadKind]] (phase 2's stored payloads) and [[SeenKind]] (exact-gate
+  * and contamination membership).
   *
-  * SHAPE. Bucket b belongs to shard floorMod(b, P) (bucket keys are
-  * banded hashes — uniform by construction). Each shard is a
-  * [[ResidentIndex]] (sorted main run + hashed delta — the same LSM
-  * layout as the driver hot tier) plus id/ts pools, held in a JVM-global
-  * registry keyed by (store path, shard id), so it SURVIVES across Spark
-  * jobs. Per batch the driver ships O(batch) probe rows plus the previous
-  * batch's O(batch) index delta, runs ONE P-partition job, and collects
-  * O(candidates) back: the corpus-sized state never moves, per-batch
-  * traffic is bounded by the batch, and memory scales with the CLUSTER
-  * (P shards across executor heaps), not with one driver budget.
+  * SHAPE. The kind routes every delta and query to one of P shards. Each
+  * shard lives in the JVM-global [[ExecutorGateState]] registry keyed by
+  * (store path, kind, shard id), so it SURVIVES across Spark jobs. Per
+  * query the driver ships the query rows plus the deltas buffered since
+  * the last query, runs ONE P-partition job, and collects only the answers:
+  * the corpus-sized state never moves, per-batch traffic is bounded by the
+  * batch, and memory scales with the CLUSTER (P shards across executor
+  * heaps), not with one driver budget.
   *
-  * CONSISTENCY. The parquet gate store remains the durable source of
-  * truth; shards are caches REBUILDABLE from it. Every shard carries
-  * (generation, applied-batch); a probe task whose shard is missing, from
-  * another generation (compaction reap / bulk seed / gate restart), or
-  * not exactly at the delta floor reports STALE instead of answering, and
-  * the driver runs one rebuild job — a single distributed store scan
-  * shuffled by the same bucket partitioner, loading every shard in one
-  * pass — then retries the probe. Deltas apply strictly in batch order:
-  * the delta for batch N rides batch N+1's probe job, AFTER N's durable
-  * append (the gate drains its commit pipeline before deciding), so a
-  * rebuild always reproduces at least what the shards knew — modulo a
-  * LOST durable append, the gate family's accepted at-least-once loss
-  * class.
+  * CONSISTENCY. The parquet store remains the durable source of truth;
+  * shards are caches REBUILDABLE from it. Every shard carries (generation,
+  * applied delta number). The generation is this instance's nonce plus its
+  * invalidation count, so a gate restart, a compaction fold or a bulk seed
+  * ([[invalidate]]) orphans every shard. This instance numbers its own
+  * deltas: [[bufferDelta]] is called at the durable append, and the gate
+  * drains its commit pipeline before deciding, so every delta below the
+  * number a query expects is already durable. A task whose shard is
+  * missing, from another generation, or not exactly at the floor reports
+  * STALE instead of answering; the driver then runs one rebuild job — a
+  * single distributed store scan shuffled to the shards, loading every
+  * shard in one pass — and retries, at most twice. A rebuild therefore
+  * always reproduces at least what the shards knew — modulo a LOST durable
+  * append, the gate family's accepted at-least-once loss class.
   *
-  * PLACEMENT. Probe tasks prefer the executor that last hosted their
-  * shard (`getPreferredLocations`, recorded per job — the same pinning
-  * Structured Streaming's StateStoreRDD gets from its coordinator); a
-  * task scheduled elsewhere self-heals with one rebuild. On local[n] all
-  * shards share the JVM and the pin is trivially satisfied.
+  * PLACEMENT. Query tasks prefer the executor that last hosted their shard
+  * (`getPreferredLocations`, recorded per job — the same pinning Structured
+  * Streaming's StateStoreRDD gets from its coordinator); a task scheduled
+  * elsewhere self-heals with one rebuild. On local[n] all shards share the
+  * JVM and the pin is trivially satisfied.
   */
-private[graft] final class ExecutorGateIndex(
+private[graft] final class ExecutorShards[S <: AnyRef, D: ClassTag, Q, A](
     spark: SparkSession,
     storeDir: String,
     val parts: Int,
-    ttlEnabled: Boolean,
-    withIds: Boolean = false,
-    auxCol: Option[String] = Some("fp")) {
-
-  import ExecutorGateIndex._
+    kind: ShardKind[S, D, Q, A]) {
 
   require(parts >= 1, s"need at least one state partition, got $parts")
 
-  private val storeKey = storeDir
-  // generation: instance nonce + invalidation count — a gate restart, a
-  // compaction fold, or a bulk seed invalidates every shard (rebuild)
+  private val storeKey = s"$storeDir#${kind.tag}"
+  private val marker = s"_owner_${kind.tag}"
   private val nonce = java.util.UUID.randomUUID().toString.take(8)
-  ExecutorGateIndex.stampOwner(storeDir, "_owner_idx", nonce)
+  ExecutorShards.stampOwner(storeDir, marker, nonce)
   ExecutorGateState.registerLiveDir(storeKey)
   private var invalidations = 0L
   private def gen: String = s"$nonce:$invalidations"
@@ -85,163 +76,120 @@ private[graft] final class ExecutorGateIndex(
   // last-known executor host of each shard (next job's preferred location)
   private val shardHosts = new Array[String](parts)
 
-  // deltas not yet applied to the shards: (batch, entries) — shipped with
-  // the next probe job; depth ≤ 1 in steady flow, bounded by batch always
-  private val pending = new java.util.ArrayDeque[(Long, Array[DeltaRow])]()
-  private var appliedFloor = -1L // shards sit exactly here between probes
+  // deltas not yet applied to the shards, numbered appliedFloor+1 .. seq;
+  // depth ≤ 1 in steady flow
+  private var seq = 0L
+  private val pending = new ArrayBuffer[Array[D]]()
+  private var appliedFloor = 0L // shards sit exactly here between queries
 
-  /** Buffer batch `n`'s exploded (bucket, aux, tsMicros, id) entries at
-    * the gate's durable commit; they ride the next probe job. Call for
-    * EVERY committed batch (empty arrays keep the range contiguous). */
-  def bufferDelta(n: Long, entries: Array[DeltaRow]): Unit =
-    synchronized { pending.addLast((n, entries)); () }
+  /** Spec seam: rebuild jobs run so far (bootstrap included). */
+  @volatile private[graft] var rebuilds = 0
+
+  /** Buffer one durable append's entries; they ride the next query job.
+    * Call AFTER the append is durable (a failed append must fail the batch
+    * without the shards learning its entries). */
+  def bufferDelta(entries: Array[D]): Unit = synchronized {
+    seq += 1
+    pending += entries
+    ()
+  }
+
+  /** Spec seam: undrained delta batches on the driver. A gate that queries
+    * every batch keeps this ≤ 1. */
+  private[graft] def pendingDepthForSpec: Int = synchronized(pending.size)
 
   /** The durable store changed shape under the shards (bulk seed,
     * compaction reap, crash recovery): drop the delta buffer and force a
-    * rebuild at the next probe. */
+    * rebuild at the next query. */
   def invalidate(): Unit = synchronized {
     pending.clear()
     invalidations += 1
     needRebuild = true
   }
 
-  /** Suppression/candidate probe for one batch against the distributed
-    * shards. `withIds = false`: one (rowIdx, null, 0) per row with an
-    * in-window match at popcount ≤ cutoff — the row is suppressed.
-    * `withIds = true`: every admissible (rowIdx, store id, store
-    * tsMicros) candidate pair, for exact verification by the gate.
-    *
-    * @param probes (rowIdx, bucket, aux, tsMicros), pre-filtered by the
-    *               driver bloom/occupancy cap; ts ignored unwindowed
-    * @param batch  this batch's number — shards must cover ≤ batch-1
-    */
-  def probe(probes: Array[(Int, Long, Long, Long)], batch: Long,
-      cutoff: Int, ttlMicros: Long): Array[(Int, Any, Long)] = synchronized {
-    ExecutorGateIndex.checkOwner(storeDir, "_owner_idx", nonce,
-      "ExecutorGateIndex")
-    val expectApplied = batch - 1
-    if (needRebuild) rebuildAll(expectApplied)
-    val deltas = pending.toArray(Array.empty[(Long, Array[DeltaRow])])
+  /** Answer `queries` on the shards after applying every buffered delta:
+    * the concatenation of each shard's [[ShardKind.answer]]. */
+  def query(queries: Array[Q]): Seq[A] = synchronized {
+    ExecutorShards.checkOwner(storeDir, marker, nonce, kind.tag)
+    if (needRebuild) rebuild()
+    val deltas = pending.toSeq
     pending.clear()
     val floor = appliedFloor
-    appliedFloor = expectApplied
-    var out = runProbe(probes, deltas, floor, expectApplied, cutoff, ttlMicros)
+    appliedFloor = seq
+    var out = run(queries, deltas, floor)
     var attempts = 0
     while (out.isLeft && attempts < 2) {
       // an executor moved/lost its shard (never on local[n] — and the
       // executor-granular pin makes a repeat rare on a cluster): rebuild
-      // heals every shard, then the probe must answer
-      System.err.println(s"[graft] ExecutorGateIndex($storeKey): shards " +
+      // heals every shard, then the query must answer
+      System.err.println(s"[graft] executor shards $storeKey: shards " +
         s"${out.swap.getOrElse(Nil).mkString(",")} stale; rebuilding from the store")
-      rebuildAll(expectApplied)
-      out = runProbe(probes, Array.empty, expectApplied, expectApplied,
-        cutoff, ttlMicros)
+      rebuild()
+      out = run(queries, Nil, seq)
       attempts += 1
     }
     out.getOrElse(throw new IllegalStateException(
-      s"gate shards ${out.swap.getOrElse(Nil)} stale after $attempts rebuilds — store $storeKey"))
+      s"shards ${out.swap.getOrElse(Nil)} stale after $attempts rebuilds — store $storeKey"))
   }
 
-  /** One probe job. Left(stale shard ids) if any shard could not answer. */
-  private def runProbe(probes: Array[(Int, Long, Long, Long)],
-      deltas: Array[(Long, Array[DeltaRow])], floor: Long,
-      expectApplied: Long, cutoff: Int,
-      ttlMicros: Long): Either[Seq[Int], Array[(Int, Any, Long)]] = {
-    val expectGen = gen
-    val (sKey, p, ttl, ids) = (storeKey, parts, ttlEnabled, withIds)
-    // group driver-side (batch-bounded): partition k's task payload
-    val perShard = Array.fill(p)(
-      new scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Long)]())
-    probes.foreach { pr =>
-      perShard(java.lang.Math.floorMod(pr._2, p.toLong).toInt) += pr
-    }
-    val deltaPerShard =
-      Array.fill(p)(new scala.collection.mutable.ArrayBuffer[(Long, DeltaRow)]())
-    deltas.foreach { case (bn, entries) =>
-      entries.foreach { e =>
-        deltaPerShard(java.lang.Math.floorMod(e.bucket, p.toLong).toInt) +=
-          ((bn, e))
-      }
-    }
-    val payload: Array[ShardTask] = (0 until p).map { k =>
-      ShardTask(perShard(k).toArray, deltaPerShard(k).toArray)
-    }.toArray
-    val rdd = new GateTaskRDD(spark.sparkContext, payload, shardHosts.clone())
+  /** One query job. Left(stale shard ids) if any shard could not answer. */
+  private def run(queries: Array[Q], deltas: Seq[Array[D]],
+      floor: Long): Either[Seq[Int], Seq[A]] = {
+    val (sKey, p, kd, expectGen, expectApplied) = (storeKey, parts, kind, gen, seq)
+    // group driver-side (batch-bounded); grouping keeps delta order
+    val qs = Array.fill(p)(new ArrayBuffer[Q]())
+    queries.foreach(q => qs(kd.queryShard(q, p)) += q)
+    val ds = Array.fill(p)(new ArrayBuffer[D]())
+    deltas.foreach(_.foreach(d => ds(kd.deltaShard(d, p)) += d))
+    val tasks = Array.tabulate(p)(k => ShardTask(qs(k).toVector, ds(k).toVector))
+    val rdd = new GateTaskRDD(spark.sparkContext, tasks, shardHosts.clone())
     val results = try rdd.mapPartitionsWithIndex { (k, it) =>
       val task = it.next()
-      val host = ExecutorGateState.taskLocation
-      val shard = ExecutorGateState.shardFor(sKey, k, ttl, ids)
-      shard.synchronized {
-        if (shard.gen != expectGen || shard.applied != floor) {
-          Iterator.single((k, host, true, Array.empty[(Int, Any, Long)]))
-        } else {
-          // apply the shipped deltas in batch order, then advance to the
-          // probe's floor (a shard with no routed entries advances too —
-          // the shipped batch range is contiguous by contract)
-          task.deltas.sortBy(_._1).foreach { case (_, e) =>
-            shard.add(e.bucket, e.aux, e.ts, e.id)
-          }
+      val shard = ExecutorGateState.shardFor(sKey, k, kd)
+      val answer = shard.synchronized {
+        if (shard.gen != expectGen || shard.applied != floor) None
+        else {
+          // apply the shipped deltas in order, then advance to the query's
+          // number (a shard with no routed entries advances too)
+          val s = shard.state.asInstanceOf[S]
+          task.deltas.foreach(kd.applyDelta(s, _))
           shard.applied = expectApplied
-          val out = new scala.collection.mutable.ArrayBuffer[(Int, Any, Long)]()
-          task.probes.foreach { case (rowIdx, b, aux, ts) =>
-            var done = false
-            shard.idx.foreachMatch(b) { (sAux, ord) =>
-              if (!done && java.lang.Long.bitCount(sAux ^ aux) <= cutoff &&
-                  (ttlMicros == 0L || shard.ts(ord) > ts - ttlMicros)) {
-                if (!ids) { out += ((rowIdx, null, 0L)); done = true }
-                else out += ((rowIdx, shard.id(ord),
-                  if (ttlMicros == 0L) 0L else shard.ts(ord)))
-              }
-            }
-          }
-          Iterator.single((k, host, false, out.toArray))
+          Some(kd.answer(s, task.queries))
         }
       }
+      Iterator.single((k, ExecutorGateState.taskLocation, answer))
     }.collect() finally rdd.destroy()
-    results.foreach { case (k, host, _, _) => shardHosts(k) = host }
-    val stale = results.collect { case (k, _, true, _) => k }.toSeq
-    if (stale.nonEmpty) Left(stale)
-    else {
-      val all = results.flatMap(_._4)
-      Right(if (withIds) all else all.distinct)
-    }
+    results.foreach { case (k, host, _) => shardHosts(k) = host }
+    val stale = results.collect { case (k, _, None) => k }.toSeq
+    if (stale.nonEmpty) Left(stale) else Right(results.toSeq.flatMap(_._3.get))
   }
 
   /** Rebuild every shard from the durable store in ONE distributed pass:
-    * scan the parquet files, shuffle by the bucket partitioner, load each
-    * partition into its executor-local shard. O(store) read + one shuffle
-    * — the bootstrap cost, paid at restart/compaction/seed, never per
-    * batch. */
-  private def rebuildAll(expectApplied: Long): Unit = {
+    * scan the parquet files, shuffle each row to its shard, load each
+    * partition into a fresh executor-local state. O(store) read + one
+    * shuffle — the bootstrap cost, paid at restart/compaction/seed, never
+    * per batch. */
+  private def rebuild(): Unit = {
     invalidations += 1 // orphan any shard the job does not reach
-    val expectGen = gen
-    val (sKey, p, ttl, ids) = (storeKey, parts, ttlEnabled, withIds)
+    rebuilds += 1
+    val (sKey, p, kd, expectGen, expectApplied) = (storeKey, parts, kind, gen, seq)
     val files = GateStore.files(storeDir)
     val rows =
-      if (files.isEmpty) spark.sparkContext.emptyRDD[(Long, DeltaRow)]
-      else {
-        val cols = Seq(col("bucket"),
-          auxCol.map(col).getOrElse(lit(0L)).cast("long").as("__aux")) ++
-          (if (ids) Seq(col("id")) else Nil) ++
-          (if (ttl) Seq(unix_micros(col("ts"))) else Nil)
-        val tsPos = if (ids) 3 else 2
-        spark.read.parquet(files.toSeq: _*).select(cols: _*).rdd.map { r =>
-          (r.getLong(0), DeltaRow(r.getLong(0), r.getLong(1),
-            if (ttl) r.getLong(tsPos) else 0L, if (ids) r.get(2) else null))
-        }
-      }
-    val hosts = rows.partitionBy(new BucketPartitioner(p))
+      if (files.isEmpty) spark.sparkContext.emptyRDD[(Int, D)]
+      else spark.read.parquet(files.toSeq: _*).select(kd.columns: _*).rdd
+        .map { r => val d = kd.decode(r); (kd.deltaShard(d, p), d) }
+    val hosts = rows.partitionBy(new HashPartitioner(p))
       .mapPartitionsWithIndex { (k, it) =>
-        val host = ExecutorGateState.taskLocation
-        val shard = ExecutorGateState.shardFor(sKey, k, ttl, ids)
+        val s = kd.newState()
+        it.foreach { case (_, d) => kd.applyDelta(s, d) }
+        kd.seal(s)
+        val shard = ExecutorGateState.shardFor(sKey, k, kd)
         shard.synchronized {
-          shard.reset()
-          it.foreach { case (_, e) => shard.add(e.bucket, e.aux, e.ts, e.id) }
-          shard.idx.mergeDelta()
+          shard.state = s
           shard.gen = expectGen
           shard.applied = expectApplied
         }
-        Iterator.single((k, host))
+        Iterator.single((k, ExecutorGateState.taskLocation))
       }.collect()
     hosts.foreach { case (k, host) => shardHosts(k) = host }
     appliedFloor = expectApplied
@@ -250,53 +198,54 @@ private[graft] final class ExecutorGateIndex(
   }
 
   /** Test seam: orphan one shard's registry entry (wrong generation), as
-    * an executor loss / task migration would — the next probe must detect
+    * an executor loss / task migration would — the next query must detect
     * it, rebuild from the store, and still answer correctly. */
   private[graft] def poisonShard(k: Int): Unit =
-    ExecutorGateState.shardFor(storeKey, k, ttlEnabled, withIds).gen = "poisoned"
+    ExecutorGateState.shardFor(storeKey, k, kind).gen = "poisoned"
 
-  /** Approximate total entries across shards (probe/spec telemetry). */
+  /** Total entries across shards (probe/spec telemetry). */
   def totalEntries: Long = {
-    val (sKey, p, ttl, ids) = (storeKey, parts, ttlEnabled, withIds)
+    val (sKey, p, kd) = (storeKey, parts, kind)
     val rdd = new GateTaskRDD(spark.sparkContext,
-      Array.fill(p)(ShardTask(Array.empty, Array.empty)), shardHosts.clone())
+      Array.fill(p)(ShardTask(Vector.empty[Q], Vector.empty[D])), shardHosts.clone())
     try rdd.mapPartitionsWithIndex { (k, _) =>
-      Iterator.single(
-        ExecutorGateState.shardFor(sKey, k, ttl, ids).idx.size.toLong)
+      Iterator.single(kd.size(ExecutorGateState.shardFor(sKey, k, kd).state.asInstanceOf[S]))
     }.collect().sum finally rdd.destroy()
   }
 }
 
-private[graft] object ExecutorGateIndex {
+/** One shard's per-task payload: its query rows and its deltas, in order. */
+private[graft] final case class ShardTask[Q, D](queries: Vector[Q], deltas: Vector[D])
 
-  /** One exploded index entry: id is null when the gate is aux-complete. */
-  final case class DeltaRow(bucket: Long, aux: Long, ts: Long, id: Any)
+private[graft] object ExecutorShards {
 
-  /** One shard's per-task payload: probe rows + tagged index deltas. */
-  final case class ShardTask(
-      probes: Array[(Int, Long, Long, Long)],
-      deltas: Array[(Long, DeltaRow)])
+  type Index = ExecutorShards[IndexShard, IndexKind.Entry, IndexKind.Probe, IndexKind.Hit]
+  type Payloads = ExecutorShards[java.util.HashMap[Any, AnyRef],
+    (Any, AnyRef), Any, (Any, AnyRef)]
+  type Seen = ExecutorShards[java.util.HashMap[Any, java.lang.Long],
+    (Any, java.lang.Long), Any, (Any, java.lang.Long)]
 
-  /** Default state-partition count: ~one shard per 2 cores keeps probe
-    * tasks short while leaving scheduler slots for the scan work. On a
-    * real cluster this would be sized to executors × cores. */
-  def defaultParts(spark: SparkSession): Int =
-    math.max(4, spark.sparkContext.defaultParallelism / 2)
+  /** The shard count: the gate's `state_parts` when set (> 0), else ~one
+    * shard per 2 cores, which keeps query tasks short while leaving
+    * scheduler slots for the scan work. On a real cluster `state_parts`
+    * would be sized to executors × cores. */
+  def partsFor(spark: SparkSession, stateParts: Int): Int =
+    if (stateParts > 0) stateParts
+    else math.max(4, spark.sparkContext.defaultParallelism / 2)
 
   /** Owner-nonce stamp: two LIVE instances sharing a store path have
-    * different nonces, so interleaved probes would ping-pong full
+    * different nonces, so interleaved queries would ping-pong full
     * O(store) rebuilds (each instance's generation orphans the other's
     * shards) rather than erroring. Each instance stamps its nonce at
-    * construction; a probe finding someone else's stamp fails FAST with
+    * construction; a query finding someone else's stamp fails FAST with
     * the real diagnosis. Restart fixtures are unaffected — the abandoned
-    * instance is never probed again. The marker is not `.parquet`, so
+    * instance is never queried again. The marker is not `.parquet`, so
     * store scans/compaction never see it. */
-  private[streaming] def stampOwner(dir: String, marker: String,
-      nonce: String): Unit =
+  private def stampOwner(dir: String, marker: String, nonce: String): Unit =
     graft.io.StoreFs.forRoot(dir).writeString(
       GateStore.child(dir, marker), nonce)
 
-  private[streaming] def checkOwner(dir: String, marker: String,
+  private def checkOwner(dir: String, marker: String,
       nonce: String, what: String): Unit = {
     val fs = graft.io.StoreFs.forRoot(dir)
     val f = GateStore.child(dir, marker)
@@ -308,411 +257,186 @@ private[graft] object ExecutorGateIndex {
         // instead of letting stampOwner throw NoSuchFileException
         if (!fs.exists(dir))
           throw new IllegalStateException(
-            s"$what at $dir: the store directory was deleted (gate " +
-              "dropped?) while this instance was live — drop this instance")
+            s"executor $what shards at $dir: the store directory was deleted " +
+              "(gate dropped?) while this instance was live — drop this instance")
         // marker alone deleted out-of-band (store dir cleaned/recreated
         // while instances live): RE-STAMP this caller's nonce instead of
         // assuming ownership, so another live instance still fails fast on
-        // its next probe rather than silently reverting to rebuild ping-pong
+        // its next query rather than silently reverting to rebuild ping-pong
         stampOwner(dir, marker, nonce)
         nonce
       }
       else fs.readString(f)
     if (cur != nonce) throw new IllegalStateException(
-      s"$what at $dir was superseded by another live instance (owner " +
-        s"stamp $cur != this instance's $nonce): two gates share one " +
+      s"executor $what shards at $dir were superseded by another live instance " +
+        s"(owner stamp $cur != this instance's $nonce): two gates share one " +
         "store path — drop this instance, or give each its own store")
   }
 }
 
-/** Deterministic bucket→shard routing shared by probe grouping, delta
-  * grouping, and the rebuild shuffle: floorMod(bucket, P). */
-private[graft] final class BucketPartitioner(p: Int) extends Partitioner {
-  override def numPartitions: Int = p
-  override def getPartition(key: Any): Int =
-    java.lang.Math.floorMod(key.asInstanceOf[Long], p.toLong).toInt
+/** What one executor shard tier keeps and answers — the per-kind part of
+  * [[ExecutorShards]]: routing, shard state, delta apply, query answer,
+  * and the columns and decode of the rebuild scan. Serializable: it rides
+  * every task closure, so it holds configuration only. */
+private[graft] abstract class ShardKind[S <: AnyRef, D, Q, A] extends Serializable {
+  /** Registry-key suffix; the owner marker is `_owner_<tag>`. */
+  def tag: String
+  def newState(): S
+  def deltaShard(d: D, parts: Int): Int
+  def queryShard(q: Q, parts: Int): Int
+  def applyDelta(s: S, d: D): Unit
+  /** Runs once after a rebuild applied every stored row. */
+  def seal(s: S): Unit = ()
+  def answer(s: S, queries: Vector[Q]): Seq[A]
+  def size(s: S): Long
+  def columns: Seq[Column]
+  def decode(r: Row): D
 }
 
-/** Stored-payload decode for the executor payload shards (the per-gate
-  * resident form, duplicated NOWHERE: array copies only — verification
-  * stays the gate's own `similar` on the driver). */
-private[graft] sealed trait PayloadDecoder extends Serializable {
-  def decode(r: org.apache.spark.sql.Row): AnyRef
-}
-private[graft] case object LongsPayload extends PayloadDecoder {
-  def decode(r: org.apache.spark.sql.Row): AnyRef = r.getSeq[Long](1).toArray
-}
-private[graft] case object FloatsPayload extends PayloadDecoder {
-  def decode(r: org.apache.spark.sql.Row): AnyRef = r.getSeq[Float](1).toArray
+/** Per-shard state of the near-dup bucket index: a [[ResidentIndex]]
+  * (sorted main run + hashed delta — the driver hot tier's LSM layout)
+  * plus id/ts pools addressed by its ord. Unbudgeted by DESIGN: a shard
+  * holds store/P entries and the real bound is the executor heap × the
+  * cluster's executor count — the point of the tier. */
+private[graft] final class IndexShard(ttlEnabled: Boolean, withIds: Boolean) {
+  val idx = new ResidentIndex(hasOrd = ttlEnabled || withIds, Long.MaxValue)
+  val ts = new ArrayBuffer[Long]()
+  val ids = new ArrayBuffer[Any]()
 }
 
-/** EXECUTOR-RESIDENT payload pool — phase 2's analogue of
-  * [[ExecutorGateIndex]] for the split-store gates: (store id →
-  * stored-precision payload) partitioned by id hash across executor-local
-  * shards, so the candidate payload FETCH is memory lookups instead of an
-  * id-pruned parquet read whose cost creeps toward O(store) as candidate
-  * ids span every range shard. Per batch the driver ships the candidate
-  * id set + the previous batch's payload delta in one P-partition job and
-  * gets only the CANDIDATES' payloads back (bounded by true
-  * sketch-admissible candidates); verification then runs on the driver
-  * with the gate's own exact `similar` — one implementation of the math.
-  * Ids the pool cannot answer (rebuild raced a compaction, etc.) fall
-  * back to the gate's disk fetch — a pool miss is always correct, never
-  * wrong. Same (generation, applied-batch) consistency protocol, stale →
-  * one rebuild job from the durable payload store, and the same
-  * preferred-location pinning. */
-private[graft] final class ExecutorPayloadPool(
-    spark: SparkSession,
-    payloadDir: String,
-    val parts: Int,
-    payloadColName: String,
-    decoder: PayloadDecoder) {
-
-  import ExecutorPayloadPool.PayloadTask
-
-  private val storeKey = payloadDir + "#pay"
-  private val nonce = java.util.UUID.randomUUID().toString.take(8)
-  ExecutorGateIndex.stampOwner(payloadDir, "_owner_pay", nonce)
-  ExecutorGateState.registerLiveDir(storeKey)
-  private var invalidations = 0L
-  private def gen: String = s"$nonce:$invalidations"
-  private var needRebuild = true
-  private val shardHosts = new Array[String](parts)
-  private val pending =
-    new java.util.ArrayDeque[(Long, Array[(Any, AnyRef)])]()
-  private var appliedFloor = -1L
-
-  @inline private def shardOf(id: Any): Int =
-    java.lang.Math.floorMod(if (id == null) 0 else id.hashCode, parts)
-
-  /** Buffer batch `n`'s (id, resident payload) entries at the durable
-    * payload commit; call for EVERY committed batch (empty included). */
-  def bufferDelta(n: Long, entries: Array[(Any, AnyRef)]): Unit =
-    synchronized { pending.addLast((n, entries)); () }
-
-  /** Spec seam: undrained delta batches on the driver. The gate drains
-    * every batch (even candidate-free ones), so this stays ≤ 1 — a grown
-    * queue is the payload-accumulation bug the per-batch drain removes. */
-  private[graft] def pendingDepthForSpec: Int = synchronized(pending.size)
-
-  def invalidate(): Unit = synchronized {
-    pending.clear()
-    invalidations += 1
-    needRebuild = true
-  }
-
-  /** Fetch the candidates' payloads: Map(id → resident payload). Shards
-    * must cover ≤ batch-1 (the gate drains commits before deciding). */
-  def fetch(ids: Array[Any], batch: Long): java.util.HashMap[Any, AnyRef] =
-    synchronized {
-      ExecutorGateIndex.checkOwner(payloadDir, "_owner_pay", nonce,
-        "ExecutorPayloadPool")
-      val expectApplied = batch - 1
-      if (needRebuild) rebuildAll(expectApplied)
-      val deltas = pending.toArray(Array.empty[(Long, Array[(Any, AnyRef)])])
-      pending.clear()
-      val floor = appliedFloor
-      appliedFloor = expectApplied
-      var out = runFetch(ids, deltas, floor, expectApplied)
-      var attempts = 0
-      while (out.isLeft && attempts < 2) {
-        System.err.println(s"[graft] ExecutorPayloadPool($storeKey): " +
-          s"shards ${out.swap.getOrElse(Nil).mkString(",")} stale; rebuilding from the store")
-        rebuildAll(expectApplied)
-        out = runFetch(ids, Array.empty, expectApplied, expectApplied)
-        attempts += 1
-      }
-      out.getOrElse(throw new IllegalStateException(
-        s"payload shards ${out.swap.getOrElse(Nil)} stale after $attempts rebuilds — $storeKey"))
-    }
-
-  private def runFetch(ids: Array[Any],
-      deltas: Array[(Long, Array[(Any, AnyRef)])], floor: Long,
-      expectApplied: Long): Either[Seq[Int], java.util.HashMap[Any, AnyRef]] = {
-    val expectGen = gen
-    val (sKey, p) = (storeKey, parts)
-    val idPerShard = Array.fill(p)(new scala.collection.mutable.ArrayBuffer[Any]())
-    ids.foreach(id => idPerShard(shardOf(id)) += id)
-    val deltaPerShard =
-      Array.fill(p)(new scala.collection.mutable.ArrayBuffer[(Long, Any, AnyRef)]())
-    deltas.foreach { case (bn, entries) =>
-      entries.foreach(e => deltaPerShard(shardOf(e._1)) += ((bn, e._1, e._2)))
-    }
-    val payload = (0 until p).map(k =>
-      PayloadTask(idPerShard(k).toArray, deltaPerShard(k).toArray)).toArray
-    val rdd = new GateTaskRDD(spark.sparkContext, payload, shardHosts.clone())
-    val results = try rdd.mapPartitionsWithIndex { (k, it) =>
-      val task = it.next()
-      val host = ExecutorGateState.taskLocation
-      val shard = ExecutorGateState.payloadShardFor(sKey, k)
-      shard.synchronized {
-        if (shard.gen != expectGen || shard.applied != floor) {
-          Iterator.single((k, host, true, Array.empty[(Any, AnyRef)]))
-        } else {
-          task.deltas.sortBy(_._1).foreach { case (_, id, pay) =>
-            shard.map.put(id, pay); ()
-          }
-          shard.applied = expectApplied
-          val out = task.ids.flatMap { id =>
-            Option(shard.map.get(id)).map(id -> _)
-          }
-          Iterator.single((k, host, false, out))
-        }
-      }
-    }.collect() finally rdd.destroy()
-    results.foreach { case (k, host, _, _) => shardHosts(k) = host }
-    val stale = results.collect { case (k, _, true, _) => k }.toSeq
-    if (stale.nonEmpty) Left(stale)
-    else {
-      val out = new java.util.HashMap[Any, AnyRef]()
-      results.foreach(_._4.foreach { case (id, pay) => out.put(id, pay); () })
-      Right(out)
-    }
-  }
-
-  private def rebuildAll(expectApplied: Long): Unit = {
-    invalidations += 1
-    val expectGen = gen
-    val (sKey, p, dec) = (storeKey, parts, decoder)
-    val files = GateStore.files(payloadDir)
-    val rows =
-      if (files.isEmpty) spark.sparkContext.emptyRDD[(Any, AnyRef)]
-      else spark.read.parquet(files.toSeq: _*)
-        .select(col("id"), col(payloadColName)).rdd
-        .map(r => (r.get(0), dec.decode(r)))
-    val parted = rows.partitionBy(new Partitioner {
-      override def numPartitions: Int = p
-      override def getPartition(key: Any): Int =
-        java.lang.Math.floorMod(if (key == null) 0 else key.hashCode, p)
-    })
-    val hosts = parted.mapPartitionsWithIndex { (k, it) =>
-      val host = ExecutorGateState.taskLocation
-      val shard = ExecutorGateState.payloadShardFor(sKey, k)
-      shard.synchronized {
-        shard.map.clear()
-        it.foreach { case (id, pay) => shard.map.put(id, pay); () }
-        shard.gen = expectGen
-        shard.applied = expectApplied
-      }
-      Iterator.single((k, host))
-    }.collect()
-    hosts.foreach { case (k, host) => shardHosts(k) = host }
-    appliedFloor = expectApplied
-    pending.clear()
-    needRebuild = false
-  }
-}
-
-private[graft] object ExecutorPayloadPool {
-  /** One payload shard's task payload: candidate ids + tagged deltas. */
-  final case class PayloadTask(
-      ids: Array[Any], deltas: Array[(Long, Any, AnyRef)])
-}
-
-/** EXECUTOR-RESIDENT seen-key store — the EXACT dedup gate's distributed
-  * membership tier: (key → max seen-time) partitioned by key hash across
-  * executor-local shards. Replaces the gate's two corpus-scale driver
-  * structures at once: the Bloom filter (billions of keys at 100 TB =
-  * GB-scale driver bits) and the pruned store-presence read. Per batch
-  * the driver ships the batch's distinct keys + the previous batch's
-  * delta in one P-partition job and gets back only the PRESENT keys
-  * (bounded by true duplicates); deltas are tagged with a self-issued
-  * monotone sequence (the gate drains its commit pipeline before every
-  * decision, so everything below the floor is already durable and a
-  * rebuild — one distributed scan of the (h[, ts]) store, maxing
-  * seen-times per key — always covers the shards' knowledge). Same
-  * stale-detect/rebuild/pinning protocol as [[ExecutorGateIndex]].
+/** The near-dup gates' (bucket key → 64-bit aux [, store id, event time])
+  * probe state, sharded by floorMod(bucket, P) (bucket keys are banded
+  * hashes — uniform by construction).
   *
-  * `keyCol` names the store's key column: "h" for the dedup gate's
-  * seen-keys store, "gh" for the contamination gate's STATIC reference-
-  * gram store (which never calls [[bufferDelta]] — membership only). */
-private[graft] final class ExecutorSeenStore(
-    spark: SparkSession,
-    storeDir: String,
-    val parts: Int,
-    ttlEnabled: Boolean,
-    keyCol: String = "h") {
+  * The aux word is the gate's inline similarity digest and ONE predicate
+  * serves the whole family — popcount(auxBatch ^ auxStore) ≤ cutoff: the
+  * SimHash fingerprint at Hamming radius maxDist, the jaccard parity
+  * sketch and the cosine SRP sketch at their calibrated cutoffs (a
+  * sketchless gate passes cutoff 64 ≡ every bucket-mate). Two answer
+  * modes: `withIds = false` answers (rowIdx, null, 0) for a suppressed row
+  * (the SimHash decision is aux-complete; a row may repeat across
+  * buckets); `withIds = true` answers every sketch-admissible in-window
+  * (rowIdx, store id, store tsMicros) pair for the owning gate's exact
+  * payload verification (the split-store gates). A probe is (rowIdx,
+  * bucket, aux, tsMicros); `ttlMicros` = 0 is unwindowed. */
+private[graft] final case class IndexKind(ttlEnabled: Boolean, withIds: Boolean,
+    auxCol: Option[String], cutoff: Int, ttlMicros: Long)
+  extends ShardKind[IndexShard, IndexKind.Entry, IndexKind.Probe, IndexKind.Hit] {
+  import IndexKind._
 
-  import ExecutorPayloadPool.PayloadTask
+  def tag: String = "idx"
+  def newState(): IndexShard = new IndexShard(ttlEnabled, withIds)
+  def deltaShard(e: Entry, parts: Int): Int =
+    java.lang.Math.floorMod(e.bucket, parts.toLong).toInt
+  def queryShard(q: Probe, parts: Int): Int =
+    java.lang.Math.floorMod(q._2, parts.toLong).toInt
 
-  private val storeKey = storeDir + "#seen"
-  private val nonce = java.util.UUID.randomUUID().toString.take(8)
-  ExecutorGateIndex.stampOwner(storeDir, "_owner_seen", nonce)
-  ExecutorGateState.registerLiveDir(storeKey)
-  private var invalidations = 0L
-  private def gen: String = s"$nonce:$invalidations"
-  private var needRebuild = true
-  private val shardHosts = new Array[String](parts)
-  private var seq = 0L // self-issued delta sequence
-  private val pending = new java.util.ArrayDeque[(Long, Array[(Any, Long)])]()
-  private var appliedFloor = -1L
-
-  @inline private def shardOf(id: Any): Int =
-    java.lang.Math.floorMod(if (id == null) 0 else id.hashCode, parts)
-
-  /** Buffer (key, seen-time micros) entries at the durable key-store
-    * commit (ts = Long.MinValue unwindowed). */
-  def bufferDelta(entries: Array[(Any, Long)]): Unit = synchronized {
-    seq += 1
-    pending.addLast((seq, entries))
+  def applyDelta(s: IndexShard, e: Entry): Unit = {
+    if (ttlEnabled) s.ts += e.ts
+    if (withIds) s.ids += e.id
+    s.idx.add(e.bucket, e.aux,
+      if (ttlEnabled || withIds) math.max(s.ts.length, s.ids.length) - 1 else -1)
     ()
   }
+  override def seal(s: IndexShard): Unit = s.idx.mergeDelta()
 
-  def invalidate(): Unit = synchronized {
-    pending.clear()
-    invalidations += 1
-    needRebuild = true
-  }
-
-  /** Membership lookup: key → max stored seen-time for every PRESENT key
-    * of `keys` (unwindowed entries carry Long.MinValue — presence is the
-    * signal). */
-  def lookup(keys: Array[Any]): java.util.HashMap[Any, java.lang.Long] =
-    synchronized {
-      ExecutorGateIndex.checkOwner(storeDir, "_owner_seen", nonce,
-        "ExecutorSeenStore")
-      val expectApplied = seq
-      if (needRebuild) rebuildAll(expectApplied)
-      val deltas = pending.toArray(Array.empty[(Long, Array[(Any, Long)])])
-      pending.clear()
-      val floor = appliedFloor
-      appliedFloor = expectApplied
-      var out = runLookup(keys, deltas, floor, expectApplied)
-      var attempts = 0
-      while (out.isLeft && attempts < 2) {
-        System.err.println(s"[graft] ExecutorSeenStore($storeKey): shards " +
-          s"${out.swap.getOrElse(Nil).mkString(",")} stale; rebuilding from the store")
-        rebuildAll(expectApplied)
-        out = runLookup(keys, Array.empty, expectApplied, expectApplied)
-        attempts += 1
-      }
-      out.getOrElse(throw new IllegalStateException(
-        s"seen-store shards ${out.swap.getOrElse(Nil)} stale after $attempts rebuilds — $storeKey"))
-    }
-
-  private def runLookup(keys: Array[Any],
-      deltas: Array[(Long, Array[(Any, Long)])], floor: Long,
-      expectApplied: Long)
-      : Either[Seq[Int], java.util.HashMap[Any, java.lang.Long]] = {
-    val expectGen = gen
-    val (sKey, p) = (storeKey, parts)
-    val keyPerShard = Array.fill(p)(new scala.collection.mutable.ArrayBuffer[Any]())
-    keys.foreach(k => keyPerShard(shardOf(k)) += k)
-    val deltaPerShard =
-      Array.fill(p)(new scala.collection.mutable.ArrayBuffer[(Long, Any, AnyRef)]())
-    deltas.foreach { case (sn, entries) =>
-      entries.foreach(e =>
-        deltaPerShard(shardOf(e._1)) += ((sn, e._1, java.lang.Long.valueOf(e._2))))
-    }
-    val payload = (0 until p).map(k =>
-      PayloadTask(keyPerShard(k).toArray, deltaPerShard(k).toArray)).toArray
-    val rdd = new GateTaskRDD(spark.sparkContext, payload, shardHosts.clone())
-    val results = try rdd.mapPartitionsWithIndex { (k, it) =>
-      val task = it.next()
-      val host = ExecutorGateState.taskLocation
-      val shard = ExecutorGateState.payloadShardFor(sKey, k)
-      shard.synchronized {
-        if (shard.gen != expectGen || shard.applied != floor) {
-          Iterator.single((k, host, true, Array.empty[(Any, AnyRef)]))
-        } else {
-          task.deltas.sortBy(_._1).foreach { case (_, key, ts) =>
-            val t = ts.asInstanceOf[java.lang.Long]
-            val prev = shard.map.get(key).asInstanceOf[java.lang.Long]
-            if (prev == null || t.longValue > prev.longValue)
-              shard.map.put(key, t)
-            ()
-          }
-          shard.applied = expectApplied
-          val out = task.ids.flatMap { key =>
-            Option(shard.map.get(key)).map(key -> _)
-          }
-          Iterator.single((k, host, false, out))
+  def answer(s: IndexShard, probes: Vector[Probe]): Seq[Hit] = {
+    val out = Vector.newBuilder[Hit]
+    probes.foreach { case (rowIdx, b, aux, ts) =>
+      var done = false
+      s.idx.foreachMatch(b) { (sAux, ord) =>
+        if (!done && java.lang.Long.bitCount(sAux ^ aux) <= cutoff &&
+            (ttlMicros == 0L || s.ts(ord) > ts - ttlMicros)) {
+          if (!withIds) { out += ((rowIdx, null, 0L)); done = true }
+          else out += ((rowIdx, s.ids(ord), if (ttlMicros == 0L) 0L else s.ts(ord)))
         }
       }
-    }.collect() finally rdd.destroy()
-    results.foreach { case (k, host, _, _) => shardHosts(k) = host }
-    val stale = results.collect { case (k, _, true, _) => k }.toSeq
-    if (stale.nonEmpty) Left(stale)
-    else {
-      val out = new java.util.HashMap[Any, java.lang.Long]()
-      results.foreach(_._4.foreach { case (key, t) =>
-        out.put(key, t.asInstanceOf[java.lang.Long]); ()
-      })
-      Right(out)
     }
+    out.result()
   }
+  def size(s: IndexShard): Long = s.idx.size.toLong
 
-  private def rebuildAll(expectApplied: Long): Unit = {
-    invalidations += 1
-    val expectGen = gen
-    val (sKey, p, ttl) = (storeKey, parts, ttlEnabled)
-    val files = GateStore.files(storeDir)
-    val rows =
-      if (files.isEmpty) spark.sparkContext.emptyRDD[(Any, Long)]
-      else {
-        val cols = Seq(col(keyCol)) ++
-          (if (ttl) Seq(unix_micros(col("ts"))) else Nil)
-        spark.read.parquet(files.toSeq: _*).select(cols: _*).rdd
-          .map(r => (r.get(0), if (ttl && !r.isNullAt(1)) r.getLong(1)
-                               else Long.MinValue))
-      }
-    val parted = rows.partitionBy(new Partitioner {
-      override def numPartitions: Int = p
-      override def getPartition(key: Any): Int =
-        java.lang.Math.floorMod(if (key == null) 0 else key.hashCode, p)
-    })
-    val hosts = parted.mapPartitionsWithIndex { (k, it) =>
-      val host = ExecutorGateState.taskLocation
-      val shard = ExecutorGateState.payloadShardFor(sKey, k)
-      shard.synchronized {
-        shard.map.clear()
-        it.foreach { case (key, t) =>
-          val prev = shard.map.get(key).asInstanceOf[java.lang.Long]
-          if (prev == null || t > prev.longValue)
-            shard.map.put(key, java.lang.Long.valueOf(t))
-          ()
-        }
-        shard.gen = expectGen
-        shard.applied = expectApplied
-      }
-      Iterator.single((k, host))
-    }.collect()
-    hosts.foreach { case (k, host) => shardHosts(k) = host }
-    appliedFloor = expectApplied
-    pending.clear()
-    needRebuild = false
+  def columns: Seq[Column] = Seq(col("bucket"),
+    auxCol.map(col).getOrElse(lit(0L)).cast("long")) ++
+    (if (withIds) Seq(col("id")) else Nil) ++
+    (if (ttlEnabled) Seq(unix_micros(col("ts"))) else Nil)
+  def decode(r: Row): Entry = Entry(r.getLong(0), r.getLong(1),
+    if (ttlEnabled) r.getLong(if (withIds) 3 else 2) else 0L,
+    if (withIds) r.get(2) else null)
+}
+
+private[graft] object IndexKind {
+  /** One exploded index entry: id is null when the gate is aux-complete. */
+  final case class Entry(bucket: Long, aux: Long, ts: Long, id: Any)
+  type Probe = (Int, Long, Long, Long)
+  type Hit = (Int, Any, Long)
+}
+
+/** A (key → value) shard tier routed by key hash: a query is a key, the
+  * answer is (key, value) for each PRESENT key. */
+private[graft] abstract class MapKind[V <: AnyRef]
+  extends ShardKind[java.util.HashMap[Any, V], (Any, V), Any, (Any, V)] {
+  def newState(): java.util.HashMap[Any, V] = new java.util.HashMap[Any, V]()
+  def deltaShard(d: (Any, V), parts: Int): Int = queryShard(d._1, parts)
+  def queryShard(key: Any, parts: Int): Int =
+    java.lang.Math.floorMod(if (key == null) 0 else key.hashCode, parts)
+  def applyDelta(s: java.util.HashMap[Any, V], d: (Any, V)): Unit = {
+    s.put(d._1, d._2); ()
   }
+  def answer(s: java.util.HashMap[Any, V], keys: Vector[Any]): Seq[(Any, V)] =
+    keys.flatMap(k => Option(s.get(k)).map(k -> _))
+  def size(s: java.util.HashMap[Any, V]): Long = s.size.toLong
+}
+
+/** Phase 2's payload pool for the split-store gates: (store id →
+  * stored-precision payload) — a long array, or a float array when
+  * `floats`. The candidate payload FETCH becomes memory lookups instead of
+  * an id-pruned parquet read whose cost creeps toward O(store) as candidate
+  * ids span every range shard; only the CANDIDATES' payloads ship back,
+  * and verification stays the gate's own exact `similar` on the driver —
+  * one implementation of the math. An id the pool cannot answer falls back
+  * to the gate's disk fetch: a pool miss is always correct, never wrong. */
+private[graft] final case class PayloadKind(payloadCol: String, floats: Boolean)
+  extends MapKind[AnyRef] {
+  def tag: String = "pay"
+  def columns: Seq[Column] = Seq(col("id"), col(payloadCol))
+  def decode(r: Row): (Any, AnyRef) = (r.get(0),
+    if (floats) r.getSeq[Float](1).toArray else r.getSeq[Long](1).toArray)
+}
+
+/** The exact dedup gate's membership tier: (key → max seen-time micros;
+  * Long.MinValue unwindowed — presence is the signal). Replaces the gate's
+  * two corpus-scale driver structures at once: the Bloom filter (billions
+  * of keys at 100 TB = GB-scale driver bits) and the pruned store-presence
+  * read; only the PRESENT keys ship back (bounded by true duplicates).
+  * `keyCol` names the store's key column: "h" for the dedup gate's
+  * seen-keys store, "gh" for the contamination gate's STATIC reference-gram
+  * store (which never buffers a delta — membership only). */
+private[graft] final case class SeenKind(keyCol: String, ttlEnabled: Boolean)
+  extends MapKind[java.lang.Long] {
+  def tag: String = "seen"
+  override def applyDelta(s: java.util.HashMap[Any, java.lang.Long],
+      d: (Any, java.lang.Long)): Unit = {
+    val prev = s.get(d._1)
+    if (prev == null || d._2.longValue > prev.longValue) s.put(d._1, d._2)
+    ()
+  }
+  def columns: Seq[Column] =
+    Seq(col(keyCol)) ++ (if (ttlEnabled) Seq(unix_micros(col("ts"))) else Nil)
+  def decode(r: Row): (Any, java.lang.Long) = (r.get(0), java.lang.Long.valueOf(
+    if (ttlEnabled && !r.isNullAt(1)) r.getLong(1) else Long.MinValue))
 }
 
 /** Executor-side shard registry — JVM-global so state outlives jobs. One
   * writer at a time per shard (the gate serializes its batches; rebuild
-  * and probe both take the shard monitor). */
+  * and query both take the shard monitor). */
 private[graft] object ExecutorGateState {
 
-  final class Shard(ttlEnabled: Boolean, withIds: Boolean) {
+  /** One shard: the consistency header plus the kind's state (replaced
+    * wholesale by a rebuild). */
+  final class Shard(@volatile var state: AnyRef) {
     @volatile var gen: String = ""
     @volatile var applied: Long = Long.MinValue
-    // unbudgeted by DESIGN: a shard holds store/P entries and the real
-    // bound is the executor heap × the cluster's executor count — the
-    // point of the tier. (Long.MaxValue disables ResidentIndex's budget.)
-    val idx = new ResidentIndex(hasOrd = ttlEnabled || withIds, Long.MaxValue)
-    private val tss = new scala.collection.mutable.ArrayBuffer[Long]()
-    private val idPool = new scala.collection.mutable.ArrayBuffer[Any]()
-    def ts(ord: Int): Long = tss(ord)
-    def id(ord: Int): Any = idPool(ord)
-    def add(bucket: Long, aux: Long, tsMicros: Long, rowId: Any): Unit = {
-      val needOrd = ttlEnabled || withIds
-      val ord =
-        if (!needOrd) -1
-        else {
-          if (ttlEnabled) tss += tsMicros
-          if (withIds) idPool += rowId
-          math.max(tss.length, idPool.length) - 1
-        }
-      idx.add(bucket, aux, ord)
-      ()
-    }
-    def reset(): Unit = { idx.reset(); tss.clear(); idPool.clear() }
   }
 
   private val shards = new ConcurrentHashMap[String, Shard]()
@@ -729,25 +453,8 @@ private[graft] object ExecutorGateState {
     else s"executor_${host}_${env.executorId}"
   }
 
-  def shardFor(storeKey: String, k: Int, ttl: Boolean, ids: Boolean): Shard =
-    // config flags are part of the KEY: a gate re-created at a reused path
-    // with different windowing must get fresh shards, not a Shard whose
-    // baked-in ttl/ids layout is wrong (generation fencing resets data,
-    // not construction flags)
-    shards.computeIfAbsent(s"$storeKey#$k#$ttl#$ids", _ => new Shard(ttl, ids))
-
-  /** One payload shard: (id → resident payload) + the same consistency
-    * header as [[Shard]]. */
-  final class PayloadShard {
-    @volatile var gen: String = ""
-    @volatile var applied: Long = Long.MinValue
-    val map = new java.util.HashMap[Any, AnyRef]()
-  }
-
-  private val payloadShards = new ConcurrentHashMap[String, PayloadShard]()
-
-  def payloadShardFor(storeKey: String, k: Int): PayloadShard =
-    payloadShards.computeIfAbsent(s"$storeKey#$k", _ => new PayloadShard)
+  def shardFor(storeKey: String, k: Int, kind: ShardKind[_ <: AnyRef, _, _, _]): Shard =
+    shards.computeIfAbsent(s"$storeKey#$k", _ => new Shard(kind.newState()))
 
   /** Store dirs with LIVE executor-tier instances constructed by THIS
     * driver — lets the drop path skip the cluster-wide sweep job for the
@@ -759,18 +466,6 @@ private[graft] object ExecutorGateState {
     liveDirs.add(dir); ()
   }
 
-  /** Drop-path eviction across the WHOLE cluster: sweep this JVM's
-    * registry, then — when the dropped store ever had executor-tier
-    * instances and the master is not local — run one short job with a
-    * task per core slot so every executor JVM sweeps its own registry
-    * (at stage submit the scheduler fills every free slot in one wave,
-    * so ≥ totalSlots instantaneous tasks reach every executor; the
-    * visited-executor check retries the rare miss). Without this, a
-    * dropped gate's REMOTE shards — generation-fenced, so never read
-    * again — would wait for executor recycle to free their heap.
-    * Reference anchor: the reaper/terminate path frees per-CQ combiner
-    * state (scheduler.c:584-698), it does not leak it until process
-    * exit. */
   /** Store dirs whose drop sweep gave up before reaching every executor
     * (value = executors missed by the LATEST give-up wave — an
     * APPROXIMATION: a retry that misses a different executor overwrites
@@ -795,6 +490,18 @@ private[graft] object ExecutorGateState {
     pendingDropDirs.clear(); ()
   }
 
+  /** Drop-path eviction across the WHOLE cluster: sweep this JVM's
+    * registry, then — when the dropped store ever had executor-tier
+    * instances and the master is not local — run one short job with a
+    * task per core slot so every executor JVM sweeps its own registry
+    * (at stage submit the scheduler fills every free slot in one wave,
+    * so ≥ totalSlots instantaneous tasks reach every executor; the
+    * visited-executor check retries the rare miss). Without this, a
+    * dropped gate's REMOTE shards — generation-fenced, so never read
+    * again — would wait for executor recycle to free their heap.
+    * Reference anchor: the reaper/terminate path frees per-CQ combiner
+    * state (scheduler.c:584-698), it does not leak it until process
+    * exit. */
   def dropDistributedUnder(spark: SparkSession, dir: String): Unit = {
     dropUnder(dir)
     val prefix = if (dir.endsWith("/")) dir else dir + "/"
@@ -863,29 +570,23 @@ private[graft] object ExecutorGateState {
     * their own JVMs. */
   def dropUnder(dir: String): Unit = {
     val prefix = if (dir.endsWith("/")) dir else dir + "/"
-    def sweep[V](m: ConcurrentHashMap[String, V]): Unit = {
-      val it = m.keySet().iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k.startsWith(prefix) || k.startsWith(dir + "#")) it.remove()
-      }
+    val it = shards.keySet().iterator()
+    while (it.hasNext) {
+      val k = it.next()
+      if (k.startsWith(prefix) || k.startsWith(dir + "#")) it.remove()
     }
-    sweep(shards)
-    sweep(payloadShards)
   }
 
   /** Test seam: live registry entries under a store-root prefix. */
   private[graft] def registeredUnder(dir: String): Int = {
     val prefix = if (dir.endsWith("/")) dir else dir + "/"
-    def count[V](m: ConcurrentHashMap[String, V]): Int = {
-      var n = 0
-      m.keySet().forEach(k =>
-        if (k.startsWith(prefix) || k.startsWith(dir + "#")) n += 1)
-      n
-    }
-    count(shards) + count(payloadShards)
+    var n = 0
+    shards.keySet().forEach(k =>
+      if (k.startsWith(prefix) || k.startsWith(dir + "#")) n += 1)
+    n
   }
 }
+
 
 /** An RDD whose P partitions each carry ONE pre-grouped task payload and
   * prefer the executor that last hosted their shard — the minimal form of

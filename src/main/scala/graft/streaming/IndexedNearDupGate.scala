@@ -94,13 +94,13 @@ private[graft] abstract class IndexedNearDupGate[P](
     s"unknown state backend '$backend'")
 
   /** EXECUTOR STATE BACKEND — `backend = "executor"`
-    * ([[ExecutorGateIndex]]): phase 1 runs against bucket-partitioned
+    * ([[IndexKind]] shards): phase 1 runs against bucket-partitioned
     * executor-local shards (index entries + sketch digests + event times
     * off the driver heap); the driver keeps NO corpus-sized state — no
     * bucket bloom (the shards answer every under-cap key from memory),
     * no hot tier, no payload pool — only the opt-in CMS occupancy cap
     * and the bounded per-batch rows. Phase 2 fetches candidate payloads
-    * from the id-partitioned [[ExecutorPayloadPool]] (misses fall back
+    * from the id-partitioned [[PayloadKind]] shards (misses fall back
     * to the id-pruned store read); payload deltas drain to the shards
     * EVERY batch, even candidate-free ones, so the driver's pending
     * queue stays O(batch). Decision semantics are bit-identical to the
@@ -280,19 +280,20 @@ private[graft] abstract class IndexedNearDupGate[P](
   /** Executor-partitioned phase-1 state (executor backend only); lazy so
     * the subclass's sketch geometry is initialized before `sketchColOf`
     * is consulted. */
-  private lazy val execIdx: ExecutorGateIndex =
+  private lazy val execIdx: ExecutorShards.Index =
     if (!executorBackend) null
-    else new ExecutorGateIndex(eng.spark, idxDir,
-      if (stateParts > 0) stateParts else ExecutorGateIndex.defaultParts(eng.spark),
-      ttlEnabled, withIds = !exactSketch,
-      auxCol = sketchColOf.map(_ => skColName))
+    else new ExecutorShards(eng.spark, idxDir,
+      ExecutorShards.partsFor(eng.spark, stateParts),
+      IndexKind(ttlEnabled, withIds = !exactSketch,
+        auxCol = sketchColOf.map(_ => skColName), executorSketchCutoff,
+        if (ttlEnabled) ttlMicros else 0L))
   /** Probe/spec seam: the distributed index (null on the driver backend). */
-  private[graft] def executorIndex: ExecutorGateIndex = execIdx
+  private[graft] def executorIndex: ExecutorShards.Index = execIdx
   private[graft] def backendInfo: (String, Int) =
     (backend, if (execIdx == null) 0 else execIdx.parts)
   /** Probe/spec seam: the executor payload pool (null on the driver
     * backend and on non-payload-writing cores). */
-  private[graft] def executorPayloads: ExecutorPayloadPool = execPay
+  private[graft] def executorPayloads: ExecutorShards.Payloads = execPay
 
   /** Executor-resident payload pool (executor backend, payload-writing
     * core): phase 2's candidate fetch becomes memory lookups on the
@@ -300,21 +301,20 @@ private[graft] abstract class IndexedNearDupGate[P](
     * verification stays [[similar]] on the driver — one implementation of
     * the math. The stored-form decoder is inferred from
     * [[storedPayloadType]] (an array copy, mirrored nowhere). */
-  private lazy val execPay: ExecutorPayloadPool =
+  private lazy val execPay: ExecutorShards.Payloads =
     if (!executorBackend || !writesPayload) null
     else {
-      val dec = storedPayloadType match {
+      val floats = storedPayloadType match {
         case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, _) => LongsPayload
+          org.apache.spark.sql.types.LongType, _) => false
         case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType, _) => FloatsPayload
+          org.apache.spark.sql.types.FloatType, _) => true
         case other => throw new IllegalStateException(
           s"no executor payload decoder for stored type $other")
       }
-      new ExecutorPayloadPool(eng.spark, payloadDir,
-        if (stateParts > 0) stateParts
-        else ExecutorGateIndex.defaultParts(eng.spark),
-        payloadColName, dec)
+      new ExecutorShards(eng.spark, payloadDir,
+        ExecutorShards.partsFor(eng.spark, stateParts),
+        PayloadKind(payloadColName, floats))
     }
 
   /** The executor probe's popcount cutoff over the inline sketch digests —
@@ -908,8 +908,7 @@ private[graft] abstract class IndexedNearDupGate[P](
           }
           i += 1
         }
-        execIdx.probe(probes.toArray, batches, executorSketchCutoff,
-          if (ttlEnabled) ttlMicros else 0L).foreach { case (ri, id, ts) =>
+        execIdx.query(probes.toArray).foreach { case (ri, id, ts) =>
           // id-less (exact-sketch) shards answer in-window hits directly
           if (exactSketch) { suppressedSet.add(rows(ri)._1); () }
           else matched(ri, id, ts)
@@ -1060,7 +1059,7 @@ private[graft] abstract class IndexedNearDupGate[P](
       // compactEvery batches (GBs for embeddings), quietly rebuilding the
       // corpus-sized driver state this backend removes
       if (execPay != null)
-        execPay.fetch(Array.empty[Any], synchronized(batches))
+        execPay.query(Array.empty[Any])
       return out
     }
     // windowed mode: a candidate only suppresses rows whose trailing
@@ -1097,7 +1096,10 @@ private[graft] abstract class IndexedNearDupGate[P](
     // read — and verify with the gate's own exact predicate; pool misses
     // (rare: a rebuild racing a fold) fall through to the disk fetch
     if (execPay != null && !pairs.isEmpty) {
-      val fetched = execPay.fetch(pairs.keySet().toArray, synchronized(batches))
+      val fetched = new java.util.HashMap[Any, AnyRef]()
+      execPay.query(pairs.keySet().toArray).foreach { case (id, pay) =>
+        fetched.put(id, pay); ()
+      }
       val it = pairs.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
@@ -1232,10 +1234,8 @@ private[graft] abstract class IndexedNearDupGate[P](
           }
       }
       // executor payload shards: buffer this batch's (id, payload) delta
-      // (EVERY batch, even empty — the applied-batch range is contiguous)
       if (execPay != null)
-        execPay.bufferDelta(batches,
-          ctx.rows.map(r => (r._1, residentPayloadOf(r._2))))
+        execPay.bufferDelta(ctx.rows.map(r => (r._1, residentPayloadOf(r._2))))
     } }
 
   private[streaming] override def commitIndexBatch(ctx0: AnyRef): Unit =
@@ -1325,20 +1325,18 @@ private[graft] abstract class IndexedNearDupGate[P](
       if (executorBackend) {
         // buffer this batch's delta for the distributed shards; it rides
         // the NEXT probe job (after this durable append — the required
-        // order). Buffer EVERY batch, even empty, to keep the shards'
-        // applied-batch range contiguous. Id-less shards get no ids.
-        val delta = new scala.collection.mutable.ArrayBuffer[
-          ExecutorGateIndex.DeltaRow]()
+        // order). Id-less shards get no ids.
+        val delta = new scala.collection.mutable.ArrayBuffer[IndexKind.Entry]()
         var i = 0
         while (i < ctx.rows.length) {
           val sk = if (ctx.rowSks == null) 0L else ctx.rowSks(i)
           val ts = if (ttlEnabled) ctx.rowTs(i) else 0L
           val id = if (exactSketch) null else ctx.rows(i)._1
           ctx.rowKeys(i).foreach(b =>
-            delta += ExecutorGateIndex.DeltaRow(b, sk, ts, id))
+            delta += IndexKind.Entry(b, sk, ts, id))
           i += 1
         }
-        execIdx.bufferDelta(batches, delta.toArray)
+        execIdx.bufferDelta(delta.toArray)
       }
       GateTrace(name, "filters")(updateFilters(ctx.rowKeys.flatten))
     } }

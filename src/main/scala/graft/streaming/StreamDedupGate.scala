@@ -105,7 +105,7 @@ final class StreamDedupGate private[streaming] (
     s"unknown state backend '$backend'")
 
   /** EXECUTOR STATE BACKEND — `backend = "executor"`
-    * ([[ExecutorSeenStore]]): the seen-key membership moves to
+    * ([[SeenKind]] shards): the seen-key membership moves to
     * key-hash-partitioned executor-local shards, replacing BOTH
     * corpus-scale driver structures at once — the Bloom filter (GB-scale
     * bits at 100-TB key counts) and the pruned store-presence read. Per
@@ -149,13 +149,12 @@ final class StreamDedupGate private[streaming] (
   private var batches = 0L
 
   /** Executor-partitioned seen-key store (executor backend only). */
-  private val execSeen: ExecutorSeenStore =
+  private val execSeen: ExecutorShards.Seen =
     if (!executorBackend) null
-    else new ExecutorSeenStore(eng.spark, storeDir,
-      if (stateParts > 0) stateParts
-      else ExecutorGateIndex.defaultParts(eng.spark), ttlEnabled)
+    else new ExecutorShards(eng.spark, storeDir,
+      ExecutorShards.partsFor(eng.spark, stateParts), SeenKind("h", ttlEnabled))
   /** Probe/spec seam (null on the driver backend). */
-  private[graft] def executorSeen: ExecutorSeenStore = execSeen
+  private[graft] def executorSeen: ExecutorShards.Seen = execSeen
   private[graft] def kind: String = "dedup"
   private[graft] def backendInfo: (String, Int) =
     (backend, if (execSeen == null) 0 else execSeen.parts)
@@ -368,7 +367,7 @@ final class StreamDedupGate private[streaming] (
     if (executorBackend) {
       // distributed membership: ship the batch's distinct keys, get the
       // present ones back — no driver bloom, no store read
-      execSeen.lookup(batchKeys).keySet().forEach(k => { set.add(k); () })
+      execSeen.query(batchKeys).foreach(kt => { set.add(kt._1); () })
       return set
     }
     val s = coreSession
@@ -417,7 +416,7 @@ final class StreamDedupGate private[streaming] (
     // by the candidate slice; no shuffle)
     val storeMax = new java.util.HashMap[Any, java.lang.Long]()
     if (executorBackend) {
-      execSeen.lookup(batchKeys).forEach { (k, t) =>
+      execSeen.query(batchKeys).foreach { case (k, t) =>
         if (t.longValue != Long.MinValue) storeMax.put(k, t)
         ()
       }
@@ -567,7 +566,7 @@ final class StreamDedupGate private[streaming] (
     // executor shards: the new winners' keys ride the next lookup job —
     // AFTER the durable append (the module-wide ordering contract)
     if (executorBackend) {
-      val delta = new Array[(Any, Long)](newKeys.size)
+      val delta = new Array[(Any, java.lang.Long)](newKeys.size)
       var i = 0
       while (i < newKeys.size) {
         delta(i) = (newKeys.get(i).get(0), Long.MinValue)
@@ -598,8 +597,8 @@ final class StreamDedupGate private[streaming] (
     // ordering contract) — a failed append must fail the batch WITHOUT
     // the shards learning its keys, or the retry would self-suppress
     if (executorBackend) {
-      val delta = new scala.collection.mutable.ArrayBuffer[(Any, Long)]()
-      maxByKey.forEach { (h, t) => delta += ((h, t.longValue)); () }
+      val delta = new scala.collection.mutable.ArrayBuffer[(Any, java.lang.Long)]()
+      maxByKey.forEach { (h, t) => delta += ((h, t)); () }
       execSeen.bufferDelta(delta.toArray)
     }
   }
@@ -644,7 +643,7 @@ object StreamDedupGate {
   /** Gate state backends: `driver` (resident hot tier + pruned store
     * reads, zero jobs per batch — the small/medium-state default) vs
     * `executor` (bucket-partitioned shards across executor heaps, one job
-    * per batch — the path past the driver budget; [[ExecutorGateIndex]]). */
+    * per batch — the path past the driver budget; [[IndexKind]] shards). */
   val DriverBackend = "driver"
   val ExecutorBackend = "executor"
 

@@ -19,18 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - predicate pushdown / column pruning reach the parquet scans on the
   *     representative queries.
   */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  override protected def configure(s: SparkSession): Unit = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 
   private val dir = "/root/testdata/sf0.001"

@@ -1,8 +1,8 @@
 package graft.cv
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 
 /** Creation-time error parity with the reference's analyzer battery
   * (analyze_cont_view.sql:20-123). Each case asserts BOTH that creation
@@ -10,18 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Catalyst resolution error is a spec failure for shapes the reference
   * diagnoses specifically.
   */
-class AnalyzerParitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class AnalyzerParitySpec extends AnyFunSuite with SharedSpark {
 
   private lazy val eng: ContViewEngine = {
     val dir = java.nio.file.Files.createTempDirectory("graft_ap").toString

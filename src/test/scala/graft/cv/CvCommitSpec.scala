@@ -8,11 +8,12 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.cv.CvPlanner.CvOptions
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 
 /** What one CV commit costs in Spark work, and what a reader running
   * beside the commits sees: a small batch into a small aggregating state
@@ -21,18 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * merge keeps whole-stage codegen, and overlay reads planned before a
   * commit still run after it.
   */
-class CvCommitSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class CvCommitSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -3,28 +3,18 @@ package graft.cv
 import java.nio.file.Paths
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 
 /** Golden tests mirroring the reference regression suite shapes
   * (cont_count.sql, cont_avg.sql, user_combine.sql, cont_sw_*.sql,
   * output_streams.sql, stream_table_join.sql, ttl_expiration.sql).
   * Core invariant everywhere: incremental-equals-batch.
   */
-class CvSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class CvSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import graft.cv.CvPlanner.CvOptions
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 
 /** A small store's commits, reads, ticks and reaps run interpreted
   * (`spark.sql.codegen.factoryMode=NO_CODEGEN`, no whole-stage codegen);
@@ -16,18 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * worker partials of one batch, and the finalized overlays of one set of
   * small-store state files.
   */
-class EvalModeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class EvalModeSpec extends AnyFunSuite with SharedSpark {
 
   /** A session over the same context that evaluates only interpreted, or
     * only through generated code (no silent interpreted fallback).

@@ -1,10 +1,11 @@
 package graft.cv
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 
 /** The CV tier on a Hadoop-FileSystem root: every engine constructed here
   * gets a `file:`-SCHEME root URI, so all store metadata ops (catalog
@@ -17,18 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * error. The gate tier's equivalent battery is GateHadoopRootSpec
   * (round 17); the BM25 index's is KeywordIndexSpec's file-uri rows.
   */
-class HadoopRootSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class HadoopRootSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

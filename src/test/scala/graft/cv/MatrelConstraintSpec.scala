@@ -1,26 +1,16 @@
 package graft.cv
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 
 /** CHECK constraints on materialization tables (reference
   * matrel_constraints.sql + .out): a combiner write whose merged row
   * violates a CHECK is SKIPPED, not an error — the group keeps its last
   * passing state; brand-new violating groups never materialize.
   */
-class MatrelConstraintSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class MatrelConstraintSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,25 +1,15 @@
 package graft.cv
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 
 /** Schema namespaces (reference cont_view_namespace.sql): CREATE/DROP/ALTER
   * SCHEMA, schema-qualified CVs/streams/transforms end-to-end through both
   * the Scala API and the SQL front door, and catalog-replay round trips.
   */
-class SchemaNamespaceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class SchemaNamespaceSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -3,9 +3,10 @@ package graft.cv
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 
 /** The on-disk layout of aggregating state: a small store is rewritten as
   * ONE flat parquet file per merge (every manifest entry names the same
@@ -14,18 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * written in the older bucket-dir layout, DML that rewrites some buckets
   * of a flat store, and a store crossing the small-state threshold.
   */
-class StateStoreLayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class StateStoreLayoutSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

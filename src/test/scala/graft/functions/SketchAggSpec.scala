@@ -4,19 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GraftFunctions._
+import graft.SharedSpark
 
-class SketchAggSpec extends AnyFunSuite {
+class SketchAggSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+  override protected def configure(s: SparkSession): Unit = {
     GraftFunctions.register(s)
-    s
   }
 
   import spark.implicits._

@@ -2,11 +2,11 @@ package graft.io
 
 import java.nio.file.{Files, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
 import graft.streaming.{ShardedGate, StreamDedupGate}
+import graft.SharedSpark
 
 /** The storage commit-point seam. Two things are pinned here: the local
   * implementation's primitive semantics, and — the point of the seam —
@@ -16,18 +16,7 @@ import graft.streaming.{ShardedGate, StreamDedupGate}
   * That is the mechanical half of the S3 port from DESIGN_NOTES
   * "Shared-storage commit points", demonstrated rather than asserted.
   */
-class CommitFsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class CommitFsSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

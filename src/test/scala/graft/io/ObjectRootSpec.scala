@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
 import graft.streaming.{GateStore, ShardedGate, SimHashNearDupGate, StreamDedupGate}
+import graft.SharedSpark
 
 /** The THIRD root flavor (round 18): engine and gate stores on a
   * REGISTERED OBJECT-STORE SCHEME — `graftmem://…` roots whose metadata
@@ -23,22 +24,14 @@ import graft.streaming.{GateStore, ShardedGate, SimHashNearDupGate, StreamDedupG
   * JVM-local); a cluster deployment registers a real S3 adapter on every
   * JVM instead.
   */
-class ObjectRootSpec extends AnyFunSuite {
+class ObjectRootSpec extends AnyFunSuite with SharedSpark {
 
   private val store = new MemBlobStore
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+  override protected def configure(s: SparkSession): Unit = {
     StoreFs.registerObjectScheme("graftmem", store)
     s.sparkContext.hadoopConfiguration.set(
       "fs.graftmem.impl", classOf[BlobFileSystem].getName)
-    s
   }
 
   import spark.implicits._

@@ -1,23 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 
 /** The BM25 index's generational commit protocol: torn (crashed) writes
   * invisible, retried appends idempotent, delete-by-id exact, compaction
   * score-preserving. Complements OpsSpec's scoring/pruning tests. */
-class KeywordIndexSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class KeywordIndexSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

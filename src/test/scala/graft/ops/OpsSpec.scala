@@ -1,21 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 
-class OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class OpsSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 
@@ -619,13 +609,18 @@ class OpsSpec extends AnyFunSuite {
     def scores(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
       df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     for (terms <- Seq(Seq("spark", "query"), Seq("table"), Seq("spark"),
-        Seq("absentterm"), Seq("absentterm", "join"))) {
+        Seq("absentterm"), Seq("absentterm", "join"),
+        Seq("spark", "spark", "query"))) {
       val scan = scores(KeywordScore.bm25(docs, "doc_id", "text", terms))
       val idx = scores(KeywordScore.bm25Indexed(spark, dir, terms))
-      assert(idx.keySet === scan.keySet, s"terms=$terms")
-      scan.foreach { case (id, s) =>
-        assert(math.abs(idx(id) - s) < 1e-12,
-          s"terms=$terms doc=$id scan=$s indexed=${idx(id)}")
+      val multi = scores(KeywordScore.bm25IndexedMulti(spark, dir, Map("q" -> terms))
+        .select("doc_id", "score"))
+      for ((tier, got) <- Seq("indexed" -> idx, "multi" -> multi)) {
+        assert(got.keySet === scan.keySet, s"$tier terms=$terms")
+        scan.foreach { case (id, s) =>
+          assert(math.abs(got(id) - s) < 1e-12,
+            s"$tier terms=$terms doc=$id scan=$s got=${got(id)}")
+        }
       }
     }
     // the per-query plan must PRUNE: only the query terms' hash buckets

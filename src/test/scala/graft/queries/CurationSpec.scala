@@ -3,24 +3,17 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 
 /** Invariant tests for the corpus-curation queries — semantics the DuckDB
   * hash-compare can't articulate: packing partitions the corpus within
   * budget, chunks tile documents, semantic dedup drops exactly the seeded
   * duplicate set, funnel stages are monotone.
   */
-class CurationSpec extends AnyFunSuite {
+class CurationSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  override protected def configure(s: SparkSession): Unit = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 
   private val dir = "/root/testdata/sf0.01"

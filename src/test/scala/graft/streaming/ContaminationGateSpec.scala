@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
+import graft.SharedSpark
 
 /** Brute-force semantics of the decontamination gate: admitted(d) iff d
   * shares NO word 3-gram with the reference corpus — order-independent,
@@ -13,18 +14,7 @@ import graft.cv.ContViewEngine
   * checks the full admitted set end-to-end; this spec pins the unit
   * semantics (short/null text, batch splits, restart, stats).
   */
-class ContaminationGateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class ContaminationGateSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 
@@ -65,7 +55,8 @@ class ContaminationGateSpec extends AnyFunSuite {
 
   private def runGate(root: String, engSuffix: String, ref: DataFrame,
       batches: Seq[DataFrame],
-      backend: String = StreamDedupGate.DriverBackend)
+      backend: String = StreamDedupGate.DriverBackend,
+      afterBatch: ShardedGate[ContaminationGate] => Unit = _ => ())
       : (ContViewEngine, ShardedGate[ContaminationGate]) = {
     val eng = new ContViewEngine(spark, root + "/eng" + engSuffix)
     val schema = Seq((0L, "x")).toDF("id", "body").schema
@@ -78,7 +69,7 @@ class ContaminationGateSpec extends AnyFunSuite {
       reference = ref, refTextCol = "body", bloomP = 0.2, bloomN = 64,
       backend = backend, stateParts = if (backend == "executor") 3 else 0)
     eng.createContView("v_d", "SELECT id FROM d_out", emitChanges = false)
-    batches.foreach(b => eng.insertInto("d_in", b))
+    batches.foreach { b => eng.insertInto("d_in", b); afterBatch(g) }
     (eng, g)
   }
 
@@ -147,6 +138,34 @@ class ContaminationGateSpec extends AnyFunSuite {
       backend = StreamDedupGate.ExecutorBackend)
     assert(admitted(e2) === expected.filter(_ >= 120L),
       "post-restart executor shards must rebuild from the persisted reference")
+  }
+
+  test("executor backend: a poisoned reference shard rebuilds and admits identically") {
+    // the static membership store's stale path: it never takes a delta, so
+    // only a rebuild from the persisted reference store can heal a shard
+    val (ref, stream) = fixture()
+    val expected = expectedAdmitted(ref, stream)
+    val split = Seq(stream.where(col("id") < 113),
+      stream.where(col("id") >= 113 && col("id") < 126), stream.where(col("id") >= 126))
+    def run(poison: Boolean): (Set[Long], Seq[Int]) = {
+      val root = java.nio.file.Files.createTempDirectory("graft_ctp").toString
+      val rebuilds = Seq.newBuilder[Int]
+      val (eng, _) = runGate(root, "p", ref, split,
+        backend = StreamDedupGate.ExecutorBackend, afterBatch = { g =>
+          val seen = g.cores(0).executorSeen
+          rebuilds += seen.rebuilds
+          if (poison) seen.poisonShard(0)
+        })
+      (admitted(eng), rebuilds.result())
+    }
+    val (clean, cleanRebuilds) = run(poison = false)
+    assert(clean === expected)
+    assert(cleanRebuilds.last === cleanRebuilds.head,
+      s"no rebuild without a poisoned shard: $cleanRebuilds")
+    val (admittedP, poisoned) = run(poison = true)
+    assert(admittedP === expected, "a rebuilt reference store must decide identically")
+    assert(poisoned.last - poisoned.head === 2,
+      s"each poisoned batch must run one reference rebuild: $poisoned")
   }
 
   test("executor backend: DDL spelling + catalog replay; drop frees the shard registry") {

@@ -1,28 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
 import graft.functions.VectorExpressions
+import graft.SharedSpark
 
 /** Brute-force semantics of the streaming cosine gate: admitted(v) iff no
   * earlier vector (feed order) at cosine ≥ threshold, invariant across
   * batch splits, resumable from the persisted embedding store.
   */
-class CosineNearDupGateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class CosineNearDupGateSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -2,11 +2,12 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
+import graft.SharedSpark
 
 /** Exact-gate spools written by the earlier exactly-once layout, reopened
   * by the current one. That layout spooled only the SURVIVORS (no
@@ -16,18 +17,7 @@ import graft.cv.ContViewEngine
   * once; one in a per-core spool, which the single gate-level spool no
   * longer reads, must make the open fail loudly rather than be orphaned.
   */
-class DedupSpoolLayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class DedupSpoolLayoutSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

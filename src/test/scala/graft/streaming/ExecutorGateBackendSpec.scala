@@ -1,30 +1,20 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
+import graft.SharedSpark
 
-/** The executor-partitioned state backend ([[ExecutorGateIndex]]) against
+/** The executor-partitioned state backend ([[ExecutorShards]]) against
   * the driver backends: BIT-IDENTICAL admitted sets on the same feed —
   * resident driver tier, forced-disk driver path, and the executor shards
   * must all implement one decision function. Also pins restart recovery
   * (shards rebuild from the durable store), the TTL composition, and
   * compaction invalidation.
   */
-class ExecutorGateBackendSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class ExecutorGateBackendSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 
@@ -419,7 +409,8 @@ class ExecutorGateBackendSpec extends AnyFunSuite {
 
   test("executor backend refuses driver-thread core sharding") {
     intercept[IllegalArgumentException] {
-      new ExecutorGateIndex(spark, "/tmp/never", 0, false)
+      new ExecutorShards(spark, "/tmp/never", 0,
+        IndexKind(false, false, Some("fp"), 3, 0L))
     }
   }
 
@@ -427,29 +418,34 @@ class ExecutorGateBackendSpec extends AnyFunSuite {
   // id-pruned payload verify, driver payload pool OFF) ---------------------
 
   private def runJaccard(root: String, engSuffix: String, backend: String,
-      batches: Seq[DataFrame]): ContViewEngine = {
+      batches: Seq[DataFrame],
+      afterBatch: ShardedGate[JaccardNearDupGate] => Unit = _ => ()): ContViewEngine = {
     val eng = new ContViewEngine(spark, s"$root/eng$engSuffix")
     val schema = Seq((0L, "x")).toDF("id", "body").schema
     eng.createStream("xj_in", schema)
     eng.createStream("xj_out", schema)
     eng.createContView("v_xj", "SELECT id FROM xj_out", emitChanges = false)
-    JaccardNearDupGate.create(eng, "xj_gate",
+    val g = JaccardNearDupGate.create(eng, "xj_gate",
       "SELECT id, body FROM xj_in", textSql = "body", orderCol = "id",
       sink = "xj_out", storeRoot = s"$root/gate_$backend$engSuffix",
       threshold = 0.7, backend = backend, stateParts = 5)
-    batches.foreach(b => eng.insertInto("xj_in", b))
+    batches.foreach { b => eng.insertInto("xj_in", b); afterBatch(g) }
     eng
   }
 
-  test("jaccard executor backend: identical admitted set, incl. restart") {
-    // shingle-level near-dups: every 4th doc shares most of its shingles
-    // with an earlier one (estimated jaccard above the 0.7 threshold)
+  // shingle-level near-dups: every 4th doc shares most of its shingles
+  // with an earlier one (estimated jaccard above the 0.7 threshold)
+  private def jaccardCorpus: DataFrame = {
     def toks(i: Int) = (0 until 30).map(j => s"j${i}t$j")
-    val c = (0 until 80).map { i =>
+    (0 until 80).map { i =>
       val t = if (i % 4 == 3) toks(i - 3).drop(2) ++ Seq("x", "y")
               else toks(i)
       (i.toLong, t.mkString(" "))
     }.toDF("id", "body")
+  }
+
+  test("jaccard executor backend: identical admitted set, incl. restart") {
+    val c = jaccardCorpus
     val split = Seq(c.where(col("id") < 40), c.where(col("id") >= 40))
     val r1 = java.nio.file.Files.createTempDirectory("graft_xj1").toString
     val expected = runJaccard(r1, "d", StreamDedupGate.DriverBackend, split)
@@ -533,6 +529,81 @@ class ExecutorGateBackendSpec extends AnyFunSuite {
     assert(pool.pendingDepthForSpec <= 1,
       s"payload deltas accumulated on the driver (depth ${pool.pendingDepthForSpec})")
     assert(eng.overlay("v_xpd").count() === 60L, "unique stream must pass whole")
+  }
+
+  test("executor backend: a poisoned payload-pool shard rebuilds and admits identically") {
+    // the payload tier's stale path: poison a payload shard after each
+    // batch; the next batch's fetch must detect it, rebuild every payload
+    // shard from the durable payload store, and verify identically
+    val c = jaccardCorpus
+    val split = Seq(c.where(col("id") < 27),
+      c.where(col("id") >= 27 && col("id") < 54), c.where(col("id") >= 54))
+    def run(poison: Boolean): (Set[Long], Seq[Int]) = {
+      val root = java.nio.file.Files.createTempDirectory("graft_xpp").toString
+      val rebuilds = Seq.newBuilder[Int]
+      val eng = runJaccard(root, "p", StreamDedupGate.ExecutorBackend, split,
+        afterBatch = { g =>
+          val pay = g.cores(0).executorPayloads
+          rebuilds += pay.rebuilds
+          if (poison) pay.poisonShard(2)
+        })
+      (eng.overlay("v_xj").collect().map(_.getLong(0)).toSet, rebuilds.result())
+    }
+    val (expected, clean) = run(poison = false)
+    assert(expected.size < 80 && expected.size > 40,
+      s"fixture must exercise suppression (got ${expected.size})")
+    assert(clean.last === clean.head, s"no rebuild without a poisoned shard: $clean")
+    val (admittedP, poisoned) = run(poison = true)
+    assert(admittedP === expected, "a rebuilt payload pool must verify identically")
+    assert(poisoned.last - poisoned.head === 2,
+      s"each poisoned batch must run one payload rebuild: $poisoned")
+  }
+
+  test("exact gate executor backend: a poisoned seen-key shard rebuilds and admits identically") {
+    // the membership tier's stale path, plain and windowed: poison a
+    // seen-key shard after each batch; the next lookup must rebuild every
+    // shard from the durable key store and decide identically
+    def rows(v: (Long, String, String)*): DataFrame =
+      v.toDF("id", "k", "tss").withColumn("ts", col("tss").cast("timestamp"))
+        .drop("tss")
+    val feed = Seq(
+      rows((1L, "a", "2024-01-01 00:00:00"), (2L, "b", "2024-01-01 01:00:00"),
+        (3L, "a", "2024-01-01 02:00:00")),
+      rows((4L, "c", "2024-01-01 03:00:00"), (5L, "b", "2024-01-01 04:00:00")),
+      rows((6L, "a", "2024-01-03 00:00:00"), (7L, "d", "2024-01-03 00:00:00"),
+        (8L, "c", "2024-01-01 05:00:00")))
+    def run(ttl: Boolean, poison: Boolean): (Set[Long], Seq[Int]) = {
+      val root = java.nio.file.Files.createTempDirectory("graft_xsp").toString
+      val eng = new ContViewEngine(spark, s"$root/eng")
+      eng.createStream("xs_in", feed.head.schema)
+      eng.createStream("xs_out", org.apache.spark.sql.types.StructType(
+        feed.head.schema.fields :+ org.apache.spark.sql.types.StructField("h",
+          org.apache.spark.sql.types.StringType)))
+      eng.createContView("v_xs", "SELECT id FROM xs_out", emitChanges = false)
+      val g = StreamDedupGate.create(eng, "xs_gate",
+        "SELECT id, k, ts FROM xs_in", keySql = "k", orderCol = "id",
+        sink = "xs_out", storeRoot = s"$root/gate",
+        backend = StreamDedupGate.ExecutorBackend, stateParts = 4,
+        ttlMillis = if (ttl) 24L * 3600 * 1000 else 0L,
+        ttlColumn = if (ttl) "ts" else "")
+      val seen = g.cores(0).executorSeen
+      val rebuilds = feed.map { f =>
+        eng.insertInto("xs_in", f)
+        val n = seen.rebuilds
+        if (poison) { seen.poisonShard(1); seen.poisonShard(3) }
+        n
+      }
+      (eng.overlay("v_xs").collect().map(_.getLong(0)).toSet, rebuilds)
+    }
+    for (ttl <- Seq(false, true)) {
+      val (expected, clean) = run(ttl, poison = false)
+      assert(expected === (if (ttl) Set(1L, 2L, 4L, 6L, 7L) else Set(1L, 2L, 4L, 7L)))
+      assert(clean.last === clean.head, s"ttl=$ttl: no rebuild without a poisoned shard: $clean")
+      val (admittedP, poisoned) = run(ttl, poison = true)
+      assert(admittedP === expected, s"ttl=$ttl: a rebuilt seen-key store must decide identically")
+      assert(poisoned.last - poisoned.head === 2,
+        s"ttl=$ttl: each poisoned batch must run one seen-key rebuild: $poisoned")
+    }
   }
 
   test("cosine executor backend: windowed admission matches the driver") {

@@ -160,7 +160,7 @@ class ExecutorGateClusterSpec extends AnyFunSuite {
   test("cluster: split-store gate fetches candidate payloads from executor-resident pools") {
     // jaccard = the payload-pool path: phase 1 returns candidate ids from
     // the index shards, phase 2 fetches their STORED payloads from the
-    // id-partitioned ExecutorPayloadPool — here across real JVMs, so the
+    // id-partitioned payload shards — here across real JVMs, so the
     // payloads round-trip through task results, not a shared heap
     def toks(i: Int) = (0 until 30).map(j => s"c${i}t$j")
     val c = (0 until 60).map { i =>
@@ -358,7 +358,7 @@ class ExecutorGateClusterSpec extends AnyFunSuite {
   test("cluster: contamination gate's static reference membership on executor shards") {
     // reference docs 0-7; streamed docs where every 4th embeds a verbatim
     // reference 3-gram — the membership question ("is this gram in the
-    // reference?") answered by executor-resident ExecutorSeenStore shards
+    // reference?") answered by executor-resident seen-key shards
     // across real JVM boundaries, no driver bloom at all
     def doc(i: Int, n: Int) = (0 until n).map(j => s"r${i}g$j").mkString(" ")
     val ref = (0 until 8).map(i => (i.toLong, doc(i, 20))).toDF("id", "body")

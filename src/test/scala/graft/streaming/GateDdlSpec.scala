@@ -1,27 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
+import graft.SharedSpark
 
 /** DDL-declared gates: the `outputfunc = dedup_gate(...)` spelling is
   * recorded in the catalog (unlike a Scala callback), so a restarted
   * engine replays the gate AND resumes its suppression state from the
   * persisted store — the declarative form is the restart-safe one.
   */
-class GateDdlSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class GateDdlSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
+import graft.SharedSpark
 
 /** The GATE tier on a Hadoop-FileSystem root: every engine and gate store
   * here lives under a `file:`-SCHEME URI, so all gate store metadata —
@@ -17,18 +17,7 @@ import graft.cv.ContViewEngine
   * fails here with an unparseable-path error. Mirrors the CV tier's
   * HadoopRootSpec (round 16) and StreamDedupGateEoSpec's crash battery.
   */
-class GateHadoopRootSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class GateHadoopRootSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

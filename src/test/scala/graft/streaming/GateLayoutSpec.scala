@@ -4,10 +4,10 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
+import graft.SharedSpark
 
 /** The on-disk layout that opening a gate creates under its root, for
   * every gate kind at G = 1 and G = 2: the `shards_<G>` root stamp, the
@@ -16,18 +16,7 @@ import graft.cv.ContViewEngine
   * split-store near-dup gate keeps once at the root. A reopen of an
   * existing store depends on exactly these names and stamps.
   */
-class GateLayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class GateLayoutSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -2,8 +2,8 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 
 /** The spool quarantine's EVIDENCE rule (round 15): a spool file is
   * renamed to `.corrupt` only on actual corruption evidence — a failed
@@ -13,17 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * quarantined a valid committed exactly-once epoch, silently converting a
   * retryable error into data loss.
   */
-class GateSpoolSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class GateSpoolSpec extends AnyFunSuite with SharedSpark {
 
   test("magicOk: real parquet passes; garbage, truncation, and missing files fail") {
     import spark.implicits._

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import GateStore.StoreFile
+import graft.SharedSpark
 
 /** The gate stores' scale contract lives here: appends land sorted, range-
   * sharded compaction stamps each shard's key interval into its filename,
@@ -11,17 +11,7 @@ import GateStore.StoreFile
   * the mechanism that keeps per-batch store cost proportional to the
   * batch instead of the corpus.
   */
-class GateStoreSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class GateStoreSpec extends AnyFunSuite with SharedSpark {
 
   test("pushdownOk counts UTF-8 BYTES, not chars — multi-byte keys straddle the bound") {
     // per-key estimate = utf8Length + 16. Ten 8-char keys of 3-byte CJK

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
 import graft.ops.{MinHashLsh, TextOps}
+import graft.SharedSpark
 
 /** Brute-force semantics of the streaming Jaccard gate: admitted(d) iff no
   * earlier doc (feed order) whose MinHash signature agrees with d's at ≥
@@ -14,18 +15,7 @@ import graft.ops.{MinHashLsh, TextOps}
   * (q_jaccard_stream) covers the engine + DDL path on the estimate-1.0
   * slice; this spec pins the full estimate-threshold behavior.
   */
-class JaccardNearDupGateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class JaccardNearDupGateSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{StructField, StructType, LongType, StringType, ArrayType, DoubleType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
+import graft.SharedSpark
 
 /** Exactly-once delivery for the NEAR-DUP / contamination gate family
   * (GateEpochs — the full-batch spool protocol): the crash matrix forced
@@ -17,18 +17,7 @@ import graft.cv.ContViewEngine
   * crashed batch itself SUPPRESSED (seen-based stores record every
   * arrival, which is why the spool carries the whole flagged batch).
   */
-class NearDupGateEoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class NearDupGateEoSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
 import graft.ops.{SimHash, TextOps}
+import graft.SharedSpark
 
 /** Windowed (TTL) mode of the NEAR-DUP gates + the `ttl × exactly_once`
   * combination on the exact gate (both r10-verdict items): suppression
@@ -15,18 +16,7 @@ import graft.ops.{SimHash, TextOps}
   * full-batch spool protocol carrying the ts column through crash
   * recovery.
   */
-class NearDupGateTtlSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class NearDupGateTtlSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
+import graft.SharedSpark
 
 /** The sharded gates' one invariant: G key-slice cores admit EXACTLY the
   * set the unsharded gate admits — sharding is a throughput topology, not
@@ -13,18 +14,7 @@ import graft.cv.ContViewEngine
   * unsharded gate and a G=3 sharded one and compares admitted sets; plus
   * the shard-count store stamp and the DDL spelling.
   */
-class ShardedGateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class ShardedGateSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

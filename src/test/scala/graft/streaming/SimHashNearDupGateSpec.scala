@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
 import graft.ops.{SimHash, TextOps}
+import graft.SharedSpark
 
 /** Brute-force semantics of the streaming near-dup gate: admitted(d) iff no
   * earlier doc (feed order) within Hamming distance maxDist — including
@@ -14,18 +15,7 @@ import graft.ops.{SimHash, TextOps}
   * engine path end-to-end on the distance-0 slice; this spec pins the full
   * distance-≤3 behavior the oracle can't express.
   */
-class SimHashNearDupGateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class SimHashNearDupGateSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
 import graft.ops.{SimHash, TextOps}
+import graft.SharedSpark
 
 /** The SimHash gate's on-disk layout is a restart contract: a store holding
   * `seen_fps/fps_<batch>.parquet` files of exploded (bucket, id, fp[, ts])
@@ -14,18 +15,7 @@ import graft.ops.{SimHash, TextOps}
   * [[SimHashNearDupGate.create]] and keep suppressing, on both the
   * resident tier and the disk path.
   */
-class SimHashStoreLayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class SimHashStoreLayoutSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

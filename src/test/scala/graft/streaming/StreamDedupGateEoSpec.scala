@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
+import graft.SharedSpark
 
 /** The exactly-once delivery mode's crash battery: each batch is an epoch
   * committed by the atomic spool rename, and the failure matrix from
@@ -14,18 +14,7 @@ import graft.cv.ContViewEngine
   * duplicate forward and a missing row on loss), and a re-fed batch after
   * any crash adds nothing.
   */
-class StreamDedupGateEoSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class StreamDedupGateEoSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
+import graft.SharedSpark
 
 /** Unit semantics of the streaming exact-dedup gate on a hand-built feed —
   * the oracle row (q_dedup_stream) proves end-to-end equality; this spec
@@ -12,18 +12,7 @@ import graft.cv.ContViewEngine
   * batches, bloom-gate transparency (false positives never drop rows), and
   * the append-only seen-key store layout.
   */
-class StreamDedupGateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class StreamDedupGateSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 
