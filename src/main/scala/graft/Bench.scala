@@ -2,69 +2,43 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Probe-abort channel (round 19): when a probe's mid-flight deadline
-  * fires, `cancelJobGroup` kills the RUNNING Spark job and the thread
-  * interrupt reaches whatever is blocked — but a driver-side LOOP that
-  * submits many jobs sequentially survives both (Spark wraps the cancel in
-  * a NonFatal SparkException that CONSUMES the interrupt flag, and the
-  * loop's next iteration launches a fresh job the one-shot group cancel no
-  * longer covers). r18's `oracle_sf_evidence` leaked exactly this way:
-  * 122-query loop, abort at 355 s, thread still running at +10 s grace —
-  * and its leftovers ran concurrently with every later probe
-  * (`abort_thread_leaked: true`). The fix is cooperative: the probe runner
-  * installs a thread-local flag, the deadline path sets it BEFORE the
-  * cancel, and every probe-owned driver loop (oracle battery, gate feed/
-  * seed/measure loops) checks it between units via [[BenchAbort.check]].
-  * Thread-local (not global) so a leaked runner's flag cannot abort the
-  * NEXT probe's loops. */
-private[graft] object BenchAbort {
-  private val flag =
-    new ThreadLocal[java.util.concurrent.atomic.AtomicBoolean]()
-  def install(b: java.util.concurrent.atomic.AtomicBoolean): Unit =
-    flag.set(b)
-  def aborted: Boolean = { val b = flag.get(); b != null && b.get() }
-  /** Throw (unwinding the probe body fast) when the deadline fired. */
-  def check(): Unit =
-    if (aborted) throw new InterruptedException("bench probe aborted")
-}
-
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints per-round artifact lines. A warm-up pass
-  * (session init, codegen, parquet footer reads) runs before any timer
-  * starts so the first query doesn't absorb startup cost.
+  * SPARK_GRAFT_SF_DIR, then a fixed, ordered list of probes, and prints
+  * per-round artifact lines. A warm-up pass (session init, codegen,
+  * parquet footer reads) runs before any timer starts so the first query
+  * doesn't absorb startup cost.
   *
-  * ARTIFACT PROTOCOL (round 15 — r14's single enriched summary line grew
-  * past the driver's bounded tail window and front-truncated itself out
-  * of machine parseability; r13's artifact was empty because the probe
-  * matrix outgrew the time budget):
-  *  - TWO lines per emission, re-emitted INCREMENTALLY after the sweep
-  *    and every probe (a kill at ANY point leaves the last pair
-  *    parseable; the driver takes the LAST summary occurrence): a bulky
-  *    `{"metric":"detail",...}` line (probe_secs, attempt maps,
-  *    quiet_recheck, soak internals), then a compact FLAT
-  *    `{"metric":"summary",...}` line LAST — headline scalars only, no
-  *    arrays (`probes_skipped` is a comma-joined string), an overflow
-  *    guard demoting past ~1850 chars so the line sits intact inside a
-  *    2000-char tail window;
-  *  - a TOTAL time budget (SPARK_GRAFT_BENCH_BUDGET_SEC, default 1320 s
-  *    from main() entry) gates every probe with HEADROOM: admitted only
-  *    when est × 1.3 fits the remaining budget, estimates seeded from
-  *    the previous artifact's measured `probe_secs` (regex fallback for
-  *    a front-truncated tail); skipped probes are named, never silent;
-  *  - the cheap TTL-soak and 10×-near-dup probes run before the
-  *    heavyweight scale probes, so a loaded box skips a late
-  *    heavyweight instead of the same two cheap probes every round;
-  *  - the gate scale probes seed each 10×/100× store ONCE per kind and
-  *    reuse it across both backends and all measurement attempts
-  *    (GateProbes.dualScaleProbe) — retries re-measure, never re-seed.
+  * Every probe runs on the main thread at a fixed size, so the run's cost
+  * is set by this file alone: there is no time budget, no admission test
+  * and no retry. The sizes hold the whole run (warm-up, sweep, every
+  * probe) to about 900 s at sf0.1 on a quiet 4-core box with
+  * SPARK_GRAFT_CPUS=32, and the gate-scale family to about 300 s of it.
+  * A loaded box makes the run longer, never shorter; judge it against
+  * the same run's `q_cv_max_sec` and `cpu_steal_pct`.
+  *
+  * ARTIFACT PROTOCOL: TWO lines per emission, re-emitted after the sweep
+  * and after every probe, so a kill at any point leaves the last pair
+  * parseable (a reader takes the LAST summary occurrence):
+  *  - a bulky `{"metric":"detail",...}` line: probe_secs at full
+  *    precision, per-point spreads and sample counts, soak internals;
+  *  - a compact FLAT `{"metric":"summary",...}` line LAST: headline
+  *    scalars only, no arrays (`probes_failed` is a comma-joined string),
+  *    with an overflow guard that demotes fields past ~1850 chars so the
+  *    line sits intact inside a 2000-char tail window.
+  * The session is stopped before the final emission, so the final summary
+  * line is the last line the program writes.
   */
 object Bench {
+  /** Timed runs per sweep query; each query reports its minimum. */
+  private val Repeats = 3
+  /** Wall seconds of the timed half-pair in the cv_soak probe. */
+  private val SoakSec = 30.0
+  /** Wall seconds of the timed half-pair in the gate_soak_ttl probe. */
+  private val GateSoakSec = 20.0
+
   def main(args: Array[String]): Unit = {
     val benchT0 = System.nanoTime()
-    val budgetSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1320").toDouble
     def elapsedSec: Double = (System.nanoTime() - benchT0) / 1e9
-    def remainingSec: Double = budgetSec - elapsedSec
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Hypervisor steal accounting (field 8 of /proc/stat cpu line): this
     // box's host is oversubscribed, and a steal burst during the run shows
@@ -102,9 +76,9 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Artifact-noise filter: each ContViewEngine registers the graft
-    // function surface on its own private session, and names that shadow a
-    // builtin (string_agg, …) WARN per registration — dozens of lines that
-    // drowned the r13 artifact's bounded tail. Benign by design
+    // function surface on its own private session, and a name that
+    // shadows a builtin (hll_union_agg) WARNs per registration — dozens
+    // of lines in the artifact's bounded tail. Benign by design
     // (GraftFunctions.register already dedups per session), so the bench
     // silences just these two logger classes.
     Seq("org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry",
@@ -157,95 +131,54 @@ object Bench {
     // untimed phase instead of whichever query GC lands on first.
     System.gc()
     Thread.sleep(500)
+    val warmSec = elapsedSec
+
     // Min-of-N consecutive runs per query: a single-shot timing turns any
     // transient co-tenant load into a phantom regression, while the minimum
     // is robust to contention and still honest (no caching between runs —
     // each repeat re-executes the full plan). loadavg is recorded alongside
     // so a noisy-machine run is visible in the artifact itself.
-    val repeats = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt)
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
       (System.nanoTime() - t0) / 1e9
     }
     val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      (name, fn, (1 to repeats).map(_ => timeOnce(fn)).min)
+      (name, fn, (1 to Repeats).map(_ => timeOnce(fn)).min)
     }
     // Outlier defense: co-tenant contention can poison a whole min-of-N
-    // window (observed 3x swings on identical code — r7's q_cv_* cluster
-    // read 2-16x high while a standalone profile of the same session shape
-    // measured 0.04-0.1 s). Any query whose minimum still looks heavy gets
-    // one more shot AFTER the full sweep — temporally decorrelated from
-    // whatever squeezed its original window. Bounded extra cost: only the
-    // already-slow tail re-runs, and the 0.35 s threshold catches the CV
-    // overlay reads (steady-state ≤0.15 s) that 1.0 s let through.
+    // window (observed 3x swings on identical code). Any query whose
+    // minimum still looks heavy gets one more shot AFTER the full sweep —
+    // temporally decorrelated from whatever squeezed its original window.
+    // Bounded extra cost: only the already-slow tail re-runs, and the
+    // 0.35 s threshold catches the CV overlay reads (steady-state ≤0.15 s).
     val results = firstPass.map { case (name, fn, min0) =>
       name -> (if (min0 > 0.35) math.min(min0, timeOnce(fn)) else min0)
     }
+    val sweepSec = elapsedSec - warmSec
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
 
-    // Previous round's artifact (newest BENCH_r*.json in the working
-    // directory, if any): (1) the probes' self-adjudication reference —
-    // the CV/gate numbers swing ±3x under co-tenant steal (PERF_NOTES
-    // §18), so a probe landing off-band vs the previous artifact is
-    // re-run, temporally decorrelated, and the best attempt kept with the
-    // attempt count recorded; (2) the measured `probe_secs` map — what
-    // seeds this run's budget-gate estimates (a static guess was 3x off
-    // in both directions in r14); (3) `probes_skipped` — last round's
-    // budget victims run EARLY this round so no probe is skipped twice
-    // in a row; (4) `loaded_box` — a contaminated run's probe_secs get a
-    // haircut (capped at the static estimate) instead of inflating this
-    // run's admission gate forever (r15's gate_sharded_cosine skip was
-    // seeded by r14's loaded-box 383 s measurement).
-    val prev = BenchArtifacts.parsePrev(new java.io.File("."), sfDir)
-    val prevBench: Map[String, Double] = prev.bench
-    val prevProbeSecs: Map[String, Double] = prev.probeSecs
-
     // ---- incremental artifact state -------------------------------------
-    // TWO lines per emission (round 15 — r14's single enriched summary
-    // line grew past the driver's 2000-char tail window, front-truncating
-    // itself out of machine-parseability):
-    //  - `{"metric":"detail",...}` (penultimate): probe_secs, attempt
-    //    maps, quiet_recheck, soak internals — everything bulky;
-    //  - `{"metric":"summary",...}` (LAST, compact, FLAT — no arrays,
-    //    headline scalars only, overflow-guarded under ~1850 chars): the
-    //    r12-proven shape the driver demonstrably machine-parses.
     def f3(d: Double) = math.round(d * 1000) / 1000.0
     val fields = scala.collection.mutable.LinkedHashMap[String, String]()
     val detailFields = scala.collection.mutable.LinkedHashMap[String, String]()
-    val skipped = scala.collection.mutable.ArrayBuffer[String]()
-    // `fields` doubles as the lock for BOTH maps: probe bodies run on
-    // their own (deadline-bounded) threads, and a just-aborted thread may
-    // still be mid-write while the main thread emits
-    def num(k: String, v: Double): Unit =
-      fields.synchronized { fields(k) = f3(v).toString; () }
-    def lng(k: String, v: Long): Unit =
-      fields.synchronized { fields(k) = v.toString; () }
-    def str(k: String, v: String): Unit =
-      fields.synchronized { fields(k) = "\"" + v + "\""; () }
-    def raw(k: String, v: String): Unit =
-      fields.synchronized { fields(k) = v; () }
-    def dnum(k: String, v: Double): Unit =
-      fields.synchronized { detailFields(k) = f3(v).toString; () }
-    def dlng(k: String, v: Long): Unit =
-      fields.synchronized { detailFields(k) = v.toString; () }
-    def dstr(k: String, v: String): Unit =
-      fields.synchronized { detailFields(k) = "\"" + v + "\""; () }
-    def draw(k: String, v: String): Unit =
-      fields.synchronized { detailFields(k) = v; () }
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
+    def num(k: String, v: Double): Unit = fields(k) = f3(v).toString
+    def lng(k: String, v: Long): Unit = fields(k) = v.toString
+    def str(k: String, v: String): Unit = fields(k) = "\"" + v + "\""
+    def raw(k: String, v: String): Unit = fields(k) = v
+    def dnum(k: String, v: Double): Unit = detailFields(k) = f3(v).toString
+    def dlng(k: String, v: Long): Unit = detailFields(k) = v.toString
+    def dstr(k: String, v: String): Unit = detailFields(k) = "\"" + v + "\""
+    def draw(k: String, v: String): Unit = detailFields(k) = v
     val qcv = results.filter(_._1.startsWith("q_cv"))
     val qcvMax = if (qcv.isEmpty) 0.0 else qcv.map(_._2).max
     val slowest = results.sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
     val probeSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // per-probe admission estimate, suffixed "s" when it fell back to the
-    // static table (i.e. NOT seeded from the previous artifact)
-    val probeEst = scala.collection.mutable.LinkedHashMap[String, String]()
     def refreshHealth(): Unit = {
-      // live run-health fields refresh at every emit
       str("loadavg_before", loadavgBefore)
       str("loadavg", loadavgNow())
       num("cpu_steal_pct", math.round(stealPctNow() * 100) / 100.0)
@@ -253,38 +186,26 @@ object Bench {
         .flatMap(s => scala.util.Try(s.toDouble).toOption).exists(_ > 2.0) ||
         stealPctNow() > 1.0).toString)
       num("bench_elapsed_sec", elapsedSec)
-      num("bench_budget_sec", budgetSec)
-      // a comma-joined STRING, deliberately not a JSON array: r12's
-      // array-free summary is the one shape the driver has parsed
-      str("probes_skipped", skipped.mkString(","))
-      // measured wall per probe: what the next round's estimates seed
-      // from, and what explains any skip decision after the fact. Lives
-      // in BOTH lines: the driver's bounded tail window reliably captures
-      // only the final summary line (r15's detail line fell outside it,
-      // so r16 had to seed from the static table) — the summary copy is
-      // ~230 chars and the overflow guard may demote it under pressure,
-      // in which case the detail copy still serves local runs
-      // summary copy at ONE decimal (estimate seeding needs no better and
-      // the summary line competes for the ~1850-char overflow guard);
-      // detail keeps full precision
+      num("warm_sec", warmSec)
+      num("sweep_sec", sweepSec)
+      // a comma-joined STRING, deliberately not a JSON array: an
+      // array-free summary is the shape a tail-window reader parses
+      str("probes_failed", failed.mkString(","))
+      // measured wall per probe, in both lines: one decimal in the
+      // summary (it competes for the overflow guard), full in the detail
       raw("probe_secs", probeSecs
         .map { case (k, v) => "\"" + k + "\":" + (math.round(v * 10) / 10.0) }
         .mkString("{", ",", "}"))
       draw("probe_secs", probeSecs
         .map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}"))
-      draw("probe_est", probeEst
-        .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-        .mkString("{", ",", "}"))
     }
     def joined(m: scala.collection.mutable.LinkedHashMap[String, String]) =
-      fields.synchronized {
-        m.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")
-      }
-    // health/skip fields the overflow guard must never demote
+      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")
+    // health fields the overflow guard must never demote
     val protectedKeys = Set("sf", "loadavg_before", "loadavg",
-      "cpu_steal_pct", "loaded_box", "bench_elapsed_sec",
-      "bench_budget_sec", "probes_skipped")
-    def emitSummary(): Unit = fields.synchronized {
+      "cpu_steal_pct", "loaded_box", "bench_elapsed_sec", "warm_sec",
+      "sweep_sec", "probes_failed", "probe_secs")
+    def emitSummary(): Unit = {
       refreshHealth()
       // the final line MUST survive a 2000-char tail window INTACT (plus
       // an sbt "[success] ..." trailer): past ~1850 chars, demote the
@@ -305,149 +226,39 @@ object Bench {
         if (detailFields.isEmpty) "" else "," + joined(detailFields)}}""")
       println(line)
     }
-    /** Budget gate: run the probe when its estimated cost — seeded from
-      * the previous artifact's measured `probe_secs` when present — fits
-      * the remaining budget WITH HEADROOM (est × 1.3: r14 admitted its
-      * last probe at face value on a loaded box and overshot the total
-      * budget by 108 s), else record it as skipped; either way re-emit
-      * the artifact so it carries everything known so far. Each probe
+    /** Run one probe on this thread and re-emit the artifact. Each probe
       * opens with a GC pause billed to its untimed boundary: late probes
-      * in the sequence otherwise inherit the earlier probes' heap debris —
-      * the full-artifact run measured jaccard 100× ratios of 0.52/0.59
-      * that an isolated fresh-JVM run of the SAME probe reads as
-      * 1.07/1.06.
-      *
-      * MID-FLIGHT DEADLINE (round 17): admission gates on the ESTIMATE,
-      * but nothing used to bound a probe that inflated under co-tenant
-      * load arriving mid-run — r16's gate_sharded_cosine seeded from a
-      * quiet 126 s measurement, then ran 715 s loaded, starving three
-      * cheaper probes AND overshooting the total budget. Each probe now
-      * runs on its own thread inside a Spark job group; past
-      * max(est × m, est + 60) seconds the group is cancelled, the
-      * thread interrupted, and the probe recorded as `<name>_aborted`
-      * (detail line, with its partial fields kept) AND appended to
-      * `probes_skipped`, so the existing skip-rotation runs it early
-      * next round. The enforcement half of the r15/r16 budget design.
-      *
-      * The multiplier m is LOAD-AWARE (round 18): r17's fronted
-      * gate_scale_simhash ran ~3× its quiet band under co-tenant load
-      * and the 2.5× deadline aborted it at ~287 s — burning the full
-      * spend AND delivering nothing, the worst of both. A loaded box
-      * legitimately inflates the scale probes ~3× (simhash 95→~290,
-      * jaccard 173→298 across r16/r17 artifacts), so when the box is
-      * loaded AT PROBE START the deadline stretches to est × 3.5 —
-      * still clipped by remaining − 25, so the total budget holds by
-      * skipping LATER probes (which the rotation then fronts) instead
-      * of wasting a completed-but-unrecorded heavyweight.
-      *
-      * After the 10 s post-abort grace, a runner thread still alive
-      * means driver-side loops ignored the interrupt — its leftovers run
-      * CONCURRENTLY with the next probes, contaminating exactly what the
-      * per-probe System.gc() isolation protects. That state is recorded
-      * (`abort_thread_leaked`) and every later probe sharing the same
-      * `family` is skipped: same-family probes reuse the same fixture
-      * shapes, the ones a leaked predecessor most plausibly poisons. */
-    var leakedFamily: Option[String] = None
-    def probe(name: String, estSec: Double, family: String = "")(run: => Unit): Unit = {
-      if (family.nonEmpty && leakedFamily.contains(family)) {
-        skipped += name
-        draw(s"${name}_skipped_leaked_family", "\"" + family + "\"")
-        emitSummary()
-        return
-      }
-      // seeded from the previous artifact's measured wall; a LOADED-box
-      // measurement is inflated evidence, so it never RAISES the estimate
-      // past the static table — a decayed stale number re-admits the
-      // probe and the fresh (quiet) measurement replaces it next round
-      val seeded = prevProbeSecs.get(name)
-      val est = seeded match {
-        case Some(s) if prev.loadedBox => math.min(s, estSec)
-        case Some(s) => s
-        case None => estSec
-      }
-      // audit trail: the estimate each admission decision used, and its
-      // provenance — "s" static fallback, "L" loaded-box haircut applied
-      probeEst(name) = f3(est).toString + (seeded match {
-        case None => "s"
-        case Some(s) if prev.loadedBox && s > estSec => "L"
-        case _ => ""
-      })
-      if (remainingSec < est * 1.3) { skipped += name; () }
-      else {
-        System.gc()
-        Thread.sleep(200)
-        val t0 = elapsedSec
-        // loaded AT PROBE START (not at bench start): the load that
-        // matters is the one this probe will run under
-        val loadedHere = loadavgNow().split("\\s+").headOption
-          .flatMap(s => scala.util.Try(s.toDouble).toOption).exists(_ > 2.0) ||
-          stealPctNow() > 1.0
-        val mult = if (loadedHere) 3.5 else 2.5
-        // the deadline also never exceeds what the budget can absorb
-        // (remaining − 25 leaves room for the abort grace + emit), while
-        // an admitted probe always gets ≥ est × 1.2 — aborting a healthy
-        // probe below its own estimate would be admission lying to itself
-        val deadlineSec = math.max(est * 1.2,
-          math.min(math.max(est * mult, est + 60.0), remainingSec - 25.0))
-        @volatile var thrown: Throwable = null
-        val group = s"graft_bench_$name"
-        // cooperative abort flag (see [[BenchAbort]]): set BEFORE the group
-        // cancel so driver-side loops whose interrupt flag Spark consumed
-        // still stop at their next between-units check
-        val abortFlag = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val runner = new Thread(() => {
-          BenchAbort.install(abortFlag)
-          spark.sparkContext.setJobGroup(group, s"bench probe $name",
-            interruptOnCancel = true)
-          try run
-          catch { case t: Throwable => thrown = t }
-          finally spark.sparkContext.clearJobGroup()
-        }, s"graft-bench-$name")
-        runner.setDaemon(true)
-        runner.start()
-        runner.join((deadlineSec * 1000).toLong)
-        if (runner.isAlive) {
-          abortFlag.set(true)
-          spark.sparkContext.cancelJobGroup(group)
-          runner.interrupt()
-          runner.join(10000) // bounded grace (cancelled jobs unwind in ms)
-          skipped += name // next round's rotation runs this probe early
-          // a runner that survived the grace is still executing — its
-          // leftovers contaminate whatever runs next; make that visible
-          // in the artifact and fence off the rest of its family
-          val leaked = runner.isAlive
-          if (leaked && family.nonEmpty) leakedFamily = Some(family)
-          draw(s"${name}_aborted",
-            s"""{"after_sec":${f3(elapsedSec - t0)},"deadline_sec":${f3(deadlineSec)},"est_sec":${f3(est)},"abort_thread_leaked":$leaked}""")
-        } else if (thrown != null) {
-          // a real probe failure stays loud (r13's silent-empty lesson):
-          // record it in the artifact, then rethrow after the emit
+      * otherwise inherit the earlier probes' heap debris. A failing probe
+      * is named in `probes_failed` and its exception class lands in the
+      * detail line; the probes after it still run. */
+    def probe(name: String)(run: => Unit): Unit = {
+      System.gc()
+      Thread.sleep(200)
+      val t0 = elapsedSec
+      try run
+      catch {
+        case t: Throwable if scala.util.control.NonFatal(t) =>
+          failed += name
           draw(s"${name}_error",
-            "\"" + thrown.getClass.getSimpleName.replace("\"", "'") + "\"")
-          emitSummary()
-          throw thrown
-        } else {
-          probeSecs(name) = elapsedSec - t0
-        }
+            "\"" + t.getClass.getSimpleName.replace("\"", "'") + "\"")
       }
+      probeSecs(name) = elapsedSec - t0
       emitSummary()
     }
 
     str("sf", sfDir)
     dstr("sf", sfDir) // both lines self-identify their scale factor
-    dlng("runs_per_query", repeats.toLong)
+    dlng("runs_per_query", Repeats.toLong)
     emitSummary() // sweep done — the artifact now survives any later kill
 
     // Large-state probe: the CV ingest pipeline with the small-state fast
     // path disabled (smallStateBytes=0), so every merge takes the
     // bucket-pruned path — the code that runs once state outgrows a single
-    // executor's memory at production scale. Best-of-2 + previous-artifact
-    // adjudication (see prevBench).
-    def oneIngestPass(): (Double, Double) = {
+    // executor's memory at production scale. Median of three fresh passes.
+    def oneIngestPass(): Double = {
       val root = java.nio.file.Files.createTempDirectory("graft_lgbench").toString
       val eng = new graft.cv.ContViewEngine(spark, root, smallStateBytes = 0L)
       val events = graft.queries.Tables.events(spark, sfDir)
-      val nEvents = events.count()
       eng.createStream("lg_stream", events.schema)
       eng.createContView("v_lg",
         """SELECT user_id, count(*) AS n, sum(value) AS sv, avg(value) AS av
@@ -456,40 +267,103 @@ object Bench {
       val chunks = 2
       val t0 = System.nanoTime()
       (0 until chunks).foreach { i =>
-        BenchAbort.check()
         val chunk = events.where(pmod(col("event_id"), lit(chunks)) === i).persist()
         try eng.insertInto("lg_stream", chunk) finally chunk.unpersist()
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      // release the store's persisted state + temp views so pass 2 (and
-      // the rest of the JVM) doesn't inherit this pass's cached footprint
+      // release the store's persisted state + temp views so the next pass
+      // (and the rest of the JVM) doesn't inherit this pass's footprint
       eng.dropContView("v_lg"); eng.dropStream("lg_stream")
-      (sec, nEvents / sec)
+      sec
     }
-    probe("cv_ingest", estSec = 40) {
-      var best = Seq(oneIngestPass(), oneIngestPass()).minBy(_._1)
-      var attempts = 2
-      def offPrev(p: (Double, Double)): Boolean =
-        prevBench.get("cv_ingest_events_per_sec")
-          .exists(prev => p._2 < prev / 1.5) ||
-        prevBench.get("cv_large_state_sec")
-          .exists(prev => p._1 > prev * 1.5)
-      while (offPrev(best) && attempts < 4 && remainingSec > 60) {
-        Thread.sleep(2000) // decorrelate from the burst that squeezed us
-        val retry = oneIngestPass()
-        if (retry._1 < best._1) best = retry
-        attempts += 1
+    probe("cv_ingest") {
+      val nEvents = graft.queries.Tables.events(spark, sfDir).count().toInt
+      val p = GateProbes.Point(nEvents, (0 until 3).map(_ => oneIngestPass()))
+      num("cv_large_state_sec", p.secs.sorted.apply(1))
+      lng("cv_ingest_events_per_sec", p.evPerSec)
+      draw("cv_ingest_pt", p.json)
+    }
+
+    // Gate-scale growth probes (GateProbes.chain): per-batch gate ev/s at
+    // seen-stores seeded to 10×/100× the per-batch volume, BOTH backends
+    // per kind off ONE seeding chain — the numbers that turn the gates'
+    // 100-TB pruned-read claims into measurements (flat-ish ev/s across
+    // the two scales = per-batch cost tracks the batch, not the corpus).
+    // The exact kind also carries the 100k-row big-batch pushdown probe:
+    // the serialized size of the LARGEST InSet actually shipped in task
+    // binaries (sets past GateStore.MaxPushdownBytes switch to broadcast
+    // joins, so this should stay under Spark's 1 MiB task warning BY
+    // DESIGN) and the big-batch throughput.
+    def gateScale(kind: String, batchRows: Int, bigBatchRows: Int = 0): Unit =
+      probe(s"gate_scale_$kind") {
+        import graft.streaming.StreamDedupGate.{DriverBackend, ExecutorBackend}
+        val c = GateProbes.chain(spark, kind, batchRows, Seq(10L, 100L),
+          Seq(DriverBackend, ExecutorBackend), bigBatchRows = bigBatchRows)
+        for ((backend, prefix) <- Seq(DriverBackend -> "gate_large_store",
+            ExecutorBackend -> "gate_exec"); mult <- Seq(10L, 100L))
+          lng(s"${prefix}_${kind}_${mult}x", c.points((backend, mult)).evPerSec)
+        dlng(s"gate_scale_${kind}_batch_rows", batchRows.toLong)
+        draw(s"gate_scale_${kind}_pts", c.points.toSeq.sortBy(_._1)
+          .map { case ((b, m), p) => s""""${b}_${m}x":${p.json}""" }
+          .mkString("{", ",", "}"))
+        c.pushdown.foreach { case (p, keys, kb) =>
+          lng("gate_pushdown_100k_ev_s", p.evPerSec)
+          draw("gate_pushdown_100k_pt", p.json)
+          dlng("gate_pushdown_100k_keys", keys.toLong)
+          // keyset size is a design constant (MaxPushdownBytes cap) —
+          // detail-line evidence, not a headline scalar
+          dlng("gate_pushdown_100k_keyset_kb", kb)
+        }
       }
-      num("cv_large_state_sec", best._1)
-      lng("cv_ingest_events_per_sec", best._2.round)
-      draw("cv_probe_attempts", s"""{"ingest":$attempts}""")
+
+    // The executor backend's 10×/100× slopes are the gate family's
+    // declared 100-TB path, so simhash runs right after cv_ingest.
+    gateScale("simhash", batchRows = 2500)
+
+    // Batch near-dup tier at 10× corpus: the two slowest bench queries —
+    // the banded MinHash join and the cluster closure — timed at 10× the
+    // sf's documents table (synthetic bodies, 25% near-dup copies of
+    // earlier docs), plus a closure pass FORCED into the distributed
+    // label-propagation regime (maxDriverEdges=0 — this corpus's edge set
+    // sits under the 200k driver bound, so the forced run is what proves
+    // the distributed loop converges in O(log diameter) rounds at scale).
+    probe("neardup_batch_10x") {
+      val nDocs = graft.queries.Tables.documents(spark, sfDir).count() * 10
+      def body10(c: org.apache.spark.sql.Column) = concat_ws(" ",
+        (0 until 30).map(i => concat(lit(s"w$i"),
+          pmod(xxhash64(c * (i + 1)), lit(49991L)).cast("string"))): _*)
+      val nFresh = nDocs * 3 / 4
+      val fresh = spark.range(nFresh)
+        .select(col("id").as("doc_id"), body10(col("id")).as("text"))
+      // near-dup rows: an earlier doc's body + a 2-token suffix
+      val dups = spark.range(nDocs - nFresh).select(
+        (col("id") + nFresh).as("doc_id"),
+        concat(body10(pmod(xxhash64(col("id") * 31L), lit(nFresh))),
+          lit(" zz yy")).as("text"))
+      val docs10 = fresh.unionByName(dups).persist()
+      docs10.count()
+      val t0 = System.nanoTime()
+      val pairs = graft.ops.MinHashLsh.nearDuplicates(
+        docs10, "doc_id", "text", 0.6).persist()
+      graft.ops.DedupClusters.clusterSummary(pairs, "id_a", "id_b").count()
+      num("neardup_batch_10x_sec", (System.nanoTime() - t0) / 1e9)
+      dstr("cc_regime_default", graft.ops.DedupClusters.lastClosure._1)
+      // the DISTRIBUTED closure regime (label propagation + pointer
+      // jumping — the 100-TB path of the slowest bench query), forced
+      // and TIMED
+      val tD = System.nanoTime()
+      graft.ops.DedupClusters.connectedComponents(pairs, "id_a", "id_b",
+        maxDriverEdges = 0L).count()
+      dnum("cc_distributed_sec", (System.nanoTime() - tD) / 1e9)
+      dlng("cc_rounds", graft.ops.DedupClusters.lastClosure._2.toLong)
+      pairs.unpersist(); docs10.unpersist()
     }
 
     // Reaper no-op probe: a TTL pass over a forced-large day-bucketed store
     // with nothing to expire. The footer-stat bucket pruning should make
     // this O(manifest metadata) — milliseconds regardless of state size —
     // which is what keeps a 1 s reaper cadence viable at 100x state.
-    probe("cv_reap_noop", estSec = 15) {
+    probe("cv_reap_noop") {
       val root = java.nio.file.Files.createTempDirectory("graft_reapbench").toString
       val eng = new graft.cv.ContViewEngine(spark, root, smallStateBytes = 0L)
       val events = graft.queries.Tables.events(spark, sfDir)
@@ -503,16 +377,15 @@ object Bench {
       eng.expireTtl("v_rp") // warm the footer-stat cache like a running reaper
       val t0 = System.nanoTime()
       eng.expireTtl("v_rp")
-      num("cv_reap_noop_sec", (System.nanoTime() - t0) / 1e9)
+      dnum("cv_reap_noop_sec", (System.nanoTime() - t0) / 1e9)
       eng.dropContView("v_rp"); eng.dropStream("rp_stream")
     }
 
     // Sustained-ingest soak: replays the events table continuously through
-    // the async path for SPARK_GRAFT_SOAK_SEC wall seconds (default 45,
-    // 0 disables) at forced-large state, with a periodic TTL reap riding
-    // the same engine — the steady-state shape of a production deployment.
-    val soakSec = sys.env.getOrElse("SPARK_GRAFT_SOAK_SEC", "45").toDouble
-    def soakOnce(): (Double, Double, Double, Long, Long) = {
+    // the async path for SoakSec wall seconds at forced-large state, with a
+    // periodic TTL reap riding the same engine — the steady-state shape of
+    // a production deployment.
+    probe("cv_soak") {
       val root = java.nio.file.Files.createTempDirectory("graft_soakbench").toString
       val eng = new graft.cv.ContViewEngine(spark, root, smallStateBytes = 0L)
       val events = graft.queries.Tables.events(spark, sfDir)
@@ -537,7 +410,7 @@ object Bench {
       def soakHalf(deadlineNanos: Long, startBatch: Long): (Long, Long) = {
         var sent = 0L
         var i = startBatch
-        while (System.nanoTime() < deadlineNanos && !BenchAbort.aborted) {
+        while (System.nanoTime() < deadlineNanos) {
           val c = (i % chunks).toInt
           eng.insertIntoAsync("sk_stream", chunkDfs(c))
           sent += chunkSizes(c)
@@ -555,62 +428,44 @@ object Bench {
       // JIT/codegen dominated (the r8 drift metric read 3.2x "speedup"
       // between halves — warm-up, not aging), so the timed window only
       // starts once the ingest path runs at steady state.
-      val warmDeadline = System.nanoTime() +
-        (math.min(soakSec * 0.4, 15.0) * 1e9).toLong
+      val warmDeadline = System.nanoTime() + (SoakSec * 0.4 * 1e9).toLong
       var warmBatches = 0L
-      while (System.nanoTime() < warmDeadline && !BenchAbort.aborted) {
+      while (System.nanoTime() < warmDeadline) {
         eng.insertIntoAsync("sk_stream", chunkDfs((warmBatches % chunks).toInt))
         warmBatches += 1
       }
       eng.flush()
       val t0 = System.nanoTime()
-      val halfNanos = (soakSec * 0.5e9).toLong
+      val halfNanos = (SoakSec * 0.5e9).toLong
       val (sent1, b1) = soakHalf(t0 + halfNanos, warmBatches)
       val t1 = System.nanoTime()
       val (sent2, b2) = soakHalf(t0 + 2 * halfNanos, b1)
       val t2 = System.nanoTime()
       // committed micro-batches per CV (batches_enqueued / commits = the
       // async drain's coalescing factor — visible in the artifact)
-      val commits = eng.stats().where(org.apache.spark.sql.functions.col("name") === "v_sk")
+      val commits = eng.stats().where(col("name") === "v_sk")
         .select("batches").collect()(0).getLong(0)
       chunkDfs.foreach(_.unpersist())
       eng.dropContView("v_sk"); eng.dropContView("v_sk_ttl"); eng.dropStream("sk_stream")
       val ev1 = sent1 / ((t1 - t0) / 1e9)
       val ev2 = sent2 / ((t2 - t1) / 1e9)
-      val evAll = (sent1 + sent2) / ((t2 - t0) / 1e9)
-      val reapMs = if (reapNanos.isEmpty) 0.0 else reapNanos.sum / 1e6 / reapNanos.size
-      (evAll, if (ev1 > 0) ev2 / ev1 else 0.0, reapMs, b2, commits)
-    }
-    if (soakSec > 0) probe("cv_soak", estSec = soakSec * 1.3 + 15) {
-      var best = soakOnce()
-      var attempts = 1
-      // previous-artifact adjudication (one retry — a soak is expensive):
-      // >1.5x below last round's sustained ev/s is the co-tenant signature
-      if (prevBench.get("cv_soak_events_per_sec")
-          .exists(prev => best._1 < prev / 1.5) &&
-          remainingSec > soakSec * 1.5 + 30) {
-        Thread.sleep(2000)
-        val retry = soakOnce()
-        if (retry._1 > best._1) best = retry
-        attempts = 2
-      }
-      dnum("cv_soak_sec", soakSec)
-      lng("cv_soak_events_per_sec", best._1.round)
-      num("cv_soak_drift", best._2)
-      dnum("cv_soak_reap_ms", math.round(best._3 * 100) / 100.0)
-      dlng("cv_soak_batches", best._4)
-      dlng("cv_soak_commits", best._5)
-      dlng("cv_soak_attempts", attempts.toLong)
+      dnum("cv_soak_sec", SoakSec)
+      lng("cv_soak_events_per_sec", math.round((sent1 + sent2) / ((t2 - t0) / 1e9)))
+      num("cv_soak_drift", if (ev1 > 0) ev2 / ev1 else 0.0)
+      dnum("cv_soak_reap_ms", if (reapNanos.isEmpty) 0.0
+        else math.round(reapNanos.sum / 1e4 / reapNanos.size) / 100.0)
+      dlng("cv_soak_batches", b2)
+      dlng("cv_soak_commits", commits)
     }
 
     // Streaming-dedup-gate probe: steady-state per-batch throughput of the
     // exact gate (20k-row batches, 25% repeats of already-admitted keys —
     // every repeat bloom-hits, forcing the store anti-join) and the SimHash
     // near-dup gate (5k-row batches, same repeat regime). Batch 1 is JVM/
-    // plan warm-up; the reported number is the median of the rest.
-    def gateProbe(nd: Boolean, nBatches: Int, batchRows: Int): Long = {
-      import org.apache.spark.sql.functions._
+    // plan warm-up; the reported number is the median of the other five.
+    def gateProbe(nd: Boolean, batchRows: Int): GateProbes.Point = {
       import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType}
+      val nBatches = 6
       val root = java.nio.file.Files.createTempDirectory("graft_gatebench").toString
       val eng = new graft.cv.ContViewEngine(spark, root)
       val schema = StructType(Seq(StructField("id", LongType), StructField("body", StringType)))
@@ -630,7 +485,6 @@ object Bench {
           pmod(xxhash64(idCol * (i + 1)), lit(99991L)).cast("string"))): _*)
       val nNew = batchRows * 3 / 4
       val secs = (0 until nBatches).map { b =>
-        BenchAbort.check()
         val base = b.toLong * batchRows
         val fresh = spark.range(nNew).select(
           (col("id") + base).as("id"), body(col("id") + b.toLong * nNew).as("body"))
@@ -649,37 +503,25 @@ object Bench {
       }
       eng.dropContTransform("gb_gate")
       eng.dropStream("gb_in"); eng.dropStream("gb_out")
-      val steady = secs.drop(1).sorted.apply((nBatches - 1) / 2)
-      math.round(batchRows / steady)
+      GateProbes.Point(batchRows, secs.drop(1))
     }
-    // off-band adjudication (the same rule as cv_ingest): a reading
-    // below 1/1.5 of the previous artifact's is the co-tenant signature —
-    // one decorrelated retry, best kept, attempts recorded
-    def gateWithRetry(key: String, nd: Boolean, rows: Int): Unit = {
-      var best = gateProbe(nd = nd, nBatches = 6, batchRows = rows)
-      var attempts = 1
-      if (prevBench.get(key).exists(p => best < p / 1.5) &&
-          remainingSec > 30) {
-        Thread.sleep(2000)
-        best = math.max(best, gateProbe(nd = nd, nBatches = 6, batchRows = rows))
-        attempts = 2
-      }
-      lng(key, best)
-      dlng(key + "_attempts", attempts.toLong)
+    probe("gate_exact") {
+      val p = gateProbe(nd = false, batchRows = 20000)
+      lng("gate_events_per_sec", p.evPerSec)
+      draw("gate_exact_pt", p.json)
     }
-    probe("gate_exact", estSec = 15) {
-      gateWithRetry("gate_events_per_sec", nd = false, rows = 20000)
-    }
-    probe("gate_ndgate", estSec = 15) {
-      gateWithRetry("ndgate_events_per_sec", nd = true, rows = 5000)
+    probe("gate_ndgate") {
+      val p = gateProbe(nd = true, batchRows = 5000)
+      lng("ndgate_events_per_sec", p.evPerSec)
+      draw("gate_ndgate_pt", p.json)
     }
 
-    // Indexed-BM25 probe (round 15): the repeated-retrieval cost drop —
-    // the scan tier re-reads the corpus per query set; the persisted
-    // posting index reads only the matching partition-pruned slices.
-    // Reported: the one-time build cost, then per-query seconds on each
-    // tier (median of 3 — same query, full plan re-executed each time).
-    probe("bm25_indexed", estSec = 30) {
+    // Indexed-BM25 probe: the repeated-retrieval cost drop — the scan tier
+    // re-reads the corpus per query set; the persisted posting index reads
+    // only the matching partition-pruned slices. Reported: the one-time
+    // build cost, then per-query seconds on each tier (median of 3 — same
+    // query, full plan re-executed each time).
+    probe("bm25_indexed") {
       val docs = graft.queries.Tables.documents(spark, sfDir)
       val terms = Seq("spark", "query", "vector")
       def med3(f: => Unit): Double =
@@ -693,10 +535,9 @@ object Bench {
         java.nio.file.Files.createTempDirectory("graft_bm25bench").toString
       val tB = System.nanoTime()
       graft.ops.KeywordScore.buildIndex(docs, "doc_id", "text", idxDir)
-      num("bm25_index_build_sec", (System.nanoTime() - tB) / 1e9)
-      // scan tier demoted to detail (round 17): the sweep's q_bm25_search
-      // already times it, and the summary line's ~1850-char overflow
-      // guard needs the slot for bm25_topk_sec
+      dnum("bm25_index_build_sec", (System.nanoTime() - tB) / 1e9)
+      // scan tier in the detail line: the sweep's q_bm25_search already
+      // times it
       dnum("bm25_scan_query_sec", scanSec)
       num("bm25_indexed_query_sec", med3 {
         graft.ops.KeywordScore.bm25Indexed(spark, idxDir, terms).count(); ()
@@ -712,8 +553,7 @@ object Bench {
       // tracks matching postings, not query count (50 per-query calls
       // would cost ~50 × bm25_indexed_query_sec)
       val topTerms = spark.read.parquet(s"$idxDir/df")
-        .orderBy(org.apache.spark.sql.functions.desc("df"))
-        .limit(120).select("term").collect().map(_.getString(0))
+        .orderBy(desc("df")).limit(120).select("term").collect().map(_.getString(0))
       if (topTerms.length >= 3) {
         val n = topTerms.length
         val fifty = (0 until 50).map(i =>
@@ -723,44 +563,32 @@ object Bench {
           graft.ops.KeywordScore.bm25IndexedMulti(spark, idxDir, fifty)
             .count(); ()
         })
-        // per-query top-k over the same 50-query batch (round 18): the
-        // bounded BottomKAgg rank — detail-line evidence that the
-        // skew-free aggregate rank stays within a small constant of the
-        // scoring pass (the r17 window spelling had a one-task-per-query
-        // sort ceiling at scale)
+        // per-query top-k over the same 50-query batch: the bounded
+        // BottomKAgg rank stays within a small constant of the scoring pass
         dnum("bm25_multi_topk_sec", med3 {
           graft.ops.KeywordScore.bm25IndexedMultiTopK(spark, idxDir,
             fifty, 10).count(); ()
         })
       }
-      // maintenance tier (round 16): tombstone-delete 1/7 of the corpus,
-      // then compact the generations — the dedup→re-index loop's cost
-      // (one pruned postings scan + one fold, never a corpus re-read)
+      // maintenance tier: tombstone-delete 1/7 of the corpus, then compact
+      // the generations — the dedup→re-index loop's cost (one pruned
+      // postings scan + one fold, never a corpus re-read)
       val tD = System.nanoTime()
       graft.ops.KeywordScore.deleteDocs(spark, idxDir,
         docs.where(pmod(col("doc_id"), lit(7L)) === 3).select("doc_id"))
-      num("bm25_delete_sec", (System.nanoTime() - tD) / 1e9)
+      dnum("bm25_delete_sec", (System.nanoTime() - tD) / 1e9)
       val tC = System.nanoTime()
       graft.ops.KeywordScore.compactIndex(spark, idxDir)
-      num("bm25_compact_sec", (System.nanoTime() - tC) / 1e9)
+      dnum("bm25_compact_sec", (System.nanoTime() - tC) / 1e9)
     }
 
-    // Multi-SF execution evidence (round 17): the whole oracle QUERY SET
-    // re-run at the sibling sf0.001 dir — ok/err counts into the DETAIL
-    // line, so the "queries hold across scale factors" claim (PERF_NOTES
-    // §33 was builder-attested only) rides a driver-parsed artifact.
-    // Execution evidence, not hash-compare: DuckDB is a driver-side tool
-    // by contract, so value-level oracle checks stay in the Verify +
-    // selfcheck channel; what THIS field pins is that every query
-    // (fixtures, gates, restarts included) builds and runs at a second
-    // SF in the same JVM. Skipped silently only when the sibling dir
-    // does not exist (non-standard layouts). Position: BEFORE the
-    // heavyweight scale family — the judge-facing evidence must not be
-    // the budget's perpetual last-in-line skip victim (a late scale
-    // probe that skips instead is front-rotated next round); three r17
-    // full runs showed the scale family's elevation tracks BOX LOAD,
-    // not this probe's resident fixtures (jaccard read ~262 s on a
-    // loaded box in both orders).
+    // Multi-SF execution evidence: the whole oracle QUERY SET re-run at the
+    // sibling sf0.001 dir — ok/err counts into the DETAIL line. Execution
+    // evidence, not hash-compare (value-level oracle checks stay in the
+    // Verify + selfcheck channel); what THIS field pins is that every
+    // query (fixtures, gates, restarts included) builds and runs at a
+    // second SF in the same JVM. Skipped only when the sibling dir does
+    // not exist (non-standard layouts).
     val sfEvDir = {
       val base = sfDir.stripSuffix("/")
       val i = base.lastIndexOf('/')
@@ -768,63 +596,24 @@ object Bench {
     }
     if (sfEvDir.nonEmpty && sfEvDir != sfDir &&
         new java.io.File(sfEvDir).isDirectory)
-      // static est = the measured band (113–118 s across three runs —
-      // fixture builds dominate and are sf-independent); an optimistic
-      // estimate here would starve the scale family that follows
-      probe("oracle_sf_evidence", estSec = 120) {
+      probe("oracle_sf_evidence") {
         graft.queries.CvQueries.warm(spark, sfEvDir)
         var ok = 0
         var err = 0
-        // a CANCELLED job (the probe deadline firing) must STOP the loop,
-        // not count as a query failure: Spark wraps the interrupt in a
-        // NonFatal SparkException (consuming the thread's interrupt
-        // flag), and swallowing it here would keep ~120 queries running
-        // concurrently with the next probes — the exact overrun the
-        // deadline exists to prevent
-        def cancelled(e: Throwable): Boolean = {
-          var t = e
-          var depth = 0
-          while (t != null && depth < 8) {
-            if (t.isInstanceOf[InterruptedException] ||
-              Option(t.getMessage).exists(_.toLowerCase.contains("cancel")))
-              return true
-            t = t.getCause
-            depth += 1
-          }
-          false
-        }
-        val it = SparkEntry.queries.toSeq.sortBy(_._1).iterator
-        // BenchAbort: the belt to the interrupt's braces — Spark's cancel
-        // exception CONSUMES the thread interrupt flag, so isInterrupted
-        // alone let r18's loop keep submitting fresh queries for 122 - n
-        // more rounds after its deadline (abort_thread_leaked)
-        while (it.hasNext && !Thread.currentThread().isInterrupted &&
-            !BenchAbort.aborted) {
-          val (_, fn) = it.next()
+        SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
           try { fn(spark, sfEvDir).count(); ok += 1 }
-          catch {
-            case e: Throwable if scala.util.control.NonFatal(e) &&
-                !cancelled(e) && !BenchAbort.aborted => err += 1
-          }
+          catch { case e: Throwable if scala.util.control.NonFatal(e) => err += 1 }
         }
         draw("oracle_sf_evidence",
           s"""{"sf":"sf0.001","ok":$ok,"err":$err}""")
       }
 
-
-
-    // The TTL-soak and 10x-near-dup probes run BEFORE the expensive
-    // scale/sharded probes (r15): on a loaded box the budget gate must
-    // skip a late heavyweight, not let the same two cheap probes be the
-    // permanent skip victims (they were budget-skipped in BENCH_r14).
     // Windowed-gate soak: a TTL jaccard gate under sustained load with
     // event time advancing ~12 min per batch and compaction REAPS riding
     // the feed (compactEvery = 8, window = 1 h → only ~5 batches of
     // content stay live at any fold). Reported like cv_soak: sustained
     // ev/s + first/second-half drift.
-    val gateSoakSec =
-      sys.env.getOrElse("SPARK_GRAFT_GATE_SOAK_SEC", "30").toDouble
-    if (gateSoakSec > 0) probe("gate_soak_ttl", estSec = gateSoakSec * 1.7 + 35) {
+    probe("gate_soak_ttl") {
       import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType, TimestampType}
       val root = java.nio.file.Files.createTempDirectory("graft_gtsoak").toString
       val eng = new graft.cv.ContViewEngine(spark, root)
@@ -865,13 +654,11 @@ object Bench {
         sec
       }
       (0 until 3).foreach(_ => feedOne()) // untimed JIT/codegen warm-up
-      val halfNanos = (gateSoakSec * 0.5e9).toLong
+      val halfNanos = (GateSoakSec * 0.5e9).toLong
       def half(deadline: Long): (Long, Double) = {
         var sent = 0L
         var secs = 0.0
-        while (System.nanoTime() < deadline && !BenchAbort.aborted) {
-          secs += feedOne(); sent += batchRows
-        }
+        while (System.nanoTime() < deadline) { secs += feedOne(); sent += batchRows }
         (sent, secs)
       }
       val t0 = System.nanoTime()
@@ -884,233 +671,35 @@ object Bench {
       val evAll = if (sec1 + sec2 > 0) (s1 + s2) / (sec1 + sec2) else 0.0
       lng("gate_soak_ttl_events_per_sec", math.round(evAll))
       num("gate_soak_ttl_drift", if (ev1 > 0) ev2 / ev1 else 0.0)
-      dnum("gate_soak_ttl_sec", gateSoakSec)
+      dnum("gate_soak_ttl_sec", GateSoakSec)
     }
 
-    // Batch near-dup tier at 10× corpus: the two slowest bench queries —
-    // the banded MinHash join and the cluster closure — timed at 10× the
-    // sf's documents table (synthetic bodies, 25% near-dup copies of
-    // earlier docs), plus a closure pass FORCED into the distributed
-    // label-propagation regime (maxDriverEdges=0 — this corpus's edge set
-    // sits under the 200k driver bound, so the forced run is what proves
-    // the distributed loop converges in O(log diameter) rounds at scale).
-    if (sys.env.getOrElse("SPARK_GRAFT_NEARDUP_10X", "1") != "0")
-      probe("neardup_batch_10x", estSec = 60) {
-        val nDocs = graft.queries.Tables.documents(spark, sfDir).count() * 10
-        def body10(c: org.apache.spark.sql.Column) = concat_ws(" ",
-          (0 until 30).map(i => concat(lit(s"w$i"),
-            pmod(xxhash64(c * (i + 1)), lit(49991L)).cast("string"))): _*)
-        val nFresh = nDocs * 3 / 4
-        val fresh = spark.range(nFresh)
-          .select(col("id").as("doc_id"), body10(col("id")).as("text"))
-        // near-dup rows: an earlier doc's body + a 2-token suffix
-        val dups = spark.range(nDocs - nFresh).select(
-          (col("id") + nFresh).as("doc_id"),
-          concat(body10(pmod(xxhash64(col("id") * 31L), lit(nFresh))),
-            lit(" zz yy")).as("text"))
-        val docs10 = fresh.unionByName(dups).persist()
-        docs10.count()
-        val t0 = System.nanoTime()
-        val pairs = graft.ops.MinHashLsh.nearDuplicates(
-          docs10, "doc_id", "text", 0.6).persist()
-        graft.ops.DedupClusters.clusterSummary(pairs, "id_a", "id_b").count()
-        num("neardup_batch_10x_sec", (System.nanoTime() - t0) / 1e9)
-        dstr("cc_regime_default", graft.ops.DedupClusters.lastClosure._1)
-        // the DISTRIBUTED closure regime (label propagation + pointer
-        // jumping — the 100-TB path of the slowest bench query), forced
-        // and TIMED
-        val tD = System.nanoTime()
-        graft.ops.DedupClusters.connectedComponents(pairs, "id_a", "id_b",
-          maxDriverEdges = 0L).count()
-        dnum("cc_distributed_sec", (System.nanoTime() - tD) / 1e9)
-        dlng("cc_rounds", graft.ops.DedupClusters.lastClosure._2.toLong)
-        pairs.unpersist(); docs10.unpersist()
-      }
+    gateScale("exact", batchRows = 10000, bigBatchRows = 100000)
+    gateScale("jaccard", batchRows = 1500)
+    gateScale("cosine", batchRows = 1000)
 
-    // Gate-scale growth probes (GateProbes.dualScaleProbe): per-batch gate
-    // ev/s at seen-stores seeded to 10×/100× the per-batch volume, BOTH
-    // backends per kind off ONE seeding chain — the numbers that turn the
-    // gates' 100-TB pruned-read claims into measurements (flat-ish ev/s
-    // across the two scales = per-batch cost tracks the batch, not the
-    // corpus). Retries re-measure on the live store (max-of-2 attempts per
-    // point + up to 2 extra at the 100× point when the cross-scale ratio
-    // reads < 0.7 — the store-growth-decay signature, repairable by
-    // re-measuring the high point; a > 1.5 ratio means the LOW point was
-    // squeezed, unrepairable on a shared seeding chain, so it stands
-    // self-documented by the attempt counts).
-    // The exact kind also carries the 100k-row big-batch pushdown probe:
-    // the measured serialized size of the LARGEST InSet actually shipped
-    // in task binaries (sets past GateStore.MaxPushdownBytes switch to
-    // broadcast joins, so this should stay under Spark's 1 MiB task
-    // warning BY DESIGN) and the big-batch throughput.
-    val gateScale = sys.env.getOrElse("SPARK_GRAFT_GATE_SCALE", "1") != "0"
-    if (gateScale) {
-      val kinds = Seq(
-        // (kind, batchRows, bigBatchRows, estSec) — static estimates set
-        // to the measured sf0.1 QUIET band's high edge (r13–r15
-        // probe_secs: exact 60–76, simhash 86–98, jaccard 146–190,
-        // cosine 49–67): the driver's bounded artifact tail reliably
-        // carries only the summary line, so a round after a detail-only
-        // probe_secs emission seeds from THIS table — legacy 175–250 s
-        // values made admission skip probes that actually fit
-        ("exact", 20000, 100000, 95.0),
-        ("simhash", 5000, 0, 115.0),
-        ("jaccard", 4000, 0, 190.0),
-        ("cosine", 2000, 0, 70.0))
-      // Horizontal scale-out probe (GateProbes.shardProbe): the cosine
-      // gate — the family's lowest-throughput member — key-space-sharded
-      // into G concurrent cores at a 50x seeded store. g4/g1 measures how
-      // much of the single-driver decision loop sharding removes (bounded
-      // locally by per-job latency and the serial collect/forward —
-      // PERF_NOTES §13). SPLIT into two separately-admitted halves
-      // (round 17): r16's combined probe inflated 5.7× under mid-run
-      // load and its single admission decision cost three cheaper probes
-      // — per-half admission + the probe deadline bound the damage to
-      // half. Retry rule (g4 ≤ g1 contradicts code reality, quiet-box
-      // 1.9-2.7×) re-measures the G=4 half against the G=1 reading.
-      // static estimates = the quiet band split per half (107–123 s
-      // combined; the G=1 half is the cheaper seed/measure)
-      var shardedG1 = -1L
-      def shardedCosineG1(): Unit = probe("gate_sharded_cosine_g1", estSec = 75,
-          family = "gate_scale") {
-        shardedG1 = GateProbes.shardProbe(spark, "cosine", 10000, 50L,
-          Seq(1)).head._2
-        lng("gate_sharded_cosine_g1", shardedG1)
+    // Horizontal scale-out probe: the cosine gate — the family's
+    // lowest-throughput member — key-space-sharded into G concurrent cores
+    // at a 20× seeded store (a fresh store per G: the shard count is part
+    // of the store's identity). g4/g1 measures how much of the
+    // single-driver decision loop sharding removes (bounded locally by
+    // per-job latency and the serial collect/forward — PERF_NOTES §13).
+    Seq(1, 4).foreach { g =>
+      probe(s"gate_sharded_cosine_g$g") {
+        val p = GateProbes.chain(spark, "cosine", 5000, Seq(20L),
+          Seq(graft.streaming.StreamDedupGate.DriverBackend), shards = g)
+          .points.values.head
+        lng(s"gate_sharded_cosine_g$g", p.evPerSec)
+        draw(s"gate_sharded_cosine_g${g}_pt", p.json)
       }
-      def shardedCosineG4(): Unit = probe("gate_sharded_cosine_g4", estSec = 95,
-          family = "gate_scale") {
-        def once(): Long =
-          GateProbes.shardProbe(spark, "cosine", 10000, 50L, Seq(4)).head._2
-        var best = once()
-        var attempts = 1
-        while (shardedG1 > 0 && best <= shardedG1 && attempts < 3 &&
-            remainingSec > 150) {
-          best = math.max(best, once())
-          attempts += 1
-        }
-        lng("gate_sharded_cosine_g4", best)
-        dlng("gate_sharded_attempts", attempts.toLong)
-      }
-      def shardedCosineProbe(): Unit = { shardedCosineG1(); shardedCosineG4() }
-      // probes the PREVIOUS round budget-skipped (or deadline-aborted)
-      // run BEFORE the rest of the family this round — no probe may be a
-      // permanent skip victim (r15 skipped gate_sharded_cosine behind
-      // four admitted scale probes; r16's sharded overrun then skipped
-      // three scale probes — the rotation now covers the scale kinds too).
-      // gate_scale_simhash outranks even the sharded pair when BOTH were
-      // skipped (round 19): its 10×/100× slopes are the executor backend's
-      // — the family's declared 100-TB path — and they have been missing
-      // from three consecutive driver artifacts while the generic rotation
-      // kept spending the budget's front on other family members.
-      val shardedFirst = prev.skipped.exists(_.startsWith("gate_sharded_cosine"))
-      val simhashFirst = prev.skipped.contains("gate_scale_simhash")
-      // skip victims of the previous round move to the FRONT of the kind
-      // order (stable within each group); simhash, when skipped, to the
-      // very front
-      val kindsRotated = kinds.sortBy { case (kind, _, _, _) =>
-        if (kind == "simhash" && simhashFirst) -1
-        else if (prev.skipped.contains(s"gate_scale_$kind")) 0 else 1
-      }
-      if (shardedFirst && !simhashFirst) shardedCosineProbe()
-      kindsRotated.foreach { case (kind, rows, big, est) =>
-        if (shardedFirst && simhashFirst && kind == kindsRotated(1)._1)
-          shardedCosineProbe() // after the fronted simhash, before the rest
-        probe(s"gate_scale_$kind", estSec = est, family = "gate_scale") {
-          val r = GateProbes.dualScaleProbe(spark, kind, rows,
-            bigBatchRows = big,
-            // off-band pushdown reading (below HALF the previous
-            // artifact's) re-measures once while the seeded store lives
-            pushdownOffBand = ev =>
-              prevBench.get("gate_pushdown_100k_ev_s").exists(p => ev < p / 2))
-          lng(s"gate_large_store_${kind}_10x", r.driver.head)
-          lng(s"gate_large_store_${kind}_100x", r.driver.last)
-          lng(s"gate_exec_${kind}_10x", r.exec.head)
-          lng(s"gate_exec_${kind}_100x", r.exec.last)
-          dlng(s"gate_scale_${kind}_driver_attempts", r.driverAttempts.toLong)
-          dlng(s"gate_scale_${kind}_exec_attempts", r.execAttempts.toLong)
-          if (big > 0) {
-            lng("gate_pushdown_100k_ev_s", r.pushdownEvPerSec)
-            dlng("gate_pushdown_100k_keys", r.pushdownKeys.toLong)
-            // keyset size is a design constant (MaxPushdownBytes cap) —
-            // detail-line evidence, not a headline scalar fighting the
-            // summary's overflow guard
-            dlng("gate_pushdown_100k_keyset_kb", r.pushdownKeySetKb)
-            dlng("gate_pushdown_attempts", r.pushdownAttempts.toLong)
-          }
-        }
-      }
-      if (!shardedFirst) shardedCosineProbe()
     }
 
-    // Quiet re-check: when the run itself was contaminated (loaded box /
-    // steal), wait for the next quiet window and re-run the CORE probes,
-    // stamping them into the SAME artifact as a `quiet_recheck` object.
-    // The wait is bounded by BOTH its own knob and the REMAINING total
-    // budget (r13's failure mode: an independent 480 s wait inside a run
-    // already over budget).
-    val loadedNow = loadavgBefore.trim.split("\\s+").headOption
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).exists(_ > 2.0) ||
-      stealPctNow() > 1.0
-    val recheckCoreEst = 200.0 // sweep + one ingest + exact gate
-    val recheckOn = sys.env.getOrElse("SPARK_GRAFT_QUIET_RECHECK", "1") != "0"
-    // remaining budget sampled ONCE: two independent reads could straddle
-    // the threshold and silently take neither branch
-    val recheckBudgetOk = remainingSec > recheckCoreEst + 60
-    if (loadedNow && recheckOn && !recheckBudgetOk) {
-      // over budget: say so instead of silently omitting the object
-      draw("quiet_recheck", """{"skipped_budget":true}""")
-      emitSummary()
-    }
-    if (loadedNow && recheckOn && recheckBudgetOk) {
-      val maxWait = math.min(
-        sys.env.getOrElse("SPARK_GRAFT_QUIET_WAIT_SEC", "480").toDouble,
-        remainingSec - recheckCoreEst)
-      val w0 = System.nanoTime()
-      var (ws, wc) = cpuTicks()
-      var windowSteal = 100.0
-      var la = 99.0
-      var quiet = false
-      while (!quiet && (System.nanoTime() - w0) / 1e9 < maxWait) {
-        Thread.sleep(15000)
-        val (s2, c2) = cpuTicks()
-        windowSteal = if (c2 > wc) 100.0 * (s2 - ws) / (c2 - wc) else 0.0
-        ws = s2; wc = c2
-        la = loadavgNow().split("\\s+").headOption
-          .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(99.0)
-        quiet = la < 1.0 && windowSteal < 0.5
-      }
-      val waited = math.round((System.nanoTime() - w0) / 1e9)
-      if (!quiet)
-        draw("quiet_recheck",
-          s"""{"quiet_window_found":false,"waited_sec":$waited,"loadavg":"${loadavgNow()}"}""")
-      else {
-        val (rs0, rc0) = cpuTicks()
-        val sweepT0 = System.nanoTime()
-        // same min-of-N discipline as the main pass: a single-shot sweep
-        // right after an hour of heavy work reads WORSE than the
-        // contaminated run it is meant to adjudicate (GC/page-cache churn)
-        val sweep = SparkEntry.queries.toSeq.sortBy(_._1)
-          .map { case (_, fn) => (1 to repeats).map(_ => timeOnce(fn)).min }
-          .sum
-        val sweepSec = (System.nanoTime() - sweepT0) / 1e9
-        val ing = oneIngestPass()
-        val gate = gateProbe(nd = false, nBatches = 6, batchRows = 20000)
-        val (rs1, rc1) = cpuTicks()
-        val rSteal =
-          if (rc1 > rc0) 100.0 * (rs1 - rs0) / (rc1 - rc0) else 0.0
-        draw("quiet_recheck",
-          s"""{"quiet_window_found":true,"waited_sec":$waited,"sweep_sec":${f3(sweepSec)},"query_sec_sum":${f3(sweep)},"cv_large_state_sec":${f3(ing._1)},"cv_ingest_events_per_sec":${ing._2.round},"gate_events_per_sec":$gate,"loadavg":"${loadavgNow()}","cpu_steal_pct":${math.round(rSteal * 100) / 100.0}}""")
-      }
-      emitSummary()
-    }
-
-    // Verbose per-query line (the full 100+-timing map overflows the
-    // driver's bounded tail, which is why the detail + summary pair goes
-    // out separately and LAST — the driver takes the last summary
-    // occurrence, and the compact summary line is the one that must sit
-    // intact at the very end of the tail window).
+    // Verbose per-query line (the full 100+-timing map overflows a bounded
+    // tail, which is why the detail + summary pair goes out separately and
+    // LAST). The session stops before the final pair so nothing Spark
+    // prints on shutdown can land after the summary line.
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs}""")
-    emitSummary()
     spark.stop()
+    emitSummary()
   }
 }

@@ -13,6 +13,10 @@ import org.apache.spark.sql.functions._
   * Batches carry 25% repeats of seeded content so every measured batch
   * pays the bloom-positive store path (the steady-state worst case; a
   * fully-fresh batch never touches the store at all).
+  *
+  * Every point is measured once, as a fixed number of timed batches; the
+  * artifact gets the median ev/s plus the spread and sample count, so a
+  * probe's cost is fixed by its sizes and never by what it reads.
   */
 object GateProbes {
 
@@ -21,7 +25,7 @@ object GateProbes {
 
   /** The probes' `kind` gate "gs_gate" from stream gs_in to gs_out. */
   private def probeGate(eng: graft.cv.ContViewEngine, kind: String,
-      storeRoot: String, dim: Int, backend: String, shards: Int = 1): Gate =
+      storeRoot: String, dim: Int, backend: String, shards: Int): Gate =
     kind match {
       case "exact" => graft.streaming.StreamDedupGate.create(eng, "gs_gate",
         "SELECT id, body FROM gs_in", keySql = "md5(body)", orderCol = "id",
@@ -41,35 +45,40 @@ object GateProbes {
         threshold = 0.98, dim = dim, backend = backend, shards = shards)
     }
 
-  /** One kind's DUAL-backend scale probe result: per-scale ev/s for the
-    * driver and executor backends, measurement attempts actually spent,
-    * and (exact kind, when requested) the big-batch pushdown fields. */
-  final case class DualScale(
-      driver: Seq[Long], exec: Seq[Long],
-      driverAttempts: Int, execAttempts: Int,
-      pushdownEvPerSec: Long = 0L, pushdownKeys: Int = 0,
-      pushdownKeySetKb: Long = 0L, pushdownAttempts: Int = 0)
+  /** One measured point: the wall seconds of each timed batch of `rows`. */
+  final case class Point(rows: Int, secs: Seq[Double]) {
+    private def ev(s: Double): Long = if (s > 0) math.round(rows / s) else 0L
+    /** ev/s at the median batch. */
+    def evPerSec: Long = ev(secs.sorted.apply(secs.size / 2))
+    /** Detail-line form: median ev/s, the slowest and fastest batch's
+      * ev/s, and the sample count. */
+    def json: String =
+      s"""{"ev_s":$evPerSec,"lo":${ev(secs.max)},"hi":${ev(secs.min)},"n":${secs.size}}"""
+  }
 
-  /** Both backends of `kind` probed against ONE seeding chain: the store
-    * is seeded to each scale once and REUSED — the driver gate measures,
-    * detaches (store intact; the engine root is separate from the store
-    * root), the executor gate bootstraps from the same store (the restart
-    * path) and measures. Cuts the dominant probe cost (seeding a 100×
-    * store) from 2 chains × up-to-3 ratio retries to exactly one chain:
-    * retries re-MEASURE on the live store (max-of-attempts per scale
-    * point, plus extra attempts at the last scale when the cross-scale
-    * ratio looks squeezed) instead of re-seeding.
+  /** One seeded-store chain's points, keyed by (backend, scale), plus the
+    * exact kind's big-batch pushdown point with the largest InSet shipped
+    * (keys, KB). */
+  final case class Chain(points: Map[(String, Long), Point],
+      pushdown: Option[(Point, Int, Long)])
+
+  /** `kind` ∈ {exact, simhash, jaccard, cosine} against ONE seeding chain:
+    * the store is seeded (through a driver gate, which also regrows the
+    * bloom) to each of `scales` × `batchRows` once, in ascending order;
+    * at each scale every backend in `backends` attaches to the same store,
+    * measures `nBatches` timed batches after a one-time 2-batch warm-up,
+    * and detaches (the engine root is separate from the store root, so
+    * the store survives). `shards` ≥ 2 builds the key-space-sharded form.
     *
     * `bigBatchRows` > 0 (exact kind): after the last scale, re-attach the
     * driver gate and feed `nBatches` batches of that many rows with
     * [[graft.streaming.GateStore]]'s inSet capture on — the measured cost
     * of a large candidate list serializing into every scan task (the
     * `maxPushdownKeys` trade). */
-  def dualScaleProbe(spark: SparkSession, kind: String, batchRows: Int,
-      scales: Seq[Long] = Seq(10L, 100L), nBatches: Int = 4,
-      attemptsPerScale: Int = 2, bigBatchRows: Int = 0,
-      pushdownOffBand: Long => Boolean = _ => false): DualScale = {
-    import graft.streaming.StreamDedupGate.{DriverBackend, ExecutorBackend}
+  def chain(spark: SparkSession, kind: String, batchRows: Int,
+      scales: Seq[Long], backends: Seq[String], shards: Int = 1,
+      nBatches: Int = 5, bigBatchRows: Int = 0): Chain = {
+    import graft.streaming.StreamDedupGate.DriverBackend
     import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType, ArrayType, DoubleType}
     val root = java.nio.file.Files.createTempDirectory(s"graft_gdc_$kind")
     // engine root ≠ store root: dropContTransform deletes
@@ -96,9 +105,13 @@ object GateProbes {
     }
     eng.createStream("gs_in", inSchema)
     eng.createStream("gs_out", outSchema)
+    // payload(cid): the content for content-id cid — seeds and batches
+    // share it so a dup row really repeats seeded content
     def payload(rows: DataFrame) =
       if (textual) rows.select(col("id"), body(col("cid")).as("body"))
       else rows.select(col("id"), vec(col("cid")).as("embedding"))
+    def attach(backend: String): Gate =
+      probeGate(eng, kind, storeRoot, dim, backend, shards)
     def detach(gate: Gate): Unit = {
       gate.drainCommits()
       eng.dropContTransform("gs_gate")
@@ -107,18 +120,17 @@ object GateProbes {
       val chunk = 100000L
       var off = 0L
       while (off < n) {
-        BenchAbort.check() // deadline-abortable between seed chunks
         val m = math.min(chunk, n - off)
-        val rows = payload(spark.range(m)
+        gate.seedStore(payload(spark.range(m)
           .select((col("id") + fromId + off).as("id"))
-          .withColumn("cid", col("id")))
-        gate.seedStore(rows)
+          .withColumn("cid", col("id"))))
         off += m
       }
+      // compacted range shards + a right-sized bloom are the steady state
+      // the per-batch numbers should measure
       gate.compact()
     }
-    var nextId = 1L << 40
-    val warmedBackends = scala.collection.mutable.Set[String]()
+    var nextId = 1L << 40 // batch ids above any seed id
     def feedOne(seeded: Long, b: Int, rows: Int): Double = {
       val nNew = rows * 3 / 4
       val base = nextId
@@ -136,93 +148,39 @@ object GateProbes {
       batch.unpersist()
       sec
     }
-    def measureOnce(seeded: Long, backend: String): Long = {
-      BenchAbort.check() // deadline-abortable between measurement batches
-      if (!warmedBackends.contains(backend)) {
-        (0 until 2).foreach(b => { feedOne(seeded, -1 - b, batchRows); () })
-        warmedBackends += backend
-      }
-      val secs = (0 until nBatches).map { b =>
-        BenchAbort.check()
-        feedOne(seeded, b, batchRows)
-      }
-      val steady = secs.drop(1).sorted.apply((nBatches - 1) / 2)
-      math.round(batchRows / steady)
-    }
-    // only a LOW-looking last point is repairable by re-measuring it
-    // (max-of-attempts can raise a squeezed 100x reading); ratio > 1.5
-    // means the 10x point was squeezed, and on a shared seeding chain
-    // that store no longer exists — retrying the 100x point can only
-    // widen the ratio, so the artifact self-documents it (both points +
-    // attempt counts) instead of burning futile re-measures
-    def suspicious(r: Double): Boolean = r < 0.7
-    def ratio(lo: Long, hi: Long): Double =
-      if (lo > 0) hi.toDouble / lo else 0.0
-    val evs = scala.collection.mutable.Map.empty[(String, Long), Long]
-    val tries = scala.collection.mutable.Map(
-      DriverBackend -> 0, ExecutorBackend -> 0)
+    def measure(seeded: Long, rows: Int, from: Int): Point =
+      Point(rows, (0 until nBatches).map(b => feedOne(seeded, from + b, rows)))
+    // one-time UNTIMED warm-up per backend: the whole gate path (key exprs,
+    // collect, decide, sink) JIT-compiles on the first few batches, and a
+    // cold first point reads up to 10-20x slower than the same code warm
+    val warmed = scala.collection.mutable.Set[String]()
     var seededTo = 0L
-    val sorted = scales.sorted
-    sorted.foreach { mult =>
+    val points = scales.sorted.flatMap { mult =>
       val target = batchRows.toLong * mult
-      // ONE seeding chain (through a fresh driver gate — it also regrows
-      // the bloom), shared by both backends at this scale
-      var g = probeGate(eng, kind, storeRoot, dim, DriverBackend)
-      if (target > seededTo) { seed(g, seededTo, target - seededTo); seededTo = target }
-      Seq(DriverBackend, ExecutorBackend).foreach { backend =>
-        if (backend == ExecutorBackend) g = probeGate(eng, kind, storeRoot, dim, backend)
-        // max-of-attempts per point: a co-tenant burst squeezing one
-        // window reads as a too-slow minimum, and the maximum ev/s is
-        // the honest throughput (each attempt re-runs the full path)
-        var best = 0L
-        (0 until attemptsPerScale).foreach { _ =>
-          best = math.max(best, measureOnce(seededTo, backend))
-          tries(backend) += 1
-        }
-        // last scale: a squeezed-looking cross-scale ratio earns up to 2
-        // extra re-measures on the SAME store (never a re-seed)
-        if (mult == sorted.last && sorted.size > 1) {
-          val lo = evs((backend, sorted.head))
-          var extra = 0
-          while (suspicious(ratio(lo, best)) && extra < 2) {
-            best = math.max(best, measureOnce(seededTo, backend))
-            tries(backend) += 1
-            extra += 1
-          }
-        }
-        evs((backend, mult)) = best
+      if (target > seededTo) {
+        val g = attach(DriverBackend)
+        seed(g, seededTo, target - seededTo)
+        seededTo = target
         detach(g)
       }
-    }
-    // big-batch pushdown probe (driver backend, the InSet-carrying path).
-    // An OFF-BAND reading (per `pushdownOffBand`, typically "below half
-    // of the previous artifact's value") earns ONE decorrelated
-    // re-measure while the seeded store still exists — a co-tenant burst
-    // otherwise leaves a plausible-looking 9× "regression" in the
-    // artifact that nothing flags (the r15 11.9k-vs-107k entry).
-    val (pdEv, pdKeys, pdKb, pdTries) =
-      if (bigBatchRows <= 0) (0L, 0, 0L, 0)
+      backends.map { backend =>
+        val g = attach(backend)
+        if (warmed.add(backend))
+          (0 until 2).foreach(b => feedOne(seededTo, -1 - b, batchRows))
+        val p = measure(seededTo, batchRows, 0)
+        detach(g)
+        (backend, mult) -> p
+      }
+    }.toMap
+    val pushdown =
+      if (bigBatchRows <= 0) None
       else {
-        val g = probeGate(eng, kind, storeRoot, dim, DriverBackend)
+        val g = attach(DriverBackend)
         graft.streaming.StreamDedupGate.setInSetCapture(true)
         try {
-          def measurePd(): Long = {
-            val secs = (0 until nBatches).map { b =>
-              BenchAbort.check()
-              feedOne(seededTo, 100 + b, bigBatchRows)
-            }
-            val steady = secs.drop(1).sorted.apply((nBatches - 1) / 2)
-            math.round(bigBatchRows / steady)
-          }
-          var ev = measurePd()
-          var attempts = 1
-          if (pushdownOffBand(ev)) {
-            Thread.sleep(2000) // decorrelate from the burst
-            ev = math.max(ev, measurePd())
-            attempts += 1
-          }
+          val p = measure(seededTo, bigBatchRows, 100)
           val (keys, bytes) = graft.streaming.StreamDedupGate.lastInSetStats
-          (ev, keys, bytes / 1024, attempts)
+          Some((p, keys, bytes / 1024))
         } finally {
           graft.streaming.StreamDedupGate.setInSetCapture(false)
           detach(g)
@@ -230,126 +188,9 @@ object GateProbes {
       }
     eng.dropStream("gs_in"); eng.dropStream("gs_out")
     graft.streaming.ExecutorGateState.dropUnder(root.toAbsolutePath.toString)
-    // the seeded 100x stores (engine root ≠ store root so detach preserves
-    // them MID-probe) are dead weight at probe end — hundreds of MB per
-    // kind per bench run if left in /tmp
+    // the seeded stores are dead weight at probe end — hundreds of MB per
+    // kind per bench run if left in the temp dir
     graft.streaming.StreamDedupGate.deleteRecursively(root.toFile)
-    DualScale(
-      sorted.map(m => evs((DriverBackend, m))),
-      sorted.map(m => evs((ExecutorBackend, m))),
-      tries(DriverBackend), tries(ExecutorBackend),
-      pdEv, pdKeys, pdKb, pdTries)
-  }
-
-  /** Aggregate gate ev/s at a `storeMult`× seeded store for each shard
-    * count in `gs` — the horizontal scale-out probe: G key-slice cores
-    * deciding each batch concurrently should push throughput toward G×
-    * (bounded by per-batch fixed costs: the one collect, the one forward,
-    * job-scheduling overhead). Fresh store per G (the shard count is part
-    * of the store's identity). */
-  def shardProbe(spark: SparkSession, kind: String, batchRows: Int,
-      storeMult: Long, gs: Seq[Int] = Seq(1, 4, 8),
-      nBatches: Int = 4): Seq[(Int, Long)] =
-    gs.map { g =>
-      val evs = scaleProbe(spark, kind, batchRows, Seq(storeMult), nBatches,
-        shards = g)
-      (g, evs.head)
-    }
-
-  /** ev/s for `kind` ∈ {exact, simhash, jaccard, cosine} at each store
-    * scale in `scales` (multiples of `batchRows`), seeding incrementally;
-    * `shards` ≥ 2 builds the key-space-sharded gate form; `backend` =
-    * "executor" runs the executor-partitioned state tier (simhash only —
-    * the 100-TB path past the driver resident budget). */
-  def scaleProbe(spark: SparkSession, kind: String, batchRows: Int,
-      scales: Seq[Long] = Seq(10L, 100L), nBatches: Int = 4,
-      shards: Int = 1,
-      backend: String = graft.streaming.StreamDedupGate.DriverBackend): Seq[Long] = {
-    import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType, ArrayType, DoubleType}
-    val root = java.nio.file.Files.createTempDirectory(s"graft_gsc_$kind").toString
-    val eng = new graft.cv.ContViewEngine(spark, root)
-    val dim = 32
-    def vec(c: Column) = array((1 to dim).map(k =>
-      (pmod(xxhash64(c * lit(k)), lit(2001L)) - lit(1000L)).cast("double")
-        / lit(1000.0)): _*)
-    def body(c: Column) = concat_ws(" ",
-      (0 until 40).map(i => concat(lit(s"t$i"),
-        pmod(xxhash64(c * (i + 1)), lit(99991L)).cast("string"))): _*)
-    val textual = kind != "cosine"
-    val inSchema =
-      if (textual) StructType(Seq(StructField("id", LongType), StructField("body", StringType)))
-      else StructType(Seq(StructField("id", LongType),
-        StructField("embedding", ArrayType(DoubleType))))
-    val outSchema = kind match {
-      case "exact" => StructType(inSchema.fields :+ StructField("h", StringType))
-      case "simhash" => StructType(inSchema.fields :+ StructField("fp", LongType))
-      case _ => inSchema
-    }
-    eng.createStream("gs_in", inSchema)
-    eng.createStream("gs_out", outSchema)
-    // payload(cid): the content for content-id cid — seeds and batches
-    // share it so a dup row really repeats seeded content
-    def payload(rows: DataFrame) =
-      if (textual) rows.select(col("id"), body(col("cid")).as("body"))
-      else rows.select(col("id"), vec(col("cid")).as("embedding"))
-    val gate = probeGate(eng, kind, root, dim, backend, shards)
-    def seed(fromId: Long, n: Long): Unit = {
-      val chunk = 100000L
-      var off = 0L
-      while (off < n) {
-        BenchAbort.check() // deadline-abortable between seed chunks
-        val m = math.min(chunk, n - off)
-        val rows = payload(spark.range(m)
-          .select((col("id") + fromId + off).as("id"))
-          .withColumn("cid", col("id")))
-        gate.seedStore(rows)
-        off += m
-      }
-      // compacted range shards + a right-sized bloom are the steady state
-      // the per-batch numbers should measure
-      gate.compact()
-    }
-    var nextId = 1L << 40 // batch ids above any seed id
-    var warmed = false
-    def measure(seeded: Long): Long = {
-      val nNew = batchRows * 3 / 4
-      def feedOne(b: Int): Double = {
-        val base = nextId
-        nextId += batchRows
-        val fresh = spark.range(nNew)
-          .select((col("id") + base).as("id")).withColumn("cid", col("id"))
-        val dups = spark.range(batchRows - nNew)
-          .select((col("id") + base + nNew).as("id"),
-            pmod(xxhash64(col("id") * lit(7L) + lit(b)), lit(seeded)).as("cid"))
-        val batch = payload(fresh.unionByName(dups)).persist()
-        batch.count()
-        val t0 = System.nanoTime()
-        eng.insertInto("gs_in", batch)
-        val sec = (System.nanoTime() - t0) / 1e9
-        batch.unpersist()
-        sec
-      }
-      // one-time UNTIMED warm-up at the first scale point: the whole gate
-      // path (key exprs, collect, decide, sink) JIT-compiles on the first
-      // few batches, and the first scale measured cold used to read up to
-      // 10-20x slower than the same code warm — a fake "ratio > 1" (or a
-      // sub-1k absolute) that says nothing about store growth
-      if (!warmed) { (0 until 2).foreach(b => { feedOne(-1 - b); () }); warmed = true }
-      val secs = (0 until nBatches).map { b =>
-        BenchAbort.check() // deadline-abortable between measurement batches
-        feedOne(b)
-      }
-      val steady = secs.drop(1).sorted.apply((nBatches - 1) / 2)
-      math.round(batchRows / steady)
-    }
-    var seededTo = 0L
-    val out = scales.sorted.map { mult =>
-      val target = batchRows.toLong * mult
-      if (target > seededTo) { seed(seededTo, target - seededTo); seededTo = target }
-      measure(seededTo)
-    }
-    eng.dropContTransform("gs_gate")
-    eng.dropStream("gs_in"); eng.dropStream("gs_out")
-    out
+    Chain(points, pushdown)
   }
 }

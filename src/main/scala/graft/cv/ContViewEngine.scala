@@ -1469,9 +1469,15 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * @param targets when set, only the named continuous queries receive the
     *                batch (the reference `stream_targets` GUC, config.c:349 /
     *                GetLocalStreamReaders)
+    * @param batchId (checkpointed query id, micro-batch id) of a Structured
+    *                Streaming batch: each reading CV records it in the
+    *                manifest that commits the batch, and skips a batch it
+    *                already holds, so a replayed micro-batch is a no-op for
+    *                CVs (transforms and chained CVs still re-apply it)
     */
   def insertInto(streamName: String, batch: DataFrame,
-      targets: Option[Set[String]] = None): Unit = {
+      targets: Option[Set[String]] = None,
+      batchId: Option[(String, Long)] = None): Unit = {
     synchronized {
       require(streams.contains(streamName), s"unknown stream $streamName")
       streamBatches(streamName) = streamBatches.getOrElse(streamName, 0L) + 1L
@@ -1506,7 +1512,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     // runs CVs and CTs in separate worker procs) — overlap them with the
     // view ingests; chained insertInto re-entry happens inside the future
     val work: Seq[(String, Future[Unit])] =
-      activeCvs.map(h => h.plan.name -> Future(ingestBatch(h, withArrival))) ++
+      activeCvs.map(h => h.plan.name -> Future(ingestBatch(h, withArrival, batchId))) ++
         activeCts.map(h => h.plan.name -> Future(runTransform(h, withArrival)))
     // blocking{}: a chained transform re-enters insertInto inside a future,
     // and the nested Await must not starve the global pool. The await is
@@ -2019,8 +2025,10 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     }
   }
 
-  private def ingestBatch(h: CvHandle, batch: DataFrame): Unit = {
-    if (h.plan.append) return appendIngest(h, batch)
+  private def ingestBatch(h: CvHandle, batch: DataFrame,
+      batchId: Option[(String, Long)]): Unit = {
+    if (batchId.exists { case (q, b) => h.store.holds(q, b) }) return
+    if (h.plan.append) return appendIngest(h, batch, batchId)
     val t0 = System.nanoTime()
     var groups = 0L
     var failed = false
@@ -2078,7 +2086,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       // diverges as an infinite data cycle.
       h.store.synchronized {
         val (oldRows, newRows, touched) =
-          h.store.upsert(cached, h.plan.reAggs, needOldRows = h.changes)
+          h.store.upsert(cached, h.plan.reAggs, needOldRows = h.changes, applied = batchId)
         groups = touched
         workerMs = h.store.lastWorkerMs
         combinerMs = h.store.lastCombinerMs
@@ -2109,7 +2117,8 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * blind-append it as a new store segment — no merge, no shuffle, no
     * pre-image (appends have none: changes emit old = NULL).
     */
-  private def appendIngest(h: CvHandle, batch: DataFrame): Unit = {
+  private def appendIngest(h: CvHandle, batch: DataFrame,
+      batchId: Option[(String, Long)]): Unit = {
     val t0 = System.nanoTime()
     var rows = 0L
     var failed = false
@@ -2118,7 +2127,7 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     try {
       val out = h.plan.workerRows(if (sizedToWorker(batch)) interp else exec, batch)
       h.store.synchronized {
-        val (_, newRows, n) = h.store.upsert(out, Nil, needOldRows = false)
+        val (_, newRows, n) = h.store.upsert(out, Nil, needOldRows = false, applied = batchId)
         rows = n
         workerMs = h.store.lastWorkerMs
         combinerMs = h.store.lastCombinerMs
@@ -2466,10 +2475,11 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", s"$root/${cvName}/_checkpoint")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, id: Long) =>
         // re-resolve the stream per batch: a stream rename re-points the
         // handle, and insertInto skips the CV once it is deactivated
-        insertInto(viewOf(cvName).streamName, batch, Some(Set(cvName)))
+        insertInto(viewOf(cvName).streamName, batch, Some(Set(cvName)),
+          checkpointBatch(batch, id))
       }
       .start()
   }
@@ -2479,11 +2489,11 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * CQ — the reference's runtime shape (one stream, many worker readers,
     * scheduler.c:615-698), where [[startStreaming]] drives a single CV.
     * Checkpointed per stream, so a restarted query resumes from the
-    * committed offsets for all readers together. It is NOT exactly-once:
-    * the batch id is ignored, so a micro-batch whose CV commits landed
-    * before Spark's offset commit is replayed on restart and applied
-    * again (a 100-row batch then counts 200 rows). That holds until the
-    * CV manifest records the applied batch id.
+    * committed offsets for all readers together. A micro-batch whose CV
+    * commits landed before Spark's offset commit is replayed on restart;
+    * each reading CV's manifest records the batch it applied, so the
+    * replay is a no-op for CVs. Transforms and chained CVs (output streams)
+    * record nothing yet and apply a replayed batch again.
     */
   def startStreamingInto(streamName: String, source: DataFrame,
       trigger: org.apache.spark.sql.streaming.Trigger =
@@ -2494,11 +2504,19 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", s"$root/_streams/$streamName/_checkpoint")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        insertInto(streamName, batch)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        insertInto(streamName, batch, batchId = checkpointBatch(batch, id))
       }
       .start()
   }
+
+  /** (checkpointed query id, micro-batch id) of a `foreachBatch` call. The
+    * query id is Spark's `sql.streaming.queryId` local property on the
+    * micro-batch thread: it is stored in the checkpoint, so it survives a
+    * restart from that checkpoint and changes with a fresh one. */
+  private def checkpointBatch(batch: DataFrame, id: Long): Option[(String, Long)] =
+    Option(batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId"))
+      .map(_ -> id)
 }
 
 /** Per-CQ runtime counters (reference pipelinedb.proc_stats/query_stats,

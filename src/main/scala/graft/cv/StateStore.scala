@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   *
   *   root/v<N>/__bucket=<b>/part-*.parquet   — large state, one dir per bucket
   *   root/v<N>/part-*.parquet                — small state, one flat file
-  *   root/_manifest.json                     — {version, small, buckets: {b: dir}}
+  *   root/_manifest.json                     — {version, small, buckets: {b: dir}
+  *                                               [, applied: {query, batch}]}
   *
   * A large-store upsert only reads and rewrites the buckets containing
   * updated groups (the incoming micro-batch is partial-aggregated first, so
@@ -162,7 +163,8 @@ final class StateStore(
     * past the threshold it stays on the bucket-pruned path for good — the
     * flag is how we avoid ever re-measuring a large store's file tree.
     */
-  private case class Manifest(version: Long, buckets: Map[Int, String], small: Boolean)
+  private case class Manifest(version: Long, buckets: Map[Int, String], small: Boolean,
+      applied: Option[(String, Long)])
 
   private def readManifest(): Option[Manifest] = {
     // a crash between HadoopStoreFs.publish's two replace-renames leaves
@@ -215,16 +217,23 @@ final class StateStore(
             s
           }
         }
-      Manifest(version, pairs, small)
+      val applied = """"applied"\s*:\s*\{\s*"query"\s*:\s*"([^"]*)"\s*,\s*"batch"\s*:\s*(\d+)""".r
+        .findFirstMatchIn(txt).map(m => m.group(1) -> m.group(2).toLong)
+      Manifest(version, pairs, small, applied)
   }
 
   // one-time measurement memo for pre-flag manifests (see readManifest)
   @volatile private var measuredSmallMemo: Option[Boolean] = None
 
+  /** Publish `m`. A store that never applied a streaming batch writes
+    * no `applied` field, so its manifest keeps the pre-streaming layout. */
   private def writeManifest(m: Manifest): Unit = {
     val entries = m.buckets.toSeq.sortBy(_._1)
       .map { case (b, p) => s""""$b": "$p"""" }.mkString(",")
-    val txt = s"""{"version": ${m.version}, "small": ${m.small}, "buckets": {$entries}}"""
+    val applied = m.applied.fold("") {
+      case (q, b) => s""", "applied": {"query": "$q", "batch": $b}"""
+    }
+    val txt = s"""{"version": ${m.version}, "small": ${m.small}, "buckets": {$entries}$applied}"""
     val tmp = s"$root/_manifest.tmp.${m.version}"
     sfs.mkdirs(root)
     sfs.writeString(tmp, txt)
@@ -263,6 +272,12 @@ final class StateStore(
     buckets.values.toSet.toSeq.map(dirBytes).sum < SmallStateBytes
 
   def exists: Boolean = readManifest().isDefined
+
+  /** Whether this store already holds streaming batch `batchId` of the
+    * checkpointed query `query`: its manifest records that query and a
+    * batch at or past it. A replayed batch is then a no-op. */
+  def holds(query: String, batchId: Long): Boolean =
+    readManifest().flatMap(_.applied).exists { case (q, b) => q == query && b >= batchId }
 
   /** Whether the state is not written yet, or small (manifest `small`) and
     * under [[StateStore.InterpretedStateBytes]]: its reads and caches run on
@@ -429,6 +444,10 @@ final class StateStore(
     *
     * @param updates one row per group: keyCols ++ state columns
     * @param reAgg   per-state-column merge aggregates (state col name → agg builder)
+    * @param applied (query id, batch id) of the streaming batch these
+    *                updates carry, recorded in the manifest this commit
+    *                publishes (see [[holds]]); None keeps the batch the
+    *                superseded manifest recorded
     * @return (oldRows, newRows, groupsTouched) — the output-stream feed plus
     *         the update-group count (free byproduct of the bucket scan, so
     *         callers don't pay a separate count() job)
@@ -436,7 +455,8 @@ final class StateStore(
   def upsert(
       updatesIn: DataFrame,
       reAgg: Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)],
-      needOldRows: Boolean = true)
+      needOldRows: Boolean = true,
+      applied: Option[(String, Long)] = None)
       : (Option[DataFrame], () => DataFrame, Long) = this.synchronized {
     // re-stamp combine-kind metadata a DML-fed frame lacks, and remember any
     // metadata this frame carries — see columnMeta
@@ -451,7 +471,7 @@ final class StateStore(
     // proc owns each matrel's sync cycle); different CVs' stores still
     // merge in parallel.
     flushPendingGc() // previous version's consumers are done by now (see below)
-    if (appendOnly) return appendWrite(updates, needOldRows)
+    if (appendOnly) return appendWrite(updates, needOldRows, applied)
     // the update frame IS the state schema (incl. combine-kind metadata) —
     // memoize it so every state read this cycle skips footer inference
     knownSchema = Some(updates.schema)
@@ -462,13 +482,13 @@ final class StateStore(
     // nothing to merge) — write directly and take the touched set from the
     // written partition dirs and the group count from an observe() metric
     // riding the same job.
-    if (manifest.isEmpty) return firstWrite(up)
+    if (manifest.isEmpty) return firstWrite(up, applied)
 
     // Small state: merge against the full (cached) state and rewrite it in
     // ONE job — the touched-bucket pre-scan pays for itself only once bucket
     // pruning actually skips meaningful I/O.
     if (manifest.get.small)
-      return smallMerge(manifest.get, updates, up, reAgg, needOldRows)
+      return smallMerge(manifest.get, updates, up, reAgg, needOldRows, applied)
 
     // Touched buckets + group count come from ONE job that also materializes
     // the partial-aggregated updates into executor cache: the merge job then
@@ -547,7 +567,8 @@ final class StateStore(
       if (constrain.isEmpty) touched else touched.intersect(writtenBuckets(outDir))
     val newBuckets = manifest.map(_.buckets).getOrElse(Map.empty) ++
       effTouched.map(b => b -> s"v$version/$BucketCol=$b").toMap
-    writeManifest(Manifest(version, newBuckets, small = false))
+    writeManifest(Manifest(version, newBuckets, small = false,
+      applied.orElse(manifest.get.applied)))
     // Defer deleting superseded version dirs (see deferGcOldVersions): the
     // returned newRows (and the caller's lazily-evaluated delta, which for
     // LIMIT CVs joins against the pre-merge state) still reference this
@@ -584,7 +605,8 @@ final class StateStore(
       updates: DataFrame,
       up: DataFrame,
       reAgg: Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)],
-      needOldRows: Boolean): (Option[DataFrame], () => DataFrame, Long) = {
+      needOldRows: Boolean,
+      applied: Option[(String, Long)]): (Option[DataFrame], () => DataFrame, Long) = {
     val selfPersist = updates.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (selfPersist) updates.persist()
     try {
@@ -633,7 +655,8 @@ final class StateStore(
       val newBuckets = written.map(_ -> rel).toMap
       val bytes = dirBytes(rel)
       sizedVersion = (m.version + 1, bytes)
-      writeManifest(Manifest(m.version + 1, newBuckets, small = bytes < SmallStateBytes))
+      writeManifest(Manifest(m.version + 1, newBuckets, small = bytes < SmallStateBytes,
+        applied.orElse(m.applied)))
       deferGcOldVersions(m.buckets, newBuckets)
       refreshCache()
       val newRows = () =>
@@ -673,7 +696,8 @@ final class StateStore(
     * come from the partition dirs the write produced, the group count from
     * an observe() metric riding the same job.
     */
-  private def firstWrite(up0: DataFrame): (Option[DataFrame], () => DataFrame, Long) = {
+  private def firstWrite(up0: DataFrame, applied: Option[(String, Long)])
+      : (Option[DataFrame], () => DataFrame, Long) = {
     val outDir = s"$root/v0"
     // constraint-violating rows never materialize (no prior state to keep)
     val up = constrain.map(f => f(up0, None)).getOrElse(up0)
@@ -694,7 +718,7 @@ final class StateStore(
     val bytes = written.toSeq.map(b => dirBytes(s"v0/$BucketCol=$b")).sum
     sizedVersion = (0L, bytes)
     writeManifest(Manifest(0L, written.map(b => b -> s"v0/$BucketCol=$b").toMap,
-      small = bytes < SmallStateBytes))
+      small = bytes < SmallStateBytes, applied))
     refreshCache()
     val newRows = () => read().getOrElse(up.limit(0).drop(BucketCol))
     (None, newRows, groupsTouched)
@@ -711,8 +735,8 @@ final class StateStore(
     * into one, amortizing to O(log) rewrites per row — the same shape as an
     * LSM / Delta OPTIMIZE small-file compaction.
     */
-  private def appendWrite(updates: DataFrame, needOldRows: Boolean)
-      : (Option[DataFrame], () => DataFrame, Long) = {
+  private def appendWrite(updates: DataFrame, needOldRows: Boolean,
+      applied: Option[(String, Long)]): (Option[DataFrame], () => DataFrame, Long) = {
     val manifest = readManifest()
     val version = manifest.map(_.version + 1).getOrElse(0L)
     val newSeg = manifest
@@ -756,7 +780,8 @@ final class StateStore(
         .coalesce(tasks)).write.mode("overwrite").parquet(s"$root/$compactRel")
       buckets = (buckets -- toMerge.map(_._1)) + (compactId -> compactRel)
     }
-    writeManifest(Manifest(version, buckets, small = false))
+    writeManifest(Manifest(version, buckets, small = false,
+      applied.orElse(manifest.flatMap(_.applied))))
     // keep every version dir still holding a live segment; a compacted-away
     // segment inside a still-live version dir lingers until that dir's last
     // segment compacts too (bounded: compaction favors the smallest dirs)
@@ -831,7 +856,7 @@ final class StateStore(
           written.map(b => b -> s"v$version/$BucketCol=$b").toMap
         // deletes only shrink state: a small store stays small, and a large
         // store stays on the pruned path (no re-measuring walk)
-        writeManifest(Manifest(version, newBuckets, small = m.small))
+        writeManifest(Manifest(version, newBuckets, small = m.small, m.applied))
         deferGcOldVersions(m.buckets, newBuckets)
         refreshCache()
         StateStore.DeleteStats(total, candidates.size, affected.size)
@@ -901,7 +926,7 @@ final class StateStore(
         val written = writtenBuckets(s"$root/v$version")
         val newBuckets = (m.buckets -- affected) ++
           written.map(b => b -> s"v$version/$BucketCol=$b").toMap
-        writeManifest(Manifest(version, newBuckets, small = m.small))
+        writeManifest(Manifest(version, newBuckets, small = m.small, m.applied))
         deferGcOldVersions(m.buckets, newBuckets)
         refreshCache()
         nUpdated

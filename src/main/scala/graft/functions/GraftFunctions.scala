@@ -315,9 +315,9 @@ object GraftFunctions {
       fn("keyed_min") { case Seq(key, value) => MinBy(value, key) }
       fn("keyed_max") { case Seq(key, value) => MaxBy(value, key) }
 
-      // combinable_array_agg / combinable_string_agg (aggfuncs.c)
+      // combinable_array_agg (aggfuncs.c); combinable_string_agg is Spark's
+      // own built-in string_agg (ListAgg), which CvPlanner splits
       fn("combinable_array_agg") { case Seq(c) => CollectList(c) }
-      fn("string_agg") { case Seq(c, d) => ListAgg(c, d) }
 
       // first_values(n, col): smallest-n mergeable list (bounded O(n) buffer)
       fn("first_values") { case Seq(n, c) =>

@@ -243,14 +243,27 @@ abstract class SketchMergeAgg[S <: AnyRef]
     if (bytes.isEmpty) new MergeBuf[S](None) else new MergeBuf[S](Some(decode(bytes)))
 }
 
-/** hll_union_agg(hll_state) → merged HLL state. */
+/** hll_union_agg(hll_state) → merged HLL state. The PipelineDB name
+  * replaces Spark's built-in `hll_union_agg` on a graft session, so a
+  * DataSketches binary from Spark's `hll_sketch_agg` fails with a message
+  * that names the conflict instead of merging as garbage. */
 case class HllUnionAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends SketchMergeAgg[HyperLogLog] {
   override def prettyName: String = "hll_union_agg"
-  override protected def decode(b: Array[Byte]): HyperLogLog = HyperLogLog.deserialize(b)
+  override protected def decode(b: Array[Byte]): HyperLogLog =
+    try HyperLogLog.deserialize(b)
+    catch {
+      case e: IllegalArgumentException => throw new IllegalArgumentException(
+        "hll_union_agg: input is not a graft hll_agg state. On a graft " +
+          "session hll_union_agg is graft's PipelineDB aggregate, which " +
+          "replaces Spark's built-in hll_union_agg, so it cannot merge " +
+          "Spark hll_sketch_agg (DataSketches) sketches; build the states " +
+          "with graft's hll_agg, or merge DataSketches sketches with " +
+          "Spark's hll_union_agg on a session without graft's functions", e)
+    }
   override protected def combine(a: HyperLogLog, b: HyperLogLog): HyperLogLog = a.merge(b)
   override protected def encode(s: HyperLogLog): Array[Byte] = s.serialize()
   override def withNewMutableAggBufferOffset(o: Int): HllUnionAgg = copy(mutableAggBufferOffset = o)

@@ -540,8 +540,8 @@ private[graft] abstract class IndexedNearDupGate[P](
     // correct either way); payload-less gates run the two jobs in sequence.
     val needFilters = !executorBackend || bucketCounts != null
     val sc = keyed.sparkSession.sparkContext
-    // propagate the caller's job group (thread-local) so a bench probe
-    // deadline's cancelJobGroup still reaches the overlapped job; a caller
+    // propagate the caller's job group (thread-local) so the caller's
+    // cancelJobGroup still reaches the overlapped job; a caller
     // with NO group gets a private one so the failure path below can still
     // cancel the overlapped job (not just interrupt its await thread)
     val callerGroup = sc.getLocalProperty("spark.jobGroup.id")
@@ -565,8 +565,8 @@ private[graft] abstract class IndexedNearDupGate[P](
     // the overlapped collect must not outlive a failure in the index append
     // or the ttl agg below: a leaked background job would keep running
     // after seedStore's finally unpersists `keyed` (forcing a full
-    // recompute) and would poison exactly what a bench probe deadline
-    // measures next — cancel-or-await on every exit path
+    // recompute) and would still be competing for the cores when the
+    // caller's next job starts — cancel-or-await on every exit path
     var seedOk = false
     try {
       val idxCols = Seq(explode(ownedKeysCol(col(pCol))).as("bucket"),

@@ -11,25 +11,36 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class EnvKnobsSpec extends AnyFunSuite {
 
+  private val root = new java.io.File("src/main/scala/graft")
+  private val read = """\b(?:sys\.env|System\.getenv)\b""".r
+  private val key = """\A(?:\s*\.\s*(?:get|getOrElse|contains|apply))?\s*\(\s*"([^"]+)"""".r
+
+  /** The environment keys `f` reads; a non-literal key reports its file. */
+  private def envKeys(f: java.io.File): Seq[String] = {
+    val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    read.findAllMatchIn(src).map { m =>
+      key.findFirstMatchIn(src.substring(m.end)).map(_.group(1))
+        .getOrElse(s"<non-literal key in ${f.getName}>")
+    }.toSeq
+  }
+
   test("src/main reads only GRAFT_GATE_TRACE from the environment outside the mains") {
-    val root = new java.io.File("src/main/scala/graft")
     assert(root.isDirectory, s"run from the repository root (no ${root.getAbsolutePath})")
     val entryPoints = Set("Bench.scala", "Verify.scala", "PlanDump.scala")
-    val read = """\b(?:sys\.env|System\.getenv)\b""".r
-    val key = """\A(?:\s*\.\s*(?:get|getOrElse|contains|apply))?\s*\(\s*"([^"]+)"""".r
     def scalaFiles(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap { f =>
         if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
       }
-    // a read whose key is not a string literal reports where it is
     val keys = scalaFiles(root).filterNot(f =>
-      f.getParentFile == root && entryPoints(f.getName)).flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      read.findAllMatchIn(src).map { m =>
-        key.findFirstMatchIn(src.substring(m.end)).map(_.group(1))
-          .getOrElse(s"<non-literal key in ${f.getName}>")
-      }
-    }
+      f.getParentFile == root && entryPoints(f.getName)).flatMap(envKeys)
     assert(keys.toSet === Set("GRAFT_GATE_TRACE"))
+  }
+
+  // The bench's cost is fixed by its probe sizes: a budget, repeat count,
+  // soak length or probe switch read from the environment would make two
+  // rounds' artifacts incomparable again.
+  test("Bench reads only SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS from the environment") {
+    assert(envKeys(new java.io.File(root, "Bench.scala")).toSet ===
+      Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS"))
   }
 }

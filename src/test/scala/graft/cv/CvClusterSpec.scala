@@ -3,6 +3,7 @@ package graft.cv
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The CV store tier across REAL JVM boundaries (round 18 — the gate
@@ -16,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * testGrouping keys on the *ClusterSpec name; a SparkContext is a JVM
   * singleton and this master differs from the other suites' local[4]).
   */
-class CvClusterSpec extends AnyFunSuite {
+class CvClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val jdk17Opens = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -45,6 +46,11 @@ class CvClusterSpec extends AnyFunSuite {
       "local-cluster executors failed to register")
     s
   }
+
+  // Stop the local-cluster context when the suite ends: left running, its
+  // Worker relaunches executors into a JVM that is already shutting down.
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   import spark.implicits._
 

@@ -52,6 +52,27 @@ class SketchAggSpec extends AnyFunSuite with SharedSpark {
     assert(rolled == direct)
   }
 
+  test("hll_union_agg over Spark hll_sketch_agg sketches fails naming the conflict") {
+    events.createOrReplaceTempView("ev_ds")
+    val e = intercept[Exception] {
+      spark.sql("""SELECT hll_union_agg(s) FROM
+                  |(SELECT etype, hll_sketch_agg(user) AS s FROM ev_ds GROUP BY etype)"""
+        .stripMargin).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("not a graft hll_agg state") &&
+      m.contains("hll_sketch_agg")), msgs.mkString(" | "))
+  }
+
+  test("string_agg is Spark's built-in on a graft session") {
+    Seq(("a", "x"), ("a", "y"), ("b", "z")).toDF("g", "v").createOrReplaceTempView("sa")
+    val got = spark.sql(
+      "SELECT g, string_agg(v, ',') WITHIN GROUP (ORDER BY v) AS s FROM sa GROUP BY g ORDER BY g")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+    assert(got == Seq("a" -> "x,y", "b" -> "z"))
+  }
+
   test("bloom_agg: no false negatives through SQL") {
     val df = events.limit(2000).cache()
     df.createOrReplaceTempView("ev_bloom")

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cv.ContViewEngine
@@ -21,7 +22,7 @@ import graft.cv.ContViewEngine
   * is a JVM singleton and this one's master differs from every other
   * suite's local[4].
   */
-class ExecutorGateClusterSpec extends AnyFunSuite {
+class ExecutorGateClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val jdk17Opens = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -54,6 +55,11 @@ class ExecutorGateClusterSpec extends AnyFunSuite {
       "local-cluster executors failed to register")
     s
   }
+
+  // Stop the local-cluster context when the suite ends: left running, its
+  // Worker relaunches executors into a JVM that is already shutting down.
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   import spark.implicits._
 
