@@ -23,10 +23,11 @@ import org.apache.spark.sql.SparkSession
   *    precision, per-point spreads and sample counts, soak internals;
   *  - a compact FLAT `{"metric":"summary",...}` line LAST: headline
   *    scalars only, no arrays (`probes_failed` is a comma-joined string),
-  *    with an overflow guard that demotes fields past ~1850 chars so the
+  *    with an overflow guard that demotes fields past ~1880 chars so the
   *    line sits intact inside a 2000-char tail window.
   * The session is stopped before the final emission, so the final summary
-  * line is the last line the program writes.
+  * line is the last line the program writes. A run with a failed probe
+  * (named in `probes_failed`) then exits with status 1.
   */
 object Bench {
   /** Timed runs per sweep query; each query reports its minimum. */
@@ -207,14 +208,17 @@ object Bench {
       "sweep_sec", "probes_failed", "probe_secs")
     def emitSummary(): Unit = {
       refreshHealth()
-      // the final line MUST survive a 2000-char tail window INTACT (plus
-      // an sbt "[success] ..." trailer): past ~1850 chars, demote the
-      // newest non-protected scalars to the detail line
+      // the final line MUST survive a 2000-char tail window INTACT, with
+      // sbt's trailer after it: "[success] Total time: …" (≤ 76 chars) after
+      // a clean run, three "[error] …" lines (≤ 195 chars) after a run that
+      // exits 1. Past the limit, demote the newest non-protected scalars to
+      // the detail line.
+      val limit = if (failed.isEmpty) 1880 else 1750
       def summaryLine(): String =
         s"""{"metric":"summary","value":${f3(total)},"unit":"sec","n_queries":${results.size},"q_cv_max_sec":${f3(qcvMax)},"slowest":$slowest,${joined(fields)}}"""
       var line = summaryLine()
       var moved = 0
-      while (line.length > 1850 &&
+      while (line.length > limit &&
           fields.keys.exists(k => !protectedKeys.contains(k))) {
         val k = fields.keys.toSeq.reverse.find(k => !protectedKeys.contains(k)).get
         detailFields(k) = fields.remove(k).get
@@ -226,21 +230,38 @@ object Bench {
         if (detailFields.isEmpty) "" else "," + joined(detailFields)}}""")
       println(line)
     }
+    // cleanups the running probe registered, run last-first when it ends,
+    // failed or not, so a failing probe leaves nothing for the next one
+    val cleanups = scala.collection.mutable.ArrayBuffer[() => Unit]()
+    /** A temp root that is deleted when the running probe ends. */
+    def tempRoot(prefix: String): String = {
+      val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+      cleanups += (() => graft.streaming.StreamDedupGate.deleteRecursively(d))
+      d.toString
+    }
     /** Run one probe on this thread and re-emit the artifact. Each probe
       * opens with a GC pause billed to its untimed boundary: late probes
       * otherwise inherit the earlier probes' heap debris. A failing probe
-      * is named in `probes_failed` and its exception class lands in the
-      * detail line; the probes after it still run. */
+      * is named in `probes_failed`, its exception class lands in the
+      * detail line and its stack trace on stderr, and the frames it
+      * persisted are dropped; the probes after it still run, and the
+      * program exits non-zero at the end. Errors such as a stack overflow
+      * are caught too, so the artifact's last line is still a summary. */
     def probe(name: String)(run: => Unit): Unit = {
       System.gc()
       Thread.sleep(200)
       val t0 = elapsedSec
       try run
       catch {
-        case t: Throwable if scala.util.control.NonFatal(t) =>
+        case t: Throwable =>
           failed += name
           draw(s"${name}_error",
             "\"" + t.getClass.getSimpleName.replace("\"", "'") + "\"")
+          t.printStackTrace()
+          scala.util.Try(spark.catalog.clearCache())
+      } finally {
+        cleanups.reverseIterator.foreach(c => scala.util.Try(c()))
+        cleanups.clear()
       }
       probeSecs(name) = elapsedSec - t0
       emitSummary()
@@ -256,7 +277,7 @@ object Bench {
     // bucket-pruned path — the code that runs once state outgrows a single
     // executor's memory at production scale. Median of three fresh passes.
     def oneIngestPass(): Double = {
-      val root = java.nio.file.Files.createTempDirectory("graft_lgbench").toString
+      val root = tempRoot("graft_lgbench")
       val eng = new graft.cv.ContViewEngine(spark, root, smallStateBytes = 0L)
       val events = graft.queries.Tables.events(spark, sfDir)
       eng.createStream("lg_stream", events.schema)
@@ -364,7 +385,7 @@ object Bench {
     // this O(manifest metadata) — milliseconds regardless of state size —
     // which is what keeps a 1 s reaper cadence viable at 100x state.
     probe("cv_reap_noop") {
-      val root = java.nio.file.Files.createTempDirectory("graft_reapbench").toString
+      val root = tempRoot("graft_reapbench")
       val eng = new graft.cv.ContViewEngine(spark, root, smallStateBytes = 0L)
       val events = graft.queries.Tables.events(spark, sfDir)
       eng.createStream("rp_stream", events.schema)
@@ -377,7 +398,7 @@ object Bench {
       eng.expireTtl("v_rp") // warm the footer-stat cache like a running reaper
       val t0 = System.nanoTime()
       eng.expireTtl("v_rp")
-      dnum("cv_reap_noop_sec", (System.nanoTime() - t0) / 1e9)
+      num("cv_reap_noop_sec", (System.nanoTime() - t0) / 1e9)
       eng.dropContView("v_rp"); eng.dropStream("rp_stream")
     }
 
@@ -386,8 +407,9 @@ object Bench {
     // periodic TTL reap riding the same engine — the steady-state shape of
     // a production deployment.
     probe("cv_soak") {
-      val root = java.nio.file.Files.createTempDirectory("graft_soakbench").toString
+      val root = tempRoot("graft_soakbench")
       val eng = new graft.cv.ContViewEngine(spark, root, smallStateBytes = 0L)
+      cleanups += (() => eng.flush()) // no async batch outlives the probe
       val events = graft.queries.Tables.events(spark, sfDir)
       eng.createStream("sk_stream", events.schema)
       eng.createContView("v_sk",
@@ -466,7 +488,7 @@ object Bench {
     def gateProbe(nd: Boolean, batchRows: Int): GateProbes.Point = {
       import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType}
       val nBatches = 6
-      val root = java.nio.file.Files.createTempDirectory("graft_gatebench").toString
+      val root = tempRoot("graft_gatebench")
       val eng = new graft.cv.ContViewEngine(spark, root)
       val schema = StructType(Seq(StructField("id", LongType), StructField("body", StringType)))
       eng.createStream("gb_in", schema)
@@ -531,11 +553,10 @@ object Bench {
       val scanSec = med3 {
         graft.ops.KeywordScore.bm25(docs, "doc_id", "text", terms).count(); ()
       }
-      val idxDir =
-        java.nio.file.Files.createTempDirectory("graft_bm25bench").toString
+      val idxDir = tempRoot("graft_bm25bench")
       val tB = System.nanoTime()
       graft.ops.KeywordScore.buildIndex(docs, "doc_id", "text", idxDir)
-      dnum("bm25_index_build_sec", (System.nanoTime() - tB) / 1e9)
+      num("bm25_index_build_sec", (System.nanoTime() - tB) / 1e9)
       // scan tier in the detail line: the sweep's q_bm25_search already
       // times it
       dnum("bm25_scan_query_sec", scanSec)
@@ -576,10 +597,10 @@ object Bench {
       val tD = System.nanoTime()
       graft.ops.KeywordScore.deleteDocs(spark, idxDir,
         docs.where(pmod(col("doc_id"), lit(7L)) === 3).select("doc_id"))
-      dnum("bm25_delete_sec", (System.nanoTime() - tD) / 1e9)
+      num("bm25_delete_sec", (System.nanoTime() - tD) / 1e9)
       val tC = System.nanoTime()
       graft.ops.KeywordScore.compactIndex(spark, idxDir)
-      dnum("bm25_compact_sec", (System.nanoTime() - tC) / 1e9)
+      num("bm25_compact_sec", (System.nanoTime() - tC) / 1e9)
     }
 
     // Multi-SF execution evidence: the whole oracle QUERY SET re-run at the
@@ -615,7 +636,7 @@ object Bench {
     // ev/s + first/second-half drift.
     probe("gate_soak_ttl") {
       import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType, TimestampType}
-      val root = java.nio.file.Files.createTempDirectory("graft_gtsoak").toString
+      val root = tempRoot("graft_gtsoak")
       val eng = new graft.cv.ContViewEngine(spark, root)
       val schema = StructType(Seq(StructField("id", LongType),
         StructField("body", StringType), StructField("ts", TimestampType)))
@@ -701,5 +722,7 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs}""")
     spark.stop()
     emitSummary()
+    // a failed probe fails the run, once its artifact is out
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

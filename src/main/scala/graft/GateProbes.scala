@@ -62,25 +62,41 @@ object GateProbes {
   final case class Chain(points: Map[(String, Long), Point],
       pushdown: Option[(Point, Int, Long)])
 
+  /** Timed batches per measured point. */
+  private val NBatches = 5
+
   /** `kind` ∈ {exact, simhash, jaccard, cosine} against ONE seeding chain:
     * the store is seeded (through a driver gate, which also regrows the
     * bloom) to each of `scales` × `batchRows` once, in ascending order;
     * at each scale every backend in `backends` attaches to the same store,
-    * measures `nBatches` timed batches after a one-time 2-batch warm-up,
+    * measures [[NBatches]] timed batches after a one-time 2-batch warm-up,
     * and detaches (the engine root is separate from the store root, so
     * the store survives). `shards` ≥ 2 builds the key-space-sharded form.
     *
     * `bigBatchRows` > 0 (exact kind): after the last scale, re-attach the
-    * driver gate and feed `nBatches` batches of that many rows with
+    * driver gate and feed [[NBatches]] batches of that many rows with
     * [[graft.streaming.GateStore]]'s inSet capture on — the measured cost
     * of a large candidate list serializing into every scan task (the
-    * `maxPushdownKeys` trade). */
+    * `maxPushdownKeys` trade).
+    *
+    * The seeded stores and their executor shards are dropped when the
+    * chain ends, failed or not: they are hundreds of MB per kind. */
   def chain(spark: SparkSession, kind: String, batchRows: Int,
       scales: Seq[Long], backends: Seq[String], shards: Int = 1,
-      nBatches: Int = 5, bigBatchRows: Int = 0): Chain = {
+      bigBatchRows: Int = 0): Chain = {
+    val root = java.nio.file.Files.createTempDirectory(s"graft_gdc_$kind")
+    try seededChain(spark, root, kind, batchRows, scales, backends, shards, bigBatchRows)
+    finally {
+      graft.streaming.ExecutorGateState.dropUnder(root.toAbsolutePath.toString)
+      graft.streaming.StreamDedupGate.deleteRecursively(root.toFile)
+    }
+  }
+
+  private def seededChain(spark: SparkSession, root: java.nio.file.Path, kind: String,
+      batchRows: Int, scales: Seq[Long], backends: Seq[String], shards: Int,
+      bigBatchRows: Int): Chain = {
     import graft.streaming.StreamDedupGate.DriverBackend
     import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType, ArrayType, DoubleType}
-    val root = java.nio.file.Files.createTempDirectory(s"graft_gdc_$kind")
     // engine root ≠ store root: dropContTransform deletes
     // <engineRoot>/<name>, so the seeded store at <storeRoot>/<name>
     // survives gate detach/re-attach
@@ -149,7 +165,7 @@ object GateProbes {
       sec
     }
     def measure(seeded: Long, rows: Int, from: Int): Point =
-      Point(rows, (0 until nBatches).map(b => feedOne(seeded, from + b, rows)))
+      Point(rows, (0 until NBatches).map(b => feedOne(seeded, from + b, rows)))
     // one-time UNTIMED warm-up per backend: the whole gate path (key exprs,
     // collect, decide, sink) JIT-compiles on the first few batches, and a
     // cold first point reads up to 10-20x slower than the same code warm
@@ -187,10 +203,6 @@ object GateProbes {
         }
       }
     eng.dropStream("gs_in"); eng.dropStream("gs_out")
-    graft.streaming.ExecutorGateState.dropUnder(root.toAbsolutePath.toString)
-    // the seeded stores are dead weight at probe end — hundreds of MB per
-    // kind per bench run if left in the temp dir
-    graft.streaming.StreamDedupGate.deleteRecursively(root.toFile)
     Chain(points, pushdown)
   }
 }

@@ -1470,10 +1470,11 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     *                batch (the reference `stream_targets` GUC, config.c:349 /
     *                GetLocalStreamReaders)
     * @param batchId (checkpointed query id, micro-batch id) of a Structured
-    *                Streaming batch: each reading CV records it in the
-    *                manifest that commits the batch, and skips a batch it
-    *                already holds, so a replayed micro-batch is a no-op for
-    *                CVs (transforms and chained CVs still re-apply it)
+    *                Streaming batch: each reading CV records it once the
+    *                batch has fully landed (see `ingestBatch`) and skips a
+    *                batch it already holds, so a replayed micro-batch is a
+    *                no-op for CVs. Transforms record nothing and apply a
+    *                replayed batch again.
     */
   def insertInto(streamName: String, batch: DataFrame,
       targets: Option[Set[String]] = None,
@@ -2025,6 +2026,15 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     }
   }
 
+  /** Ingest one batch into CV `h`. A streaming `batchId` is recorded only
+    * once the batch has fully landed, so a replay skips only what nothing
+    * still needs: a CV without changes records it in the manifest of the
+    * commit itself; a CV with changes records it after the emit (changes
+    * archive and downstream CQs) has run. A failure between that commit
+    * and the emit then replays the whole batch into the CV, a duplicate
+    * rather than a lost delta (DESIGN_NOTES: duplicates are detectable
+    * downstream, silent loss is not).
+    */
   private def ingestBatch(h: CvHandle, batch: DataFrame,
       batchId: Option[(String, Long)]): Unit = {
     if (batchId.exists { case (q, b) => h.store.holds(q, b) }) return
@@ -2086,11 +2096,15 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
       // diverges as an infinite data cycle.
       h.store.synchronized {
         val (oldRows, newRows, touched) =
-          h.store.upsert(cached, h.plan.reAggs, needOldRows = h.changes, applied = batchId)
+          h.store.upsert(cached, h.plan.reAggs, needOldRows = h.changes,
+            applied = if (h.changes) None else batchId)
         groups = touched
         workerMs = h.store.lastWorkerMs
         combinerMs = h.store.lastCombinerMs
-        if (h.changes) emitChanges(h, oldRows, newRows(), cached)
+        if (h.changes) {
+          emitChanges(h, oldRows, newRows(), cached)
+          batchId.foreach(h.store.markApplied)
+        }
       }
     } catch { case e: Throwable => failed = true; throw e }
     finally {
@@ -2127,13 +2141,14 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     try {
       val out = h.plan.workerRows(if (sizedToWorker(batch)) interp else exec, batch)
       h.store.synchronized {
-        val (_, newRows, n) = h.store.upsert(out, Nil, needOldRows = false, applied = batchId)
+        val (_, newRows, n) = h.store.upsert(out, Nil, needOldRows = false,
+          applied = if (h.changes) None else batchId)
         rows = n
         workerMs = h.store.lastWorkerMs
         combinerMs = h.store.lastCombinerMs
-        if (h.changes && n > 0) {
-          val changes = appendChangesFrame(h, newRows())
-          writeChanges(h, changes)
+        if (h.changes) {
+          if (n > 0) writeChanges(h, appendChangesFrame(h, newRows()))
+          batchId.foreach(h.store.markApplied)
         }
       }
     } catch { case e: Throwable => failed = true; throw e }
@@ -2491,9 +2506,9 @@ final class ContViewEngine(val spark: SparkSession, val root: String,
     * Checkpointed per stream, so a restarted query resumes from the
     * committed offsets for all readers together. A micro-batch whose CV
     * commits landed before Spark's offset commit is replayed on restart;
-    * each reading CV's manifest records the batch it applied, so the
-    * replay is a no-op for CVs. Transforms and chained CVs (output streams)
-    * record nothing yet and apply a replayed batch again.
+    * each reading CV's manifest records the batch once it has fully landed
+    * (its changes emit included), so the replay is a no-op for CVs.
+    * Transforms record nothing and apply a replayed batch again.
     */
   def startStreamingInto(streamName: String, source: DataFrame,
       trigger: org.apache.spark.sql.streaming.Trigger =

@@ -279,6 +279,14 @@ final class StateStore(
   def holds(query: String, batchId: Long): Boolean =
     readManifest().flatMap(_.applied).exists { case (q, b) => q == query && b >= batchId }
 
+  /** Record streaming batch `applied` in the current manifest, as the same
+    * version (same buckets): for a store whose commit is followed by more
+    * work on the batch, the batch counts as held only once that work is
+    * done too (see [[holds]]). */
+  def markApplied(applied: (String, Long)): Unit = this.synchronized {
+    readManifest().foreach(m => writeManifest(m.copy(applied = Some(applied))))
+  }
+
   /** Whether the state is not written yet, or small (manifest `small`) and
     * under [[StateStore.InterpretedStateBytes]]: its reads and caches run on
     * the small-state session, and the engine runs a small batch into it
